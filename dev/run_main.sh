@@ -1,6 +1,6 @@
 #!/bin/bash
 # Run a graft main directly on the compiled classes (no sbt), mirroring
-# build.sbt's fork options. Usage: dev/run_main.sh graft.Bench [args...]
+# build.sbt's fork options. Usage: dev/run_main.sh graft.Verify [args...]
 MAIN="$1"; shift
 ADD_OPENS=""
 for p in java.lang java.lang.invoke java.lang.reflect java.io java.net java.nio \

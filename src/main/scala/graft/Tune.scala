@@ -68,9 +68,9 @@ object Tune {
     // structs), so any final-merge task with a few thousand groups fell
     // into SORT-BASED merge of every partial blob — q_bitext_mine at
     // 100x spilled 3.5 GB in exactly those merges and dropped 182.8 →
-    // 149.5 s when the fallback was lifted (ProfileBitext18 stage
-    // table). 4096 groups × the engine's largest per-group object state
-    // (~KB) ≈ MBs per task — far under the per-task execution budget at
+    // 149.5 s when the fallback was lifted (r19 stage table). 4096
+    // groups × the engine's largest per-group object state (~KB) ≈
+    // MBs per task — far under the per-task execution budget at
     // any scale, so the setting is scale-independent, not a local[32]
     // tune. (Contrast the hugeMethodLimit note below: that cap was
     // reverted because the structural fix existed; here the structure —

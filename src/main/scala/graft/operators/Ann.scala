@@ -613,7 +613,7 @@ object Ann {
     * forms, so DuckDB's bucket replay is unchanged. The inlined
     * flat-scalar chain (planes x dim ~ 1k nodes) blew past Janino's
     * method limits and silently dropped the whole stage out of codegen. */
-  private[graft] def hyperplaneBucket(e: Column, planes: Int, dim: Int): Column =
+  private def hyperplaneBucket(e: Column, planes: Int, dim: Int): Column =
     graft.functions.HyperplaneBucket(e,
       (0 until planes).map(j => hyperplane(j, dim)))
 
@@ -794,7 +794,7 @@ object Ann {
     * uses), keep = not a duplicate. The cluster-assigned corpus feeds
     * the pair join twice and the output projection once, so it is
     * materialized with a lineage cut (the established multi-consumer
-    * policy; Bench/Verify free checkpoint blocks between queries). */
+    * policy; Verify frees checkpoint blocks between queries). */
   def semDedup(corpus: DataFrame, nlist: Int, iters: Int,
                minCos: Double, dim: Int = DefaultDim): DataFrame = {
     val (_, indexed) = ivfTrainAssign(corpus, nlist, iters, dim)
@@ -1022,7 +1022,7 @@ object Ann {
     // sizes exchanges by what is READ) undersizes exactly this
     // exchange: at 100x (200k vectors/side) the 55.9M candidate pairs
     // landed on 32 partitions, ~1.7 GB of joined rows per task, and
-    // spilled 9.8 GB mem / 1.8 GB disk (ScaleDecade18 first pass).
+    // spilled 9.8 GB mem / 1.8 GB disk (first r18 decade pass).
     // The operator KNOWS its expansion in closed form before the join
     // runs — that knowledge, not input size, sizes the exchange:
     // ~100k pairs (~100 MB of qe+ne rows) per partition, capped at
@@ -1106,8 +1106,8 @@ object Ann {
     // The margin chain's two join exchanges carry the FULL candidate
     // table (pairs × ~30 B) keyed xid then yid — the r18 grain sized
     // only the pair-scoring join, and at 100× AQE coalesced these to
-    // ~34 tasks whose SMJ sorts spilled 1-3.5 GB (ProfileBitext18
-    // stage table, r19). The operator knows the candidate volume in
+    // ~34 tasks whose SMJ sorts spilled 1-3.5 GB (r19 stage table).
+    // The operator knows the candidate volume in
     // closed form, so the same expansion-aware grain (npM, capped like
     // partsFor, = cpus at the bench sfs — plan unchanged there) sizes
     // them; pure layout, results untouched.

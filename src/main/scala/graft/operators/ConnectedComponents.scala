@@ -45,14 +45,12 @@ object ConnectedComponents {
     * expensive set-difference) only runs at count equality, where it
     * is the proof (equal sizes + one-sided emptiness = multiset
     * equality). */
-  private def converge(e0: DataFrame, maxRounds: Int,
-                       lsDistinct: Boolean,
-                       eagerCp: Boolean): DataFrame = {
+  private def converge(e0: DataFrame, maxRounds: Int): DataFrame = {
     var e = e0
     var eCnt = -1L // e's count, computed lazily on first equality test
     var r = 0
     while (r < maxRounds) {
-      val next = round(e, lsDistinct, eagerCp)
+      val next = round(e)
       val nextCnt = next.count()
       if (eCnt < 0) eCnt = e.count()
       val stable = nextCnt == eCnt && next.exceptAll(e).isEmpty
@@ -68,27 +66,23 @@ object ConnectedComponents {
   /** One large-star + small-star round over a symmetric edge set
     * (src, dst). Returns the rewritten (still symmetric-on-read)
     * edge set; self-loops are dropped. */
-  private def round(edges: DataFrame, lsDistinct: Boolean,
-                    eagerCp: Boolean): DataFrame = {
+  private def round(edges: DataFrame): DataFrame = {
     // large-star: (v, m(u)) for v in Γ(u), v > u
     val sym = edges.select(col("src"), col("dst"))
       .unionAll(edges.select(col("dst").as("src"), col("src").as("dst")))
     val m = sym.groupBy("src")
       .agg(least(min("dst"), first("src")).as("m"))
-    // NO distinct by default (r18 opt, guide §2.4): the large-star
-    // output is bounded by |sym| = 2|e| either way, small-star's min
-    // aggregate is insensitive to duplicates, and the round's FINAL
-    // distinct collapses duplicated withM rows — same round output
-    // set, one exchange less per round. Decided by interleaved
-    // in-session A/B (ProfileAb18, q_dedup_cc shape at sf0.1:
-    // min 4.50 s with the distinct vs 3.74 s without, 3/4 pairwise
-    // wins on a contended box); the flag stays so the A/B is
-    // re-runnable.
-    val ls0 = sym.join(m, Seq("src"))
+    // NO distinct (r18 opt, guide §2.4): the large-star output is
+    // bounded by |sym| = 2|e| either way, small-star's min aggregate
+    // is insensitive to duplicates, and the round's FINAL distinct
+    // collapses duplicated withM rows — same round output set, one
+    // exchange less per round. Decided by interleaved in-session A/B
+    // (q_dedup_cc shape at sf0.1: min 4.50 s with the distinct vs
+    // 3.74 s without, 3/4 pairwise wins on a contended box).
+    val ls = sym.join(m, Seq("src"))
       .filter(col("dst") > col("src"))
       .select(col("dst").as("src"), col("m").as("dst"))
       .filter(col("src") =!= col("dst"))
-    val ls = if (lsDistinct) ls0.distinct() else ls0
     // small-star over the large-star output: u's smaller-or-equal
     // neighbors AND u itself all re-attach to m(u)
     val sym2 = ls.select(col("src"), col("dst"))
@@ -101,15 +95,14 @@ object ConnectedComponents {
       .unionAll(withM.select(col("src"), col("m").as("dst")))
       .filter(col("src") =!= col("dst"))
       .distinct()
-      // lineage cut per round (the dedupClusters rule). eagerCp was
-      // A/B'd in r18 (ProfileAb18 "cp": lazy localCheckpoint merges the
-      // materialization into converge's count, one driver round-trip
-      // less per round) and measured a TIE-to-slightly-worse
-      // (cc_delta min 5.02 eager vs 5.41 lazy, 2/4; clusters 2.21 vs
-      // 2.15, 2/4) — the ~50 ms/round saving is noise against the
-      // round's own work, so EAGER stays the default and the flag
-      // keeps the A/B re-runnable.
-      .localCheckpoint(eager = eagerCp)
+      // lineage cut per round (the dedupClusters rule). A LAZY
+      // checkpoint was A/B'd in r18 (it merges the materialization
+      // into converge's count, one driver round-trip less per round)
+      // and measured a TIE-to-slightly-worse (cc_delta min 5.02 eager
+      // vs 5.41 lazy, 2/4; clusters 2.21 vs 2.15, 2/4) — the
+      // ~50 ms/round saving is noise against the round's own work,
+      // so the checkpoint stays EAGER.
+      .localCheckpoint()
   }
 
   /** Incremental component update — the add-after-train contract
@@ -125,11 +118,10 @@ object ConnectedComponents {
     * of canonicals (plus new ids) is the global component minimum.
     * Spec-pinned equal to a from-scratch build over the union. */
   def componentsDelta(docs: DataFrame, baseAssign: DataFrame,
-                      deltaPairs: DataFrame, maxRounds: Int = 20,
-                      lsDistinct: Boolean = false,
-                      eagerCp: Boolean = true): DataFrame = {
+                      deltaPairs: DataFrame,
+                      maxRounds: Int = 20): DataFrame = {
     val m = baseAssign.select(col("doc_id"), col("canonical_id"))
-      .localCheckpoint(eager = eagerCp) // contraction map, read 3x
+      .localCheckpoint() // contraction map, read 3x
     val e = deltaPairs
       .join(m.select(col("doc_id").as("ida"),
         col("canonical_id").as("ca")), Seq("ida"), "left")
@@ -138,8 +130,8 @@ object ConnectedComponents {
       .select(coalesce(col("ca"), col("ida")).as("src"),
         coalesce(col("cb"), col("idb")).as("dst"))
       .filter(col("src") =!= col("dst"))
-      .localCheckpoint(eager = eagerCp)
-    val conv = converge(e, maxRounds, lsDistinct, eagerCp)
+      .localCheckpoint()
+    val conv = converge(e, maxRounds)
     val merge = conv
       .unionAll(conv.select(col("dst").as("src"), col("dst").as("dst")))
       .groupBy("src").agg(min("dst").as("new_canon"))
@@ -158,11 +150,10 @@ object ConnectedComponents {
     * pair table; docs in no pair are their own canonical — the same
     * output contract as [[Dedup.dedupClusters]]. */
   def components(docs: DataFrame, pairs: DataFrame,
-                 maxRounds: Int = 20, lsDistinct: Boolean = false,
-                 eagerCp: Boolean = true): DataFrame = {
+                 maxRounds: Int = 20): DataFrame = {
     val e0 = pairs.select(col("ida").as("src"), col("idb").as("dst"))
-      .localCheckpoint(eager = eagerCp)
-    val converged = converge(e0, maxRounds, lsDistinct, eagerCp)
+      .localCheckpoint()
+    val converged = converge(e0, maxRounds)
     // at the (asserted) fixed point every edge points node -> component min
     val canon = converged
       .unionAll(converged.select(col("dst").as("src"),

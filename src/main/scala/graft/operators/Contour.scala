@@ -137,6 +137,9 @@ object Contour {
       .withColumn("band", floor(col("tt_min") / bandMinutes).cast("long"))
   }
 
+  /** Edge steps [[shortestPaths]] relaxes per round. */
+  private val RelaxHops = 3
+
   /** Single-source shortest-path travel times over an edge DataFrame —
     * the honest routing backend for [[isochrone]] (the reference's OSRM
     * matrix call, core.py:907, computed in-engine instead of stubbed).
@@ -156,7 +159,7 @@ object Contour {
     * @return (cx, cy, tt_min) for every node reachable from a seed
     */
   def shortestPaths(edges: DataFrame, source: DataFrame,
-                    maxRounds: Int = 256, hops: Int = 3): DataFrame = {
+                    maxRounds: Int = 256): DataFrame = {
     // state carries (node, best distance, improved-last-round flag) in
     // ONE table so each round is a single aggregation + localCheckpoint
     // (one materialization per round, not separate frontier/dist jobs):
@@ -165,7 +168,7 @@ object Contour {
     // iff a flagged row strictly beat every unflagged one — computed in
     // the same aggregate as min(old-only distance) vs min(overall).
     //
-    // MULTI-HOP relaxation (r18 opt): each round relaxes 1..`hops`
+    // MULTI-HOP relaxation (r18 opt): each round relaxes 1..RelaxHops
     // edge steps from the frontier before the per-node min, so the
     // round count — the row's whole cost on a small-diameter grid,
     // one scheduled job per round — drops to ~diameter/hops. Multi-hop
@@ -173,10 +176,10 @@ object Contour {
     // distances stay >= the true shortest distance and every round
     // still includes the 1-hop relaxation, so an empty frontier proves
     // the classic termination condition); per-round rows grow by at
-    // most frontier x degree^hops into a partial-aggregated min.
-    // Measured (interleaved in-session A/B, ProfileAb18 "bfs" at
-    // sf0.1 on a heavily contended box): min 4.35 s at hops=1 vs
-    // 3.05 s at hops=3 for the q_isochrone_bfs shape.
+    // most frontier x degree^RelaxHops into a partial-aggregated min.
+    // Measured (interleaved in-session A/B at sf0.1 on a heavily
+    // contended box): min 4.35 s at 1 hop vs 3.05 s at 3 hops for the
+    // q_isochrone_bfs shape.
     var state = source.select(col("cx").cast("long"), col("cy").cast("long"),
       lit(0L).as("tt_min"), lit(1).as("fr")).localCheckpoint()
     var rounds = 0
@@ -188,7 +191,7 @@ object Contour {
         f.join(edges, Seq("cx", "cy"))
           .select(col("dcx").as("cx"), col("dcy").as("cy"),
             (col("tt_min") + col("w")).as("tt_min")))
-        .drop(1).take(hops).toSeq
+        .drop(1).take(RelaxHops).toSeq
       state = state.select(col("cx"), col("cy"), col("tt_min"),
           lit(0).as("fr"))
         .union(relaxes.map(_.select(col("cx"), col("cy"), col("tt_min"),

@@ -72,7 +72,7 @@ object Dedup {
     // the cost after the posting shuffle is the ~1M-row pair AGGREGATE
     // exchange, not the expansion — so the generator form is kept for
     // its zero struct allocation, not a wall-clock claim. Stage profile
-    // (dev/ProfileJaccard, un-pruned): scan 0.33s, +postings 1.61s,
+    // (un-pruned): scan 0.33s, +postings 1.61s,
     // full 3.64s; the intrinsic floor is the posting + pair-agg
     // exchanges, the LSH-standard O(n·k) shape.
     val shared = postings
@@ -374,9 +374,9 @@ object Dedup {
     // derived `totals` and `hits` as two consumers of the distinct
     // table, so the corpus shingle scan + per-doc distinct exchange
     // executed twice and the results met in an extra join — 2.78 s at
-    // sf0.1 vs 1.75 s for this form (dev/ProfileWeak stage split in
-    // SURVEY §4: scan 0.34, +distinct 1.32 — the distinct exchange IS
-    // the intrinsic floor). The broadcast join stays map-side; the only
+    // sf0.1 vs 1.75 s for this form (stage split in SURVEY §4: scan
+    // 0.34, +distinct 1.32 — the distinct exchange IS the intrinsic
+    // floor). The broadcast join stays map-side; the only
     // exchanges are the (doc_id, s) distinct and the per-doc aggregate.
     val corpusSh = shingleHashes(corpus, k, 131L, 1000000007L)
       .select(col("doc_id"), col("s")).distinct()
@@ -485,7 +485,7 @@ object Dedup {
     * no driver-side graph state. Docs in no pair are their own canonical.
     */
   def dedupClusters(docs: DataFrame, pairs: DataFrame,
-                    iters: Int = 4, eagerCp: Boolean = true): DataFrame = {
+                    iters: Int = 4): DataFrame = {
     // The pair table may be an expensive pipeline (e.g. minhash LSH) and
     // every propagation iteration consumes it. localCheckpoint (eager)
     // runs that pipeline EXACTLY ONCE — before the src/dst union can
@@ -498,20 +498,19 @@ object Dedup {
     // job fails the job instead of recomputing from lineage. On
     // preemption-prone clusters set a reliable checkpoint dir and swap
     // these for Dataset.checkpoint — the plan shape is unchanged.
-    // eagerCp: LAZY checkpoints (eager = false) were A/B'd in r18
-    // (ProfileAb18 "cp") — same LogicalRDD plan cut, materialization
-    // deferred into the consumer's action — and measured a tie
-    // (min 2.21 eager vs 2.15 lazy, 2/4 wins): the per-hop driver
-    // round-trip is noise against the hop's own shuffle. EAGER stays
-    // the default; the flag keeps the A/B re-runnable.
+    // LAZY checkpoints (eager = false) were A/B'd in r18 — same
+    // LogicalRDD plan cut, materialization deferred into the consumer's
+    // action — and measured a tie (min 2.21 eager vs 2.15 lazy, 2/4
+    // wins): the per-hop driver round-trip is noise against the hop's
+    // own shuffle, so the checkpoints stay EAGER.
     val p = pairs.select(col("ida"), col("idb"))
-      .localCheckpoint(eager = eagerCp)
+      .localCheckpoint()
     val edges = p.select(col("ida").as("src"), col("idb").as("dst"))
       .union(p.select(col("idb").as("src"), col("ida").as("dst")))
     var labels = edges.select(col("src").as("node"))
       .distinct()
       .withColumn("label", col("node"))
-      .localCheckpoint(eager = eagerCp)
+      .localCheckpoint()
     for (_ <- 1 to iters) {
       val fromNeighbors = edges
         .join(labels.withColumnRenamed("node", "src"), "src")
@@ -521,7 +520,7 @@ object Dedup {
       labels = labels.union(fromNeighbors)
         .groupBy("node")
         .agg(min("label").as("label"))
-        .localCheckpoint(eager = eagerCp)
+        .localCheckpoint()
     }
     docs.select(col("doc_id"))
       .join(labels.withColumnRenamed("node", "doc_id"), Seq("doc_id"), "left")

@@ -22,7 +22,7 @@ object MatchLines {
   /** Lines with integer-tenth vertex arrays and exact integer centroid
     * cells. Input: rows (lid, seq, xi, yi) with xi/yi integer tenths.
     *
-    * TUNING (measured, dev.ScaleCheck r3): per-cell candidate counts
+    * TUNING (measured, r3 scale check): per-cell candidate counts
     * grow with line DENSITY, so at fixed cellTenths a 4x-denser layer
     * costs ~16x in candidates (observed 28x wall-clock); halving the
     * cell edge restored ~2x-of-linear (10.8s vs 136s). Rule: choose

@@ -27,10 +27,10 @@ object Snap {
     * count is how many average tasks the hottest cell's work is worth:
     * `round(hotShare * parallelism)`, clamped to [1, maxSalts]. A
     * uniform layer prices to 1 (the salting machinery switches off);
-    * the SkewProbe layer (43% of points in one cell) prices to 14 at
+    * a skewed layer with 43% of points in one cell prices to 14 at
     * parallelism 32. Same design as MatchLines.autoCellTenths: the
     * documented manual tuning rule becomes one tiny agg the engine
-    * runs itself. Measured (dev/SkewProbe): static salting is the
+    * runs itself. Measured on that layer: static salting is the
     * mitigation that actually engages on fan-out skew — AQE's
     * byte-based detector never fires on a modest-byte hot key. */
   def autoSalts(pts: DataFrame, maxSearchframe: Double,

@@ -219,8 +219,8 @@ object SuffixArray {
     * every packed value, the same shorter-suffix-first convention the
     * round refinement's coalesce(lead, -1) uses. Kills the two most
     * expensive doubling rounds (7→14→28 refined the FULL position set
-    * twice; ProfileSuffix18 measured them 5.2 + 4.0 s of the ~40 s
-    * build at sf0.1). */
+    * twice; measured at 5.2 + 4.0 s of the ~40 s build at sf0.1,
+    * r18). */
   val SeedW = 4 * PackW
 
   def buildWithBase(docs: DataFrame)

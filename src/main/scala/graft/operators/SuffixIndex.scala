@@ -34,16 +34,17 @@ import org.apache.spark.sql.functions._
   *    never pay for them.
   *
   * Keying: tag = (data dir, applicationId) — unique per SparkContext, so
-  * concurrent driver processes (Bench vs Verify) never overwrite each
-  * other's files mid-read, stale /tmp state can't leak across runs, and
-  * within one session the id is stable so build-once/serve-many holds.
+  * concurrent sessions on one data dir (the forked test JVMs, perfbench
+  * next to Verify) never overwrite each other's files mid-read, stale
+  * /tmp state can't leak across runs, and within one session the id is
+  * stable so build-once/serve-many holds.
   * The parquet files are the durable artifact a NEW session would boot
   * from; the memo only skips re-opening readers. */
 object SuffixIndex {
 
   /** Parquet-backed served handle. All frames are plain scans of the
     * stored artifact — they survive the per-query cache/checkpoint
-    * clears the Bench/Verify drivers perform between queries. */
+    * clears the Verify driver performs between queries. */
   final case class Handle(ord: DataFrame, base: DataFrame,
                           pairs: DataFrame, path: String)
 

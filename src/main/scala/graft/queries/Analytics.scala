@@ -397,8 +397,8 @@ object Analytics {
     * verification. The scale move is ed-join/ppjoin PREFIX FILTERING:
     * candidate pairs come ONLY from each record's globally-RAREST
     * blocking grams (width CORPUS-ADAPTIVE — see adaptiveGramWidth;
-    * r17 repaired the fixed-5 namespace saturation ErSaturation16
-    * measured at 100x) — the shared "customer#0..." prefix grams are
+    * r17 repaired the fixed-5 namespace saturation measured at 100x
+    * in r16) — the shared "customer#0..." prefix grams are
     * stop-grams carrying no signal and would otherwise cross-join the
     * tables — then candidates verify by EXACT Levenshtein distance
     * (r11: the r10 trigram-set Jaccard verification lost 158/1500 at
@@ -557,7 +557,7 @@ object Analytics {
     * the round-16 finding this repairs): a FIXED width saturates its
     * namespace as the corpus grows — at 100x the 5-gram space measured
     * 110.7k → 61.7k distinct grams in use, median df 2 → 32, and
-    * pass-1 candidates hit 5.62 B rows (ErSaturation16) — the one
+    * pass-1 candidates hit 5.62 B rows (r16) — the one
     * operator that did not survive the second decade. The cure is the
     * same rule the grid operators use for cell size (autoCellTenths)
     * and the ANN coarse index uses for nlist: derive the parameter
@@ -596,8 +596,8 @@ object Analytics {
       .select(col("ckey"), col("cl"), encGram(col("gm"), g).as("ge"))
 
   /** The resolve pipeline over any customer-shaped frame — split out so
-    * the 16x scaling probe (dev.ProfileEntity) can drive synthetic
-    * copies through the identical plan. Builds the blocking index
+    * scaling probes can drive synthetic copies through the identical
+    * plan. Builds the blocking index
     * inline; qEntityResolveIndexed serves the same pipeline from the
     * persisted artifacts. */
   def entityResolveFrom(customer: DataFrame): DataFrame = {
@@ -626,7 +626,7 @@ object Analytics {
     * their posting joins. Adaptive width keeps the gram NAMESPACE
     * sparse as the corpus grows, but rarest-4 selection alone still
     * lets a saturated record probe with high-df grams — at 100x
-    * (ProfileEntity18, n=1.5M, g=7) the rarest-4 probes carried
+    * (r18, n=1.5M, g=7) the rarest-4 probes carried
     * p50/p99 df of 392/567 and 537.8M pass-1 candidates, the one
     * remaining SCALE spill row (478 GB mem at 100x, SCALE_r17). With
     * the cap, a probe's posting list is <= 32 rows so per-record
@@ -651,9 +651,9 @@ object Analytics {
     // but Tune's input-proportional grain sizes exchanges by PARQUET
     // bytes — at the 100x decade AQE coalesced the candidate-volume
     // exchanges to ~34 tasks whose SMJ sorts and dedup aggregates
-    // spilled 4.2/2.4/1.4 GB (ProfileBitext18 stage table on
-    // q_entity_resolve). Resolves to the engine floor at the bench sfs
-    // (every grained() below is then a no-op — plan unchanged); pure
+    // spilled 4.2/2.4/1.4 GB (r19 stage table on q_entity_resolve).
+    // Resolves to the engine floor at the bench sfs (every grained()
+    // below is then a no-op — plan unchanged); pure
     // layout, results untouched. nRec < 0 (serve paths that never
     // counted) keeps the old shape.
     val minPartsE = c.sparkSession.conf
@@ -672,7 +672,7 @@ object Analytics {
     // r17 form attached names AND gram arrays to every candidate pair
     // before the lev filter, so the scoring join moved ~3 KB per
     // candidate (50M capped pairs x arrays ≈ 150 GB of joined rows at
-    // 100x — ScaleDecade18 watched it eat the disk). Only rows that
+    // 100x — the r18 decade run watched it eat the disk). Only rows that
     // SURVIVE the lev threshold ever need jac (lev dominates the
     // composite key; threshold-1 scoring filters to lev<=1 first), so
     // stage A joins the ~100-byte names, and stage B attaches gram
@@ -698,9 +698,9 @@ object Analytics {
     // posting list is bounded. The two layers fail differently and
     // cover each other: the r10 absolute df<=25 cap gated the join
     // for everyone with no fallback (at 4x corpus every gram exceeded
-    // it and the candidate set silently emptied — dev.ProfileEntity);
-    // the per-record prefix alone let saturated records drag 537.8M
-    // pass-1 candidates at 100x (ProfileEntity18). Cap + prefix +
+    // it and the candidate set silently emptied); the per-record
+    // prefix alone let saturated records drag 537.8M pass-1
+    // candidates at 100x (r18). Cap + prefix +
     // the structural retry rescue bounds pass-1 work per record at
     // any corpus size with no silent-empty mode.
     // per-record rarest-K selection as the bounded-heap TopKAgg, not a
@@ -812,7 +812,7 @@ object Analytics {
     // low-cardinality tail), and rescue buckets grew LINEARLY with
     // the corpus: at 100x the df-capped pass-1 sends 41k records here
     // and 41k x 12k-row buckets = 492M verification pairs filled the
-    // disk (ScaleDecade18, ENOSPC twice). The variant join is ~8 rows
+    // disk (r18 decade run, ENOSPC twice). The variant join is ~8 rows
     // per master and candidates ~ the true-match set at any corpus
     // scale.
     val retryIds = dirty.select(col("rid"))
@@ -1007,7 +1007,7 @@ object Analytics {
     * the na/nb margin joins are AQE-decided (item cardinality grows
     * with the catalog — never force-broadcast it).
     *
-    * Floor attribution (r12, dev.ProfileCofreq at sf0.1): baskets
+    * Floor attribution (r12, stage profile at sf0.1): baskets
     * build ~1.4 s + pair self-join/agg ~2.6 s ≈ the ~4 s total — the
     * capped pair expansion IS the floor. The row-local alternative
     * (collect_list per user + HOF pair explode) measured 2.3× SLOWER

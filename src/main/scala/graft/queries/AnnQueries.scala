@@ -17,8 +17,8 @@ object AnnQueries {
 
   /** FIXED query panel (r13): every ANN/recall/mining row probes with
     * vec_id % 50 == 0 AND vec_id < 2000 — the second clause is the
-    * decade probe's lesson (the ScaleCheck11 bloom rule applied to the
-    * whole family): a recall monitor or hard-negative miner whose
+    * decade probe's lesson (the r11 scale-check bloom rule applied to
+    * the whole family): a recall monitor or hard-negative miner whose
     * query panel grows WITH the corpus turns its exact-truth side into
     * an n² sweep (measured 14.5x and 24.5x at 10x data). Production
     * panels are fixed samples — the corpus grows, the panel doesn't.
@@ -214,7 +214,7 @@ object AnnQueries {
     // runs the identical pinned left-fold arithmetic in a compiled
     // triple loop (functions.MaxSimScore scaladoc has the fold-order
     // proof); the oracle's unrolled replay is untouched. Measured
-    // isolated (TimeOne min): ~2.7-3.1 s before -> 0.88 s with the
+    // isolated (min of runs): ~2.7-3.1 s before -> 0.88 s with the
     // kernel + the spread below (spread alone moved nothing — the
     // cost was the tree, not the scan).
     val score = graft.functions.MaxSimScore(col("embedding"), q0, 8, 8)
@@ -467,8 +467,9 @@ object AnnQueries {
     Ann.recallAtK(qAnnIvfDelta(spark, dir), qCosineTopK(spark, dir), K)
 
   /** Per-JVM namespace tag for index artifacts (applicationId is unique
-    * per SparkContext): two sessions on the same data dir (e.g. Bench
-    * and the Verify driver) would otherwise overwrite each other's
+    * per SparkContext): two sessions on the same data dir (e.g. the
+    * forked test JVMs, or perfbench next to the Verify driver) would
+    * otherwise overwrite each other's
     * index files mid-read, and stale /tmp state would survive across
     * runs. Within one session the id is stable, so build-once /
     * serve-many semantics are unchanged. */
@@ -714,24 +715,16 @@ object AnnQueries {
     * carries; exact = the nlist-1 degenerate configuration, feasible
     * at eval scale exactly like the brute-force sides of the ANN
     * recall rows). */
-  def qBitextRecall(spark: SparkSession, dir: String): DataFrame =
-    qBitextRecallWith(spark, dir, overlap = true)
-
-  /** [[qBitextRecall]] with the side-materialization strategy explicit
-    * — the A/B hook ProfileAb18 measures (results identical either
-    * way: the same two tables feed the same join). */
-  private[graft] def qBitextRecallWith(spark: SparkSession, dir: String,
-                                       overlap: Boolean): DataFrame = {
+  def qBitextRecall(spark: SparkSession, dir: String): DataFrame = {
     val e = emb(spark, dir)
     val src = e.filter(col("vec_id") % 2 === 0)
     val tgt = e.filter(col("vec_id") % 2 === 1)
-    // overlap=true: the two sides materialize from two driver threads
-    // (guide §2.6 — the recallAtK opt-in move; the chains share
-    // nothing below the final join). overlap=false: both sides stay
-    // lazy inside the final action, as in the build round. Results
+    // the two sides materialize from two driver threads (guide §2.6 —
+    // the recallAtK opt-in move; the chains share nothing below the
+    // final join). Decided by interleaved in-session A/B against both
+    // sides staying lazy inside the final action (sf0.1: lazy min
+    // 8.46 s vs overlapped 7.91 s, 3/4 pairwise wins); results are
     // identical either way — the same two tables feed the same join.
-    // Decided by interleaved in-session A/B (ProfileAb18 at sf0.1:
-    // lazy min 8.46 s vs overlapped 7.91 s, 3/4 pairwise wins).
     def idxSide() = qBitextMine(spark, dir)
       .select(col("src_id"), col("tgt_id").as("tgt_indexed"),
         col("mutual").as("mutual_indexed"))
@@ -739,22 +732,19 @@ object AnnQueries {
       nlistTgt = 1, nprobe = 1, iters = 2)
       .select(col("src_id"), col("tgt_id").as("tgt_exact"),
         col("mutual").as("mutual_exact"))
+    val es = java.util.concurrent.Executors.newFixedThreadPool(2)
     val (idx, exact) =
-      if (!overlap) (idxSide(), exSide())
-      else {
-        val es = java.util.concurrent.Executors.newFixedThreadPool(2)
-        try {
-          val idxF = es.submit(
-            new java.util.concurrent.Callable[DataFrame] {
-              def call(): DataFrame = idxSide().localCheckpoint()
-            })
-          val exF = es.submit(
-            new java.util.concurrent.Callable[DataFrame] {
-              def call(): DataFrame = exSide().localCheckpoint()
-            })
-          (idxF.get(), exF.get())
-        } finally es.shutdown()
-      }
+      try {
+        val idxF = es.submit(
+          new java.util.concurrent.Callable[DataFrame] {
+            def call(): DataFrame = idxSide().localCheckpoint()
+          })
+        val exF = es.submit(
+          new java.util.concurrent.Callable[DataFrame] {
+            def call(): DataFrame = exSide().localCheckpoint()
+          })
+        (idxF.get(), exF.get())
+      } finally es.shutdown()
     exact.join(idx, Seq("src_id"), "left")
       .select(col("src_id"), col("tgt_exact"),
         coalesce(col("tgt_indexed"), lit(-1L)).as("tgt_indexed"),

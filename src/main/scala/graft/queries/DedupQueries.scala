@@ -55,19 +55,11 @@ object DedupQueries {
 
   /** Canonical doc per transitive near-dup cluster (minhash pairs as the
     * edge set). */
-  def qDedupClusters(spark: SparkSession, dir: String): DataFrame =
-    qDedupClustersWith(spark, dir, eagerCp = true)
-
-  /** [[qDedupClusters]] with the checkpoint-eagerness knob exposed for
-    * the ProfileAb18 "cp" A/B — the qBpeTrainDeepVia pattern, so the
-    * harness measures exactly the bench row's shape. */
-  private[graft] def qDedupClustersWith(spark: SparkSession, dir: String,
-                                        eagerCp: Boolean): DataFrame = {
+  def qDedupClusters(spark: SparkSession, dir: String): DataFrame = {
     val d = docs(spark, dir)
     Dedup.dedupClusters(d,
       Dedup.minhashPairs(d, K, numHashes = 64, bands = 16, minEst = 0.2),
-      iters = 3, // near-dup components are shallow; 3 hops covers them
-      eagerCp = eagerCp)
+      iters = 3) // near-dup components are shallow; 3 hops covers them
   }
 
   /** Keep-BEST canonical selection — the curation rule real dedup
@@ -171,24 +163,17 @@ object DedupQueries {
     * touches-delta) unions to the full minhash pair set, so the final
     * assignment must equal the from-scratch build: the oracle is the
     * cluster-recurrence oracle once more. */
-  def qDedupCcDelta(spark: SparkSession, dir: String): DataFrame =
-    qDedupCcDeltaWith(spark, dir, eagerCp = true)
-
-  /** [[qDedupCcDelta]] with the checkpoint-eagerness knob exposed for
-    * the ProfileAb18 "cp" A/B (see [[qDedupClustersWith]]). */
-  private[graft] def qDedupCcDeltaWith(spark: SparkSession, dir: String,
-                                       eagerCp: Boolean): DataFrame = {
+  def qDedupCcDelta(spark: SparkSession, dir: String): DataFrame = {
     val d = docs(spark, dir)
     val all = Dedup.minhashPairs(d, K, numHashes = 64, bands = 16,
       minEst = 0.2).select(col("ida"), col("idb")).localCheckpoint()
     val basePairs = all.filter(col("ida") % 5 =!= 4 && col("idb") % 5 =!= 4)
     val deltaPairs = all.filter(col("ida") % 5 === 4 || col("idb") % 5 === 4)
     val baseAssign = graft.operators.ConnectedComponents
-      .components(d.filter(col("doc_id") % 5 =!= 4), basePairs,
-        eagerCp = eagerCp)
+      .components(d.filter(col("doc_id") % 5 =!= 4), basePairs)
       .select(col("doc_id"), col("canonical_id"))
     graft.operators.ConnectedComponents
-      .componentsDelta(d, baseAssign, deltaPairs, eagerCp = eagerCp)
+      .componentsDelta(d, baseAssign, deltaPairs)
   }
 
   /** Benchmark decontamination: docs from source 'src0' play the

@@ -23,10 +23,10 @@ object TextQueries {
 
   /** Raw docs for the round-chained trainers (BPE). The chains spread
     * ONCE (then checkpoint) before their merge rounds — see
-    * qBpeTrainDeepVia for the full rationale and the r18 session-5
+    * qBpeTrainDeep for the full rationale and the r18 session-5
     * measurements; per-round repartitioning was the variant measured
     * 1.6x slower. */
-  private[graft] def docsRaw(spark: SparkSession, dir: String): DataFrame =
+  private def docsRaw(spark: SparkSession, dir: String): DataFrame =
     Tables.load(spark, dir, "documents")
       .select(col("doc_id").cast("long").as("doc_id"), col("text"),
         col("lang"), col("source"))
@@ -708,7 +708,7 @@ object TextQueries {
 
   def qBpeTrain(spark: SparkSession, dir: String): DataFrame = {
     // spread once before the merge chain — full rationale on
-    // qBpeTrainDeepVia. CHECKPOINTED (r19, ADVICE r18): the rounds
+    // qBpeTrainDeep. CHECKPOINTED (r19, ADVICE r18): the rounds
     // stack replaces lazily, so without the checkpoint every round's
     // count job re-ran the scan AND the round-robin exchange — the
     // 'one exchange' claim only held for the checkpointed variants.
@@ -769,8 +769,7 @@ object TextQueries {
     * log-depth, bounded payload, identical exact integer counts in any
     * merge order, so the argmax/curve (and the oracle hash) are
     * untouched. */
-  private[graft] def bpePairCountsLocal(d: DataFrame,
-      forceTree: Boolean = false): Array[(Long, Long)] = {
+  private def bpePairCountsLocal(d: DataFrame): Array[(Long, Long)] = {
     val mapped = d.select(col("t")).queryExecution.toRdd
       .mapPartitions { it =>
         val m = new java.util.HashMap[java.lang.Long, Long](1 << 13)
@@ -804,12 +803,12 @@ object TextQueries {
     // bounded (≤ 90² entries) map, so the driver merge is trivial and
     // the round stays ONE stage — treeReduce's intermediate level is
     // a shuffle stage the deep chain would pay 65 times (r18 opt;
-    // interleaved A/B ProfileAb18 on the deep chain at sf0.1:
-    // treeReduce min 12.24 s vs reduce 11.12 s, 4/4 pairwise wins).
+    // interleaved A/B on the deep chain at sf0.1: treeReduce
+    // min 12.24 s vs reduce 11.12 s, 4/4 pairwise wins).
     // Past 64 partitions the tree caps what the driver receives at
     // once — same exact integer counts in any merge order.
     val merged =
-      if (!forceTree && mapped.getNumPartitions <= 64)
+      if (mapped.getNumPartitions <= 64)
         mapped.reduce(mergeMaps)
       else mapped.treeReduce(mergeMaps)
     val out = new Array[(Long, Long)](merged.size())
@@ -823,14 +822,7 @@ object TextQueries {
     out
   }
 
-  def qBpeTrainDeep(spark: SparkSession, dir: String): DataFrame =
-    qBpeTrainDeepVia(spark, dir, forceTree = false)
-
-  /** [[qBpeTrainDeep]] with the per-round merge strategy explicit —
-    * the A/B hook ProfileAb18 measures (identical exact integer counts
-    * either way). */
-  private[graft] def qBpeTrainDeepVia(spark: SparkSession, dir: String,
-                                      forceTree: Boolean): DataFrame = {
+  def qBpeTrainDeep(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     // spread ONCE before the chain (r18 session 5): the per-round
     // kernel scan + replace otherwise run at the SCAN's parallelism
@@ -839,7 +831,7 @@ object TextQueries {
     // layout, so unlike the session-1 per-round repartition (one
     // exchange per round — measured 1.6x slower, the "deliberately
     // not applied" note) this pays one round-robin exchange total.
-    // ProbeBpe18, interleaved 3x at sf0.1: chain 6.5-8.0 s at the
+    // Interleaved 3x at sf0.1: chain 6.5-8.0 s at the
     // scan layout vs 3.3-3.7 s spread (parts 8 and 32 equal within
     // noise) — counts phase 5.6-6.6 -> 2.4-2.8 s. Results identical:
     // pair counts are exact integer sums merged commutatively and the
@@ -851,7 +843,7 @@ object TextQueries {
     val curve = scala.collection.mutable.ArrayBuffer.empty[(Long, Long, Long, Long)]
     var lastMerge = ""
     for (k <- 0 to BpeDeepRounds) {
-      val counts = bpePairCountsLocal(d, forceTree)
+      val counts = bpePairCountsLocal(d)
       val nTokens = counts.map(_._2).sum + nDocs
       val (a, b) =
         if (k == 0) (0L, 0L)
@@ -884,7 +876,7 @@ object TextQueries {
     * map-side-combined length sum. */
   def qBpeFertility(spark: SparkSession, dir: String): DataFrame = {
     // spread once before the merge chain — full rationale on
-    // qBpeTrainDeepVia
+    // qBpeTrainDeep
     val d0 = graft.Tables.spread(
       docsRaw(spark, dir).select(lower(col("text")).as("t")))
       .localCheckpoint() // every stage + the char total read it
@@ -931,7 +923,7 @@ object TextQueries {
     * visible. */
   def qBpeFertilityLang(spark: SparkSession, dir: String): DataFrame = {
     // spread once before the merge chain — full rationale on
-    // qBpeTrainDeepVia
+    // qBpeTrainDeep
     val d0 = graft.Tables.spread(docsRaw(spark, dir)
       .select(col("lang"), lower(col("text")).as("t")))
       .localCheckpoint() // every stage + the per-lang char totals read it
@@ -1203,7 +1195,7 @@ object TextQueries {
       .agg(sum(length(col("w")).cast("long") * col("f")).as("n_chars"))
     // BPE twin: replay the exact q_bpe_train merge chain, count tokens
     // (spread once + checkpoint, the qBpeTrain shape — see
-    // qBpeTrainDeepVia for the rationale; without the checkpoint each
+    // qBpeTrainDeep for the rationale; without the checkpoint each
     // round's count job re-paid the spread exchange)
     val d0 = graft.Tables.spread(
       docsRaw(spark, dir).select(lower(col("text")).as("t")))

@@ -869,43 +869,6 @@ class DedupAnnSpec extends AnyFunSuite with SharedSpark {
     assert(merged > 0L, "delta batch merged nothing - scenario degenerate")
   }
 
-  test("CC/dedupClusters: lazy checkpoints land identical assignments") {
-    import spark.implicits._
-    // the r18 eagerCp A/B knob (ProfileAb18 "cp") must never change
-    // answers: lazy localCheckpoint defers materialization but cuts the
-    // same lineage — assignments must match the eager default row-for-
-    // row, including a multi-round path component and a delta merge
-    val n = 32L
-    val d = (1L to n).map(i => (i, s"doc $i")).toDF("doc_id", "text")
-    val pairs = (1L until n).map(i => (i, i + 1)).toDF("ida", "idb")
-    val eager = graft.operators.ConnectedComponents
-      .components(d, pairs, eagerCp = true)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val lazee = graft.operators.ConnectedComponents
-      .components(d, pairs, eagerCp = false)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(eager === lazee)
-    val byPropE = graft.operators.Dedup
-      .dedupClusters(d, pairs, iters = 6, eagerCp = true)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val byPropL = graft.operators.Dedup
-      .dedupClusters(d, pairs, iters = 6, eagerCp = false)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(byPropE === byPropL)
-    val basePairs = pairs.filter(col("ida") < 16L)
-    val deltaPairs = pairs.filter(col("ida") >= 16L)
-    val baseAssign = graft.operators.ConnectedComponents
-      .components(d.filter(col("doc_id") <= 16L), basePairs)
-      .select(col("doc_id"), col("canonical_id"))
-    val incE = graft.operators.ConnectedComponents
-      .componentsDelta(d, baseAssign, deltaPairs, eagerCp = true)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val incL = graft.operators.ConnectedComponents
-      .componentsDelta(d, baseAssign, deltaPairs, eagerCp = false)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(incE === incL)
-  }
-
   test("ConnectedComponents: 64-node path converges in log rounds") {
     import spark.implicits._
     // a path graph is min-label propagation's worst case (needs

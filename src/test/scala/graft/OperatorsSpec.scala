@@ -1279,7 +1279,7 @@ class OperatorsSpec extends AnyFunSuite with SharedSpark {
 
   test("salted Snap matches plain Snap on a hot-cell layer") {
     import graft.operators.Snap
-    // half the points in one cell, matching dev.SkewProbe's shape
+    // half the points in one cell: a hot-cell skew layer
     val pts = Tables.load(spark, SfDir, "lineitem")
       .select((col("l_orderkey") * 10 + col("l_linenumber")).as("id"),
         when(col("l_orderkey") % 2 === 0,

@@ -224,7 +224,7 @@ class PipelineOpsSpec extends AnyFunSuite with SharedSpark {
   test("adaptive blocking gram width: integer thresholds, cap at the " +
     "packing limit, and resolution quality survives a width change") {
     // r17 (VERDICT r16 item 1): the fixed 5-gram namespace saturates
-    // at 100x (ErSaturation16: 5.62B pass-1 candidates); the width now
+    // at 100x (5.62B pass-1 candidates measured in r16); the width now
     // derives from the entity count — smallest g >= 5 with 8^g >= n,
     // capped at 9 (the base-128 long packing limit). Integer
     // comparisons so the DuckDB oracle replays the rule exactly.
@@ -707,7 +707,7 @@ class PipelineOpsSpec extends AnyFunSuite with SharedSpark {
       swap.forall(_.getAs[String]("agreement") == "text_only"))
     // repost (+1e7): near-dup image AND near-dup caption — BOTH arms
     // on the overwhelming majority (banding may miss a rare pair).
-    // The one standing miss is NAMED (dev/CrossmodalChase, r16): pair
+    // The one standing miss is NAMED (traced in r16): pair
     // (175, 10000175) has true dHash hamming 5 — well inside the <=10
     // near-dup contract — but the 5 differing bits land 2/1/1/1 across
     // the four 15-bit bands, so no band is all-zero and the LSH join
