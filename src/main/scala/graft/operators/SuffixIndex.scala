@@ -1,7 +1,9 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+
+import graft.sources.Artifacts
 
 /** Session-scoped SUFFIX-INDEX artifact — the build/serve split for the
   * suffix-array family (r18, VERDICT r17 item 1, the round's top item):
@@ -12,9 +14,10 @@ import org.apache.spark.sql.functions._
   * rebuilding the same structure (r17 paid that rebuild three times —
   * 91.6 s of a 342.6 s bench). This is the same artifact discipline the
   * ANN family established ([[Ann.coarseIndex]] / ivfPqTopKIndexed:
-  * tableExists-guarded parquet + a driver memo of the bounded model):
-  * at 100 TB nobody rebuilds a corpus suffix array per query — the index
-  * is a standing structure a serving session boots from, and indexing
+  * persisted parquet built once per session through
+  * [[graft.sources.Artifacts]], plus a driver memo of the bounded
+  * model): at 100 TB nobody rebuilds a corpus suffix array per query —
+  * the index is a standing structure queries serve from, and indexing
   * must never change answers (spec-pinned: artifact-served results are
   * row-identical to the inline build).
   *
@@ -29,24 +32,23 @@ import org.apache.spark.sql.functions._
   *    consumer is the LCP descent, which runs once right here at build
   *    time — persisting them would store ~log(maxLen) corpus-sized
   *    tables nobody reads again.
-  *  - FM tables (bwt, blocked-occ checkpoints, C/E char tables) persist
-  *    LAZILY on first FM use ([[fmFor]]) — suffix-dedup-only sessions
-  *    never pay for them.
+  *  - FM tables (bwt, blocked-occ checkpoints) persist LAZILY on first
+  *    FM use ([[fmFor]]) — suffix-dedup-only sessions never pay for
+  *    them; the C/E char tables stay driver-held.
   *
-  * Keying: tag = (data dir, applicationId) — unique per SparkContext, so
-  * concurrent sessions on one data dir (the forked test JVMs, perfbench
-  * next to Verify) never overwrite each other's files mid-read, stale
-  * /tmp state can't leak across runs, and within one session the id is
-  * stable so build-once/serve-many holds.
-  * The parquet files are the durable artifact a NEW session would boot
-  * from; the memo only skips re-opening readers. */
+  * Keying: a corpus key (the data dir for the registry queries) inside
+  * the session's artifact namespace — concurrent sessions on one data
+  * dir never share files, and within a session every consumer serves
+  * the one build. The files live as long as the session; the parquet
+  * form exists because the served frames must survive the per-query
+  * cache/checkpoint clears the Verify driver performs. */
 object SuffixIndex {
 
   /** Parquet-backed served handle. All frames are plain scans of the
     * stored artifact — they survive the per-query cache/checkpoint
     * clears the Verify driver performs between queries. */
   final case class Handle(ord: DataFrame, base: DataFrame,
-                          pairs: DataFrame, path: String)
+                          pairs: DataFrame, slot: Artifacts.Slot)
 
   /** FM serving tables (see [[FmIndex]]): corpus-sized bwt + index-sized
     * blocked-occ grid as parquet scans; C/E char tables driver-held
@@ -63,78 +65,46 @@ object SuffixIndex {
   final case class DeltaTables(map14: DataFrame, map28: DataFrame,
                                tup: DataFrame, minLen: Long)
 
-  private val memo =
-    new java.util.concurrent.ConcurrentHashMap[String, Handle]()
-  private val fmMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, FmTables]()
-  private val deltaMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, DeltaTables]()
-
-  /** Per-JVM artifact namespace for a data dir (applicationId is unique
-    * per SparkContext) — the [[graft.queries]] runTag convention. */
-  def tagFor(spark: SparkSession, dir: String): String =
-    (dir + "_" + spark.sparkContext.applicationId)
-      .replaceAll("[^A-Za-z0-9]", "_")
-
   /** The session's suffix-index artifact for `docs` (a (doc_id, text)
-    * frame): build + persist on first call, serve from parquet after. */
-  def forCorpus(docs: DataFrame, tag: String): Handle = {
+    * frame) under corpus `key`: built + persisted on first call, served
+    * from parquet after. */
+  def forCorpus(docs: DataFrame, key: String): Handle = {
     val spark = docs.sparkSession
-    val path = s"/tmp/graft_suffix/$tag"
-    graft.sources.Bucketed.cleanupOnExit(path)
-    memo.computeIfAbsent(tag, _ => {
-      val ok = java.nio.file.Paths.get(s"$path/_SUFFIX_OK")
-      if (!java.nio.file.Files.exists(ok)) {
-        val (ord, levels, base) = SuffixArray.buildWithBase(docs)
-        ord.write.mode("overwrite").parquet(s"$path/ord")
-        base.write.mode("overwrite").parquet(s"$path/base")
-        // the descent runs ONCE, here, off the in-memory (checkpointed)
-        // levels; only its pairs output is worth storing
-        SuffixArray
-          .adjacentLcp(spark.read.parquet(s"$path/ord"), levels)
-          .write.mode("overwrite").parquet(s"$path/pairs")
-        java.nio.file.Files.createFile(ok)
-      }
-      Handle(spark.read.parquet(s"$path/ord"),
-        spark.read.parquet(s"$path/base"),
-        spark.read.parquet(s"$path/pairs"), path)
-    })
+    val s = Artifacts.slot(spark, "suffix", key)
+    Artifacts.once(spark, s) {
+      val (ord, levels, base) = SuffixArray.buildWithBase(docs)
+      ord.write.mode("overwrite").parquet(s"${s.path}/ord")
+      base.write.mode("overwrite").parquet(s"${s.path}/base")
+      // the descent runs ONCE, here, off the in-memory (checkpointed)
+      // levels; only its pairs output is worth storing
+      SuffixArray
+        .adjacentLcp(spark.read.parquet(s"${s.path}/ord"), levels)
+        .write.mode("overwrite").parquet(s"${s.path}/pairs")
+      Handle(spark.read.parquet(s"${s.path}/ord"),
+        spark.read.parquet(s"${s.path}/base"),
+        spark.read.parquet(s"${s.path}/pairs"), s)
+    }
   }
 
   /** FM serving tables over an already-built handle: built + persisted
     * on first FM query of the session, parquet-served after. C/E are
-    * ≤ |charset| rows — persisted for durability, memo'd for serving
-    * (the [[Ann.coarseIndex]] centroid-memo precedent). */
-  def fmFor(h: Handle, tag: String): FmTables = {
+    * ≤ |charset| rows and stay in the driver memo (the
+    * [[Ann.coarseIndex]] centroid-memo precedent). */
+  def fmFor(h: Handle): FmTables = {
     val spark = h.ord.sparkSession
-    fmMemo.computeIfAbsent(tag, _ => {
-      val ok = java.nio.file.Paths.get(s"${h.path}/_FM_OK")
-      if (!java.nio.file.Files.exists(ok)) {
-        val t = FmIndex.buildTables(h.ord, h.base)
-        // rn-sorted: blk = (rn-1) DIV B is monotone in rn, so the
-        // backward-search step's literal isin(blk) prefilter prunes to
-        // the few row groups holding the probed blocks (guide §6 —
-        // sort order on write makes min/max stats effective). One
-        // range shuffle, paid once per (session, corpus) at build.
-        t.bwt.sort("rn").write.mode("overwrite")
-          .parquet(s"${h.path}/fm_bwt")
-        t.blockCum.write.mode("overwrite")
-          .parquet(s"${h.path}/fm_blockcum")
-        import spark.implicits._
-        t.firstCnt.toDF("ch", "n").coalesce(1).write.mode("overwrite")
-          .parquet(s"${h.path}/fm_first")
-        t.eTab.toSeq.toDF("ch", "m").coalesce(1).write.mode("overwrite")
-          .parquet(s"${h.path}/fm_e")
-        java.nio.file.Files.createFile(ok)
-      }
-      FmTables(
-        spark.read.parquet(s"${h.path}/fm_bwt"),
-        spark.read.parquet(s"${h.path}/fm_blockcum"),
-        spark.read.parquet(s"${h.path}/fm_first").collect()
-          .map(r => (r.getLong(0), r.getLong(1))).toSeq.sortBy(_._1),
-        spark.read.parquet(s"${h.path}/fm_e").collect()
-          .map(r => (r.getLong(0), r.getLong(1))).toMap)
-    })
+    val s = h.slot.sub("fm")
+    Artifacts.once(spark, s) {
+      val t = FmIndex.buildTables(h.ord, h.base)
+      // rn-sorted: blk = (rn-1) DIV B is monotone in rn, so the
+      // backward-search step's literal isin(blk) prefilter prunes to
+      // the few row groups holding the probed blocks (guide §6 —
+      // sort order on write makes min/max stats effective). One
+      // range shuffle, paid once per (session, corpus) at build.
+      t.bwt.sort("rn").write.mode("overwrite").parquet(s"${s.path}/bwt")
+      t.blockCum.write.mode("overwrite").parquet(s"${s.path}/blockcum")
+      FmTables(spark.read.parquet(s"${s.path}/bwt"),
+        spark.read.parquet(s"${s.path}/blockcum"), t.firstCnt, t.eTab)
+    }
   }
 
   /** Delta-serving tables over an already-built handle: built +
@@ -143,52 +113,46 @@ object SuffixIndex {
     * window-key table filtered to positions that certify minLen real
     * bytes), parquet-served after — a delta batch never triggers a
     * base rebuild (r18, VERDICT r17 item 4). */
-  def deltaFor(h: Handle, tag: String, minLen: Long): DeltaTables = {
+  def deltaFor(h: Handle, minLen: Long): DeltaTables = {
     import org.apache.spark.sql.expressions.Window
     val spark = h.ord.sparkSession
-    deltaMemo.computeIfAbsent(s"$tag/$minLen", _ => {
-      val ok = java.nio.file.Paths.get(s"${h.path}/_DELTA_${minLen}_OK")
-      if (!java.nio.file.Files.exists(ok)) {
-        val docWin = Window.partitionBy("doc_id").orderBy("pos")
-        val withN7 = h.base.withColumn("r7n",
-          coalesce(lead(col("r"), SuffixArray.PackW).over(docWin),
-            lit(-1L)))
-          .localCheckpoint() // pair mint + label attach share it
-        val p14 = withN7
-          .select(col("r").as("k1"), col("r7n").as("k2")).distinct()
-        val (m14, _) = SuffixArray.bucketIndex(p14,
-          shiftright(col("k1"), 8 * (SuffixArray.PackW - 2)),
-          Seq("k1", "k2"), "id", SuffixArray.Row)
-        m14.write.mode("overwrite").parquet(s"${h.path}/delta_map14")
-        val m14r = spark.read.parquet(s"${h.path}/delta_map14")
-        // attachLabels with a 0-row map28 stand-in: l14/l14n attach
-        // through the persisted map14 (the identical join a delta
-        // batch runs); l28 is null here and only feeds the mint below
-        val withL14 = SuffixArray
-          .attachLabels(h.base, m14r,
-            m14r.select(col("k1"), col("k2"), col("id")).limit(0))
-          .localCheckpoint()
-        val p28 = withL14
-          .select(col("l14").as("k1"), col("l14n").as("k2")).distinct()
-        val (m28, _) = SuffixArray.bucketIndex(p28,
-          expr("CAST(k1 DIV 1024 AS BIGINT)"),
-          Seq("k1", "k2"), "id", SuffixArray.Row)
-        m28.write.mode("overwrite").parquet(s"${h.path}/delta_map28")
-        val m28r = spark.read.parquet(s"${h.path}/delta_map28")
-        // base window keys: labels re-attached through the PERSISTED
-        // maps (the identical joins a delta batch runs), then the
-        // composed key at every position certifying minLen real bytes
-        SuffixArray.attachLabels(h.base, m14r, m28r)
-          .withColumn("k", SuffixArray.windowKey(minLen))
-          .filter(col("pos") <= col("len") - minLen)
-          .select("k").distinct()
-          .write.mode("overwrite").parquet(s"${h.path}/delta_tup$minLen")
-        java.nio.file.Files.createFile(ok)
-      }
-      DeltaTables(
-        spark.read.parquet(s"${h.path}/delta_map14"),
-        spark.read.parquet(s"${h.path}/delta_map28"),
-        spark.read.parquet(s"${h.path}/delta_tup$minLen"), minLen)
-    })
+    val s = h.slot.sub("delta", minLen)
+    Artifacts.once(spark, s) {
+      val docWin = Window.partitionBy("doc_id").orderBy("pos")
+      val withN7 = h.base.withColumn("r7n",
+        coalesce(lead(col("r"), SuffixArray.PackW).over(docWin),
+          lit(-1L)))
+        .localCheckpoint() // pair mint + label attach share it
+      val p14 = withN7
+        .select(col("r").as("k1"), col("r7n").as("k2")).distinct()
+      val (m14, _) = SuffixArray.bucketIndex(p14,
+        shiftright(col("k1"), 8 * (SuffixArray.PackW - 2)),
+        Seq("k1", "k2"), "id", SuffixArray.Row)
+      m14.write.mode("overwrite").parquet(s"${s.path}/map14")
+      val m14r = spark.read.parquet(s"${s.path}/map14")
+      // attachLabels with a 0-row map28 stand-in: l14/l14n attach
+      // through the persisted map14 (the identical join a delta
+      // batch runs); l28 is null here and only feeds the mint below
+      val withL14 = SuffixArray
+        .attachLabels(h.base, m14r,
+          m14r.select(col("k1"), col("k2"), col("id")).limit(0))
+        .localCheckpoint()
+      val p28 = withL14
+        .select(col("l14").as("k1"), col("l14n").as("k2")).distinct()
+      val (m28, _) = SuffixArray.bucketIndex(p28,
+        expr("CAST(k1 DIV 1024 AS BIGINT)"),
+        Seq("k1", "k2"), "id", SuffixArray.Row)
+      m28.write.mode("overwrite").parquet(s"${s.path}/map28")
+      val m28r = spark.read.parquet(s"${s.path}/map28")
+      // base window keys: labels re-attached through the PERSISTED
+      // maps (the identical joins a delta batch runs), then the
+      // composed key at every position certifying minLen real bytes
+      SuffixArray.attachLabels(h.base, m14r, m28r)
+        .withColumn("k", SuffixArray.windowKey(minLen))
+        .filter(col("pos") <= col("len") - minLen)
+        .select("k").distinct()
+        .write.mode("overwrite").parquet(s"${s.path}/tup")
+      DeltaTables(m14r, m28r, spark.read.parquet(s"${s.path}/tup"), minLen)
+    }
   }
 }

@@ -425,21 +425,16 @@ object Analytics {
     * serves against them (bucketed on vh, the probe join's key). */
   private def entityArtifacts(spark: SparkSession,
                               dir: String): (DataFrame, DataFrame) = {
-    import graft.sources.Bucketed
-    val tag = (dir + "_" + spark.sparkContext.applicationId)
-      .replaceAll("[^A-Za-z0-9]", "_")
-    val path = s"/tmp/graft_entity/$tag"
-    val table = s"graft_entity$tag"
-    Bucketed.cleanupOnExit(path)
-    if (!spark.catalog.tableExists(table)) {
+    import graft.sources.{Artifacts, Bucketed}
+    val s = Artifacts.slot(spark, "entity", dir)
+    Artifacts.once(spark, s) {
       entityMasterNames(Tables.load(spark, dir, "customer"))
-        .write.mode("overwrite").parquet(s"$path/names")
-      val names = spark.read.parquet(s"$path/names")
-      Bucketed.writeBucketed(entityDeletionPostings(names), table,
-        s"$path/postings", "vh", 8)
+        .write.mode("overwrite").parquet(s"${s.path}/names")
+      val names = spark.read.parquet(s"${s.path}/names")
+      Bucketed.writeBucketed(entityDeletionPostings(names), s.table,
+        s"${s.path}/postings", "vh", 8)
+      (names, Bucketed.readBucketed(spark, s.table))
     }
-    (spark.read.parquet(s"$path/names"),
-      Bucketed.readBucketed(spark, table))
   }
 
   /** Entity resolution SERVED from the persisted registry index. The

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.Tables
 import graft.operators.Ann
+import graft.sources.Artifacts
 
 /** ANN queries over the embeddings table (SURVEY.md §2 rows 32-33).
   * Query set = every 50th vector. Brute-force top-k has a full SQL oracle;
@@ -466,31 +467,26 @@ object AnnQueries {
   def qAnnRecallDelta(spark: SparkSession, dir: String): DataFrame =
     Ann.recallAtK(qAnnIvfDelta(spark, dir), qCosineTopK(spark, dir), K)
 
-  /** Per-JVM namespace tag for index artifacts (applicationId is unique
-    * per SparkContext): two sessions on the same data dir (e.g. the
-    * forked test JVMs, or perfbench next to the Verify driver) would
-    * otherwise overwrite each other's
-    * index files mid-read, and stale /tmp state would survive across
-    * runs. Within one session the id is stable, so build-once /
-    * serve-many semantics are unchanged. */
-  private def runTag(spark: SparkSession, dir: String): String =
-    (dir + "_" + spark.sparkContext.applicationId)
-      .replaceAll("[^A-Za-z0-9]", "_")
+  /** The session's ANN artifact namespace for a data dir
+    * ([[Artifacts]]): the shared coarse quantizer and the
+    * PQ index built over it live here, each keyed by its build
+    * parameters. */
+  private def annSlot(spark: SparkSession, dir: String) =
+    Artifacts.slot(spark, "ann", dir)
 
   /** The session's SHARED coarse-quantizer artifact for this data dir:
-    * ONE nlist=16/iters=2 Lloyd training + assignment per session,
-    * persisted cluster-bucketed; q_ann_ivf_indexed, q_ann_recall_ivf,
-    * q_semdedup and the PQ index build all serve from it (the r9 suite
-    * retrained the identical quantizer in four separate queries).
-    * Training is deterministic, so every consumer's answers — and the
-    * oracles, which replay the training chain in SQL — are unchanged. */
+    * ONE iters=2 Lloyd training + assignment per session, persisted
+    * cluster-bucketed; q_ann_ivf_indexed, q_ann_recall_ivf, q_semdedup
+    * and — while coarseNlist is 16 — the PQ index build all serve from
+    * it (the r9 suite retrained the identical quantizer in four
+    * separate queries). Training is deterministic, so every consumer's
+    * answers — and the oracles, which replay the training chain in
+    * SQL — are unchanged. */
   private def coarse(spark: SparkSession,
                      dir: String): (Seq[(Long, Array[Double])], DataFrame) = {
-    val tag = runTag(spark, dir)
-    graft.sources.Bucketed.cleanupOnExit(s"/tmp/graft_coarse/$tag")
+    val s = annSlot(spark, dir)
     Ann.coarseIndex(emb(spark, dir), nlist = coarseNlist(spark, dir),
-      iters = 2, dim = 64,
-      table = s"graft_coarse$tag", path = s"/tmp/graft_coarse/$tag")
+      iters = 2, dim = 64, table = s.table, path = s.path)
   }
 
   /** Corpus-scaled cell count for the shared coarse quantizer — the
@@ -518,11 +514,10 @@ object AnnQueries {
 
   /** Memoized corpus size per (session, dir) — derived-capacity rules
     * (hyperplane count, nlist) need n, but each query invocation must
-    * not pay its own full embeddings count scan; same memo discipline
-    * as runTag/coarse. */
-  private val nMemo = scala.collection.concurrent.TrieMap.empty[String, Long]
+    * not pay its own full embeddings count scan; same memo as the
+    * coarse artifact. */
   private def corpusN(spark: SparkSession, dir: String): Long =
-    nMemo.getOrElseUpdate(runTag(spark, dir),
+    Artifacts.once(spark, Artifacts.slot(spark, "corpus_n", dir))(
       math.max(emb(spark, dir).count(), 1L))
 
   /** Persisted-index IVF: same parameters and RESULTS as q_ann_ivf, but
@@ -570,22 +565,24 @@ object AnnQueries {
     Ann.recallAtK(qAnnPqIndexed(spark, dir), qCosineTopK(spark, dir), K)
 
   /** Persisted-index IVF-PQ: same parameters and RESULTS as q_ann_pq,
-    * but built ONCE per session (encoded index + centroids + codebooks
-    * as parquet artifacts) and served by reading them back — no
-    * training scan reruns per query batch. The oracle is the inline PQ
-    * oracle: indexing must never change answers. */
-  def qAnnPqIndexed(spark: SparkSession, dir: String): DataFrame = {
-    val e = emb(spark, dir)
-    val tag = runTag(spark, dir)
-    graft.sources.Bucketed.cleanupOnExit(s"/tmp/graft_pq/$tag")
-    graft.sources.Bucketed.cleanupOnExit(s"/tmp/graft_coarse/$tag")
-    Ann.ivfPqTopKIndexed(e, e.transform(panel), K,
+    * but built ONCE per session (the encoded index as a parquet
+    * artifact, centroids and codebooks in the driver memo) and served
+    * from it — no training scan reruns per query batch. The oracle is
+    * the inline PQ oracle: indexing must never change answers. */
+  def qAnnPqIndexed(spark: SparkSession, dir: String): DataFrame =
+    pqIndexed(spark, dir, emb(spark, dir).transform(panel), K)
+
+  /** Top-k of `queries` from the session's persisted IVF-PQ index —
+    * the one index q_ann_pq_indexed, the rerank shortlist and the
+    * indexed MMR shortlist share (nlist=16, m=8, ksub=8: q_ann_pq's
+    * parameters, so the indexed rows match their inline twin at every
+    * corpus size). */
+  private def pqIndexed(spark: SparkSession, dir: String,
+                        queries: DataFrame, k: Int): DataFrame = {
+    val s = annSlot(spark, dir)
+    Ann.ivfPqTopKIndexed(emb(spark, dir), queries, k,
       nlist = 16, nprobe = 2, coarseIters = 2, m = 8, ksub = 8,
-      pqIters = 2, table = s"graft_pq_idx$tag",
-      path = s"/tmp/graft_pq/$tag",
-      // the PQ build rides the session's shared coarse artifact
-      coarseTable = s"graft_coarse$tag",
-      coarsePath = s"/tmp/graft_coarse/$tag")
+      pqIters = 2, table = s.table, path = s.path)
   }
 
   private val Shortlist = 50
@@ -599,15 +596,7 @@ object AnnQueries {
   def qAnnPqRerank(spark: SparkSession, dir: String): DataFrame = {
     val e = emb(spark, dir)
     val queries = e.transform(panel)
-    val tag = runTag(spark, dir)
-    graft.sources.Bucketed.cleanupOnExit(s"/tmp/graft_pq/$tag")
-    graft.sources.Bucketed.cleanupOnExit(s"/tmp/graft_coarse/$tag")
-    val shortlist = Ann.ivfPqTopKIndexed(e, queries, Shortlist,
-      nlist = 16, nprobe = 2, coarseIters = 2, m = 8, ksub = 8,
-      pqIters = 2, table = s"graft_pq_idx$tag",
-      path = s"/tmp/graft_pq/$tag",
-      coarseTable = s"graft_coarse$tag",
-      coarsePath = s"/tmp/graft_coarse/$tag")
+    val shortlist = pqIndexed(spark, dir, queries, Shortlist)
     Ann.rerankTopK(e, queries, shortlist, K)
   }
 
@@ -651,15 +640,7 @@ object AnnQueries {
   def qMmrRerankIndexed(spark: SparkSession, dir: String): DataFrame = {
     val e = emb(spark, dir)
     val queries = e.transform(panel)
-    val tag = runTag(spark, dir)
-    graft.sources.Bucketed.cleanupOnExit(s"/tmp/graft_pq/$tag")
-    graft.sources.Bucketed.cleanupOnExit(s"/tmp/graft_coarse/$tag")
-    val shortlist = Ann.ivfPqTopKIndexed(e, queries, 20,
-      nlist = 16, nprobe = 2, coarseIters = 2, m = 8, ksub = 8,
-      pqIters = 2, table = s"graft_pq_idx$tag",
-      path = s"/tmp/graft_pq/$tag",
-      coarseTable = s"graft_coarse$tag",
-      coarsePath = s"/tmp/graft_coarse/$tag")
+    val shortlist = pqIndexed(spark, dir, queries, 20)
     val refined = Ann.rerankTopK(e, queries, shortlist, 20)
     Ann.mmrRerankOn(e, refined, k = 5, lambda = 0.7, dim = 64)
   }

@@ -3,7 +3,6 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.Tables
 import graft.functions.TextFunctions._
 
 /** Retrieval / tokenization pipeline queries over the documents table:
@@ -14,13 +13,9 @@ import graft.functions.TextFunctions._
   */
 object RetrievalQueries {
 
-  // consumers tokenize/explode per doc before their first exchange —
-  // spread the single-row-group scan (Tables.spread: no-op on real
-  // many-file corpora)
-  private def docs(spark: SparkSession, dir: String): DataFrame =
-    Tables.spread(Tables.load(spark, dir, "documents")
-      .select(col("doc_id").cast("long").as("doc_id"), col("text"),
-        col("lang"), col("source")))
+  // the same spread documents frame TextQueries builds its suffix
+  // index over (the FM rows serve from that one artifact)
+  import TextQueries.docs
 
   // ------------------------------------------------------------- chunking
 
@@ -543,9 +538,9 @@ object RetrievalQueries {
     // rebuild. An FM-index whose every use rebuilds the BWT is a scan
     // in disguise.
     import graft.operators.SuffixIndex
-    val h = SuffixIndex.forCorpus(d, SuffixIndex.tagFor(spark, dir))
+    val h = SuffixIndex.forCorpus(d, dir)
     graft.operators.FmIndex.serve(h.ord,
-      SuffixIndex.fmFor(h, SuffixIndex.tagFor(spark, dir)), pats)
+      SuffixIndex.fmFor(h), pats)
   }
 
   /** FM-index LOCATE (SURVEY §2 row 225, r18): every occurrence
@@ -575,9 +570,9 @@ object RetrievalQueries {
     }
     val pats = lifted ++ Seq((8L, "ing "), (9L, "zqxjvvqz"))
     import graft.operators.SuffixIndex
-    val h = SuffixIndex.forCorpus(d, SuffixIndex.tagFor(spark, dir))
+    val h = SuffixIndex.forCorpus(d, dir)
     graft.operators.FmIndex.locate(h.ord,
-      SuffixIndex.fmFor(h, SuffixIndex.tagFor(spark, dir)), pats)
+      SuffixIndex.fmFor(h), pats)
   }
 
   val oracles: Map[String, String] = Map(

@@ -290,28 +290,26 @@ object SourceQueries {
     * never change answers). l_quantity values are small integers in
     * doubles, so the per-order sums are exact in either engine. */
   def qBucketedJoin(spark: SparkSession, dir: String): DataFrame = {
-    import graft.sources.Bucketed
-    // Tag includes the applicationId so concurrent JVMs on the same data
-    // dir never clobber each other's table files (same policy as the
-    // persisted IVF index). Within a session the write is idempotent
-    // (writeBucketedOnce): the layout is built once and every later run
-    // — bench warm-up, measured runs — pays only the co-located join,
-    // which is the property this query exists to measure.
-    val tag = (dir + "_" + spark.sparkContext.applicationId)
-      .replaceAll("[^A-Za-z0-9]", "_")
-    val li = Tables.load(spark, dir, "lineitem")
-      .select(col("l_orderkey").cast("long").as("k"), col("l_quantity"))
-    val o = Tables.load(spark, dir, "orders")
-      .select(col("o_orderkey").cast("long").as("k"),
-        col("o_custkey").cast("long").as("o_custkey"))
-    Bucketed.cleanupOnExit(s"/tmp/graft_bucket_q/li$tag")
-    Bucketed.cleanupOnExit(s"/tmp/graft_bucket_q/o$tag")
-    Bucketed.writeBucketedOnce(li, s"graft_li_q$tag",
-      s"/tmp/graft_bucket_q/li$tag", "k", 8)
-    Bucketed.writeBucketedOnce(o, s"graft_o_q$tag",
-      s"/tmp/graft_bucket_q/o$tag", "k", 8)
-    Bucketed.readBucketed(spark, s"graft_o_q$tag")
-      .join(Bucketed.readBucketed(spark, s"graft_li_q$tag"), "k")
+    import graft.sources.{Artifacts, Bucketed}
+    // The layout is built once per session (Artifacts.once) and every
+    // later run — bench warm-up, measured runs — pays only the
+    // co-located join, which is the property this query exists to
+    // measure. The r7 bench rebuilt both bucketed inputs per execution,
+    // making a zero-exchange join look like the 5th slowest query.
+    val s = Artifacts.slot(spark, "bucketed_join", dir)
+    val (o, li) = Artifacts.once(spark, s) {
+      def write(df: DataFrame, side: Artifacts.Slot): DataFrame = {
+        Bucketed.writeBucketed(df, side.table, side.path, "k", 8)
+        Bucketed.readBucketed(spark, side.table)
+      }
+      (write(Tables.load(spark, dir, "orders")
+          .select(col("o_orderkey").cast("long").as("k"),
+            col("o_custkey").cast("long").as("o_custkey")), s.sub("o")),
+        write(Tables.load(spark, dir, "lineitem")
+          .select(col("l_orderkey").cast("long").as("k"),
+            col("l_quantity")), s.sub("li")))
+    }
+    o.join(li, "k")
       .groupBy(col("k").as("o_orderkey"), col("o_custkey"))
       .agg(count(lit(1)).as("n_items"),
         round(sum("l_quantity"), 2).as("sum_qty"))
@@ -731,23 +729,20 @@ object SourceQueries {
     * PlanShapeSpec pins both). The roundtrip contract is value-level:
     * md5 over the read-back text must equal the oracle's md5 straight
     * off parquet — a lossy writer, a schema coercion or an encoding
-    * detour would all hash apart. Write is idempotent per session
-    * (the writeBucketedOnce policy); the read is map-only. */
+    * detour would all hash apart. The write happens once per session
+    * (graft.sources.Artifacts); the read is map-only. */
   def qOrcRoundtrip(spark: SparkSession, dir: String): DataFrame = {
-    val tag = (dir + "_" + spark.sparkContext.applicationId)
-      .replaceAll("[^A-Za-z0-9]", "_")
-    val path = s"/tmp/graft_orc/$tag"
-    graft.sources.Bucketed.cleanupOnExit(path)
-    if (!new java.io.File(path).exists()) {
+    import graft.sources.Artifacts
+    val s = Artifacts.slot(spark, "orc", dir)
+    Artifacts.once(spark, s) {
       Tables.load(spark, dir, "documents")
         .select(col("doc_id").cast("long").as("doc_id"), col("source"),
           col("text"), col("n_chars").cast("long").as("n_chars"),
           col("lang"))
         .write.mode("overwrite").option("compression", "zlib")
-        .partitionBy("lang").orc(path)
-    }
-    spark.read.orc(path)
-      .filter(col("lang").isin("en", "de") && col("n_chars") >= 100)
+        .partitionBy("lang").orc(s.path)
+      spark.read.orc(s.path)
+    }.filter(col("lang").isin("en", "de") && col("n_chars") >= 100)
       .select(col("doc_id"), col("lang"), col("n_chars"),
         md5(col("text")).as("text_md5"))
   }

@@ -15,8 +15,10 @@ object TextQueries {
 
   // consumers run per-doc kernels (shingle hashes, tokenize explodes,
   // regex scoring) before their first exchange — spread the single-
-  // row-group scan (Tables.spread: no-op on real many-file corpora)
-  private def docs(spark: SparkSession, dir: String): DataFrame =
+  // row-group scan (Tables.spread: no-op on real many-file corpora).
+  // Shared with RetrievalQueries: both build the session suffix index
+  // over it under the data dir's key, so there must be one definition.
+  private[graft] def docs(spark: SparkSession, dir: String): DataFrame =
     Tables.spread(Tables.load(spark, dir, "documents")
       .select(col("doc_id").cast("long").as("doc_id"), col("text"),
         col("lang"), col("source")))
@@ -1957,8 +1959,7 @@ object TextQueries {
     // SuffixIndex.forCorpus; this query — and the apply/FM rows — read
     // the persisted ord/pairs instead of each rebuilding them
     val d = docs(spark, dir).select("doc_id", "text")
-    val h = graft.operators.SuffixIndex.forCorpus(d,
-      graft.operators.SuffixIndex.tagFor(spark, dir))
+    val h = graft.operators.SuffixIndex.forCorpus(d, dir)
     suffixDedupStats(d, h.ord, h.pairs)
   }
 
@@ -2007,7 +2008,7 @@ object TextQueries {
     // ord/pairs — the build never reruns for the apply step
     import graft.operators.{SuffixArray, SuffixIndex}
     val d0 = docs(spark, dir).select("doc_id", "text")
-    val h = SuffixIndex.forCorpus(d0, SuffixIndex.tagFor(spark, dir))
+    val h = SuffixIndex.forCorpus(d0, dir)
     val d = d0.select(col("doc_id").cast("long").as("doc_id"),
       col("text"))
     SuffixArray.applyDedupFrom(
@@ -2035,8 +2036,7 @@ object TextQueries {
   def qSuffixDedupDelta(spark: SparkSession, dir: String): DataFrame = {
     import graft.operators.{SuffixArray, SuffixIndex}
     val d0 = docs(spark, dir).select("doc_id", "text")
-    val h = SuffixIndex.forCorpus(d0, SuffixIndex.tagFor(spark, dir))
-    val t = SuffixIndex.deltaFor(h, SuffixIndex.tagFor(spark, dir), 50L)
+    val t = SuffixIndex.deltaFor(SuffixIndex.forCorpus(d0, dir), 50L)
     SuffixArray.applyDedupFrom(
       SuffixArray.deltaSpans(deltaBatch(d0), t))
   }

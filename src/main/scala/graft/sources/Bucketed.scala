@@ -34,30 +34,16 @@ object Bucketed {
       .saveAsTable(table)
   }
 
-  /** Idempotent build: write the bucketed table only if this session has
-    * not registered it yet. An index/bucketed layout is built ONCE and
-    * amortized over every downstream join — a query that rebuilds its
-    * bucketed inputs on every run is measuring the build, not the join
-    * (the r7 bench's q_bucketed_join row did exactly that: two writes
-    * per execution, making a zero-exchange join look like the 5th
-    * slowest query in the suite). */
-  def writeBucketedOnce(df: DataFrame, table: String, path: String,
-                        key: String, buckets: Int): Unit =
-    if (!df.sparkSession.catalog.tableExists(table))
-      writeBucketed(df, table, path, key, buckets)
-
   /** Read a registered bucketed table (bucket metadata comes from the
     * catalog, which is why this is a table read, not a path read). */
   def readBucketed(spark: SparkSession, table: String): DataFrame =
     spark.table(table)
 
-  /** Per-RUN scratch paths (applicationId-tagged index dirs) registered
-    * here are recursively deleted by a JVM shutdown hook. The appId tag
-    * stops concurrent JVMs clobbering each other's index files; this
-    * hook closes the flip side — every run would otherwise leave its
-    * uniquely-named dirs behind, growing /tmp without bound across
-    * runs. (Catalog entries die with the JVM's in-memory metastore; the
-    * FILES are what persist, so files are what the hook deletes.) */
+  /** Scratch paths registered here are recursively deleted by a JVM
+    * shutdown hook. Session-unique index directories would otherwise be
+    * left behind by every run, growing /tmp without bound. (Catalog
+    * entries die with the JVM's in-memory metastore; the FILES are what
+    * persist, so files are what the hook deletes.) */
   private val runScoped =
     java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
   private lazy val hookInstalled: Unit =

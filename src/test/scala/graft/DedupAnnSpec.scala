@@ -353,6 +353,29 @@ class DedupAnnSpec extends AnyFunSuite with SharedSpark {
     assert(inline.nonEmpty)
   }
 
+  test("coarseIndex: build parameters are part of the artifact key") {
+    import spark.implicits._
+    val dim = 8
+    val vecs = (0L until 30L).map { i =>
+      (i, (0 until dim).map(j =>
+        ((i * 31 + j * 17) % 97).toDouble / 97.0 - 0.5).toSeq)
+    }.toDF("vec_id", "embedding")
+    // one session, one table name, two nlist values: each call must get
+    // the quantizer it asked for, not whichever was built first
+    def build(nlist: Int) = Ann.coarseIndex(vecs, nlist = nlist, iters = 1,
+      dim = dim, table = "graft_coarse_key_spec",
+      path = "/tmp/graft_coarse_key_spec")
+    def cells(idx: org.apache.spark.sql.DataFrame) =
+      idx.select("cluster").distinct().count()
+    val (c4, idx4) = build(4)
+    val (c8, idx8) = build(8)
+    assert(c4.size === 4 && cells(idx4) === 4L)
+    assert(c8.size === 8 && cells(idx8) === 8L)
+    // the nlist=4 artifact is still served, unchanged
+    val (again, _) = build(4)
+    assert(again.map(_._1) === c4.map(_._1))
+  }
+
   test("ivfPqTopK: sane ADC ranking; exact duplicate is its query's top-1") {
     import spark.implicits._
     val dim = 8
@@ -400,8 +423,8 @@ class DedupAnnSpec extends AnyFunSuite with SharedSpark {
       .collect().map(key).sorted
     assert(indexed === inline)
     assert(inline.nonEmpty)
-    // serve-only second call (the table exists): same results again,
-    // proving the persisted artifacts alone reproduce the answer
+    // serve-only second call (the session memo holds the build): same
+    // results again, served from the persisted encoded index
     val served = Ann.ivfPqTopKIndexed(vecs, queries, k = 3, nlist = 4,
       nprobe = 2, coarseIters = 1, m = 4, ksub = 4, pqIters = 1,
       table = "graft_pq_spec", path = "/tmp/graft_pq_spec", dim = dim)

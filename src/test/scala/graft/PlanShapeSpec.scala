@@ -121,7 +121,7 @@ class PlanShapeSpec extends AnyFunSuite with SharedSpark {
       (11L, "wholly novel little document"))
       .toDF("doc_id", "text")
     val h = graft.operators.SuffixIndex.forCorpus(base, "planshape_r18")
-    val t = graft.operators.SuffixIndex.deltaFor(h, "planshape_r18", 50L)
+    val t = graft.operators.SuffixIndex.deltaFor(h, 50L)
     val o1 = graft.operators.SuffixArray
       .applyDedupFrom(graft.operators.SuffixArray.deltaSpans(
         delta.coalesce(1), t))

@@ -45,15 +45,15 @@ class SuffixIndexSpec extends AnyFunSuite with SharedSpark {
       (4L, "banana"))
     val tag = "suffixindexspec_fm"
     val h = SuffixIndex.forCorpus(d, tag)
-    val fm = SuffixIndex.fmFor(h, tag)
+    val fm = SuffixIndex.fmFor(h)
     val served = FmIndex.serve(h.ord, fm, pats)
     val inline = FmIndex.substringCount(d, pats)
     assert(rows(served) === rows(inline))
     // memo: a second forCorpus must return the SAME parquet-backed
-    // handle (same path), not trigger a rebuild
+    // handle, not trigger a rebuild
     val h2 = SuffixIndex.forCorpus(d, tag)
-    assert(h2.path === h.path)
-    val served2 = FmIndex.serve(h2.ord, SuffixIndex.fmFor(h2, tag), pats)
+    assert(h2 eq h)
+    val served2 = FmIndex.serve(h2.ord, SuffixIndex.fmFor(h2), pats)
     assert(rows(served2) === rows(served))
   }
 
@@ -81,7 +81,7 @@ class SuffixIndexSpec extends AnyFunSuite with SharedSpark {
     val delta = deltaSeq.toDF("doc_id", "text")
     val tag = "suffixindexspec_delta"
     val h = SuffixIndex.forCorpus(base, tag)
-    val t = SuffixIndex.deltaFor(h, tag, 50L)
+    val t = SuffixIndex.deltaFor(h, 50L)
     val got = SuffixArray
       .applyDedupFrom(SuffixArray.deltaSpans(delta, t))
       .collect().map(r => r.getLong(0) ->
