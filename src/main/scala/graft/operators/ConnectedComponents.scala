@@ -95,11 +95,11 @@ object ConnectedComponents {
       .unionAll(withM.select(col("src"), col("m").as("dst")))
       .filter(col("src") =!= col("dst"))
       .distinct()
-      // lineage cut per round (the dedupClusters rule). A LAZY
-      // checkpoint was A/B'd in r18 (it merges the materialization
-      // into converge's count, one driver round-trip less per round)
-      // and measured a TIE-to-slightly-worse (cc_delta min 5.02 eager
-      // vs 5.41 lazy, 2/4; clusters 2.21 vs 2.15, 2/4) — the
+      // lineage cut per round: converge's checks and the next round
+      // all read this output. A LAZY checkpoint was A/B'd in r18 (it
+      // merges the materialization into converge's count, one driver
+      // round-trip less per round) and measured a TIE-to-slightly-worse
+      // (cc_delta min 5.02 eager vs 5.41 lazy, 2/4) — the
       // ~50 ms/round saving is noise against the round's own work,
       // so the checkpoint stays EAGER.
       .localCheckpoint()

@@ -1,6 +1,7 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Near-duplicate detection for document corpora (SURVEY.md §2 rows 29-31).
@@ -40,45 +41,38 @@ object Dedup {
     docs.select(col("doc_id"),
       explode(graft.functions.ShingleHash(col("text"), k, mult, mod)).as("s"))
 
-  /** N-gram Jaccard near-dup pairs over rare shingles.
+  /** Each document's DISTINCT k-shingle hashes, one row per (doc_id, s).
+    * The distinct is row-local (array_distinct over the kernel's hash
+    * array), so it costs no exchange. Contract: doc_id is a row key of
+    * `docs` — two rows with one id count as two documents. */
+  private def distinctShingles(docs: DataFrame, k: Int): DataFrame =
+    docs.select(col("doc_id"), explode(array_distinct(
+      graft.functions.ShingleHash(col("text"), k, 131L, 1000000007L))).as("s"))
+
+  /** Rare-shingle overlap of every candidate pair: (ida < idb, shared,
+    * na, nb), where a shingle is rare when its document frequency df is
+    * <= maxDf, n is a document's count of distinct rare shingles and
+    * shared counts the rare shingles both documents hold.
     *
-    * Shingles with document frequency > maxDf are dropped before candidate
-    * generation (they would blow the posting-list self-join and carry no
-    * signal); Jaccard is computed over each document's *rare* shingle set.
-    * Returns (ida, idb, shared, na, nb, jac) for jac >= minJac.
-    */
-  def ngramJaccard(docs: DataFrame, k: Int, maxDf: Int,
-                   minJac: Double): DataFrame = {
-    // One shuffle builds per-shingle posting ARRAYS (collect_set dedups
-    // repeated shingles within a doc); the df cap is a size filter on the
-    // array; candidate pairs are in-array combinations (<= maxDf^2 per
-    // shingle) — no distinct, no df window, no posting self-join.
-    // Set semantics make collect_set's nondeterministic order irrelevant.
-    // Shingles are hashed to BIGINT (portable rolling hash) BEFORE the
-    // shuffle: 8-byte keys instead of k-char strings. The oracle replays
-    // the same hash, so results (collisions included) match exactly.
-    val postings = shingleHashes(docs, k, 131L, 1000000007L)
-      .groupBy("s")
-      .agg(collect_set(col("doc_id")).as("ds"))
-      .filter(size(col("ds")) <= maxDf)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val sizes = postings
-      .select(explode(col("ds")).as("doc_id"))
-      .groupBy("doc_id").agg(count(lit(1)).as("n"))
-    // Pair expansion as TWO chained generators (explode a, then explode
-    // the b > a survivors) instead of materializing the full n^2 struct
-    // array per posting and filtering it. MEASURED (r7, honest
-    // un-pruned plans): both forms time identically at sf0.1 (3.6s) —
-    // the cost after the posting shuffle is the ~1M-row pair AGGREGATE
-    // exchange, not the expansion — so the generator form is kept for
-    // its zero struct allocation, not a wall-clock claim. Stage profile
-    // (un-pruned): scan 0.33s, +postings 1.61s,
-    // full 3.64s; the intrinsic floor is the posting + pair-agg
-    // exchanges, the LSH-standard O(n·k) shape.
-    val shared = postings
-      .select(col("ds"), explode(col("ds")).as("ida"))
-      .select(col("ida"),
-        explode(filter(col("ds"), b => b > col("ida"))).as("idb"))
+    * df is a codegen'd windowed count over the shingle partition, so
+    * there is one corpus exchange (on s, reused by every consumer) and
+    * no per-shingle posting array. The candidate self-join is keyed on
+    * that same partitioning (AQE broadcasts the df >= 2 side when it is
+    * small): shingles pair up within their key (<= maxDf^2 rows per
+    * shingle, never all-pairs), and the only other exchanges are the
+    * pair and size aggregates — the LSH-standard O(n·k) shape.
+    * Shingles are BIGINT rolling hashes (8-byte keys); the oracle
+    * replays the same hash, so results (collisions included) match
+    * exactly. Same row-key contract as [[distinctShingles]]. */
+  private def rareOverlap(docs: DataFrame, k: Int, maxDf: Int): DataFrame = {
+    val rare = distinctShingles(docs, k)
+      .withColumn("df", count(lit(1)).over(Window.partitionBy("s")))
+      .filter(col("df") <= maxDf)
+    val sizes = rare.groupBy("doc_id").agg(count(lit(1)).as("n"))
+    val multi = rare.filter(col("df") >= 2)
+    val shared = multi.select(col("s"), col("doc_id").as("ida"))
+      .join(multi.select(col("s"), col("doc_id").as("idb")), "s")
+      .filter(col("ida") < col("idb"))
       .groupBy("ida", "idb")
       .agg(count(lit(1)).as("shared"))
     // sizes is one row per doc: small here, but NOT broadcast-safe at
@@ -87,40 +81,36 @@ object Dedup {
     shared
       .join(sizes.select(col("doc_id").as("ida"), col("n").as("na")), "ida")
       .join(sizes.select(col("doc_id").as("idb"), col("n").as("nb")), "idb")
+  }
+
+  /** N-gram Jaccard near-dup pairs over rare shingles.
+    *
+    * Shingles with document frequency > maxDf are dropped before candidate
+    * generation (they would blow the candidate self-join and carry no
+    * signal); Jaccard is computed over each document's *rare* shingle set.
+    * Returns (ida, idb, shared, na, nb, jac) for jac >= minJac. doc_id
+    * must be a row key of `docs`.
+    */
+  def ngramJaccard(docs: DataFrame, k: Int, maxDf: Int,
+                   minJac: Double): DataFrame =
+    rareOverlap(docs, k, maxDf)
       .withColumn("jac",
         round(col("shared").cast("double")
           / (col("na") + col("nb") - col("shared")).cast("double"), 4))
       .filter(col("jac") >= minJac)
       .select("ida", "idb", "shared", "na", "nb", "jac")
-  }
 
   /** One-sided CONTAINMENT near-dup pairs — the dedup case symmetric
     * Jaccard misses: a short document embedded in a long one (quoted
     * article, boilerplate-wrapped fragment — the Lee-et-al substring
     * case) has jac ≈ |A|/|B| ≈ 0 but containment |A∩B|/|A| ≈ 1.
-    * Same scale shape as [[ngramJaccard]] (rare-shingle posting
-    * arrays, in-array pair expansion, never all-pairs); the pair stats
-    * yield BOTH directed containments and the contained side is the
-    * one with the higher score (ties to ida). */
+    * Same rare-shingle overlap as [[ngramJaccard]] (never all-pairs);
+    * the pair stats yield BOTH directed containments and the contained
+    * side is the one with the higher score (ties to ida). doc_id must
+    * be a row key of `docs`. */
   def containmentPairs(docs: DataFrame, k: Int, maxDf: Int,
-                       minCont: Double): DataFrame = {
-    val postings = shingleHashes(docs, k, 131L, 1000000007L)
-      .groupBy("s")
-      .agg(collect_set(col("doc_id")).as("ds"))
-      .filter(size(col("ds")) <= maxDf)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val sizes = postings
-      .select(explode(col("ds")).as("doc_id"))
-      .groupBy("doc_id").agg(count(lit(1)).as("n"))
-    val shared = postings
-      .select(col("ds"), explode(col("ds")).as("ida"))
-      .select(col("ida"),
-        explode(filter(col("ds"), b => b > col("ida"))).as("idb"))
-      .groupBy("ida", "idb")
-      .agg(count(lit(1)).as("shared"))
-    shared
-      .join(sizes.select(col("doc_id").as("ida"), col("n").as("na")), "ida")
-      .join(sizes.select(col("doc_id").as("idb"), col("n").as("nb")), "idb")
+                       minCont: Double): DataFrame =
+    rareOverlap(docs, k, maxDf)
       .withColumn("cont_a",
         round(col("shared").cast("double") / col("na").cast("double"), 4))
       .withColumn("cont_b",
@@ -131,7 +121,6 @@ object Dedup {
           .otherwise(col("idb")))
       .select("ida", "idb", "shared", "na", "nb", "cont_a", "cont_b",
         "inner_id")
-  }
 
   /** MinHash signatures: one row per doc with array<long> of numHashes
     * minimums. Single shuffle (groupBy doc_id) with map-side partial
@@ -297,8 +286,7 @@ object Dedup {
       .filter(col("mn") =!= col("mx") && col("df") <= maxDf)
       .select("s")
     val flagged = sh.join(dup, "s").select("doc_id", "pos")
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy("doc_id").orderBy("pos")
+    val w = Window.partitionBy("doc_id").orderBy("pos")
     flagged
       .withColumn("grp", col("pos") - row_number().over(w))
       .groupBy("doc_id", "grp")
@@ -362,27 +350,20 @@ object Dedup {
     *
     * Scale design: benchmark suites are orders of magnitude smaller than
     * the corpus, so the distinct benchmark-shingle set is BROADCAST and
-    * the contamination count is a map-side semi-join — the corpus
-    * streams once, no corpus-sized shuffle beyond the per-doc distinct.
+    * the contamination count is a map-side semi-join. Each document's
+    * shingle distinct is row-local ([[distinctShingles]]), so the corpus
+    * streams once: the broadcast LEFT join marks hits and ONE conditional
+    * aggregate counts total and hit shingles per document. That
+    * aggregate's map side folds each document to one row, so the only
+    * corpus exchange carries about one row per document. doc_id must be
+    * a row key of `corpus`.
     * Returns (doc_id, n_shingles, n_hits, ratio, flagged); docs shorter
     * than k chars have no shingles and drop out (mirrored by oracle). */
   def decontaminate(corpus: DataFrame, benchmark: DataFrame, k: Int,
                     flagAt: Double): DataFrame = {
-    // SINGLE corpus pass: mark each distinct (doc_id, shingle) row by a
-    // broadcast LEFT join against the benchmark set, then count total
-    // and hit shingles in ONE conditional aggregate. The r7 shape
-    // derived `totals` and `hits` as two consumers of the distinct
-    // table, so the corpus shingle scan + per-doc distinct exchange
-    // executed twice and the results met in an extra join — 2.78 s at
-    // sf0.1 vs 1.75 s for this form (stage split in SURVEY §4: scan
-    // 0.34, +distinct 1.32 — the distinct exchange IS the intrinsic
-    // floor). The broadcast join stays map-side; the only
-    // exchanges are the (doc_id, s) distinct and the per-doc aggregate.
-    val corpusSh = shingleHashes(corpus, k, 131L, 1000000007L)
-      .select(col("doc_id"), col("s")).distinct()
     val benchSh = shingleHashes(benchmark, k, 131L, 1000000007L)
       .select(col("s")).distinct().withColumn("hit", lit(1L))
-    corpusSh.join(broadcast(benchSh), Seq("s"), "left")
+    distinctShingles(corpus, k).join(broadcast(benchSh), Seq("s"), "left")
       .groupBy("doc_id")
       .agg(count(lit(1)).as("n_shingles"),
         sum(coalesce(col("hit"), lit(0L))).as("n_hits"))
@@ -417,7 +398,7 @@ object Dedup {
     * just the exact result, so the oracle independently replays bloom
     * membership as position-set containment (bit p is set iff some
     * benchmark probe lands on p — the packed words and the position set
-    * define the same predicate). */
+    * define the same predicate). doc_id must be a row key of `corpus`. */
   def decontaminateBloom(corpus: DataFrame, benchmark: DataFrame, k: Int,
                          flagAt: Double): DataFrame = {
     val P = 1000000007L
@@ -455,8 +436,7 @@ object Dedup {
 
     // one distinct-shingle scan feeds both the per-doc counts and the
     // confirm join — materialize it once (the multi-consumer lineage cut)
-    val sh = shingleHashes(corpus, k, 131L, P)
-      .select(col("doc_id"), col("s")).distinct()
+    val sh = distinctShingles(corpus, k)
       .withColumn("pass", mightContain)
       .localCheckpoint()
     val perDoc = sh.groupBy("doc_id")
@@ -481,47 +461,38 @@ object Dedup {
     * pair table via min-label propagation, then a canonical (minimum)
     * doc id per component. `iters` bounds the component diameter handled
     * (near-dup components are shallow in practice; raise it for longer
-    * chains). Each iteration is one equi-join + one min-aggregate —
-    * no driver-side graph state. Docs in no pair are their own canonical.
+    * chains): after i hops a node's label is the minimum id within i
+    * edges of it. Each hop is one equi-join + one min-aggregate — no
+    * driver-side graph state. Docs in no pair are their own canonical.
     */
   def dedupClusters(docs: DataFrame, pairs: DataFrame,
                     iters: Int = 4): DataFrame = {
-    // The pair table may be an expensive pipeline (e.g. minhash LSH) and
-    // every propagation iteration consumes it. localCheckpoint (eager)
-    // runs that pipeline EXACTLY ONCE — before the src/dst union can
-    // consume it twice — and, unlike persist, replaces the plan with a
-    // flat scan of the materialized partitions. Without the lineage cut,
-    // every hop's plan embeds the whole upstream tree plus all prior
-    // hops, and Catalyst re-analyzes a super-linearly growing plan per
-    // iteration — at scale, driver-side planning alone dominates.
-    // Tradeoff: local checkpoints live on executors, so losing one mid-
-    // job fails the job instead of recomputing from lineage. On
-    // preemption-prone clusters set a reliable checkpoint dir and swap
-    // these for Dataset.checkpoint — the plan shape is unchanged.
-    // LAZY checkpoints (eager = false) were A/B'd in r18 — same
-    // LogicalRDD plan cut, materialization deferred into the consumer's
-    // action — and measured a tie (min 2.21 eager vs 2.15 lazy, 2/4
-    // wins): the per-hop driver round-trip is noise against the hop's
-    // own shuffle, so the checkpoints stay EAGER.
-    val p = pairs.select(col("ida"), col("idb"))
-      .localCheckpoint()
-    val edges = p.select(col("ida").as("src"), col("idb").as("dst"))
-      .union(p.select(col("idb").as("src"), col("ida").as("dst")))
-    var labels = edges.select(col("src").as("node"))
+    // The hop table: both directions of every pair plus ONE self-loop
+    // (v, v) per node, so a hop's min over N(v) ∪ {v} is a single
+    // join + aggregate — the recurrence clustersOracle writes as a
+    // UNION ALL of the labels and the neighbors' labels.
+    // The pair table may be an expensive pipeline (e.g. minhash LSH);
+    // one generator reads it once, and the eager localCheckpoint is the
+    // only materialization: every hop reads the previous labels once,
+    // so the lazy plan grows linearly in iters and runs as one query.
+    // Local checkpoints live on executors, so losing one mid-job fails
+    // the job instead of recomputing from lineage; on preemption-prone
+    // clusters swap in Dataset.checkpoint — the plan shape is unchanged.
+    val hop = pairs
+      .select(explode(array(
+        struct(col("ida").as("src"), col("idb").as("dst")),
+        struct(col("idb").as("src"), col("ida").as("dst")),
+        struct(col("ida").as("src"), col("ida").as("dst")),
+        struct(col("idb").as("src"), col("idb").as("dst")))).as("e"))
+      .select("e.*")
       .distinct()
-      .withColumn("label", col("node"))
       .localCheckpoint()
-    for (_ <- 1 to iters) {
-      val fromNeighbors = edges
-        .join(labels.withColumnRenamed("node", "src"), "src")
-        .select(col("dst").as("node"), col("label"))
-      // the label table is O(docs-in-pairs) rows of two longs — tiny
-      // relative to the corpus at any scale.
-      labels = labels.union(fromNeighbors)
-        .groupBy("node")
+    var labels = hop.filter(col("src") === col("dst"))
+      .select(col("src").as("node"), col("src").as("label"))
+    for (_ <- 1 to iters)
+      labels = hop.join(labels.withColumnRenamed("node", "src"), "src")
+        .groupBy(col("dst").as("node"))
         .agg(min("label").as("label"))
-        .localCheckpoint()
-    }
     docs.select(col("doc_id"))
       .join(labels.withColumnRenamed("node", "doc_id"), Seq("doc_id"), "left")
       .select(col("doc_id"),

@@ -704,8 +704,9 @@ object DedupQueries {
        |SELECT ida, idb, est FROM est WHERE est >= 0.2""".stripMargin
 
   /** Mirrors Dedup.dedupClusters' exact 3-iteration min-label recurrence
-    * over the minhash pair graph (the same UNION ALL + per-node MIN per
-    * hop), then the left join back to all docs. */
+    * over the minhash pair graph (per hop, each node's MIN label over its
+    * neighbors and itself, written as a UNION ALL), then the left join
+    * back to all docs. */
   private val clustersOracle: String = {
     def hop(prev: String, out: String): String =
       s"""$out AS (

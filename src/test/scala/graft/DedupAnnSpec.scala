@@ -288,6 +288,54 @@ class DedupAnnSpec extends AnyFunSuite with SharedSpark {
     assert(out.head.getAs[Double]("jac") === 1.0)
   }
 
+  // k = 4 shingle hashes are base-131 numerals below the 1e9+7 modulus,
+  // so distinct shingles never collide and every set below is exact
+  private def jaccardRows(d: org.apache.spark.sql.DataFrame, maxDf: Int) =
+    Dedup.ngramJaccard(d, k = 4, maxDf = maxDf, minJac = 0.0).collect()
+      .map(r => (r.getAs[Long]("ida"), r.getAs[Long]("idb")) ->
+        (r.getAs[Long]("shared"), r.getAs[Long]("na"), r.getAs[Long]("nb"),
+          r.getAs[Double]("jac"))).toMap
+
+  test("ngramJaccard: a shingle repeated inside a document counts once") {
+    // 1: abcd bcda cdab dabc abcd -> 4 distinct
+    // 2: abcd bcdz cdza dzab zabc abcd -> 5 distinct; shared {abcd}
+    val out = jaccardRows(docsOf(1L -> "abcdabcd", 2L -> "abcdzabcd"), 10)
+    assert(out === Map((1L, 2L) -> ((1L, 4L, 5L, 0.125))))
+  }
+
+  test("ngramJaccard: df == maxDf is kept, df == maxDf + 1 is dropped " +
+    "from shared and n") {
+    // each doc has 6 distinct shingles; abcd is in 1, 2, 3 (df 3) and
+    // mnop in 1, 2 (df 2); every other shingle is in one doc
+    val d = docsOf(1L -> "abcd.mnop", 2L -> "abcd,mnop", 3L -> "abcd;wxyz")
+    assert(jaccardRows(d, 3) === Map(
+      (1L, 2L) -> ((2L, 6L, 6L, 0.2)),      // 2 / (6 + 6 - 2)
+      (1L, 3L) -> ((1L, 6L, 6L, 0.0909)),   // 1 / 11
+      (2L, 3L) -> ((1L, 6L, 6L, 0.0909))))
+    // maxDf 2: abcd leaves every set, mnop stays
+    assert(jaccardRows(d, 2) === Map(
+      (1L, 2L) -> ((1L, 5L, 5L, 0.1111))))  // 1 / (5 + 5 - 1)
+  }
+
+  test("ngramJaccard: a document shorter than k, or whose shingles are " +
+    "all frequent, is absent") {
+    // 4 holds only abcd (df 4 > maxDf 3); 5 is shorter than k = 4
+    val d = docsOf(1L -> "abcd.mnop", 2L -> "abcd,mnop", 3L -> "abcd;wxyz",
+      4L -> "abcd", 5L -> "abc")
+    // abcd dropped: 1 and 2 keep 5 shingles each, sharing mnop
+    assert(jaccardRows(d, 3) === Map(
+      (1L, 2L) -> ((1L, 5L, 5L, 0.1111))))
+  }
+
+  test("ngramJaccard and containmentPairs leave no cached blocks behind") {
+    val d = Tables.load(spark, SfDir, "documents")
+      .select(col("doc_id").cast("long").as("doc_id"), col("text"))
+    val before = spark.sparkContext.getPersistentRDDs.size
+    Dedup.ngramJaccard(d, 16, 20, 0.2).collect()
+    Dedup.containmentPairs(d, 16, 20, 0.8).collect()
+    assert(spark.sparkContext.getPersistentRDDs.size === before)
+  }
+
   test("duplicatedSpans: shared passage found at exact offsets, df cap") {
     // docs 1 and 2 share one 26-char passage at different offsets;
     // doc 3 shares nothing. k=8 -> the span covers positions
@@ -843,6 +891,18 @@ class DedupAnnSpec extends AnyFunSuite with SharedSpark {
     val out = graft.operators.Dedup.dedupClusters(d, pairs)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(out === Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 4L))
+  }
+
+  test("dedupClusters: iters bounds the hops — a 6-node path after two") {
+    import spark.implicits._
+    // path 1-2-3-4-5-6: after 2 hops a node's label is the minimum id
+    // within 2 edges, max(1, v - 2) — not the full component's 1
+    val d = (1L to 7L).map(i => (i, s"doc $i")).toDF("doc_id", "text")
+    val pairs = (1L to 5L).map(i => (i, i + 1)).toDF("ida", "idb")
+    val out = Dedup.dedupClusters(d, pairs, iters = 2)
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    assert(out === Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 2L, 5L -> 3L,
+      6L -> 4L, 7L -> 7L))
   }
 
   test("ConnectedComponents matches dedupClusters on real minhash pairs") {

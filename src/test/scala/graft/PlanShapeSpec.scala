@@ -222,6 +222,26 @@ class PlanShapeSpec extends AnyFunSuite with SharedSpark {
       "attribution heaps are not run-stable")
   }
 
+  test("near-dup shingle operators: hash aggregates only, and no " +
+    "(doc_id, s) exchange in decontamination") {
+    // per-document shingle distinct is row-local and df is a windowed
+    // count, so no object/sort-based aggregate (collect_set postings)
+    // returns to these plans
+    for (q <- Seq("q_dedup_ngram_jaccard", "q_dedup_containment",
+        "q_decontaminate")) {
+      val p = plan(q)
+      assert(!p.contains("ObjectHashAggregate"), s"$q:\n$p")
+      assert(!p.contains("SortAggregate"), s"$q:\n$p")
+    }
+    // decontamination shuffles per document, never per (doc, shingle)
+    val pd = plan("q_decontaminate")
+    val keyed = "Exchange hashpartitioning\\(([^)]*)\\)".r
+      .findAllMatchIn(pd).map(_.group(1))
+      .filter(k => k.contains("doc_id#") && "\\bs#".r.findFirstIn(k).nonEmpty)
+      .toList
+    assert(keyed.isEmpty, s"q_decontaminate shuffles on (doc_id, s):\n$pd")
+  }
+
   test("r11b row-local claims: keyframes and shard rebalance rows " +
     "shuffle nothing but their 1-row marginals") {
     // video keyframes: decode + diff chain entirely inside the
