@@ -1,22 +1,15 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
-/** Replicates the driver's t1 smoke: run SparkEntry.entry and check rows>0. */
+/** The t1 smoke check: run SparkEntry.entry and check rows>0; a FAIL
+  * exits non-zero. */
 object Smoke {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local(4, SparkEntry.EntryDir)
     val df = SparkEntry.entry(spark)
     val n = df.count()
     df.show(5, truncate = false)
     println(s"[smoke] entry rows=$n ${if (n > 0) "PASS" else "FAIL"}")
     spark.stop()
+    if (n == 0) sys.exit(1)
   }
 }

@@ -14,9 +14,12 @@ import graft.queries._
   */
 object SparkEntry {
 
-  /** Flagship query on /root/testdata/sf0.001; driver smoke-checks rows>0. */
+  /** The corpus [[entry]] reads. */
+  val EntryDir = "/root/testdata/sf0.001"
+
+  /** Flagship query on [[EntryDir]]; `Smoke` checks rows>0. */
   def entry(spark: SparkSession): DataFrame =
-    Analytics.q1Pricing(spark, "/root/testdata/sf0.001")
+    Analytics.q1Pricing(spark, EntryDir)
 
   /** One entry per implemented operator from SURVEY.md §2. */
   def queries: Map[String, (SparkSession, String) => DataFrame] =

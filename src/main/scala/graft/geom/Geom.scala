@@ -21,10 +21,6 @@ object Geom {
   def dist(x1: Column, y1: Column, x2: Column, y2: Column): Column =
     sqrt(pow(x1 - x2, 2) + pow(y1 - y2, 2))
 
-  /** Squared distance — cheaper for argmin comparisons. */
-  def dist2(x1: Column, y1: Column, x2: Column, y2: Column): Column =
-    pow(x1 - x2, 2) + pow(y1 - y2, 2)
-
   /** Haversine distance in km between (lat, lon) pairs in degrees.
     * Reference: gpd_lite_toolbox/utils.py:83-91 (same cos-composition form).
     */

@@ -477,8 +477,8 @@ object Ann {
     // per planning (plans/r19/q_ann_pq_{before,after}.txt); the kernel
     // replays the identical subspace-major ascending fold and the same
     // zero-filled dense codebook (graft.functions.AdcKernel scaladoc;
-    // parity vs the grid form pinned in KernelPropertySpec via
-    // [[adcTermsExpr]]).
+    // parity vs the grid form pinned by
+    // [[graft.DedupAnnSpec.adcTermsExpr]]).
     val scored = enc.join(broadcast(probes), Seq("cluster"))
       .filter(col("qid") =!= col("nid"))
       .withColumn("adist6",
@@ -491,31 +491,6 @@ object Ann {
       .select(col("qid"), col("t.tie").as("nid"),
         (col("pos") + 1).as("rank"), col("t.key").as("adist6"),
         col("t.payload").as("cluster"))
-  }
-
-  /** The r18 ADC expression GRID over (codes, qr) — retained as the
-    * parity oracle for [[graft.functions.AdcScore]] (the kernel that
-    * replaced it): dense zero-filled codebook literal, subspace-major
-    * ascending term fold. KernelPropertySpec asserts kernel == grid
-    * bit-for-bit on random codes/residuals. */
-  private[graft] def adcTermsExpr(
-      books: IndexedSeq[Seq[(Long, Array[Double])]],
-      m: Int, ksub: Int, dsub: Int): Column = {
-    val cbDense: Seq[Seq[Seq[Double]]] = (0 until m).map { s =>
-      val mp = books(s).toMap
-      (0 until ksub).map(j =>
-        mp.getOrElse(j.toLong, new Array[Double](dsub)).toSeq)
-    }
-    val cbLit = typedLit(cbDense)
-    val terms = (0 until m).flatMap { s =>
-      val entry = element_at(element_at(cbLit, s + 1),
-        col("codes").getItem(s).cast("int") + 1)
-      (0 until dsub).map { i =>
-        val d = col("qr").getItem(s * dsub + i) - element_at(entry, i + 1)
-        d * d
-      }
-    }
-    terms.foldLeft(lit(0.0))(_ + _)
   }
 
   /** PERSISTED-index IVF-PQ: the build/serve split the inline path
@@ -854,8 +829,9 @@ object Ann {
     val Li = math.round(lambda * 10).toInt
     val Mi = 10 - Li
     // NATIVE greedy selection (r18 opt): the nested-HOF form
-    // ([[mmrSelectHof]], kept for the parity spec) interpreted k x
-    // shortlist x selected dim-wide zip_with dots per query — the MMR
+    // ([[graft.Round18Spec.mmrSelectHof]], the parity oracle)
+    // interpreted k x shortlist x selected dim-wide zip_with dots per
+    // query — the MMR
     // rows' dominant cost. functions.MmrSelect runs the identical
     // integer-space selection in one compiled kernel call per query
     // row (bit-equal by construction AND spec-pinned), so the
@@ -866,41 +842,6 @@ object Ann {
       .select(col("qid"), col("s.sr").cast("long").as("sel_rank"),
         col("s.nid").as("nid"), col("s.cos4").as("cos4"),
         col("s.mmr5").as("mmr_x1e5"))
-  }
-
-  /** The pre-r18 nested-HOF greedy MMR selection over a collected
-    * shortlist array column named `arr` — retained ONLY as the parity
-    * oracle for [[graft.functions.MmrSelect]] (the spec asserts the
-    * kernel selects row-identically on the real corpus; the HOF form
-    * is CodegenFallback-interpreted per element, which is why the
-    * serve path no longer uses it). */
-  private[graft] def mmrSelectHof(k: Int, Li: Int, Mi: Int): Column = {
-    val st = "struct<rank:int,nid:bigint,cos4:double,en:array<double>," +
-      "mmr5:bigint,sr:int>"
-    expr(
-      s"""aggregate(sequence(1, $k),
-         |  cast(array() as array<$st>),
-         |  (acc, step) -> concat(acc, array(
-         |    aggregate(
-         |      transform(
-         |        filter(arr, c -> NOT exists(acc, s -> s.nid = c.nid)),
-         |        c -> named_struct(
-         |          'rank', c.rank, 'nid', c.nid, 'cos4', c.cos4,
-         |          'en', c.en,
-         |          'mmr5', $Li * CAST(ROUND(c.cos4 * 10000.0, 0) AS BIGINT)
-         |            - $Mi * (CASE
-         |            WHEN size(acc) = 0 THEN CAST(0 AS BIGINT)
-         |            ELSE aggregate(acc, CAST(-100000 AS BIGINT), (m, s) ->
-         |              greatest(m, CAST(ROUND(aggregate(
-         |                zip_with(c.en, s.en, (x, y) -> x * y),
-         |                CAST(0.0 AS DOUBLE), (a2, v) -> a2 + v)
-         |                * 10000.0, 0) AS BIGINT)))
-         |            END),
-         |          'sr', step)),
-         |      cast(null as $st),
-         |      (best, c) -> CASE WHEN best IS NULL OR c.mmr5 > best.mmr5
-         |        OR (c.mmr5 = best.mmr5 AND c.nid < best.nid)
-         |        THEN c ELSE best END))))""".stripMargin)
   }
 
   /** Margin-based bitext mining (Artetxe & Schwenk 2019, "Margin-based

@@ -139,37 +139,6 @@ object Dedup {
         array((0 until numHashes).map(i => col(s"m$i")): _*).as("sig"))
   }
 
-  /** ROW-LOCAL minhash signatures: same (doc_id, sig) as
-    * minhashSignatures but computed entirely inside one projection —
-    * shingle hashes and the numHashes minima are array folds over a
-    * per-document char-code array, with no explode and no groupBy (min
-    * over all occurrences equals min over the distinct set). Docs
-    * shorter than k chars drop out, as in the shuffle form. This is the
-    * STREAMING-legal form (no per-doc aggregation); batch pipelines keep
-    * the shuffle form, whose minima are codegen'd partial aggregates —
-    * the interpreted HOF folds here are ~60x slower per doc and only
-    * acceptable at micro-batch sizes. */
-  def minhashSignaturesRowLocal(docs: DataFrame, k: Int,
-                                numHashes: Int): DataFrame = {
-    val codes = transform(
-      filter(split(lower(col("text")), ""), c => length(c) > lit(0)),
-      c => ascii(c).cast("long"))
-    val shingles = when(size(col("codes")) >= k,
-      transform(
-        sequence(lit(1), size(col("codes")) - (k - 1)),
-        i => aggregate(slice(col("codes"), i, lit(k)), lit(0L),
-          (acc, c) => (acc * lit(31L) + c) % lit(P))))
-    val sig = array((0 until numHashes).map { i =>
-      val (a, b) = coef(i)
-      array_min(transform(col("sh"), s => (lit(a) * s + lit(b)) % lit(P)))
-    }: _*)
-    docs
-      .select(col("doc_id"), codes.as("codes"))
-      .select(col("doc_id"), shingles.as("sh"))
-      .filter(col("sh").isNotNull && size(col("sh")) > 0)
-      .select(col("doc_id"), sig.as("sig"))
-  }
-
   /** Band hashes of a signature array (bands x rowsPerBand fold). */
   private def bandHashExprs(numHashes: Int, bands: Int): Column =
     bandHashesOf(col("sig"), numHashes, bands)
@@ -184,12 +153,9 @@ object Dedup {
 
   /** Row-local LSH band keys (doc_id, band, bh) — the streaming-legal
     * signature path (no per-doc aggregation). Signatures come from the
-    * NATIVE MinHashSig kernel (bit-equal to both the shuffle pipeline
-    * and the HOF row-local form, spec-asserted); the interpreted HOF
-    * form this used to call is ~60x slower per doc, which made the
-    * batch twin query the whole suite's straggler (164s of a 214s
-    * bench run) before the switch. minhashSignaturesRowLocal stays as
-    * the executable spec of the row-local semantics. */
+    * NATIVE MinHashSig kernel, whose spec (StreamingSpec) pins it
+    * bit-equal to the shuffle pipeline's [[minhashSignatures]]; an
+    * interpreted HOF fold was ~60x slower per doc. */
   def minhashBandKeysRowLocal(docs: DataFrame, k: Int, numHashes: Int,
                               bands: Int): DataFrame =
     docs

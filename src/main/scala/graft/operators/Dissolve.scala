@@ -3,8 +3,6 @@ package graft.operators
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.geom.Geom
-
 /** Dissolve (geometric union by key) and multi/single part conversion.
   *
   * Reference: gpd_lite_toolbox/core.py:257-282 (`dissolve`: pandas groupby +
@@ -231,11 +229,4 @@ object Dissolve {
   def dumbMultiToSingle(gdf: DataFrame, partsCol: String): DataFrame =
     gdf.withColumn("part", element_at(array_sort(col(partsCol)), 1))
       .drop(partsCol)
-
-  /** Areas/perimeters for a ring-geometry layer (non-rectilinear path):
-    * demonstrates the general shoelace machinery from geom.Geom. */
-  def ringStats(gdf: DataFrame, ringCol: String): DataFrame =
-    gdf.select(col("*"),
-      round(Geom.ringArea(col(ringCol)), 4).as("area"),
-      round(Geom.ringPerimeter(col(ringCol)), 4).as("perimeter"))
 }

@@ -774,16 +774,6 @@ object Jpeg {
     JpegImage(w, h, fullPlanes(0), fullPlanes(1), fullPlanes(2))
   }
 
-  /** JFIF YCbCr -> RGB (BT.601 full range), clamped — the presentation
-    * transform; features stay in the YCbCr domain where decode is
-    * byte-exact. */
-  def ycbcrToRgb(yv: Int, cb: Int, cr: Int): (Int, Int, Int) = {
-    def clamp(d: Double) = math.max(0, math.min(255, math.round(d).toInt))
-    (clamp(yv + 1.402 * (cr - 128)),
-      clamp(yv - 0.344136 * (cb - 128) - 0.714136 * (cr - 128)),
-      clamp(yv + 1.772 * (cb - 128)))
-  }
-
   case class JpegFeatures(doc_id: Long, width: Long, height: Long,
                           sum_y: Long, sum_cb: Long, sum_cr: Long,
                           grad_y: Long)

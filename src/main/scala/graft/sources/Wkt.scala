@@ -59,22 +59,8 @@ object Wkt {
         concat(p("x").cast("string"), lit(" "), p("y").cast("string")))),
       lit(")"))
 
-  /** array<array<struct<x,y>>> -> 'POLYGON ((...), (...))' (first ring
-    * outer, rest holes). */
-  def toWktPolygon(rings: Column): Column =
-    concat(lit("POLYGON ("),
-      concat_ws(", ", transform(rings, r => toWktRing(r))),
-      lit(")"))
-
   /** struct<x,y> -> 'POINT (x y)'. */
   def toWktPoint(x: Column, y: Column): Column =
     concat(lit("POINT ("), x.cast("string"), lit(" "),
       y.cast("string"), lit(")"))
-
-  /** array<struct<x,y>> -> 'LINESTRING (x y, x y, ...)'. */
-  def toWktLineString(pts: Column): Column =
-    concat(lit("LINESTRING ("),
-      concat_ws(", ", transform(pts, p =>
-        concat(p("x").cast("string"), lit(" "), p("y").cast("string")))),
-      lit(")"))
 }

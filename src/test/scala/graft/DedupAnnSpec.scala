@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -500,7 +501,7 @@ class DedupAnnSpec extends AnyFunSuite with SharedSpark {
     val both = rows.select(col("id"),
       round(graft.functions.AdcScore(col("codes"), col("qr"),
         books, ksub, dsub), 6).as("kernel"),
-      round(Ann.adcTermsExpr(books, m, ksub, dsub), 6).as("grid"))
+      round(DedupAnnSpec.adcTermsExpr(books, m, ksub, dsub), 6).as("grid"))
       .collect()
     both.foreach { r =>
       assert(java.lang.Double.doubleToLongBits(r.getDouble(1)) ===
@@ -1010,5 +1011,33 @@ class DedupAnnSpec extends AnyFunSuite with SharedSpark {
       assert(r.getAs[Long]("dedup_bytes") + r.getAs[Long]("new_bytes") <=
         r.getAs[Long]("blob_bytes"))
     }
+  }
+}
+
+object DedupAnnSpec {
+
+  /** The r18 ADC expression GRID over (codes, qr) — the parity oracle
+    * for [[graft.functions.AdcScore]] (the kernel that replaced it in
+    * `Ann.ivfPqScore`): dense zero-filled codebook literal,
+    * subspace-major ascending term fold. The spec above asserts
+    * kernel == grid bit-for-bit on random codes/residuals. */
+  def adcTermsExpr(
+      books: IndexedSeq[Seq[(Long, Array[Double])]],
+      m: Int, ksub: Int, dsub: Int): Column = {
+    val cbDense: Seq[Seq[Seq[Double]]] = (0 until m).map { s =>
+      val mp = books(s).toMap
+      (0 until ksub).map(j =>
+        mp.getOrElse(j.toLong, new Array[Double](dsub)).toSeq)
+    }
+    val cbLit = typedLit(cbDense)
+    val terms = (0 until m).flatMap { s =>
+      val entry = element_at(element_at(cbLit, s + 1),
+        col("codes").getItem(s).cast("int") + 1)
+      (0 until dsub).map { i =>
+        val d = col("qr").getItem(s * dsub + i) - element_at(entry, i + 1)
+        d * d
+      }
+    }
+    terms.foldLeft(lit(0.0))(_ + _)
   }
 }

@@ -17,7 +17,9 @@ import org.scalatest.funsuite.AnyFunSuite
   *     check; an oracle without a query is dead SQL);
   *  3. SURVEY.md §2's inventory must list exactly the `queries` keys —
   *     the judge reads §2 line by line, and rounds 8 and 9 both
-  *     drifted (q_crs_distance, then q_quality_classifier).
+  *     drifted (q_crs_distance, then q_quality_classifier);
+  *  4. the suites run the session config the engine ships
+  *     ([[Session.local]], `Tune` included).
   */
 class EntrySpec extends AnyFunSuite with SharedSpark {
 
@@ -31,6 +33,16 @@ class EntrySpec extends AnyFunSuite with SharedSpark {
     }
     assert(failures.isEmpty,
       s"\n${failures.size} queries fail analysis:\n  ${failures.mkString("\n  ")}")
+  }
+
+  test("the test session is the shipped one: Tune's keys and AQE") {
+    val conf = SharedSpark.session.conf
+    assert(conf.get(
+      "spark.sql.adaptive.coalescePartitions.initialPartitionNum") ===
+      Tune.initialPartitions(Tune.dirBytes(SfDir), 4).toString)
+    assert(conf.get(
+      "spark.sql.objectHashAggregate.sortBased.fallbackThreshold") === "4096")
+    assert(conf.get("spark.sql.adaptive.enabled") === "true")
   }
 
   test("queries and oracleSql key sets are identical") {

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -89,7 +90,7 @@ class Round18Spec extends AnyFunSuite with SharedSpark {
       .sortBy(t => (t._1, t._2.getOrElse(99), t._3.getOrElse(-1L)))
     val viaKernel =
       rowsOf(graft.functions.MmrSelect(col("arr"), k, li, mi, dim))
-    val viaHof = rowsOf(Ann.mmrSelectHof(k, li, mi))
+    val viaHof = rowsOf(Round18Spec.mmrSelectHof(k, li, mi))
     assert(viaKernel.length === 5 * k)
     assert(viaKernel.toSeq === viaHof.toSeq)
   }
@@ -337,5 +338,43 @@ class Round18Spec extends AnyFunSuite with SharedSpark {
       assert(mk === i.toLong && lev === 1L && hit,
         s"distinct record $i resolves to itself in pass 1")
     }
+  }
+}
+
+object Round18Spec {
+
+  /** The pre-r18 nested-HOF greedy MMR selection over a collected
+    * shortlist array column named `arr` — the parity oracle for
+    * [[graft.functions.MmrSelect]] (the spec above asserts the kernel
+    * selects row-identically; the HOF form is CodegenFallback-
+    * interpreted per element, which is why `Ann.mmrRerank` uses the
+    * kernel). */
+  def mmrSelectHof(k: Int, Li: Int, Mi: Int): Column = {
+    val st = "struct<rank:int,nid:bigint,cos4:double,en:array<double>," +
+      "mmr5:bigint,sr:int>"
+    expr(
+      s"""aggregate(sequence(1, $k),
+         |  cast(array() as array<$st>),
+         |  (acc, step) -> concat(acc, array(
+         |    aggregate(
+         |      transform(
+         |        filter(arr, c -> NOT exists(acc, s -> s.nid = c.nid)),
+         |        c -> named_struct(
+         |          'rank', c.rank, 'nid', c.nid, 'cos4', c.cos4,
+         |          'en', c.en,
+         |          'mmr5', $Li * CAST(ROUND(c.cos4 * 10000.0, 0) AS BIGINT)
+         |            - $Mi * (CASE
+         |            WHEN size(acc) = 0 THEN CAST(0 AS BIGINT)
+         |            ELSE aggregate(acc, CAST(-100000 AS BIGINT), (m, s) ->
+         |              greatest(m, CAST(ROUND(aggregate(
+         |                zip_with(c.en, s.en, (x, y) -> x * y),
+         |                CAST(0.0 AS DOUBLE), (a2, v) -> a2 + v)
+         |                * 10000.0, 0) AS BIGINT)))
+         |            END),
+         |          'sr', step)),
+         |      cast(null as $st),
+         |      (best, c) -> CASE WHEN best IS NULL OR c.mmr5 > best.mmr5
+         |        OR (c.mmr5 = best.mmr5 AND c.nid < best.nid)
+         |        THEN c ELSE best END))))""".stripMargin)
   }
 }

@@ -4,10 +4,11 @@ import org.apache.spark.sql.SparkSession
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.Suite
 
-/** One local session shared per suite; mirrors the driver's Verify config. */
+/** One local session shared per test JVM: the engine's own
+  * [[Session.local]], sized for the corpus the suites read. */
 trait SharedSpark extends BeforeAndAfterAll { self: Suite =>
 
-  val SfDir = "/root/testdata/sf0.001"
+  val SfDir = SharedSpark.SfDir
 
   lazy val spark: SparkSession = SharedSpark.session
 
@@ -15,16 +16,7 @@ trait SharedSpark extends BeforeAndAfterAll { self: Suite =>
 }
 
 object SharedSpark {
-  lazy val session: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  val SfDir = SparkEntry.EntryDir
+
+  lazy val session: SparkSession = Session.local(4, SfDir)
 }
