@@ -13,12 +13,19 @@ object Verify {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
     val spark = Session.local(cpus, sfDir)
     new java.io.File(outDir).mkdirs()
-    SparkEntry.queries.filter(kv => keep(kv._1)).foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
-      catch { case e: Throwable =>
-        System.err.println(s"[verify] $name failed: ${e.getMessage}")
-      }
+    // a failed query does not stop the dump: the rest still run and
+    // oracle_sql.json is still written, then the run exits 1
+    val failed = SparkEntry.queries.filter(kv => keep(kv._1)).flatMap {
+      case (name, fn) =>
+      val err =
+        try {
+          fn(spark, sfDir).coalesce(1).write.mode("overwrite")
+            .parquet(s"$outDir/$name")
+          None
+        } catch { case e: Throwable =>
+          System.err.println(s"[verify] $name failed: ${e.getMessage}")
+          Some(name)
+        }
       // operators persist multi-consumer stages internally; drop them
       // between queries so the pipelines don't stack up in memory
       // (localCheckpoint blocks aren't Dataset caches — drop them via
@@ -26,6 +33,7 @@ object Verify {
       spark.catalog.clearCache()
       spark.sparkContext.getPersistentRDDs.values
         .foreach(_.unpersist(blocking = false))
+      err
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the
@@ -43,5 +51,10 @@ object Verify {
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()
+    if (failed.nonEmpty) {
+      System.err.println(
+        s"[verify] FAIL ${failed.size} queries: ${failed.mkString(" ")}")
+      sys.exit(1)
+    }
   }
 }

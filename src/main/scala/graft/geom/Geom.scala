@@ -65,19 +65,6 @@ object Geom {
     lit(180.0) + atan2(first("x") - last("x"), first("y") - last("y")) * lit(180.0 / math.Pi)
   }
 
-  /** Directed "cheap hausdorff": max over vertices of li1 of the min
-    * distance to vertices of li2 (upper-bounded variant of the reference's
-    * fh_dist_lines, core.py:104-131, but symmetric-safe: we take the max of
-    * both directions). Composes aggregate over transform — stays codegen'd.
-    */
-  def hausdorff(li1: Column, li2: Column): Column = {
-    def directed(a: Column, b: Column): Column =
-      aggregate(a, lit(0.0), (acc, p) =>
-        greatest(acc, aggregate(b, lit(Double.MaxValue), (m, q) =>
-          least(m, sqrt(pow(p("x") - q("x"), 2) + pow(p("y") - q("y"), 2))))))
-    greatest(directed(li1, li2), directed(li2, li1))
-  }
-
   // ----------------------------------------------------------- ring math
 
   /** Signed shoelace area of a ring (array<struct<x,y>>, closed or open). */
@@ -93,22 +80,6 @@ object Geom {
     val closed = when(element_at(ring, 1) === element_at(ring, -1), ring)
       .otherwise(concat(ring, array(element_at(ring, 1))))
     lineLength(closed)
-  }
-
-  /** Ray-cast point-in-polygon over a ring. Crossing-number parity via
-    * aggregate over the ring's segments. */
-  def pointInRing(x: Column, y: Column, ring: Column): Column = {
-    val closed = when(element_at(ring, 1) === element_at(ring, -1), ring)
-      .otherwise(concat(ring, array(element_at(ring, 1))))
-    val crossings = aggregate(segments(closed), lit(0),
-      (acc, s) => {
-        val x1 = s("p1")("x"); val y1 = s("p1")("y")
-        val x2 = s("p2")("x"); val y2 = s("p2")("y")
-        val straddles = (y1 > y) =!= (y2 > y)
-        val xint = x1 + (y - y1) / (y2 - y1) * (x2 - x1)
-        acc + when(straddles && (x < xint), 1).otherwise(0)
-      })
-    crossings % 2 === 1
   }
 
   /** Axis-aligned bounding box of a point array: struct<x0,y0,x1,y1>. */

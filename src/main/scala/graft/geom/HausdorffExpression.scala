@@ -12,7 +12,7 @@ import org.apache.spark.sql.types.{DataType, DoubleType}
   * (array<struct<x:double, y:double>>) as a NATIVE Catalyst expression
   * with whole-stage codegen (SURVEY.md §5).
   *
-  * The higher-order-function formulation (Geom.hausdorff — nested
+  * The higher-order-function formulation (GeomSpec.hausdorff — nested
   * aggregate/least/greatest lambdas) allocates a lambda frame per vertex
   * pair; this expression compiles to two tight Java loops inside the
   * generated stage. Arithmetic is IDENTICAL (dx*dx + dy*dy -> sqrt,

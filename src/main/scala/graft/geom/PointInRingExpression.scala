@@ -8,7 +8,7 @@ import org.apache.spark.sql.graftbridge.ColumnBridge
 import org.apache.spark.sql.types.{BooleanType, DataType}
 
 /** Ray-cast point-in-ring as a native codegen'd Catalyst expression
-  * (SURVEY.md §5). Same crossing-parity semantics as Geom.pointInRing's
+  * (SURVEY.md §5). Same crossing-parity semantics as GeomSpec.pointInRing's
   * higher-order formulation (identical xint arithmetic -> identical
   * results); the generated code is one tight loop per row instead of a
   * lambda frame per segment.

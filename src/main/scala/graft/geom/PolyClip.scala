@@ -84,12 +84,6 @@ object PolyClip {
     when(size(clipped) < 3, lit(0.0))
       .otherwise(floor(Geom.ringArea(clipped) * 10000.0 + 0.5) / 10000.0)
 
-  /** Convenience one-shot: intersection area of subject x convex clip.
-    * For hot paths materialize `clip(...)` in its own projection and
-    * use `clippedArea` (see its scaladoc). */
-  def intersectionArea(subject: Column, clipRing: Column): Column =
-    clippedArea(clip(subject, clipRing))
-
   /** Intersection area of subject x a CONCAVE clip polygon given as an
     * array of CONVEX parts with disjoint interiors (the standard
     * decompose-once-reuse path for non-convex zones; any simple polygon

@@ -281,24 +281,6 @@ object Ann {
     }
   }
 
-  /** PERSISTED-index IVF: build the index once per session
-    * ([[coarseIndex]]: the cluster-assigned corpus written as a parquet
-    * table BUCKETED on cluster) — then serve queries from the stored
-    * index. This is the index-build / index-serve split every
-    * production ANN deployment has: the Lloyd training and assignment
-    * scans never rerun per query batch, cluster-restricted reads
-    * bucket-prune, and the driver-held centroid model is the only
-    * state beside the table. Results are IDENTICAL to the inline path
-    * — indexing must never change answers — so the oracle is the plain
-    * IVF oracle. */
-  def ivfTopKIndexed(corpus: DataFrame, queries: DataFrame, k: Int,
-                     nlist: Int, nprobe: Int, iters: Int, table: String,
-                     path: String, dim: Int = DefaultDim): DataFrame = {
-    val (cents, indexed) = coarseIndex(corpus, nlist, iters, dim,
-      table, path)
-    ivfProbeScore(indexed, queries, cents, k, nprobe, dim)
-  }
-
   /** IVF-PQ: product-quantization residual encoding on top of the IVF
     * coarse quantizer — the standard 100 TB ANN memory story (FAISS
     * IVF-PQ; Jégou et al. 2011, "Product Quantization for Nearest
@@ -709,33 +691,22 @@ object Ann {
 
   /** Semantic dedup — the SemDeDup shape (Abbas et al. 2023, "SemDeDup:
     * Data-efficient learning at web-scale through semantic
-    * deduplication", public literature): cluster the embedding space
-    * with the IVF coarse quantizer, then look for near-duplicates
-    * WITHIN clusters only. The pairwise sweep is bounded by cluster
-    * size — nlist grows with the corpus at scale (the paper runs 11k
-    * clusters over 1.6B embeddings), so the corpus never meets itself
-    * whole; the cluster equi-join is the only shuffle beside training.
+    * deduplication", public literature) over an ALREADY-ASSIGNED corpus
+    * (nid, ne, nn, cluster): the IVF coarse quantizer clusters the
+    * embedding space, and near-duplicates are looked for WITHIN
+    * clusters only. The pairwise sweep is bounded by cluster size —
+    * nlist grows with the corpus at scale (the paper runs 11k clusters
+    * over 1.6B embeddings), so the corpus never meets itself whole.
     *
     * Duplicate rule (deterministic, oracle-replayable): a row is a
     * duplicate iff a LOWER-id row of the same cluster has
     * round(cos, 4) >= minCos; dup_of = the smallest such id (min-id
     * anchor, the same canonicalization the text near-dup pipeline
-    * uses), keep = not a duplicate. The cluster-assigned corpus feeds
-    * the pair join twice and the output projection once, so it is
-    * materialized with a lineage cut (the established multi-consumer
-    * policy; Verify frees checkpoint blocks between queries). */
-  def semDedup(corpus: DataFrame, nlist: Int, iters: Int,
-               minCos: Double, dim: Int = DefaultDim): DataFrame = {
-    val (_, indexed) = ivfTrainAssign(corpus, nlist, iters, dim)
-    // the cluster-assigned corpus feeds three consumers; cut lineage
-    // once so the assignment scan doesn't rerun per consumer
-    semDedupOn(indexed.localCheckpoint(), minCos, dim)
-  }
-
-  /** SemDeDup over an ALREADY-ASSIGNED corpus (nid, ne, nn, cluster) —
-    * e.g. the session's shared [[coarseIndex]] artifact. Artifact-backed
-    * input is parquet-materialized, so no lineage cut is needed: the
-    * three consumers re-read a bucketed table, not a training plan. */
+    * uses), keep = not a duplicate.
+    *
+    * The input feeds three consumers, so it must be materialized: the
+    * session's shared [[coarseIndex]] artifact is a bucketed parquet
+    * table; an [[ivfTrainAssign]] result needs a lineage cut first. */
   def semDedupOn(idx: DataFrame, minCos: Double,
                  dim: Int = DefaultDim): DataFrame = {
     val a = idx.select(col("cluster"), col("nid").as("ida"),

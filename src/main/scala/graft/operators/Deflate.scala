@@ -1,522 +1,82 @@
 package graft.operators
 
+import java.util.zip.{CRC32, Deflater}
+
 import scala.collection.mutable.ArrayBuffer
 
-/** REAL DEFLATE (RFC 1951) + gzip (RFC 1952) codec — the compression
-  * layer under every web-scale text corpus (Common Crawl WARC/WET files
-  * are per-record gzip members; JSONL corpora ship as .jsonl.gz). A
-  * 100 TB ingestion pipeline spends much of its scan time inside
-  * exactly this bit format, so the engine carries its own:
+/** The engine's one zlib owner: DEFLATE (RFC 1951) through the JDK's
+  * `java.util.zip`, plus graft's own gzip (RFC 1952) member framing —
+  * the compression layer under every web-scale text corpus (Common
+  * Crawl WARC/WET files are per-record gzip members; JSONL corpora ship
+  * as .jsonl.gz). PDF FlateDecode streams and PNG IDAT data are the
+  * zlib-wrapped (RFC 1950) form of the same helpers.
   *
-  *  - LZ77 hash-chain matcher (32 KB window, match length 3..258),
-  *  - all three RFC 1951 block types BOTH directions: stored (§3.2.4),
-  *    fixed Huffman (§3.2.6) and dynamic Huffman (§3.2.7) with the
-  *    code-length alphabet's 16/17/18 run-length forms,
-  *  - length-limited canonical Huffman construction (plain Huffman +
-  *    zlib's bl_count overflow adjustment keeps Kraft equality at the
-  *    15/7-bit caps),
-  *  - LSB-first bit packing with MSB-first code emission (§3.1.1 — the
-  *    classic trap),
-  *  - gzip member framing with FNAME, table-driven CRC-32 and ISIZE,
+  *  - [[deflate]]/[[inflate]]: raw or zlib-wrapped streams; the native
+  *    stream is released in a `finally`, on the failure path too.
+  *    [[inflate]] reports the input bytes its stream used, so a caller
+  *    walking concatenated members knows where the next one starts.
+  *  - gzip member framing with a deterministic header (MTIME 0, OS 255,
+  *    optional FNAME), FEXTRA/FCOMMENT/FHCRC skipped on read, CRC-32 and
+  *    ISIZE verified on read — corruption fails loudly — and
   *    multi-member concatenation (the WARC convention: one member per
-  *    record), CRC/ISIZE verified on read — corruption fails loudly.
+  *    record).
   *
   * Everything is row-local byte work (codecs are the one place
   * mapPartitions-style imperative code is the right Spark answer — same
   * boundary as Jpeg/Mp3); the plan above it stays scan -> flatMap with
-  * no shuffle, embarrassingly parallel at any corpus size. Specs
-  * cross-validate against the JDK's zlib (java.util.zip) in BOTH
-  * directions — our encoder's streams inflate under Inflater, and
-  * Deflater's streams inflate under ours — so the bit format is pinned
-  * by an independent implementation, not by our own roundtrip.
+  * no shuffle, embarrassingly parallel at any corpus size. Specs check
+  * interop with the JDK's own gzip streams in both directions.
   *
   * Reference analogue: none (gpd_lite_toolbox reads plain files);
-  * public spec: RFC 1951/1952.
+  * public spec: RFC 1950/1951/1952.
   */
 object Deflate {
 
-  // --------------------------------------------------------- bit I/O
-  // RFC 1951 §3.1.1: bytes fill from the least-significant bit; Huffman
-  // codes are emitted starting from their most-significant bit.
+  /** The choice zlib can honour for a member's DEFLATE stream: stored
+    * blocks (level 0) or zlib's default compression, which picks fixed
+    * or dynamic Huffman per block itself. */
+  sealed abstract class Mode(val level: Int)
+  case object Stored extends Mode(Deflater.NO_COMPRESSION)
+  case object Compressed extends Mode(Deflater.DEFAULT_COMPRESSION)
 
-  private final class BitWriter {
-    private val out = ArrayBuffer.empty[Byte]
-    private var cur = 0
-    private var nbits = 0
-    /** little-endian bit order: v's bit 0 is written first */
-    def putBitsLsb(v: Int, n: Int): Unit = {
-      var i = 0
-      while (i < n) {
-        cur |= ((v >>> i) & 1) << nbits
-        nbits += 1
-        if (nbits == 8) { out += cur.toByte; cur = 0; nbits = 0 }
-        i += 1
+  /** DEFLATE `data` at `level`: zlib-wrapped (RFC 1950) by default, as
+    * PDF and PNG embed it; `raw` drops the wrapper (the gzip payload). */
+  def deflate(data: Array[Byte], level: Int = Deflater.DEFAULT_COMPRESSION,
+              raw: Boolean = false): Array[Byte] = {
+    val defl = new java.util.zip.Deflater(level, raw)
+    try {
+      defl.setInput(data); defl.finish()
+      val out = new java.io.ByteArrayOutputStream(data.length + 64)
+      val buf = new Array[Byte](8192)
+      while (!defl.finished()) out.write(buf, 0, defl.deflate(buf))
+      out.toByteArray
+    } finally defl.end()
+  }
+
+  /** Inflate the one stream starting at `data(off)` (at most `len`
+    * bytes); returns (payload, input bytes the stream used). Input past
+    * the stream's end is left unread. A stream that ends before its
+    * final block fails loudly. */
+  def inflate(data: Array[Byte], off: Int, len: Int,
+              raw: Boolean = false): (Array[Byte], Int) = {
+    val infl = new java.util.zip.Inflater(raw)
+    try {
+      infl.setInput(data, off, len)
+      val out = new java.io.ByteArrayOutputStream()
+      val buf = new Array[Byte](8192)
+      while (!infl.finished()) {
+        val n = infl.inflate(buf)
+        require(n > 0 || infl.finished(), "zlib: truncated stream")
+        out.write(buf, 0, n)
       }
-    }
-    /** Huffman code emission: MSB of the code first */
-    def putCode(code: Int, len: Int): Unit = {
-      var i = len - 1
-      while (i >= 0) { putBitsLsb((code >>> i) & 1, 1); i -= 1 }
-    }
-    def alignByte(): Unit = if (nbits != 0) { out += cur.toByte; cur = 0; nbits = 0 }
-    def putByte(b: Int): Unit = { require(nbits == 0); out += b.toByte }
-    def result(): Array[Byte] = { alignByte(); out.toArray }
+      (out.toByteArray, len - infl.getRemaining)
+    } finally infl.end()
   }
 
-  private final class BitReader(val data: Array[Byte], var pos: Int) {
-    private var cur = 0
-    private var nbits = 0
-    def bit(): Int = {
-      if (nbits == 0) {
-        if (pos >= data.length) throw new IllegalArgumentException(
-          s"deflate: truncated stream at byte $pos")
-        cur = data(pos) & 0xff; pos += 1; nbits = 8
-      }
-      val b = cur & 1; cur >>>= 1; nbits -= 1; b
-    }
-    def bitsLsb(n: Int): Int = {
-      var v = 0; var i = 0
-      while (i < n) { v |= bit() << i; i += 1 }
-      v
-    }
-    def alignByte(): Unit = { cur = 0; nbits = 0 }
-  }
-
-  // --------------------------------------------- RFC 1951 code tables
-
-  /** length code bases (codes 257..285) and extra-bit counts, §3.2.5 */
-  private val LenBase = Array(3, 4, 5, 6, 7, 8, 9, 10, 11, 13, 15, 17, 19,
-    23, 27, 31, 35, 43, 51, 59, 67, 83, 99, 115, 131, 163, 195, 227, 258)
-  private val LenExtra = Array(0, 0, 0, 0, 0, 0, 0, 0, 1, 1, 1, 1, 2, 2,
-    2, 2, 3, 3, 3, 3, 4, 4, 4, 4, 5, 5, 5, 5, 0)
-  /** distance code bases (codes 0..29) and extra-bit counts */
-  private val DistBase = Array(1, 2, 3, 4, 5, 7, 9, 13, 17, 25, 33, 49,
-    65, 97, 129, 193, 257, 385, 513, 769, 1025, 1537, 2049, 3073, 4097,
-    6145, 8193, 12289, 16385, 24577)
-  private val DistExtra = Array(0, 0, 0, 0, 1, 1, 2, 2, 3, 3, 4, 4, 5, 5,
-    6, 6, 7, 7, 8, 8, 9, 9, 10, 10, 11, 11, 12, 12, 13, 13)
-  /** code-length alphabet transmission order, §3.2.7 */
-  private val ClOrder = Array(16, 17, 18, 0, 8, 7, 9, 6, 10, 5, 11, 4, 12,
-    3, 13, 2, 14, 1, 15)
-
-  private def lenCode(l: Int): Int = {
-    var c = LenBase.length - 1
-    while (LenBase(c) > l) c -= 1
-    // 258 has its own zero-extra code; lengths 255..257 fall in code 284
-    if (l == 258) 28 else { while (c < 28 && LenBase(c + 1) <= l) c += 1; c }
-  }
-  private def distCode(d: Int): Int = {
-    var c = DistBase.length - 1
-    while (DistBase(c) > d) c -= 1
-    c
-  }
-
-  /** fixed litlen code lengths, §3.2.6 */
-  private val FixedLitLens: Array[Int] = {
-    val a = new Array[Int](288)
-    var i = 0
-    while (i < 288) {
-      a(i) = if (i < 144) 8 else if (i < 256) 9 else if (i < 280) 7 else 8
-      i += 1
-    }
-    a
-  }
-  private val FixedDistLens: Array[Int] = Array.fill(30)(5)
-
-  // --------------------------------------------- canonical Huffman
-
-  /** canonical code values for the given lengths (RFC 1951 §3.2.2) */
-  private[graft] def canonicalCodes(lens: Array[Int]): Array[Int] = {
-    val maxLen = if (lens.isEmpty) 0 else lens.max
-    val blCount = new Array[Int](maxLen + 1)
-    lens.foreach(l => if (l > 0) blCount(l) += 1)
-    val nextCode = new Array[Int](maxLen + 2)
-    var code = 0
-    var b = 1
-    while (b <= maxLen) {
-      code = (code + blCount(b - 1)) << 1
-      nextCode(b) = code
-      b += 1
-    }
-    lens.map { l =>
-      if (l == 0) 0
-      else { val c = nextCode(l); nextCode(l) += 1; c }
-    }
-  }
-
-  /** Length-limited Huffman code lengths: plain two-queue Huffman, then
-    * zlib's bl_count overflow adjustment when a depth exceeds `limit`
-    * (moves a leaf up to make room, preserving Kraft equality — the
-    * same fix deflate.c gen_bitlen applies). Deterministic: ties break
-    * on symbol order. */
-  private[graft] def limitedLengths(freq: Array[Long], limit: Int): Array[Int] = {
-    val n = freq.length
-    val lens = new Array[Int](n)
-    val present = (0 until n).filter(freq(_) > 0)
-    if (present.isEmpty) return lens
-    if (present.size == 1) { lens(present.head) = 1; return lens }
-    // two-queue Huffman over (weight, creation order) — stable ties;
-    // each merge deepens every symbol under the merged node by one
-    case class Nd(w: Long, syms: List[Int])
-    val depth = new Array[Int](n)
-    val leaves = scala.collection.mutable.Queue(
-      present.sortBy(s => (freq(s), s)).map(s => Nd(freq(s), s :: Nil)): _*)
-    val merged = scala.collection.mutable.Queue.empty[Nd]
-    def takeMin(): Nd =
-      if (merged.isEmpty || (leaves.nonEmpty && leaves.head.w <= merged.head.w))
-        leaves.dequeue()
-      else merged.dequeue()
-    while (leaves.size + merged.size > 1) {
-      val a = takeMin(); val b = takeMin()
-      val syms = a.syms ::: b.syms
-      syms.foreach(s => depth(s) += 1)
-      merged.enqueue(Nd(a.w + b.w, syms))
-    }
-    // clamp + zlib overflow repair on the length histogram (deflate.c
-    // gen_bitlen: overflow counts clamped LEAVES, each iteration pairs
-    // one under a leaf moved down from above, clearing two)
-    val blCount = new Array[Int](limit + 1)
-    var overflow = 0
-    present.foreach { s =>
-      val d = depth(s)
-      if (d > limit) { overflow += 1; blCount(limit) += 1 }
-      else blCount(d) += 1
-    }
-    while (overflow > 0) {
-      var bits = limit - 1
-      while (blCount(bits) == 0) bits -= 1
-      blCount(bits) -= 1
-      blCount(bits + 1) += 2
-      blCount(limit) -= 1
-      overflow -= 2
-    }
-    // reassign lengths canonically: symbols ordered by (orig depth, sym)
-    val ordered = present.sortBy(s => (depth(s), s))
-    var li = limit
-    var oi = ordered.length - 1
-    while (li >= 1) {
-      var c = blCount(li)
-      while (c > 0) { lens(ordered(oi)) = li; oi -= 1; c -= 1 }
-      li -= 1
-    }
-    lens
-  }
-
-  /** canonical bit-at-a-time decoder (counts/first-code per length) */
-  private final class Decoder(lens: Array[Int]) {
-    private val maxLen = if (lens.forall(_ == 0)) 0 else lens.max
-    private val count = new Array[Int](maxLen + 1)
-    lens.foreach(l => if (l > 0) count(l) += 1)
-    private val firstCode = new Array[Int](maxLen + 2)
-    private val firstSym = new Array[Int](maxLen + 2)
-    // symbols sorted by (len, sym) — canonical order
-    private val syms: Array[Int] =
-      lens.indices.filter(lens(_) > 0).sortBy(s => (lens(s), s)).toArray
-    locally {
-      var code = 0; var idx = 0; var l = 1
-      while (l <= maxLen) {
-        firstCode(l) = code
-        firstSym(l) = idx
-        code = (code + count(l)) << 1
-        idx += count(l)
-        l += 1
-      }
-    }
-    def next(in: BitReader): Int = {
-      var code = 0; var l = 0
-      while (true) {
-        code = (code << 1) | in.bit()
-        l += 1
-        if (l > maxLen) throw new IllegalArgumentException(
-          "deflate: invalid Huffman code")
-        if (code - firstCode(l) < count(l))
-          return syms(firstSym(l) + (code - firstCode(l)))
-      }
-      -1
-    }
-  }
-
-  // --------------------------------------------------------- LZ77
-
-  private val MinMatch = 3
-  private val MaxMatch = 258
-  private val WindowSize = 32768
-  private val MaxChain = 64
-
-  /** token stream: literal byte (0..255) or (length, dist) pair encoded
-    * as (256 + len) << 16 | dist */
-  private def lz77(data: Array[Byte]): Array[Int] = {
-    val out = ArrayBuffer.empty[Int]
-    val headIdx = new java.util.HashMap[Int, Int]()
-    val prev = new Array[Int](data.length)
-    java.util.Arrays.fill(prev, -1)
-    def h3(i: Int): Int =
-      ((data(i) & 0xff) << 16) | ((data(i + 1) & 0xff) << 8) | (data(i + 2) & 0xff)
-    var i = 0
-    while (i < data.length) {
-      var bestLen = 0
-      var bestDist = 0
-      if (i + MinMatch <= data.length) {
-        val key = h3(i)
-        var cand = if (headIdx.containsKey(key)) headIdx.get(key) else -1
-        var chain = 0
-        while (cand >= 0 && chain < MaxChain && i - cand <= WindowSize) {
-          var l = 0
-          val maxL = math.min(MaxMatch, data.length - i)
-          while (l < maxL && data(cand + l) == data(i + l)) l += 1
-          if (l >= MinMatch && l > bestLen) { bestLen = l; bestDist = i - cand }
-          cand = prev(cand)
-          chain += 1
-        }
-      }
-      if (bestLen >= MinMatch) {
-        out += (((256 + bestLen) << 16) | bestDist)
-        // insert hash entries for every position the match covers
-        var j = i
-        val end = i + bestLen
-        while (j < end && j + MinMatch <= data.length) {
-          val k = h3(j)
-          if (headIdx.containsKey(k)) prev(j) = headIdx.get(k)
-          headIdx.put(k, j)
-          j += 1
-        }
-        i += bestLen
-      } else {
-        out += (data(i) & 0xff)
-        if (i + MinMatch <= data.length) {
-          val k = h3(i)
-          if (headIdx.containsKey(k)) prev(i) = headIdx.get(k)
-          headIdx.put(k, i)
-        }
-        i += 1
-      }
-    }
-    out.toArray
-  }
-
-  // ------------------------------------------------------- encoding
-
-  sealed trait Mode
-  case object Stored extends Mode
-  case object Fixed extends Mode
-  case object Dynamic extends Mode
-
-  /** raw DEFLATE stream (no zlib/gzip wrapper), single compressed block
-    * (stored mode chunks at the 65535-byte block cap) */
-  def deflate(data: Array[Byte], mode: Mode): Array[Byte] = {
-    val w = new BitWriter
-    mode match {
-      case Stored =>
-        var off = 0
-        if (data.isEmpty) {
-          w.putBitsLsb(1, 1); w.putBitsLsb(0, 2); w.alignByte()
-          w.putByte(0); w.putByte(0); w.putByte(0xff); w.putByte(0xff)
-        }
-        while (off < data.length) {
-          val n = math.min(65535, data.length - off)
-          val fin = if (off + n == data.length) 1 else 0
-          w.putBitsLsb(fin, 1)
-          w.putBitsLsb(0, 2) // BTYPE=00
-          w.alignByte()
-          w.putByte(n & 0xff); w.putByte((n >>> 8) & 0xff)
-          w.putByte(~n & 0xff); w.putByte((~n >>> 8) & 0xff)
-          var i = 0
-          while (i < n) { w.putByte(data(off + i) & 0xff); i += 1 }
-          off += n
-        }
-      case Fixed =>
-        w.putBitsLsb(1, 1)
-        w.putBitsLsb(1, 2) // BTYPE=01
-        emitTokens(w, lz77(data), FixedLitLens, FixedDistLens)
-      case Dynamic =>
-        w.putBitsLsb(1, 1)
-        w.putBitsLsb(2, 2) // BTYPE=10
-        val toks = lz77(data)
-        val litFreq = new Array[Long](286)
-        val distFreq = new Array[Long](30)
-        toks.foreach { t =>
-          if (t < 256) litFreq(t) += 1
-          else {
-            val len = (t >>> 16) - 256
-            litFreq(257 + lenCode(len)) += 1
-            distFreq(distCode(t & 0xffff)) += 1
-          }
-        }
-        litFreq(256) += 1 // end-of-block
-        val litLens = limitedLengths(litFreq, 15)
-        val distLens0 = limitedLengths(distFreq, 15)
-        // inflate rejects "no distance code" ambiguity least surprisingly
-        // when one real dist code exists — zlib's own convention
-        val distLens =
-          if (distLens0.forall(_ == 0)) { distLens0(0) = 1; distLens0 }
-          else distLens0
-        writeDynamicHeader(w, litLens, distLens)
-        emitTokens(w, toks, litLens, distLens)
-    }
-    w.result()
-  }
-
-  private def emitTokens(w: BitWriter, toks: Array[Int],
-                         litLens: Array[Int], distLens: Array[Int]): Unit = {
-    val litCodes = canonicalCodes(litLens)
-    val distCodes = canonicalCodes(distLens)
-    toks.foreach { t =>
-      if (t < 256) w.putCode(litCodes(t), litLens(t))
-      else {
-        val len = (t >>> 16) - 256
-        val dist = t & 0xffff
-        val lc = lenCode(len)
-        w.putCode(litCodes(257 + lc), litLens(257 + lc))
-        if (LenExtra(lc) > 0) w.putBitsLsb(len - LenBase(lc), LenExtra(lc))
-        val dc = distCode(dist)
-        w.putCode(distCodes(dc), distLens(dc))
-        if (DistExtra(dc) > 0) w.putBitsLsb(dist - DistBase(dc), DistExtra(dc))
-      }
-    }
-    w.putCode(litCodes(256), litLens(256)) // end of block
-  }
-
-  /** HLIT/HDIST/HCLEN header with 16/17/18 run-length coding, §3.2.7 */
-  private def writeDynamicHeader(w: BitWriter, litLens: Array[Int],
-                                 distLens: Array[Int]): Unit = {
-    var nlit = 286
-    while (nlit > 257 && litLens(nlit - 1) == 0) nlit -= 1
-    var ndist = 30
-    while (ndist > 1 && distLens(ndist - 1) == 0) ndist -= 1
-    val all = litLens.take(nlit) ++ distLens.take(ndist)
-    // RLE the length sequence into CL symbols (sym, extraVal)
-    val cl = ArrayBuffer.empty[(Int, Int)]
-    var i = 0
-    while (i < all.length) {
-      val v = all(i)
-      var run = 1
-      while (i + run < all.length && all(i + run) == v) run += 1
-      if (v == 0) {
-        var r = run
-        while (r >= 11) { val take = math.min(138, r); cl += ((18, take - 11)); r -= take }
-        if (r >= 3) { cl += ((17, r - 3)); r = 0 }
-        while (r > 0) { cl += ((0, 0)); r -= 1 }
-      } else {
-        cl += ((v, 0))
-        var r = run - 1
-        while (r >= 3) { val take = math.min(6, r); cl += ((16, take - 3)); r -= take }
-        while (r > 0) { cl += ((v, 0)); r -= 1 }
-      }
-      i += run
-    }
-    val clFreq = new Array[Long](19)
-    cl.foreach(c => clFreq(c._1) += 1)
-    val clLens = limitedLengths(clFreq, 7)
-    val clCodes = canonicalCodes(clLens)
-    var hclen = 19
-    while (hclen > 4 && clLens(ClOrder(hclen - 1)) == 0) hclen -= 1
-    w.putBitsLsb(nlit - 257, 5)
-    w.putBitsLsb(ndist - 1, 5)
-    w.putBitsLsb(hclen - 4, 4)
-    (0 until hclen).foreach(j => w.putBitsLsb(clLens(ClOrder(j)), 3))
-    cl.foreach { case (sym, extra) =>
-      w.putCode(clCodes(sym), clLens(sym))
-      if (sym == 16) w.putBitsLsb(extra, 2)
-      else if (sym == 17) w.putBitsLsb(extra, 3)
-      else if (sym == 18) w.putBitsLsb(extra, 7)
-    }
-  }
-
-  // ------------------------------------------------------- decoding
-
-  /** inflate a raw DEFLATE stream starting at `off`; returns
-    * (decompressed bytes, bytes consumed) — the consumed count is what
-    * lets a multi-member gzip reader find the next member. */
-  def inflate(data: Array[Byte], off: Int = 0): (Array[Byte], Int) = {
-    val in = new BitReader(data, off)
-    val out = ArrayBuffer.empty[Byte]
-    var fin = false
-    while (!fin) {
-      fin = in.bitsLsb(1) == 1
-      in.bitsLsb(2) match {
-        case 0 => // stored
-          in.alignByte()
-          val len = (in.data(in.pos) & 0xff) | ((in.data(in.pos + 1) & 0xff) << 8)
-          val nlen = (in.data(in.pos + 2) & 0xff) | ((in.data(in.pos + 3) & 0xff) << 8)
-          require((len ^ nlen) == 0xffff, "deflate: stored LEN/NLEN mismatch")
-          in.pos += 4
-          var i = 0
-          while (i < len) { out += in.data(in.pos + i); i += 1 }
-          in.pos += len
-        case 1 => // fixed Huffman
-          inflateBlock(in, out, new Decoder(FixedLitLens),
-            new Decoder(FixedDistLens))
-        case 2 => // dynamic Huffman
-          val nlit = in.bitsLsb(5) + 257
-          val ndist = in.bitsLsb(5) + 1
-          val hclen = in.bitsLsb(4) + 4
-          val clLens = new Array[Int](19)
-          (0 until hclen).foreach(j => clLens(ClOrder(j)) = in.bitsLsb(3))
-          val clDec = new Decoder(clLens)
-          val lens = new Array[Int](nlit + ndist)
-          var i = 0
-          while (i < lens.length) {
-            clDec.next(in) match {
-              case 16 =>
-                require(i > 0, "deflate: repeat with no previous length")
-                val r = 3 + in.bitsLsb(2)
-                (0 until r).foreach { _ => lens(i) = lens(i - 1); i += 1 }
-              case 17 => i += 3 + in.bitsLsb(3)
-              case 18 => i += 11 + in.bitsLsb(7)
-              case v => lens(i) = v; i += 1
-            }
-          }
-          inflateBlock(in, out, new Decoder(lens.take(nlit)),
-            new Decoder(lens.drop(nlit)))
-        case t => throw new IllegalArgumentException(s"deflate: BTYPE $t")
-      }
-    }
-    (out.toArray, in.pos - off)
-  }
-
-  private def inflateBlock(in: BitReader, out: ArrayBuffer[Byte],
-                           lit: Decoder, dist: Decoder): Unit = {
-    var done = false
-    while (!done) {
-      val sym = lit.next(in)
-      if (sym < 256) out += sym.toByte
-      else if (sym == 256) done = true
-      else {
-        val lc = sym - 257
-        val len = LenBase(lc) + in.bitsLsb(LenExtra(lc))
-        val dc = dist.next(in)
-        val d = DistBase(dc) + in.bitsLsb(DistExtra(dc))
-        require(d <= out.length, "deflate: distance beyond window")
-        var i = 0
-        val start = out.length - d
-        while (i < len) { out += out(start + i); i += 1 }
-      }
-    }
-  }
-
-  // --------------------------------------------------------- CRC-32
-
-  private val CrcTable: Array[Int] = {
-    val t = new Array[Int](256)
-    var n = 0
-    while (n < 256) {
-      var c = n
-      var k = 0
-      while (k < 8) { c = if ((c & 1) != 0) 0xedb88320 ^ (c >>> 1) else c >>> 1; k += 1 }
-      t(n) = c
-      n += 1
-    }
-    t
-  }
-
-  def crc32(data: Array[Byte]): Long = {
-    var c = 0xffffffff
-    var i = 0
-    while (i < data.length) {
-      c = CrcTable((c ^ data(i)) & 0xff) ^ (c >>> 8)
-      i += 1
-    }
-    (~c).toLong & 0xffffffffL
+  private def crc32(data: Array[Byte]): Long = {
+    val c = new CRC32
+    c.update(data)
+    c.getValue
   }
 
   // ----------------------------------------------------------- gzip
@@ -536,7 +96,7 @@ object Deflate {
       out ++= n.getBytes(java.nio.charset.StandardCharsets.ISO_8859_1)
       out += 0
     }
-    out ++= deflate(data, mode)
+    out ++= deflate(data, mode.level, raw = true)
     val crc = crc32(data)
     (0 until 4).foreach(i => out += ((crc >>> (8 * i)) & 0xff).toByte)
     val isize = data.length.toLong & 0xffffffffL
@@ -568,8 +128,9 @@ object Deflate {
       } else None
     if ((flg & 0x10) != 0) { while (data(p) != 0) p += 1; p += 1 } // FCOMMENT
     if ((flg & 0x02) != 0) p += 2 // FHCRC
-    val (payload, used) = inflate(data, p)
+    val (payload, used) = inflate(data, p, data.length - p, raw = true)
     p += used
+    require(p + 8 <= data.length, "gzip: truncated trailer")
     def le32(q: Int): Long =
       ((data(q) & 0xffL)) | ((data(q + 1) & 0xffL) << 8) |
         ((data(q + 2) & 0xffL) << 16) | ((data(q + 3) & 0xffL) << 24)

@@ -49,18 +49,6 @@ object FmIndex {
 
   private val B = 4096L // occ checkpoint block width (ranks)
 
-  /** Substring-count with an INLINE build — the spec/parity path.
-    * Patterns (pid, pat) against the corpus; returns (pid, pat, n_occ,
-    * n_docs, sa_lo, sa_hi) — empty matches normalize to (0, 0, 0, -1).
-    * Production serving goes through [[SuffixIndex.fmFor]] +
-    * [[serve]]. */
-  def substringCount(docs: DataFrame,
-                     patterns: Seq[(Long, String)]): DataFrame = {
-    val (ord0, _, base0) = SuffixArray.buildWithBase(docs)
-    val ord = ord0.localCheckpoint()
-    serve(ord, buildTables(ord, base0), patterns)
-  }
-
   /** Top packed BYTE of the width-[[SuffixArray.PackW]] base-256 key =
     * the byte AT pos, without re-reading text. */
   private def topByte(r: Column): Column =

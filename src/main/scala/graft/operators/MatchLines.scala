@@ -134,7 +134,7 @@ object MatchLines {
 
   /** Directed+symmetric hausdorff over two point arrays — the native
     * codegen'd Catalyst expression (same bits as the lambda formulation
-    * in Geom.hausdorff; see HausdorffDistance for the equivalence note). */
+    * in GeomSpec.hausdorff; see HausdorffDistance for the equivalence note). */
   def hausdorff(a: Column, b: Column): Column =
     graft.geom.HausdorffDistance(a, b)
 

@@ -750,7 +750,7 @@ object Multimodal {
   // ---------------------------------------------------------------
   // REAL compressed image decode: PNG (RFC 2083), truecolor 8-bit.
   // The one genuinely-compressed format implementable without codec
-  // libraries: zlib IS in the JDK (java.util.zip Deflater/Inflater),
+  // libraries: zlib IS in the JDK (java.util.zip, owned by Deflate),
   // and everything else — signature, length/type/CRC chunk framing,
   // IHDR, scanline filters — is pure public-spec byte walking, same
   // discipline as the WAV/BMP codecs above. The encoder cycles ALL
@@ -834,13 +834,7 @@ object Multimodal {
       y += 1
     }
     // zlib-compress the filtered stream
-    val defl = new java.util.zip.Deflater()
-    defl.setInput(filtered); defl.finish()
-    val zbuf = new Array[Byte](filtered.length + 64)
-    var zlen = 0
-    while (!defl.finished()) zlen += defl.deflate(zbuf, zlen, zbuf.length - zlen)
-    defl.end()
-    val z = java.util.Arrays.copyOf(zbuf, zlen)
+    val z = Deflate.deflate(filtered)
     // chunk framing
     def chunk(typ: String, data: Array[Byte]): Array[Byte] = {
       val t = typ.getBytes("US-ASCII")
@@ -909,17 +903,9 @@ object Multimodal {
     val bpp = 3
     val stride = w * bpp
     // zlib inflate of the concatenated IDAT stream
-    val infl = new java.util.zip.Inflater()
-    infl.setInput(idat.toByteArray)
-    val filtered = new Array[Byte](h * (1 + stride))
-    var got = 0
-    while (got < filtered.length && !infl.finished()) {
-      val n = infl.inflate(filtered, got, filtered.length - got)
-      require(n > 0 || infl.finished(), "png: truncated IDAT stream")
-      got += n
-    }
-    infl.end()
-    require(got == filtered.length, "png: short pixel stream")
+    val z = idat.toByteArray
+    val filtered = Deflate.inflate(z, 0, z.length)._1
+    require(filtered.length >= h * (1 + stride), "png: short pixel stream")
     // unfilter into top-down RGB
     val rgb = new Array[Int](w * h * 3)
     val prior = new Array[Int](stride)

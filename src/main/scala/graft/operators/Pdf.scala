@@ -78,16 +78,6 @@ object Pdf {
   private[graft] def escapeString(s: String): String =
     s.replace("\\", "\\\\").replace("(", "\\(").replace(")", "\\)")
 
-  private def deflate(content: Array[Byte]): Array[Byte] = {
-    val defl = new java.util.zip.Deflater()
-    defl.setInput(content); defl.finish()
-    val zbuf = new Array[Byte](content.length + 64)
-    var zlen = 0
-    while (!defl.finished()) zlen += defl.deflate(zbuf, zlen, zbuf.length - zlen)
-    defl.end()
-    java.util.Arrays.copyOf(zbuf, zlen)
-  }
-
   /** Assemble a complete 1-3 page PDF for the doc id. Object layout:
     * 1 catalog, 2 page tree, then (3+2p) page / (4+2p) content per
     * page p, and the shared font object last. */
@@ -118,7 +108,7 @@ object Pdf {
         sb.append(s"(${escapeString(lineText(d, p, i))}) Tj ")
       }
       sb.append("ET")
-      val z = deflate(sb.toString.getBytes(US_ASCII))
+      val z = Deflate.deflate(sb.toString.getBytes(US_ASCII))
       obj(4 + 2 * p) {
         put(s"<< /Length ${z.length} /Filter /FlateDecode >>\nstream\n")
         out.write(z, 0, z.length)
@@ -196,17 +186,7 @@ object Pdf {
       val zFrom = whole.indexOf("stream", cStart) + 7 // past "stream\n"
       require(ascii(bytes, zFrom + len, zFrom + len + 11) == "\nendstream\n",
         "pdf: stream length mismatch")
-      val infl = new java.util.zip.Inflater()
-      infl.setInput(bytes, zFrom, len)
-      val buf = new java.io.ByteArrayOutputStream()
-      val tmp = new Array[Byte](1024)
-      while (!infl.finished()) {
-        val n = infl.inflate(tmp)
-        require(n > 0 || infl.finished(), "pdf: truncated stream")
-        buf.write(tmp, 0, n)
-      }
-      infl.end()
-      val ops = new String(buf.toByteArray, US_ASCII)
+      val ops = new String(Deflate.inflate(bytes, zFrom, len)._1, US_ASCII)
       require(ops.startsWith("BT ") && ops.endsWith("ET"), "pdf: BT/ET")
       val fs = "/F1 (\\d+) Tf".r.findFirstMatchIn(ops)
         .map(_.group(1).toLong).getOrElse(sys.error("pdf: Tf"))
@@ -390,7 +370,7 @@ object Pdf {
         sb.append(s"(${escapeString15(lineTextX(d, p, i))}) Tj ")
       }
       sb.append("ET")
-      val z = deflate(sb.toString.getBytes(US_ASCII))
+      val z = Deflate.deflate(sb.toString.getBytes(US_ASCII))
       val n = 3 + np + p
       offsets(n) = out.size()
       put(s"$n 0 obj\n<< /Length ${z.length} /Filter /FlateDecode >>" +
@@ -415,7 +395,7 @@ object Pdf {
     }
     val header = rel.map { case (n, o) => s"$n $o" }.mkString(" ") + " "
     val stmPayload = header + bodies.toString
-    val zStm = deflate(stmPayload.getBytes(US_ASCII))
+    val zStm = Deflate.deflate(stmPayload.getBytes(US_ASCII))
     offsets(objStmNum) = out.size()
     put(s"$objStmNum 0 obj\n<< /Type /ObjStm /N ${packed.size} " +
       s"/First ${header.length} /Length ${zStm.length} " +
@@ -444,7 +424,7 @@ object Pdf {
         enc.write(if (applyPredictor) (r(i) - prev(i)) & 0xFF else r(i))
       prev = r
     }
-    val zX = deflate(enc.toByteArray)
+    val zX = Deflate.deflate(enc.toByteArray)
     put(s"$xrefNum 0 obj\n<< /Type /XRef /Size $size /Root 1 0 R " +
       s"/W [1 3 1] /DecodeParms << /Predictor 12 /Columns 5 >> " +
       s"/Filter /FlateDecode /Length ${zX.length} >>\nstream\n")
@@ -452,21 +432,6 @@ object Pdf {
     put("\nendstream\nendobj\n")
     put(s"startxref\n${offsets(xrefNum)}\n%%EOF\n")
     out.toByteArray
-  }
-
-  private def inflateAll(bytes: Array[Byte], from: Int,
-                         len: Int): Array[Byte] = {
-    val infl = new java.util.zip.Inflater()
-    infl.setInput(bytes, from, len)
-    val buf = new java.io.ByteArrayOutputStream()
-    val tmp = new Array[Byte](1024)
-    while (!infl.finished()) {
-      val n = infl.inflate(tmp)
-      require(n > 0 || infl.finished(), "pdf15: truncated stream")
-      buf.write(tmp, 0, n)
-    }
-    infl.end()
-    buf.toByteArray
   }
 
   private def dictInt(dict: String, key: String): Int =
@@ -498,7 +463,7 @@ object Pdf {
     val xFrom = whole.indexOf("stream", at) + 7
     require(ascii(bytes, xFrom + xLen, xFrom + xLen + 11) == "\nendstream\n",
       "pdf15: xref stream length")
-    val pred = inflateAll(bytes, xFrom, xLen)
+    val pred = Deflate.inflate(bytes, xFrom, xLen)._1
     val objNums = "/Index \\[([0-9 ]+)\\]".r.findFirstMatchIn(xDict)
       .map(_.group(1).trim.split(" ").map(_.toInt).toSeq)
       .getOrElse(Seq(0, size))
@@ -606,7 +571,7 @@ object Pdf {
     val sFrom = whole.indexOf("stream", sAt) + 7
     require(ascii(bytes, sFrom + sLen, sFrom + sLen + 11) == "\nendstream\n",
       "pdf15: objstm stream length")
-    val payload = new String(inflateAll(bytes, sFrom, sLen), US_ASCII)
+    val payload = new String(Deflate.inflate(bytes, sFrom, sLen)._1, US_ASCII)
     val hdrInts = payload.substring(0, first).trim.split("\\s+")
       .map(_.toInt)
     require(hdrInts.length == 2 * nPacked, "pdf15: objstm header pairs")
@@ -655,7 +620,7 @@ object Pdf {
       val zFrom = whole.indexOf("stream", cStart) + 7
       require(ascii(bytes, zFrom + len, zFrom + len + 11) == "\nendstream\n",
         "pdf15: stream length mismatch")
-      val ops = new String(inflateAll(bytes, zFrom, len), US_ASCII)
+      val ops = new String(Deflate.inflate(bytes, zFrom, len)._1, US_ASCII)
       require(ops.startsWith("BT ") && ops.endsWith("ET"), "pdf15: BT/ET")
       val fs = "/F1 (\\d+) Tf".r.findFirstMatchIn(ops)
         .map(_.group(1).toLong).getOrElse(sys.error("pdf15: Tf"))
@@ -740,7 +705,7 @@ object Pdf {
       sb.append(s"(${escapeString15(lineTextX(d, 0, i))}) Tj ")
     }
     sb.append(s"0 -${fs + 2} Td (${escapeString15(revLine(d))}) Tj ET")
-    val z = deflate(sb.toString.getBytes(US_ASCII))
+    val z = Deflate.deflate(sb.toString.getBytes(US_ASCII))
     val contAt = out.size()
     put(s"$contentObj 0 obj\n<< /Length ${z.length} " +
       "/Filter /FlateDecode >>\nstream\n")
@@ -758,7 +723,7 @@ object Pdf {
       for (i <- 0 until 5) enc.write((r(i) - prevRow(i)) & 0xFF)
       prevRow = r
     }
-    val zX = deflate(enc.toByteArray)
+    val zX = Deflate.deflate(enc.toByteArray)
     put(s"$newXrefNum 0 obj\n<< /Type /XRef /Size ${newXrefNum + 1} " +
       s"/Root 1 0 R /W [1 3 1] /Index [$contentObj 1 $newXrefNum 1] " +
       s"/Prev ${prevOverride.getOrElse(oldXrefAt)} " +

@@ -21,76 +21,25 @@ import org.apache.spark.sql.functions._
   */
 object Snap {
 
-  /** Skew-derived salt count for [[apply]]: one cheap (cell -> count)
-    * aggregate (map-side combine; the shuffle moves one row per
-    * non-empty cell) reads the layer's hot-cell share, and the salt
-    * count is how many average tasks the hottest cell's work is worth:
-    * `round(hotShare * parallelism)`, clamped to [1, maxSalts]. A
-    * uniform layer prices to 1 (the salting machinery switches off);
-    * a skewed layer with 43% of points in one cell prices to 14 at
-    * parallelism 32. Same design as MatchLines.autoCellTenths: the
-    * documented manual tuning rule becomes one tiny agg the engine
-    * runs itself. Measured on that layer: static salting is the
-    * mitigation that actually engages on fan-out skew — AQE's
-    * byte-based detector never fires on a modest-byte hot key. */
-  def autoSalts(pts: DataFrame, maxSearchframe: Double,
-                parallelism: Int = 32, maxSalts: Int = 64): Int = {
-    val g = maxSearchframe
-    val r = pts
-      .groupBy(floor(col("x") / g).as("cx"), floor(col("y") / g).as("cy"))
-      .agg(count(lit(1)).as("n"))
-      .agg(max(col("n")).as("hot"), sum(col("n")).as("total"))
-      .head()
-    if (r.isNullAt(0) || r.getAs[Long]("total") == 0L) 1
-    else {
-      val share = r.getAs[Long]("hot").toDouble / r.getAs[Long]("total")
-      math.max(1, math.min(maxSalts, math.round(share * parallelism).toInt))
-    }
-  }
-
-  /** [[apply]] with the salt count priced from the layer itself. */
-  def auto(pts: DataFrame, targets: DataFrame,
-           maxSearchframe: Double): DataFrame =
-    apply(pts, targets, maxSearchframe, autoSalts(pts, maxSearchframe))
-
   /** @param pts     point layer: id, x, y
     * @param targets target point layer: tid, tx, ty
-    * @param salts   >1 splits each grid cell's shuffle bucket `salts`
-    *                ways (see [[Skew.saltedJoin]]): the point side gets a
-    *                deterministic per-row salt, the candidate side is
-    *                replicated once per salt value. Output is identical
-    *                to salts=1 (spec-asserted); use when one cell holds
-    *                a large share of the layer — an urban-core hot cell —
-    *                and AQE's skew split can't engage (broadcast-hash or
-    *                shuffled-hash join, no sort-merge to split).
     * @return one row per input point: id, x, y (possibly moved), tid
     *         (nullable: null = nothing within frame), snapped flag
     */
-  def apply(pts: DataFrame, targets: DataFrame, maxSearchframe: Double,
-            salts: Int = 1): DataFrame = {
+  def apply(pts: DataFrame, targets: DataFrame,
+            maxSearchframe: Double): DataFrame = {
     val g = maxSearchframe
     val d2max = maxSearchframe * maxSearchframe
 
-    val cands0 = targets.select(
+    val cands = targets.select(
       col("tid"), col("tx"), col("ty"),
       explode(sequence(floor(col("tx") / g) - 1, floor(col("tx") / g) + 1)).as("cx"))
       .select(col("tid"), col("tx"), col("ty"), col("cx"),
         explode(sequence(floor(col("ty") / g) - 1, floor(col("ty") / g) + 1)).as("cy"))
 
-    val bucketed0 = pts
+    val bucketed = pts
       .withColumn("cx", floor(col("x") / g))
       .withColumn("cy", floor(col("y") / g))
-
-    // hot-cell salting: the salt is derived from the point id (stable
-    // across retries, unlike a partition-dependent row counter), so the
-    // join stays deterministic; the candidate replication rides the
-    // join's own exchange exactly as in Skew.saltedJoin.
-    val (bucketed, cands, joinKeys) =
-      if (salts <= 1) (bucketed0, cands0, Seq("cx", "cy"))
-      else (
-        bucketed0.withColumn("_salt", pmod(hash(col("id")), lit(salts))),
-        cands0.withColumn("_salt", explode(sequence(lit(0), lit(salts - 1)))),
-        Seq("cx", "cy", "_salt"))
 
     val d2 = (col("x") - col("tx")) * (col("x") - col("tx")) +
              (col("y") - col("ty")) * (col("y") - col("ty"))
@@ -104,7 +53,7 @@ object Snap {
     // nearest target's coordinates come back via a unique-key join on
     // tid (tid determines tx/ty, so ordering by (d2, tid) IS ordering
     // by (d2, tid, tx, ty) — tie-break semantics unchanged).
-    val best = bucketed.join(cands, joinKeys)
+    val best = bucketed.join(cands, Seq("cx", "cy"))
       .withColumn("d2", d2)
       .filter(col("d2") <= d2max)
       .groupBy(col("id"))

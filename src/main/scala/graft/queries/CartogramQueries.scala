@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.GeoData
+import graft.{GeoData, Graft}
 import graft.geom.Geom
 import graft.operators.Cartogram
 
@@ -22,7 +22,7 @@ object CartogramQueries {
         Geom.rectRing(col("x0"), col("y0"), col("x1"), col("y1")).as("ring"))
 
   def qCartogram(spark: SparkSession, dir: String): DataFrame =
-    Cartogram.dougenik(polys(spark, dir), iterations = 2)
+    Graft.transformCartogram(polys(spark, dir), iterations = 2)
 
   /** The displaced rings themselves after 2 Dougenik iterations —
     * transform_cartogram's returned geometry (core.py:199-231). */
@@ -30,7 +30,7 @@ object CartogramQueries {
     Cartogram.dougenikRings(polys(spark, dir), iterations = 2)
 
   def qNcCartogram(spark: SparkSession, dir: String): DataFrame =
-    Cartogram.nonContiguous(
+    Graft.nonContiguousCartogram(
       GeoData.polyNation(spark, dir)
         .select(col("pid"), value.as("value"),
           col("x0"), col("y0"), col("x1"), col("y1")))

@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.GeoData
+import graft.{GeoData, Graft}
 import graft.operators.Contour
 
 /** Contour/isochrone queries (SURVEY.md §2 rows 19-20) over the events
@@ -13,18 +13,18 @@ import graft.operators.Contour
 object ContourQueries {
 
   def qContour(spark: SparkSession, dir: String): DataFrame =
-    Contour.idwIsobands(
+    Graft.contourPoly(
       GeoData.ptsEvents(spark, dir)
         .select(col("x"), col("y"), col("weight").as("val")),
       cell = 10.0, radius = 15.0, bandWidth = 10.0)
 
   def qIsochrone(spark: SparkSession, dir: String): DataFrame =
-    Contour.isochrone(spark,
+    Graft.accessIsocrone(spark,
       GeoData.ptsEvents(spark, dir).select(col("x"), col("y")),
       cell = 10.0, bandMinutes = 10.0)
 
   def qContourKde(spark: SparkSession, dir: String): DataFrame =
-    Contour.kdeIsobands(
+    Graft.contourPolyKde(
       GeoData.ptsEvents(spark, dir)
         .select(col("x"), col("y"), col("weight").as("val")),
       cell = 10.0, radius = 15.0, bandWidth = 50.0)

@@ -3,9 +3,8 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.{GeoData, Tables}
-import graft.geom.Geom
-import graft.operators.{MatchLines, RandomPoints}
+import graft.{GeoData, Graft, Tables}
+import graft.operators.MatchLines
 
 /** Geo operators round-out (SURVEY.md §2 rows 14, 15, 18, 22):
   * line matching by bucketed hausdorff, descriptor-space matching,
@@ -77,14 +76,14 @@ object GeoExtQueries {
   /** Reference-faithful cluster matching: Lloyd k-means over per-line
     * shape descriptors (core.py:70), every line labeled. */
   def qMatchLinesKmeans(spark: SparkSession, dir: String): DataFrame =
-    MatchLines.kmeansDescriptors(
+    Graft.matchLinesKmeans(
       MatchLines.linesWithCells(lineVertices(spark, dir), CellTenths),
       k = 16, iters = 2)
 
   def qRandomPts(spark: SparkSession, dir: String): DataFrame =
-    RandomPoints.inRects(
+    Graft.randomPtsOnSurface(
       GeoData.polyNation(spark, dir).select("pid", "x0", "y0", "x1", "y1"),
-      kMod = 3)
+      nbMod = 3)
 
   /** Haversine km from each event point (scaled onto the globe) to the
     * origin. Reference: hav_dist, gpd_lite_toolbox/utils.py:83-91. */
@@ -95,7 +94,7 @@ object GeoExtQueries {
         (col("x") * 3.6 - 180.0).as("lon"))
     p.select(col("id"), round(col("lat"), 4).as("lat"),
       round(col("lon"), 4).as("lon"),
-      round(Geom.haversineKm(col("lat"), col("lon"), lit(0.0), lit(0.0)), 3)
+      round(Graft.havDist(col("lat"), col("lon"), lit(0.0), lit(0.0)), 3)
         .as("dist_km"))
   }
 

@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.GeoData
+import graft.{GeoData, Graft}
 import graft.operators._
 
 /** Geo operator queries over the derived layers (SURVEY.md §2 rows 1-13).
@@ -23,44 +23,45 @@ object GeoQueries {
   // --------------------------------------------------------------- queries
 
   def qMeanCoordinates(spark: SparkSession, dir: String): DataFrame =
-    MeanCoordinates(GeoData.ptsEvents(spark, dir), Some("cat"), Some("weight"))
+    Graft.meanCoordinates(GeoData.ptsEvents(spark, dir), Some("cat"),
+      Some("weight"))
 
   def qMakeGrid(spark: SparkSession, dir: String): DataFrame =
-    Grid.makeGrid(spark, GeoData.ptsEvents(spark, dir), 10.0)
+    Graft.makeGrid(spark, GeoData.ptsEvents(spark, dir), 10.0)
 
   def qGridify(spark: SparkSession, dir: String): DataFrame =
-    Grid.gridify(GeoData.ptsEvents(spark, dir), 10.0, "weight")
+    Graft.gridifyData(GeoData.ptsEvents(spark, dir), 10.0, "weight")
 
   def qSnap(spark: SparkSession, dir: String): DataFrame =
-    Snap(GeoData.ptsEvents(spark, dir).select("id", "x", "y"),
-         GeoData.ptsSupplier(spark, dir), 15.0)
+    Graft.snapToNearest(GeoData.ptsEvents(spark, dir).select("id", "x", "y"),
+      GeoData.ptsSupplier(spark, dir), 15.0)
 
   def qIntersects(spark: SparkSession, dir: String): DataFrame = {
     val r = GeoData.rectCustomer(spark, dir)
-    Rects.intersectsByIdx(r, r, 11.0)
+    Graft.intersectsByid(r, r, 11.0)
   }
 
   def qFtouches(spark: SparkSession, dir: String): DataFrame = {
     val r = GeoData.rectCustomer(spark, dir)
-    Rects.ftouchesByIdx(r, r, 12.0, 0.5)
+    Graft.ftouchesByid(r, r, 12.0, 0.5)
   }
 
   def qIntersectionPart(spark: SparkSession, dir: String): DataFrame = {
     val r = GeoData.rectCustomer(spark, dir)
-    Rects.intersectionPart(r, r, 11.0)
+    Graft.intersectionPart(r, r, 11.0)
   }
 
   def qGetBorders(spark: SparkSession, dir: String): DataFrame =
-    Borders.getBorders(GeoData.polyNation(spark, dir), "name", 21.0, 0.01)
+    Graft.getBorders(GeoData.polyNation(spark, dir), "name", 21.0, 0.01)
 
   def qFindBorders(spark: SparkSession, dir: String): DataFrame =
-    Borders.findBorders(GeoData.polyNation(spark, dir), "name", 21.0, 0.01)
+    Graft.findBorders(GeoData.polyNation(spark, dir), "name", 21.0, 0.01)
 
   def qSharedBorder(spark: SparkSession, dir: String): DataFrame =
-    Borders.sharedBorderLengths(GeoData.polyNation(spark, dir), 21.0, 0.01)
+    Graft.lSharedBorder(GeoData.polyNation(spark, dir), 21.0, 0.01)
 
   def qDissolve(spark: SparkSession, dir: String): DataFrame =
-    Dissolve(GeoData.polyNation(spark, dir), "rkey")
+    Graft.dissolve(GeoData.polyNation(spark, dir), "rkey")
 
   /** The dissolved regions' actual boundary geometry (edge set). */
   def qDissolveBorders(spark: SparkSession, dir: String): DataFrame =
@@ -79,7 +80,7 @@ object GeoQueries {
       .groupBy("rkey")
       .agg(collect_list(struct(col("pid"), col("x0"), col("y0"),
         col("x1"), col("y1"))).as("parts"))
-    Dissolve.multiToSingle(multi, "parts")
+    Graft.multiToSingle(multi, "parts")
       .select(col("rkey"), col("part_idx").cast("long").as("part_idx"),
         col("part.pid").as("pid"),
         col("part.x0").as("x0"), col("part.y0").as("y0"),
@@ -91,7 +92,7 @@ object GeoQueries {
       .groupBy("rkey")
       .agg(collect_list(struct(col("pid"), col("x0"), col("y0"),
         col("x1"), col("y1"))).as("parts"))
-    Dissolve.dumbMultiToSingle(multi, "parts")
+    Graft.dumbMultiToSingle(multi, "parts")
       .select(col("rkey"), col("part.pid").as("pid"),
         col("part.x0").as("x0"), col("part.y0").as("y0"),
         col("part.x1").as("x1"), col("part.y1").as("y1"))

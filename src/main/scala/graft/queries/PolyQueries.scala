@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.GeoData
+import graft.{GeoData, Graft}
 import graft.geom.PolyClip
 import graft.operators.{Dissolve, Rects}
 
@@ -51,7 +51,7 @@ object PolyQueries {
     // lambda fold — asserted by spec); floor-round mirrors
     // PolyClip.clippedArea. Cheap enough that the pushed-down filter
     // re-evaluating it is fine — no persist barrier needed.
-    val area = floor(graft.geom.PolygonClipArea(subject, clip)
+    val area = floor(Graft.intersectionAreaPoly(subject, clip)
       * 10000.0 + 0.5) / 10000.0
     Rects.intersectPairs(a, b, cellSize = 20.0)
       .withColumn("ix_area", area)
@@ -144,7 +144,7 @@ object PolyQueries {
   /** Overlap-safe dissolve: exact union area per group of (heavily
     * overlapping) customer rectangles, grouped by rid % 40. */
   def qDissolveOverlap(spark: SparkSession, dir: String): DataFrame =
-    Dissolve.dissolveUnionArea(
+    Graft.dissolveOverlapping(
       GeoData.rectCustomer(spark, dir)
         .withColumn("gid", col("rid") % 40),
       bucket = Bucket)

@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{Graft, Tables}
 import graft.operators.{Mp3, Multimodal}
 import graft.sources.Wkt
 
@@ -21,7 +21,7 @@ object SourceQueries {
       col("event_id").cast("long").as("id"),
       Wkt.toWktPoint(col("event_id") * 73 % 1000,
         col("event_id") * 179 % 1000).as("wkt"))
-    val p = Wkt.parsePoint(col("wkt"))
+    val p = Graft.parsePointWkt(col("wkt"))
     raw.select(col("id"), col("wkt"),
       (p("x") / 10.0).as("px"), (p("y") / 10.0).as("py"))
   }
@@ -57,7 +57,7 @@ object SourceQueries {
         part2, lit("))")).as("wkt"))
     raw
       .select(col("pid"),
-        posexplode(Wkt.parseRings(col("wkt"))).as(Seq("ri0", "ring")))
+        posexplode(Graft.parseRingsWkt(col("wkt"))).as(Seq("ri0", "ring")))
       .select(col("pid"), (col("ri0") + 1).cast("long").as("ri"),
         size(col("ring")).cast("long").as("n_pts"),
         round(Geom.ringArea(col("ring")), 4).as("area"),
@@ -532,13 +532,15 @@ object SourceQueries {
   }
 
   /** DEFLATE/gzip roundtrip over the corpus — the compression layer a
-    * 100 TB crawl pipeline reads through (RFC 1951/1952, the engine's
-    * own codec: operators.Deflate). Mode picked by payload byte length
-    * so ALL THREE RFC block types run against real data (stored < 64 B,
-    * fixed < 512 B, dynamic above) and the oracle can name each doc's
-    * mode from STRLEN alone. Row-local map, no shuffle; the md5 of the
-    * DECODED bytes against DuckDB's md5 of the original text proves the
-    * roundtrip byte-exactly (CRC-32 + ISIZE already verified in-band).
+    * 100 TB crawl pipeline reads through (RFC 1951/1952: the JDK's zlib
+    * behind graft's gzip member framing, operators.Deflate). Payloads
+    * under 64 B are written as stored blocks, longer ones at zlib's
+    * default level (zlib picks the Huffman block types itself). The
+    * `mode` column labels the payload-size band (stored < 64 B, fixed
+    * < 512 B, dynamic above), so the oracle names it from STRLEN alone.
+    * Row-local map, no shuffle; the md5 of the DECODED bytes against
+    * DuckDB's md5 of the original text proves the roundtrip byte-exactly
+    * (CRC-32 + ISIZE already verified in-band).
     */
   def qDeflateRoundtrip(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
@@ -548,20 +550,16 @@ object SourceQueries {
       .as[(Long, String)]
       .mapPartitions(_.map { case (id, text) =>
         val raw = text.getBytes(java.nio.charset.StandardCharsets.UTF_8)
-        val mode =
-          if (raw.length < 64) Deflate.Stored
-          else if (raw.length < 512) Deflate.Fixed
-          else Deflate.Dynamic
+        val mode = if (raw.length < 64) Deflate.Stored else Deflate.Compressed
         val gz = Deflate.gzipMember(raw, mode, Some(s"doc-$id"))
         val (dec, fname, used) = Deflate.gunzipMember(gz, 0)
         require(used == gz.length && fname.contains(s"doc-$id"),
           s"gzip member framing broken for doc $id")
-        val modeName = mode match {
-          case Deflate.Stored => "stored"
-          case Deflate.Fixed => "fixed"
-          case Deflate.Dynamic => "dynamic"
-        }
-        (id, modeName, dec)
+        val band =
+          if (raw.length < 64) "stored"
+          else if (raw.length < 512) "fixed"
+          else "dynamic"
+        (id, band, dec)
       }).toDF("doc_id", "mode", "payload")
       .select(col("doc_id"), col("mode"),
         length(decode(col("payload"), "UTF-8")).cast("long").as("n_chars"),

@@ -99,7 +99,7 @@ object Warc {
     * `docsPerFile` records each (file_id = doc_id DIV docsPerFile, so
     * membership is content-independent and the oracle can replay it).
     * One shuffle on file_id; records gzip per-member (the splittable CC
-    * convention), dynamic-Huffman compressed. */
+    * convention), at zlib's default compression. */
   def writeFiles(docs: DataFrame, docsPerFile: Int = 64): DataFrame = {
     val grouped = docs
       .select(col("doc_id").cast("long").as("doc_id"),
@@ -116,7 +116,7 @@ object Warc {
           val id = r.getAs[Long]("doc_id")
           val rec = record(id, r.getAs[String]("source"),
             r.getAs[String]("text").getBytes(Utf8))
-          out ++= Deflate.gzipMember(rec, Deflate.Dynamic,
+          out ++= Deflate.gzipMember(rec, Deflate.Compressed,
             Some(s"rec-$id.warc"))
         }
         Row(fileId, sorted.size, out.toArray)

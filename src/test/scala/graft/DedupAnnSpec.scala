@@ -394,10 +394,10 @@ class DedupAnnSpec extends AnyFunSuite with SharedSpark {
         r.getAs[Int]("rank"), r.getAs[Double]("cos4"))
     val inline = Ann.ivfTopK(vecs, queries, k = 3, nlist = 4,
       nprobe = 2, iters = 1, dim = dim).collect().map(key).sorted
-    val indexed = Ann.ivfTopKIndexed(vecs, queries, k = 3, nlist = 4,
-      nprobe = 2, iters = 1, table = "graft_ivf_spec",
-      path = "/tmp/graft_ivf_spec", dim = dim)
-      .collect().map(key).sorted
+    val (cents, index) = Ann.coarseIndex(vecs, nlist = 4, iters = 1,
+      dim = dim, table = "graft_ivf_spec", path = "/tmp/graft_ivf_spec")
+    val indexed = Ann.ivfProbeScore(index, queries, cents, k = 3,
+      nprobe = 2, dim = dim).collect().map(key).sorted
     assert(indexed === inline)
     assert(inline.nonEmpty)
   }
@@ -522,7 +522,9 @@ class DedupAnnSpec extends AnyFunSuite with SharedSpark {
     // minCos = 1.0: only the exact duplicate qualifies (the modular
     // test vectors put constant-shift pairs near cos ~0.996, which
     // rounds below 1.0)
-    val out = Ann.semDedup(vecs, nlist = 4, iters = 1, minCos = 1.0,
+    val (_, assigned) = Ann.ivfTrainAssign(vecs, nlist = 4, iters = 1,
+      dim = dim)
+    val out = Ann.semDedupOn(assigned.localCheckpoint(), minCos = 1.0,
       dim = dim).collect()
       .map(r => r.getAs[Long]("vec_id") ->
         (r.getAs[Long]("dup_of"), r.getAs[Boolean]("keep"))).toMap

@@ -34,8 +34,8 @@ class GeomPropertySpec extends AnyFunSuite with SharedSpark {
       val px = x0 + rnd.between(0.1, 0.9) * s
       val py = y0 + rnd.between(0.1, 0.9) * s
       val ring = Geom.rectRing(lit(x0), lit(y0), lit(x0 + s), lit(y0 + s))
-      assert(evalD(Geom.pointInRing(lit(px), lit(py), ring).cast("int")) === 1.0)
-      assert(evalD(Geom.pointInRing(lit(px + 2 * s), lit(py), ring)
+      assert(evalD(GeomSpec.pointInRing(lit(px), lit(py), ring).cast("int")) === 1.0)
+      assert(evalD(GeomSpec.pointInRing(lit(px + 2 * s), lit(py), ring)
         .cast("int")) === 0.0)
     }
   }
@@ -75,7 +75,7 @@ class GeomPropertySpec extends AnyFunSuite with SharedSpark {
       val py = y0 + rnd.between(-1.5, 1.5) * s
       val ring = Geom.rectRing(lit(x0), lit(y0), lit(x0 + s), lit(y0 + s))
       val native = evalD(PointInRing(lit(px), lit(py), ring).cast("int"))
-      val lambda = evalD(Geom.pointInRing(lit(px), lit(py), ring).cast("int"))
+      val lambda = evalD(GeomSpec.pointInRing(lit(px), lit(py), ring).cast("int"))
       assert(native === lambda)
     }
   }

@@ -111,11 +111,14 @@ class OperatorsSpec extends AnyFunSuite with SharedSpark {
     val sq2 = ring((2, 2), (6, 2), (6, 6), (2, 6))          // shifted -> 2x2 overlap
     val tri = ring((0, 0), (6, 0), (0, 6))                  // right triangle
     val far = ring((100, 100), (104, 100), (104, 104), (100, 104))
+    def intersectionArea(subject: org.apache.spark.sql.Column,
+                         clipRing: org.apache.spark.sql.Column) =
+      PolyClip.clippedArea(PolyClip.clip(subject, clipRing))
     val r = spark.range(1).select(
-      PolyClip.intersectionArea(sq1, sq2).as("a"),   // 2*2 = 4
-      PolyClip.intersectionArea(tri, sq1).as("b"),   // 4x4 square minus corner tri(2) -> 14
-      PolyClip.intersectionArea(sq1, far).as("c"),   // disjoint -> 0
-      PolyClip.intersectionArea(sq1, sq1).as("d"))   // self -> 16
+      intersectionArea(sq1, sq2).as("a"),   // 2*2 = 4
+      intersectionArea(tri, sq1).as("b"),   // 4x4 square minus corner tri(2) -> 14
+      intersectionArea(sq1, far).as("c"),   // disjoint -> 0
+      intersectionArea(sq1, sq1).as("d"))   // self -> 16
       .head()
     assert(r.getDouble(0) === 4.0)
     assert(r.getDouble(1) === 14.0)
@@ -1261,52 +1264,6 @@ class OperatorsSpec extends AnyFunSuite with SharedSpark {
         li.join(o, "k").count())
     } finally
       spark.conf.set("spark.sql.autoBroadcastJoinThreshold", saved)
-  }
-
-  test("saltedJoin produces exactly the plain join's rows") {
-    import graft.operators.Skew
-    val li = Tables.load(spark, SfDir, "lineitem")
-      .select("l_orderkey", "l_partkey", "l_quantity")
-    val o = Tables.load(spark, SfDir, "orders")
-      .select("o_orderkey", "o_orderpriority")
-      .withColumnRenamed("o_orderkey", "l_orderkey")
-    val plain = li.join(o, Seq("l_orderkey"))
-    val salted = Skew.saltedJoin(li, o, "l_orderkey", salts = 8)
-    assert(salted.count() === plain.count())
-    assert(salted.exceptAll(plain).count() === 0)
-    assert(plain.exceptAll(salted).count() === 0)
-  }
-
-  test("salted Snap matches plain Snap on a hot-cell layer") {
-    import graft.operators.Snap
-    // half the points in one cell: a hot-cell skew layer
-    val pts = Tables.load(spark, SfDir, "lineitem")
-      .select((col("l_orderkey") * 10 + col("l_linenumber")).as("id"),
-        when(col("l_orderkey") % 2 === 0,
-          lit(500.0) + (col("l_partkey") % 1000) / 100.0)
-          .otherwise((col("l_partkey") * 7919 % 100000) / 100.0).as("x"),
-        when(col("l_orderkey") % 2 === 0,
-          lit(500.0) + (col("l_suppkey") % 1000) / 100.0)
-          .otherwise((col("l_suppkey") * 104729 % 100000) / 100.0).as("y"))
-    val targets = Tables.load(spark, SfDir, "part")
-      .select(col("p_partkey").as("tid"),
-        ((col("p_partkey") * 7919 % 100000) / 100.0).as("tx"),
-        ((col("p_partkey") * 104729 % 100000) / 100.0).as("ty"))
-    val plain = Snap(pts, targets, 10.0)
-    val salted = Snap(pts, targets, 10.0, salts = 8)
-    assert(salted.count() === plain.count())
-    assert(salted.exceptAll(plain).count() === 0)
-    assert(plain.exceptAll(salted).count() === 0)
-    // auto-pricing: the hot-cell layer prices salts > 1, a uniform
-    // layer prices exactly 1, and the auto path's output is the plain
-    // output (it IS apply with a derived salt count)
-    assert(Snap.autoSalts(pts, 10.0) > 1)
-    assert(Snap.autoSalts(    // same layer minus the hot cell: uniform
-      pts.filter(!(col("x") >= 500 && col("x") < 510 &&
-        col("y") >= 500 && col("y") < 510)), 10.0) === 1)
-    val auto = Snap.auto(pts, targets, 10.0)
-    assert(auto.exceptAll(plain).count() === 0)
-    assert(plain.exceptAll(auto).count() === 0)
   }
 
   test("sampleFrames: frame bytes reassemble to payload length") {

@@ -144,8 +144,8 @@ class PlanShapeSpec extends AnyFunSuite with SharedSpark {
     val d = graft.Tables.load(spark, SfDir, "documents")
       .select(col("doc_id").cast("long").as("doc_id"), col("text"))
     val pats = Seq((0L, "the "), (1L, "fast"), (2L, "zqxjvvqz"))
-    val f1 = graft.operators.FmIndex.substringCount(d.coalesce(1), pats)
-    val f7 = graft.operators.FmIndex.substringCount(d.repartition(7), pats)
+    val f1 = SuffixArraySpec.substringCount(d.coalesce(1), pats)
+    val f7 = SuffixArraySpec.substringCount(d.repartition(7), pats)
     assert(f1.exceptAll(f7).isEmpty && f7.exceptAll(f1).isEmpty,
       "FM results moved with partition layout")
     val e = graft.Tables.load(spark, SfDir, "embeddings")

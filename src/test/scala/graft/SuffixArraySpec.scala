@@ -195,7 +195,7 @@ class SuffixArraySpec extends AnyFunSuite with SharedSpark {
       (3L, "a banana fan"))
     val pats = Seq((0L, "ana"), (1L, "an"), (2L, "a"), (3L, "nd"),
       (4L, "banana"), (5L, "zzz"), (6L, "na"), (7L, "a b"))
-    val got = graft.operators.FmIndex
+    val got = SuffixArraySpec
       .substringCount(docsSeq.toDF("doc_id", "text"), pats)
       .collect().map(r => r.getLong(0) ->
         (r.getLong(2), r.getLong(3), r.getLong(4), r.getLong(5))).toMap
@@ -287,5 +287,21 @@ class SuffixArraySpec extends AnyFunSuite with SharedSpark {
     // cross-doc repeats (the planted near-identical docs)
     assert(out.map(_.getAs[Long]("max_lcp_xdoc")).max >= 100,
       "expected long cross-doc repeats from the near-dup strata")
+  }
+}
+
+object SuffixArraySpec {
+
+  /** Substring-count with an INLINE build — the specs' parity path for
+    * the FM index. Patterns (pid, pat) against the corpus; returns
+    * (pid, pat, n_occ, n_docs, sa_lo, sa_hi) — empty matches normalize
+    * to (0, 0, 0, -1). The engine serves through SuffixIndex.fmFor +
+    * FmIndex.serve. */
+  def substringCount(docs: DataFrame,
+                     patterns: Seq[(Long, String)]): DataFrame = {
+    val (ord0, _, base0) = SuffixArray.buildWithBase(docs)
+    val ord = ord0.localCheckpoint()
+    graft.operators.FmIndex.serve(ord,
+      graft.operators.FmIndex.buildTables(ord, base0), patterns)
   }
 }
