@@ -18,9 +18,9 @@ import org.apache.spark.sql.SparkSession
   * every localCheckpoint, paid by every exchange of a ~300 MB corpus
   * that coalesces right back to 32) — the same class of mistake as
   * the fixed narrow grain, in the other direction. Input-proportional
-  * sizing resolves to the historical 32 at the bench scale (zero
-  * overhead, bench unchanged by construction) and to ~600 at the 100x
-  * corpus, past the 128 the r16 followups measured spill-free.
+  * sizing resolves to the cpus floor at the bench scale (~1 MB inputs:
+  * `Tune.initial_partitions` is 4 on a 4-cpu box) and to ~600 at the
+  * 100x corpus, past the 128 the r16 followups measured spill-free.
   *
   * On a real cluster the same rule holds with cluster cores in place
   * of box cpus; nothing else in the engine assumes a partition count

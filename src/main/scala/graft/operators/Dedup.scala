@@ -54,39 +54,40 @@ object Dedup {
     * <= maxDf, n is a document's count of distinct rare shingles and
     * shared counts the rare shingles both documents hold.
     *
-    * df is a codegen'd windowed count over the shingle partition, so
-    * there is one corpus exchange (on s, reused by every consumer) and
-    * no per-shingle posting array. The candidate self-join is keyed on
-    * that same partitioning (AQE broadcasts the df >= 2 side when it is
-    * small): shingles pair up within their key (<= maxDf^2 rows per
-    * shingle, never all-pairs), and the only other exchanges are the
-    * pair and size aggregates — the LSH-standard O(n·k) shape.
-    * Shingles are BIGINT rolling hashes (8-byte keys); the oracle
-    * replays the same hash, so results (collisions included) match
-    * exactly. Same row-key contract as [[distinctShingles]]. */
+    * One pass over the shingle partition: a windowed count gives df, a
+    * second window over the rare rows lists each shingle's <= maxDf
+    * documents (a hot shingle holds no more state than a rare one), and
+    * each row pairs its document with the listed ids >= its own. ONE
+    * (ida, idb) sum then counts shared, and -n on the (a, a) rows. The
+    * consumers split on its sign: a predicate on the keys would be
+    * pushed below the aggregate and re-run the windows per consumer. At
+    * most maxDf^2 candidates per shingle, never all-pairs; rolling-hash
+    * shingles let the oracle match exactly (collisions included). Same
+    * row-key contract as [[distinctShingles]]. */
   private def rareOverlap(docs: DataFrame, k: Int, maxDf: Int): DataFrame = {
-    val rare = distinctShingles(docs, k)
-      .withColumn("df", count(lit(1)).over(Window.partitionBy("s")))
+    val w = Window.partitionBy("s")
+    val counts = distinctShingles(docs, k)
+      .withColumn("df", count(lit(1)).over(w))
       .filter(col("df") <= maxDf)
-    val sizes = rare.groupBy("doc_id").agg(count(lit(1)).as("n"))
-    val multi = rare.filter(col("df") >= 2)
-    val shared = multi.select(col("s"), col("doc_id").as("ida"))
-      .join(multi.select(col("s"), col("doc_id").as("idb")), "s")
-      .filter(col("ida") < col("idb"))
+      .withColumn("ids", collect_list("doc_id").over(w))
+      .select(col("doc_id").as("ida"), explode(col("ids")).as("idb"))
+      .filter(col("ida") <= col("idb"))
       .groupBy("ida", "idb")
-      .agg(count(lit(1)).as("shared"))
-    // sizes is one row per doc: small here, but NOT broadcast-safe at
-    // corpus scale — leave join strategy to AQE (it broadcasts when the
-    // runtime size allows).
-    shared
-      .join(sizes.select(col("doc_id").as("ida"), col("n").as("na")), "ida")
-      .join(sizes.select(col("doc_id").as("idb"), col("n").as("nb")), "idb")
+      .agg(sum(when(col("ida") === col("idb"), -1L).otherwise(1L)).as("c"))
+    // one row per doc: NOT broadcast-safe at corpus scale; AQE decides
+    val sizes = counts.filter(col("c") < 0)
+      .select(col("ida").as("id"), (-col("c")).as("n"))
+    counts.filter(col("c") > 0).as("p")
+      .join(sizes.as("a"), col("p.ida") === col("a.id"))
+      .join(sizes.as("b"), col("p.idb") === col("b.id"))
+      .select(col("p.ida"), col("p.idb"), col("p.c").as("shared"),
+        col("a.n").as("na"), col("b.n").as("nb"))
   }
 
   /** N-gram Jaccard near-dup pairs over rare shingles.
     *
     * Shingles with document frequency > maxDf are dropped before candidate
-    * generation (they would blow the candidate self-join and carry no
+    * generation (they would blow the per-shingle candidates and carry no
     * signal); Jaccard is computed over each document's *rare* shingle set.
     * Returns (ida, idb, shared, na, nb, jac) for jac >= minJac. doc_id
     * must be a row key of `docs`.
@@ -139,14 +140,11 @@ object Dedup {
         array((0 until numHashes).map(i => col(s"m$i")): _*).as("sig"))
   }
 
-  /** Band hashes of a signature array (bands x rowsPerBand fold). */
-  private def bandHashExprs(numHashes: Int, bands: Int): Column =
-    bandHashesOf(col("sig"), numHashes, bands)
-
-  private def bandHashesOf(sig: Column, numHashes: Int, bands: Int): Column = {
+  /** Band hashes of the `sig` array (bands x rowsPerBand fold). */
+  private def bandHashExprs(numHashes: Int, bands: Int): Column = {
     val rows = numHashes / bands
     array((0 until bands).map { bi =>
-      aggregate(slice(sig, bi * rows + 1, rows), lit(0L),
+      aggregate(slice(col("sig"), bi * rows + 1, rows), lit(0L),
         (acc, m) => (acc * lit(33L) + m) % lit(P))
     }: _*)
   }
@@ -173,8 +171,6 @@ object Dedup {
     // NATIVE row-local signature build (functions.MinHashSig): one tight
     // JVM loop per document, no shingle explode, no exchange. Bit-equal
     // to the shuffle pipeline AND the HOF row-local form (spec-asserted).
-    // History: the HOF row-local form was 60x SLOWER than the shuffle
-    // form (interpreted lambda folds); the native kernel beats both.
     // Materialize the signature table ONCE: both join sides consume it,
     // and without the lineage cut the kernel scans the corpus text twice
     // (once per side). 64 longs/doc is the standard signature-table
@@ -428,22 +424,16 @@ object Dedup {
     * doc id per component. `iters` bounds the component diameter handled
     * (near-dup components are shallow in practice; raise it for longer
     * chains): after i hops a node's label is the minimum id within i
-    * edges of it. Each hop is one equi-join + one min-aggregate — no
-    * driver-side graph state. Docs in no pair are their own canonical.
-    */
+    * edges of it. Each hop is one min-aggregate (after an equi-join from
+    * hop 2 on); docs in no pair are their own. doc_id is a row key. */
   def dedupClusters(docs: DataFrame, pairs: DataFrame,
                     iters: Int = 4): DataFrame = {
-    // The hop table: both directions of every pair plus ONE self-loop
-    // (v, v) per node, so a hop's min over N(v) ∪ {v} is a single
-    // join + aggregate — the recurrence clustersOracle writes as a
-    // UNION ALL of the labels and the neighbors' labels.
-    // The pair table may be an expensive pipeline (e.g. minhash LSH);
-    // one generator reads it once, and the eager localCheckpoint is the
-    // only materialization: every hop reads the previous labels once,
-    // so the lazy plan grows linearly in iters and runs as one query.
-    // Local checkpoints live on executors, so losing one mid-job fails
-    // the job instead of recomputing from lineage; on preemption-prone
-    // clusters swap in Dataset.checkpoint — the plan shape is unchanged.
+    // The hop table: both directions of every pair plus self-loops, so
+    // a hop's min over N(v) ∪ {v} is one join + aggregate (clustersOracle's
+    // UNION ALL recurrence); min ignores duplicate rows, so no distinct.
+    // Its eager localCheckpoint reads the (possibly expensive) pair table
+    // once and is the only materialization. Local checkpoints live on
+    // executors: on preemption-prone clusters swap in Dataset.checkpoint.
     val hop = pairs
       .select(explode(array(
         struct(col("ida").as("src"), col("idb").as("dst")),
@@ -451,19 +441,28 @@ object Dedup {
         struct(col("ida").as("src"), col("ida").as("dst")),
         struct(col("idb").as("src"), col("idb").as("dst")))).as("e"))
       .select("e.*")
-      .distinct()
       .localCheckpoint()
-    var labels = hop.filter(col("src") === col("dst"))
-      .select(col("src").as("node"), col("src").as("label"))
-    for (_ <- 1 to iters)
-      labels = hop.join(labels.withColumnRenamed("node", "src"), "src")
-        .groupBy(col("dst").as("node"))
-        .agg(min("label").as("label"))
-    docs.select(col("doc_id"))
-      .join(labels.withColumnRenamed("node", "doc_id"), Seq("doc_id"), "left")
-      .select(col("doc_id"),
-        coalesce(col("label"), col("doc_id")).as("canonical_id"))
-      .withColumn("is_dup", col("doc_id") =!= col("canonical_id"))
+      // null ids are no edge; filtering every read alike gives each hop
+      // the same hop plan, so AQE reuses one exchange of it
+      .filter(col("src").isNotNull && col("dst").isNotNull)
+    // (node, label) rows whose min per node is the labels after a hop;
+    // hop 1 needs no join, since labels0(v) = v
+    var hopped = hop.select(col("dst").as("node"), col("src").as("label"))
+    for (_ <- 2 to iters)
+      hopped = hop.join(hopped.groupBy(col("node").as("src"))
+          .agg(min("label").as("label")), "src")
+        .select(col("dst").as("node"), col("label"))
+    // every doc enters the last aggregate as its own label (no docs
+    // join); in_docs drops pair ids that are not docs
+    val self = docs.select(col("doc_id").as("node"),
+      col("doc_id").as("label"), lit(true).as("in_docs"))
+    val labeled = if (iters == 0) self
+      else hopped.withColumn("in_docs", lit(false)).unionByName(self)
+    labeled.groupBy(col("node").as("doc_id"))
+      .agg(min("label").as("canonical_id"), max("in_docs").as("in_docs"))
+      .filter(col("in_docs"))
+      .select(col("doc_id"), col("canonical_id"),
+        (col("doc_id") =!= col("canonical_id")).as("is_dup"))
   }
 
   /** 60-bit SimHash over whitespace tokens; near-dup pairs via 4x15-bit

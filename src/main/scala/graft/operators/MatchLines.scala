@@ -178,10 +178,10 @@ object MatchLines {
         col("lid").as("lb"), col("n").as("nb"),
         col("sx").as("sxb"), col("sy").as("syb"))).as("ts"))
     // localCheckpoint: the beam output is tiny (<= beam rows per probe,
-    // two longs each) and feeds two vertex-attachment joins — the
-    // lineage cut hands the join planner its exact (small) size, so
-    // both attachments broadcast it instead of shuffling the line
-    // tables, and the candidate join can never re-run.
+    // two longs each) and feeds two vertex-attachment joins; the lineage
+    // cut keeps the candidate join from re-running. Its LogicalRDD keeps
+    // the origin plan's size estimate (Spark 4.1.2), so AQE shuffles
+    // both attachments first and broadcasts the beam only afterwards.
     val beamed = probed.join(digests, Seq("jx", "jy"))
       .select(col("la"), graft.functions.CellBeam(col("ts"),
         col("na"), col("sxa"), col("sya"), beam).as("cb"))

@@ -331,10 +331,12 @@ class DedupAnnSpec extends AnyFunSuite with SharedSpark {
   test("ngramJaccard and containmentPairs leave no cached blocks behind") {
     val d = Tables.load(spark, SfDir, "documents")
       .select(col("doc_id").cast("long").as("doc_id"), col("text"))
-    val before = spark.sparkContext.getPersistentRDDs.size
+    // compare ids, not counts: the ContextCleaner may unpersist an
+    // earlier test's checkpoint meanwhile (once its RDD is collected)
+    val before = spark.sparkContext.getPersistentRDDs.keySet
     Dedup.ngramJaccard(d, 16, 20, 0.2).collect()
     Dedup.containmentPairs(d, 16, 20, 0.8).collect()
-    assert(spark.sparkContext.getPersistentRDDs.size === before)
+    assert((spark.sparkContext.getPersistentRDDs.keySet -- before).isEmpty)
   }
 
   test("duplicatedSpans: shared passage found at exact offsets, df cap") {
@@ -906,6 +908,51 @@ class DedupAnnSpec extends AnyFunSuite with SharedSpark {
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(out === Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 2L, 5L -> 3L,
       6L -> 4L, 7L -> 7L))
+  }
+
+  private def clusterMap(d: org.apache.spark.sql.DataFrame,
+                         pairs: org.apache.spark.sql.DataFrame, iters: Int) =
+    Dedup.dedupClusters(d, pairs, iters).collect()
+      .map(r => r.getLong(0) -> r.getLong(1)).toMap
+
+  test("dedupClusters: iters = 0 gives every doc itself") {
+    import spark.implicits._
+    val d = (1L to 5L).map(i => (i, s"doc $i")).toDF("doc_id", "text")
+    val pairs = Seq((1L, 2L), (2L, 3L), (4L, 5L)).toDF("ida", "idb")
+    assert(clusterMap(d, pairs, 0) === (1L to 5L).map(i => i -> i).toMap)
+  }
+
+  test("dedupClusters: iters = 1 on the path 1-2-3-4 is one min step") {
+    import spark.implicits._
+    // one hop: a node's label is the min of itself and its neighbors
+    val d = (1L to 4L).map(i => (i, s"doc $i")).toDF("doc_id", "text")
+    val pairs = Seq((1L, 2L), (2L, 3L), (3L, 4L)).toDF("ida", "idb")
+    assert(clusterMap(d, pairs, 1) ===
+      Map(1L -> 1L, 2L -> 1L, 3L -> 2L, 4L -> 3L))
+  }
+
+  test("dedupClusters: duplicated pair rows and a hub give the distinct " +
+    "form's answer") {
+    import spark.implicits._
+    // hub 5 joins 6, 7, 8; the path 1-2-3 hangs off 8; pair ids that are
+    // not docs (9) drop out; every pair appears twice, once reversed
+    val d = (1L to 8L).map(i => (i, s"doc $i")).toDF("doc_id", "text")
+    val distinct = Seq((5L, 6L), (5L, 7L), (5L, 8L), (3L, 8L), (2L, 3L),
+      (1L, 2L), (7L, 9L))
+    val dup = distinct ++ distinct.map(_.swap) ++ distinct.take(3)
+    for (iters <- Seq(1, 2, 4)) {
+      val want = clusterMap(d, distinct.toDF("ida", "idb"), iters)
+      assert(clusterMap(d, dup.toDF("ida", "idb"), iters) === want,
+        s"iters = $iters")
+      assert(want.keySet === (1L to 8L).toSet)
+    }
+    // hand-computed: after 1 hop the hub's leaves see 5, and 8 sees 3;
+    // after 4 hops 1 reaches 5 and 8, while 6 and 7 (5 edges from 1)
+    // get 2; 4 is in no pair and keeps itself
+    assert(clusterMap(d, dup.toDF("ida", "idb"), 1) === Map(1L -> 1L,
+      2L -> 1L, 3L -> 2L, 4L -> 4L, 5L -> 5L, 6L -> 5L, 7L -> 5L, 8L -> 3L))
+    assert(clusterMap(d, dup.toDF("ida", "idb"), 4) === Map(1L -> 1L,
+      2L -> 1L, 3L -> 1L, 4L -> 4L, 5L -> 1L, 6L -> 2L, 7L -> 2L, 8L -> 1L))
   }
 
   test("ConnectedComponents matches dedupClusters on real minhash pairs") {

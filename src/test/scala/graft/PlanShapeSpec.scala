@@ -242,6 +242,50 @@ class PlanShapeSpec extends AnyFunSuite with SharedSpark {
     assert(keyed.isEmpty, s"q_decontaminate shuffles on (doc_id, s):\n$pd")
   }
 
+  test("rare-shingle overlap computes df over s once") {
+    // every consumer of the df table reads it through one exchange above
+    // the windows, so the final plan runs one Window and one s exchange
+    // (the initial plan lists each consumer's copy; AQE reuses the
+    // exchange above them); re-running the windows per consumer was most
+    // of the operator
+    for (q <- Seq("q_dedup_ngram_jaccard", "q_dedup_containment")) {
+      val df = SparkEntry.queries(q)(spark, SfDir)
+      df.collect()
+      val p = df.queryExecution.executedPlan.toString
+        .split("== Initial Plan ==").head
+      assert("Window \\[count\\(1\\) windowspecdefinition\\(s#".r
+        .findAllIn(p).size === 1, s"$q computes df more than once:\n$p")
+      assert("Exchange hashpartitioning\\(s#".r.findAllIn(p).size === 1,
+        s"$q:\n$p")
+    }
+  }
+
+  test("dedupClusters builds its hop table without an aggregate") {
+    // the hop table is materialized by dedupClusters' eager checkpoint,
+    // so its plan reaches the session's listeners, not the query's plan
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      def onSuccess(f: String, qe: org.apache.spark.sql.execution
+          .QueryExecution, ns: Long): Unit =
+        plans.add(qe.executedPlan.toString)
+      def onFailure(f: String, qe: org.apache.spark.sql.execution
+          .QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      SparkEntry.queries("q_dedup_clusters")(spark, SfDir)
+      val deadline = System.nanoTime() + 30L * 1000000000L
+      def hopPlans = plans.toArray.map(_.toString).filter(_.contains("dst#"))
+      while (hopPlans.isEmpty && System.nanoTime() < deadline)
+        Thread.sleep(50)
+      assert(hopPlans.nonEmpty, "no hop-table checkpoint was observed")
+      val srcDst = "HashAggregate\\(keys=\\[src#\\d+L?, dst#".r
+      for (p <- hopPlans)
+        assert(srcDst.findFirstIn(p).isEmpty,
+          s"q_dedup_clusters aggregates on (src, dst):\n$p")
+    } finally spark.listenerManager.unregister(listener)
+  }
+
   test("r11b row-local claims: keyframes and shard rebalance rows " +
     "shuffle nothing but their 1-row marginals") {
     // video keyframes: decode + diff chain entirely inside the
