@@ -11,15 +11,16 @@ import org.apache.spark.sql.types.{DataType, LongType}
   * called by BOTH the interpreted and the codegen path of
   * [[GeneralClipAreaMicro]], so the two can never diverge.
   *
-  * Identity (see PolyClip.generalIntersectionAreaMicro, the HOF twin this
-  * is asserted bit-equal to): with both simple rings decomposed into
+  * Identity (the specs keep a higher-order-function formulation it is
+  * asserted bit-equal to): with both simple rings decomposed into
   * signed fan triangles from their first vertex,
   * `area(P ∩ Q) = |sum_ij s_i * s_j * area(T_i ∩ T_j)|`; each
-  * triangle-triangle clip is convex x convex Sutherland–Hodgman with the
-  * clip triangle re-wound CCW. Every term is rounded to integer
-  * MICRO-units with the exact arithmetic of Spark's `round(_, 0)`
-  * (BigDecimal HALF_UP), making the sum accumulation-order independent —
-  * the property the DuckDB oracle's unordered SUM relies on.
+  * triangle-triangle clip is convex x convex Sutherland–Hodgman
+  * ([[SutherlandHodgman.step]]) with the clip triangle re-wound CCW.
+  * Every term is rounded to integer MICRO-units with the exact
+  * arithmetic of Spark's `round(_, 0)` (BigDecimal HALF_UP), making the
+  * sum accumulation-order independent — the property the DuckDB
+  * oracle's unordered SUM relies on.
   *
   * Reference semantics: shapely `intersection` on arbitrary simple
   * polygons, gpd_lite_toolbox/utils.py:188-211.
@@ -27,60 +28,27 @@ import org.apache.spark.sql.types.{DataType, LongType}
 object GeneralClip {
 
   /** S-H clip of triangle (ax,ay,bx,by,cx,cy) by CCW triangle
-    * (px,py,qx,qy,rx,ry); returns |shoelace|/2 of the result. The loop
-    * body replicates PolygonClipArea's arithmetic verbatim. */
+    * (px,py,qx,qy,rx,ry); returns |shoelace|/2 of the result. */
   private def triClipArea(ax: Double, ay: Double, bx: Double, by: Double,
                           cx: Double, cy: Double,
                           px: Double, py: Double, qx: Double, qy: Double,
                           rx: Double, ry: Double): Double = {
     // convex ∩ convex output has <= 3 + 3 vertices; 16 leaves headroom
-    val curX = new Array[Double](16); val curY = new Array[Double](16)
-    val nxtX = new Array[Double](16); val nxtY = new Array[Double](16)
+    var curX = new Array[Double](16); var curY = new Array[Double](16)
+    var nxtX = new Array[Double](16); var nxtY = new Array[Double](16)
     curX(0) = ax; curY(0) = ay; curX(1) = bx; curY(1) = by
     curX(2) = cx; curY(2) = cy
     var curN = 3
     val ex = Array(px, qx, rx); val ey = Array(py, qy, ry)
     var k = 0
     while (k < 3) {
-      val e1x = ex(k); val e1y = ey(k)
-      val e2x = ex((k + 1) % 3); val e2y = ey((k + 1) % 3)
-      var outN = 0
-      if (curN >= 3) {
-        var j = 0
-        while (j < curN) {
-          val sx = curX(j); val sy = curY(j)
-          val jn = if (j + 1 == curN) 0 else j + 1
-          val px2 = curX(jn); val py2 = curY(jn)
-          val insS = (e2x - e1x) * (sy - e1y) - (e2y - e1y) * (sx - e1x) >= 0
-          val insP = (e2x - e1x) * (py2 - e1y) - (e2y - e1y) * (px2 - e1x) >= 0
-          if (insP != insS) {
-            val n1 = e1x * e2y - e1y * e2x
-            val n2 = sx * py2 - sy * px2
-            val den = (e1x - e2x) * (sy - py2) - (e1y - e2y) * (sx - px2)
-            nxtX(outN) = (n1 * (sx - px2) - n2 * (e1x - e2x)) / den
-            nxtY(outN) = (n1 * (sy - py2) - n2 * (e1y - e2y)) / den
-            outN += 1
-          }
-          if (insP) { nxtX(outN) = px2; nxtY(outN) = py2; outN += 1 }
-          j += 1
-        }
-      }
-      var j = 0
-      while (j < outN) { curX(j) = nxtX(j); curY(j) = nxtY(j); j += 1 }
-      curN = outN
+      curN = SutherlandHodgman.step(curX, curY, curN, ex(k), ey(k),
+        ex((k + 1) % 3), ey((k + 1) % 3), nxtX, nxtY)
+      val tx = curX; val ty = curY
+      curX = nxtX; curY = nxtY; nxtX = tx; nxtY = ty
       k += 1
     }
-    if (curN < 3) 0.0
-    else {
-      var acc = 0.0
-      var j = 0
-      while (j < curN) {
-        val jn = if (j + 1 == curN) 0 else j + 1
-        acc += curX(j) * curY(jn) - curX(jn) * curY(j)
-        j += 1
-      }
-      math.abs(acc) / 2.0
-    }
+    SutherlandHodgman.shoelace(curX, curY, curN)
   }
 
   /** Spark `round(term, 0).cast("long")` replica: Spark's Round on
@@ -138,11 +106,11 @@ object GeneralClip {
   }
 }
 
-/** Native codegen'd form of PolyClip.generalIntersectionAreaMicro (the
-  * HOF twin, asserted bit-equal by spec). left = subject ring, right =
-  * clip ring, both simple polygons as array<struct<x:double,y:double>>,
-  * either orientation, no convexity requirement; result = signed fan
-  * intersection area in integer micro-units (callers abs + /1e6). */
+/** Native codegen'd signed-fan general intersection area. left =
+  * subject ring, right = clip ring, both simple polygons as
+  * array<struct<x:double,y:double>>, either orientation, no convexity
+  * requirement; result = signed fan intersection area in integer
+  * micro-units (callers abs + /1e6). */
 case class GeneralClipAreaMicro(left: Expression, right: Expression)
     extends BinaryExpression {
 

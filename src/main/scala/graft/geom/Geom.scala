@@ -82,13 +82,6 @@ object Geom {
     lineLength(closed)
   }
 
-  /** Axis-aligned bounding box of a point array: struct<x0,y0,x1,y1>. */
-  def bbox(pts: Column): Column = struct(
-    array_min(transform(pts, _("x"))).as("x0"),
-    array_min(transform(pts, _("y"))).as("y0"),
-    array_max(transform(pts, _("x"))).as("x1"),
-    array_max(transform(pts, _("y"))).as("y1"))
-
   /** Rectangle from corner columns (a 5-vertex closed ring). */
   def rectRing(x0: Column, y0: Column, x1: Column, y1: Column): Column =
     array(pt(x0, y0), pt(x1, y0), pt(x1, y1), pt(x0, y1), pt(x0, y0))

@@ -1,7 +1,6 @@
 package graft.geom
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
@@ -9,33 +8,30 @@ import org.apache.spark.sql.graftbridge.ColumnBridge
 import org.apache.spark.sql.types.{DataType, DoubleType}
 
 /** Symmetric (cheap) Hausdorff distance between two vertex arrays
-  * (array<struct<x:double, y:double>>) as a NATIVE Catalyst expression
-  * with whole-stage codegen (SURVEY.md §5).
+  * (array<struct<x:double, y:double>>): the kernel that both paths of
+  * [[HausdorffDistance]] call.
   *
   * The higher-order-function formulation (GeomSpec.hausdorff — nested
   * aggregate/least/greatest lambdas) allocates a lambda frame per vertex
-  * pair; this expression compiles to two tight Java loops inside the
-  * generated stage. Arithmetic is IDENTICAL (dx*dx + dy*dy -> sqrt,
-  * exact min/max comparisons), so it is drop-in oracle-compatible with
-  * the lambda version — same bits, ~10x less per-pair overhead.
+  * pair; this kernel is two tight loops called from the generated stage.
+  * Arithmetic is IDENTICAL (dx*dx + dy*dy -> sqrt, exact min/max
+  * comparisons), so it is drop-in oracle-compatible with the lambda
+  * version — same bits, ~10x less per-pair overhead.
   *
   * Reference semantics: gpd_lite_toolbox/core.py:104-131 (fh_dist_lines),
   * made symmetric via max of both directions.
   */
-case class HausdorffDistance(left: Expression, right: Expression)
-    extends BinaryExpression {
+object Hausdorff {
 
-  override def dataType: DataType = DoubleType
+  /** The distance is defined only when both arrays have a vertex (a
+    * directed distance to nothing is undefined; Double.MaxValue or 0.0
+    * would silently poison downstream mins/maxes). */
+  def defined(a: ArrayData, b: ArrayData): Boolean =
+    a.numElements() > 0 && b.numElements() > 0
 
-  // empty vertex arrays yield NULL (a directed distance to nothing is
-  // undefined; returning Double.MaxValue or 0.0 would silently poison
-  // downstream mins/maxes), so the expression is nullable regardless of
-  // its inputs' nullability
-  override def nullable: Boolean = true
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): HausdorffDistance =
-    copy(left = newLeft, right = newRight)
+  /** Max of both directed distances; callers check [[defined]] first. */
+  def distance(a: ArrayData, b: ArrayData): Double =
+    math.max(directed(a, b), directed(b, a))
 
   private def directed(a: ArrayData, b: ArrayData): Double = {
     var maxMin = 0.0
@@ -59,48 +55,38 @@ case class HausdorffDistance(left: Expression, right: Expression)
     }
     maxMin
   }
+}
+
+/** [[Hausdorff]] as a native Catalyst expression (SURVEY.md §5); NULL
+  * when either vertex array is empty. */
+case class HausdorffDistance(left: Expression, right: Expression)
+    extends BinaryExpression {
+
+  override def dataType: DataType = DoubleType
+
+  // empty vertex arrays yield NULL, so the expression is nullable
+  // regardless of its inputs' nullability
+  override def nullable: Boolean = true
+
+  override protected def withNewChildrenInternal(
+      newLeft: Expression, newRight: Expression): HausdorffDistance =
+    copy(left = newLeft, right = newRight)
 
   override def nullSafeEval(a: Any, b: Any): Any = {
     val aa = a.asInstanceOf[ArrayData]
     val bb = b.asInstanceOf[ArrayData]
-    if (aa.numElements() == 0 || bb.numElements() == 0) null
-    else math.max(directed(aa, bb), directed(bb, aa))
+    if (Hausdorff.defined(aa, bb)) Hausdorff.distance(aa, bb) else null
   }
 
   override protected def doGenCode(ctx: CodegenContext,
-                                   ev: ExprCode): ExprCode = {
-    val fn = ctx.addNewFunction("graftDirectedHausdorff",
-      s"""
-         |private double graftDirectedHausdorff(
-         |    org.apache.spark.sql.catalyst.util.ArrayData a,
-         |    org.apache.spark.sql.catalyst.util.ArrayData b) {
-         |  double maxMin = 0.0;
-         |  for (int i = 0; i < a.numElements(); i++) {
-         |    org.apache.spark.sql.catalyst.InternalRow pa = a.getStruct(i, 2);
-         |    double ax = pa.getDouble(0);
-         |    double ay = pa.getDouble(1);
-         |    double best = Double.MAX_VALUE;
-         |    for (int j = 0; j < b.numElements(); j++) {
-         |      org.apache.spark.sql.catalyst.InternalRow pb = b.getStruct(j, 2);
-         |      double dx = ax - pb.getDouble(0);
-         |      double dy = ay - pb.getDouble(1);
-         |      double d = Math.sqrt(dx * dx + dy * dy);
-         |      if (d < best) best = d;
-         |    }
-         |    if (best > maxMin) maxMin = best;
-         |  }
-         |  return maxMin;
-         |}
-       """.stripMargin)
+                                   ev: ExprCode): ExprCode =
     nullSafeCodeGen(ctx, ev, (a, b) =>
       s"""
-         |if ($a.numElements() == 0 || $b.numElements() == 0) {
-         |  ${ev.isNull} = true;
-         |} else {
-         |  ${ev.value} = Math.max($fn($a, $b), $fn($b, $a));
+         |${ev.isNull} = !graft.geom.Hausdorff.defined($a, $b);
+         |if (!${ev.isNull}) {
+         |  ${ev.value} = graft.geom.Hausdorff.distance($a, $b);
          |}
        """.stripMargin)
-  }
 }
 
 object HausdorffDistance {

@@ -7,11 +7,11 @@ import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.graftbridge.ColumnBridge
 import org.apache.spark.sql.types.{BooleanType, DataType}
 
-/** Ray-cast point-in-ring as a native codegen'd Catalyst expression
-  * (SURVEY.md §5). Same crossing-parity semantics as GeomSpec.pointInRing's
+/** Ray-cast point-in-ring: the kernel that both paths of [[PointInRing]]
+  * call. Same crossing-parity semantics as GeomSpec.pointInRing's
   * higher-order formulation (identical xint arithmetic -> identical
-  * results); the generated code is one tight loop per row instead of a
-  * lambda frame per segment.
+  * results), as one tight loop per row instead of a lambda frame per
+  * segment.
   *
   * The loop wraps the last vertex to the first, which closes open rings
   * and contributes a degenerate (no-crossing) segment on already-closed
@@ -20,19 +20,10 @@ import org.apache.spark.sql.types.{BooleanType, DataType}
   * Reference semantics: shapely `contains` in the reference's rejection
   * loop (gpd_lite_toolbox/core.py:546-552).
   */
-case class PointInRing(first: Expression, second: Expression,
-                       third: Expression) extends TernaryExpression {
+object RayCast {
 
-  override def dataType: DataType = BooleanType
-
-  override protected def withNewChildrenInternal(
-      f: Expression, s: Expression, t: Expression): PointInRing =
-    copy(first = f, second = s, third = t)
-
-  override def nullSafeEval(px: Any, py: Any, ring: Any): Any = {
-    val x = px.asInstanceOf[Double]
-    val y = py.asInstanceOf[Double]
-    val r = ring.asInstanceOf[ArrayData]
+  /** Whether (x, y) lies inside the ring (array<struct<x,y>>). */
+  def inside(x: Double, y: Double, r: ArrayData): Boolean = {
     val n = r.numElements()
     var inside = false
     var i = 0
@@ -49,32 +40,27 @@ case class PointInRing(first: Expression, second: Expression,
     }
     inside
   }
+}
+
+/** [[RayCast]] as a native Catalyst expression (SURVEY.md §5): point
+  * (first, second) in ring third. */
+case class PointInRing(first: Expression, second: Expression,
+                       third: Expression) extends TernaryExpression {
+
+  override def dataType: DataType = BooleanType
+
+  override protected def withNewChildrenInternal(
+      f: Expression, s: Expression, t: Expression): PointInRing =
+    copy(first = f, second = s, third = t)
+
+  override def nullSafeEval(px: Any, py: Any, ring: Any): Any =
+    RayCast.inside(px.asInstanceOf[Double], py.asInstanceOf[Double],
+      ring.asInstanceOf[ArrayData])
 
   override protected def doGenCode(ctx: CodegenContext,
-                                   ev: ExprCode): ExprCode = {
-    val fn = ctx.addNewFunction("graftPointInRing",
-      s"""
-         |private boolean graftPointInRing(double x, double y,
-         |    org.apache.spark.sql.catalyst.util.ArrayData r) {
-         |  int n = r.numElements();
-         |  boolean inside = false;
-         |  for (int i = 0; i < n; i++) {
-         |    org.apache.spark.sql.catalyst.InternalRow p1 = r.getStruct(i, 2);
-         |    org.apache.spark.sql.catalyst.InternalRow p2 =
-         |      r.getStruct((i + 1) % n, 2);
-         |    double x1 = p1.getDouble(0); double y1 = p1.getDouble(1);
-         |    double x2 = p2.getDouble(0); double y2 = p2.getDouble(1);
-         |    if ((y1 > y) != (y2 > y)) {
-         |      double xint = x1 + (y - y1) / (y2 - y1) * (x2 - x1);
-         |      if (x < xint) inside = !inside;
-         |    }
-         |  }
-         |  return inside;
-         |}
-       """.stripMargin)
+                                   ev: ExprCode): ExprCode =
     nullSafeCodeGen(ctx, ev, (px, py, r) =>
-      s"${ev.value} = $fn($px, $py, $r);")
-  }
+      s"${ev.value} = graft.geom.RayCast.inside($px, $py, $r);")
 }
 
 object PointInRing {

@@ -1,6 +1,7 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Dissolve (geometric union by key) and multi/single part conversion.
@@ -20,25 +21,49 @@ import org.apache.spark.sql.functions._
   */
 object Dissolve {
 
+  /** The box edges that survive cancellation within their key: each box
+    * (x0, y0, x1, y1) contributes its 4 edges, normalized to
+    * (ex0, ey0, ex1, ey1) key order, and an edge two boxes of one key
+    * share appears twice and cancels. Rows (key, e, n = 1). */
+  private def survivingEdges(boxes: DataFrame, key: Column, x0: Column,
+                             y0: Column, x1: Column, y1: Column): DataFrame = {
+    def edge(ax: Column, ay: Column, bx: Column, by: Column) =
+      struct(ax.as("ex0"), ay.as("ey0"), bx.as("ex1"), by.as("ey1"))
+    boxes.select(key.as("key"), explode(array(
+        edge(x0, y0, x1, y0), edge(x0, y1, x1, y1),
+        edge(x0, y0, x0, y1), edge(x1, y0, x1, y1))).as("e"))
+      .groupBy(col("key"), col("e"))
+      .agg(count(lit(1)).as("n"))
+      .filter(col("n") === 1)
+  }
+
+  /** Vertical slabs of each group: the distinct x edges of its parts
+    * (gid, x0, x1), each slab [x, xr) tagged with its coarse bucket bx. */
+  private def xSlabs(parts: DataFrame, bucket: Double): DataFrame =
+    parts
+      .select(col("gid"), explode(array(col("x0"), col("x1"))).as("x"))
+      .distinct()
+      .withColumn("xr",
+        lead("x", 1).over(Window.partitionBy("gid").orderBy("x")))
+      .filter(col("xr").isNotNull)
+      .withColumn("bx", floor(col("x") / bucket))
+
+  /** Each part once per coarse x bucket it spans: a box covering slab
+    * [x, xr) covers its left edge x, and the box's bucket range
+    * [floor(x0/b), floor(x1/b)] always contains floor(x/b). */
+  private def bucketCover(parts: DataFrame, bucket: Double): DataFrame =
+    parts.withColumn("bx", explode(sequence(
+      floor(col("x0") / bucket).cast("long"),
+      floor(col("x1") / bucket).cast("long"))))
+
   /** Dissolve a box layer (pid, x0, y0, x1, y1) by `keyCol`.
     * Assumes parts within a group tile without partial overlap (as in the
     * reference's admin-boundary use cases); for layers with partial
     * overlap use `dissolveUnionArea`, which computes the exact union.
     */
   def apply(polys: DataFrame, keyCol: String): DataFrame = {
-    // 4 directed edges per box, normalized to (x0,y0,x1,y1) key order
-    val edges = polys.select(col(keyCol).as("key"),
-      explode(array(
-        struct(col("x0").as("ex0"), col("y0").as("ey0"), col("x1").as("ex1"), col("y0").as("ey1")),
-        struct(col("x0").as("ex0"), col("y1").as("ey0"), col("x1").as("ex1"), col("y1").as("ey1")),
-        struct(col("x0").as("ex0"), col("y0").as("ey0"), col("x0").as("ex1"), col("y1").as("ey1")),
-        struct(col("x1").as("ex0"), col("y0").as("ey0"), col("x1").as("ex1"), col("y1").as("ey1"))
-      )).as("e"))
-
-    val boundary = edges
-      .groupBy(col("key"), col("e"))
-      .agg(count(lit(1)).as("n"))
-      .filter(col("n") === 1)
+    val boundary = survivingEdges(polys, col(keyCol), col("x0"), col("y0"),
+        col("x1"), col("y1"))
       .groupBy("key")
       .agg(round(sum(
         abs(col("e.ex1") - col("e.ex0")) + abs(col("e.ey1") - col("e.ey0"))), 4)
@@ -57,22 +82,12 @@ object Dissolve {
     * edge. This is the actual union outline the reference's dissolve
     * returns as a (Multi)Polygon — here in the engine's edge-set form,
     * ready for rendering or downstream joins. */
-  def boundaryEdges(polys: DataFrame, keyCol: String): DataFrame = {
-    val edges = polys.select(col(keyCol).as("key"),
-      explode(array(
-        struct(col("x0").as("ex0"), col("y0").as("ey0"), col("x1").as("ex1"), col("y0").as("ey1")),
-        struct(col("x0").as("ex0"), col("y1").as("ey0"), col("x1").as("ex1"), col("y1").as("ey1")),
-        struct(col("x0").as("ex0"), col("y0").as("ey0"), col("x0").as("ex1"), col("y1").as("ey1")),
-        struct(col("x1").as("ex0"), col("y0").as("ey0"), col("x1").as("ex1"), col("y1").as("ey1"))
-      )).as("e"))
-    edges
-      .groupBy(col("key"), col("e"))
-      .agg(count(lit(1)).as("n"))
-      .filter(col("n") === 1)
+  def boundaryEdges(polys: DataFrame, keyCol: String): DataFrame =
+    survivingEdges(polys, col(keyCol), col("x0"), col("y0"), col("x1"),
+        col("y1"))
       .select(col("key").as(keyCol),
         col("e.ex0").as("ex0"), col("e.ey0").as("ey0"),
         col("e.ex1").as("ex1"), col("e.ey1").as("ey1"))
-  }
 
   /** The dissolved union's MERGED RING GEOMETRY: the cancelled boundary
     * edge set ordered into closed ring vertex sequences (rightmost-turn
@@ -110,25 +125,12 @@ object Dissolve {
     * are integer tenths), so the final sums are exact long arithmetic —
     * order-independent across engines. */
   def dissolveUnionArea(parts: DataFrame, bucket: Double): DataFrame = {
-    val wx = org.apache.spark.sql.expressions.Window
-      .partitionBy("gid").orderBy("x")
-    val slabs = parts
-      .select(col("gid"), explode(array(col("x0"), col("x1"))).as("x"))
-      .distinct()
-      .withColumn("xr", lead("x", 1).over(wx))
-      .filter(col("xr").isNotNull)
-      .withColumn("bx", floor(col("x") / bucket))
-    // a box covering slab [x, xr) covers its left edge x, and the box's
-    // bucket range [floor(x0/b), floor(x1/b)] always contains floor(x/b)
-    val pb = parts.withColumn("bx", explode(sequence(
-      floor(col("x0") / bucket).cast("long"),
-      floor(col("x1") / bucket).cast("long"))))
-    val sv = slabs.join(pb, Seq("gid", "bx"))
+    val sv = xSlabs(parts, bucket).join(bucketCover(parts, bucket),
+        Seq("gid", "bx"))
       .filter(col("x0") <= col("x") && col("xr") <= col("x1"))
       .select(col("gid"), col("x"), col("xr"), col("y0"), col("y1"))
-    val wy = org.apache.spark.sql.expressions.Window
-      .partitionBy("gid", "x").orderBy("y0", "y1")
-      .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding, -1)
+    val wy = Window.partitionBy("gid", "x").orderBy("y0", "y1")
+      .rowsBetween(Window.unboundedPreceding, -1)
     val terms = sv
       .withColumn("pm", max("y1").over(wy))
       .withColumn("term", (col("xr") - col("x")) * greatest(lit(0.0),
@@ -171,41 +173,18 @@ object Dissolve {
     * partition independently, so the plan holds with millions of
     * groups. */
   def dissolveUnionRings(parts: DataFrame, bucket: Double): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val wx = Window.partitionBy("gid").orderBy("x")
     val wy = Window.partitionBy("gid").orderBy("y")
-    val xs = parts
-      .select(col("gid"), explode(array(col("x0"), col("x1"))).as("x"))
-      .distinct()
-      .withColumn("xr", lead("x", 1).over(wx))
-      .filter(col("xr").isNotNull)
-      .withColumn("bx", floor(col("x") / bucket))
     val ys = parts
       .select(col("gid"), explode(array(col("y0"), col("y1"))).as("y"))
       .distinct()
       .withColumn("yr", lead("y", 1).over(wy))
       .filter(col("yr").isNotNull)
-    val cells = xs.join(ys, Seq("gid"))
-    val pb = parts.withColumn("bx", explode(sequence(
-      floor(col("x0") / bucket).cast("long"),
-      floor(col("x1") / bucket).cast("long"))))
-    val cov = cells.join(pb, Seq("gid", "bx"))
+    val cells = xSlabs(parts, bucket).join(ys, Seq("gid"))
+    val cov = cells.join(bucketCover(parts, bucket), Seq("gid", "bx"))
       .filter(col("x0") <= col("x") && col("xr") <= col("x1")
         && col("y0") <= col("y") && col("yr") <= col("y1"))
       .select("gid", "x", "xr", "y", "yr").distinct()
-    val edges = cov.select(col("gid").as("key"), explode(array(
-      struct(col("x").as("ex0"), col("y").as("ey0"),
-        col("xr").as("ex1"), col("y").as("ey1")),
-      struct(col("x").as("ex0"), col("yr").as("ey0"),
-        col("xr").as("ex1"), col("yr").as("ey1")),
-      struct(col("x").as("ex0"), col("y").as("ey0"),
-        col("x").as("ex1"), col("yr").as("ey1")),
-      struct(col("xr").as("ex0"), col("y").as("ey0"),
-        col("xr").as("ex1"), col("yr").as("ey1")))).as("e"))
-    edges
-      .groupBy(col("key"), col("e"))
-      .agg(count(lit(1)).as("n"))
-      .filter(col("n") === 1)
+    survivingEdges(cov, col("gid"), col("x"), col("y"), col("xr"), col("yr"))
       .groupBy("key")
       .agg(collect_list(struct(
         col("e.ex0").as("ex0"), col("e.ey0").as("ey0"),

@@ -19,6 +19,11 @@ import org.apache.spark.sql.functions._
   */
 object MatchLines {
 
+  /** The 3x3 cell neighborhood, exploded on the probe side of both
+    * matchers. */
+  private val offsets = array((-1 to 1).flatMap(dx => (-1 to 1).map(dy =>
+    struct(lit(dx).as("dx"), lit(dy).as("dy")))): _*)
+
   /** Lines with integer-tenth vertex arrays and exact integer centroid
     * cells. Input: rows (lid, seq, xi, yi) with xi/yi integer tenths.
     *
@@ -150,8 +155,6 @@ object MatchLines {
   def matchByHausdorff(probe: DataFrame, target: DataFrame,
                        beam: Int = 25,
                        limit: Option[Double] = None): DataFrame = {
-    val offsets = array((-1 to 1).flatMap(dx => (-1 to 1).map(dy =>
-      struct(lit(dx).as("dx"), lit(dy).as("dy")))): _*)
     val probed = probe
       .select(col("lid").as("la"), col("n").as("na"),
         col("sx").as("sxa"), col("sy").as("sya"),
@@ -296,8 +299,6 @@ object MatchLines {
     * building vertex arrays entirely when only descriptors are needed. */
   def matchByDescriptorTables(probeDesc: DataFrame,
                               targetDesc: DataFrame): DataFrame = {
-    val offsets = array((-1 to 1).flatMap(dx => (-1 to 1).map(dy =>
-      struct(lit(dx).as("dx"), lit(dy).as("dy")))): _*)
     // each (la, lb) pair arises in exactly one cell (the target's own),
     // so the 9-way explode introduces no duplicate candidates
     val a = probeDesc

@@ -47,10 +47,10 @@ object PolyQueries {
       .select(col("pid").as("rid"), col("x0"), col("y0"), col("x1"), col("y1"))
     val subject = octagon(col("ax0"), col("ay0"), col("ax1"), col("ay1"))
     val clip = rectRing(col("bx0"), col("by0"), col("bx1"), col("by1"))
-    // Native codegen'd S-H expression (bit-identical to the PolyClip
-    // lambda fold — asserted by spec); floor-round mirrors
-    // PolyClip.clippedArea. Cheap enough that the pushed-down filter
-    // re-evaluating it is fine — no persist barrier needed.
+    // Native codegen'd S-H expression (bit-identical to the specs'
+    // lambda fold), floor-rounded to 4 decimals. Cheap enough that the
+    // pushed-down filter re-evaluating it is fine — no persist barrier
+    // needed.
     val area = floor(Graft.intersectionAreaPoly(subject, clip)
       * 10000.0 + 0.5) / 10000.0
     Rects.intersectPairs(a, b, cellSize = 20.0)
@@ -83,8 +83,8 @@ object PolyQueries {
     * a deep notch — its middle fan triangle has NEGATIVE sign) clipped by
     * a CONCAVE L-shaped zone given as ONE ring (fanned from its second
     * vertex so one clip triangle is negative too). No caller-side convex
-    * decomposition: PolyClip.generalIntersectionAreaMicro fan-triangulates
-    * both rings and sums signed triangle-pair S-H areas row-locally. */
+    * decomposition: GeneralClipAreaMicro fan-triangulates both rings and
+    * sums signed triangle-pair S-H areas row-locally. */
   def qIntersectionAreaGeneral(spark: SparkSession, dir: String): DataFrame = {
     val a = GeoData.rectCustomer(spark, dir)
     val b = GeoData.polyNation(spark, dir)
@@ -104,8 +104,8 @@ object PolyQueries {
       pt(col("bx0") + 8.0, col("by0") + 10.0),
       pt(col("bx0") + 8.0, col("by1")),
       pt(col("bx0"), col("by1")), pt(col("bx0"), col("by0")))
-    // native codegen'd signed-fan expression (bit-equal to the PolyClip
-    // HOF twin — asserted by spec); cheap enough that the pushed-down
+    // native codegen'd signed-fan expression (bit-equal to the specs'
+    // HOF twin); cheap enough that the pushed-down
     // ix_area filter re-evaluating it is fine
     val micro = graft.geom.GeneralClipAreaMicro(subject, clip)
     Rects.intersectPairs(a, b, cellSize = 20.0)
@@ -118,8 +118,8 @@ object PolyQueries {
   /** Intersection GEOMETRY, not just area: the clipped ring's vertices
     * (octagon subject x nation-square clip), one row per vertex in ring
     * order — shapely-`intersection`-returns-a-polygon parity. The clip
-    * runs in the native PolygonClipRing kernel (bit-equal to the
-    * PolyClip.clip HOF fold, asserted by spec; the fold is interpreted
+    * runs in the native PolygonClipRing kernel (bit-equal to the specs'
+    * HOF clip fold; the fold is interpreted
     * CodegenFallback and cost 7.1 s here at sf0.1), materialized once
     * per pair via withColumn, vertices explode from it, coordinates
     * round to 4. */
@@ -293,7 +293,8 @@ object PolyQueries {
   // ---------------------------------------------------------------- oracles
 
   /** One DuckDB S-H clip step against the directed clip edge
-    * (e1x,e1y)->(e2x,e2y): the exact SQL twin of PolyClip.clipStep. */
+    * (e1x,e1y)->(e2x,e2y): the exact SQL twin of
+    * SutherlandHodgman.step. */
   private def shStepSql(poly: String, e1x: String, e1y: String,
                         e2x: String, e2y: String): String = {
     val n = s"len($poly)"

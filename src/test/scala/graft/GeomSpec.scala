@@ -80,23 +80,21 @@ class GeomSpec extends AnyFunSuite with SharedSpark {
   }
 
   test("fanTriangles: notched pentagon has a negative middle triangle") {
-    import graft.geom.PolyClip
     val pent = "array(struct(0.0d x, 0.0d y), struct(10.0d x, 0.0d y), " +
       "struct(10.0d x, 10.0d y), struct(5.0d x, 2.5d y), struct(0.0d x, 10.0d y))"
     val signs = spark.range(1)
-      .select(transform(PolyClip.fanTriangles(expr(pent)), t => t("s")).as("s"))
+      .select(transform(GeomSpec.fanTriangles(expr(pent)), t => t("s")).as("s"))
       .head().getSeq[Double](0)
     assert(signs === Seq(1.0, -1.0, 1.0))
   }
 
   test("generalIntersectionAreaMicro: convex case matches direct S-H") {
-    import graft.geom.PolyClip
     // two overlapping axis-aligned squares -> area 1.0 exactly
     val s1 = "array(struct(0.0d x, 0.0d y), struct(2.0d x, 0.0d y), " +
       "struct(2.0d x, 2.0d y), struct(0.0d x, 2.0d y))"
     val s2 = "array(struct(1.0d x, 1.0d y), struct(3.0d x, 1.0d y), " +
       "struct(3.0d x, 3.0d y), struct(1.0d x, 3.0d y))"
-    val m = one(PolyClip.generalIntersectionAreaMicro(expr(s1), expr(s2)))
+    val m = one(GeomSpec.generalIntersectionAreaMicro(expr(s1), expr(s2)))
       .asInstanceOf[Long]
     assert(m === 1000000L)
   }
@@ -130,7 +128,7 @@ class GeomSpec extends AnyFunSuite with SharedSpark {
       pt(lit(20.0), lit(10.0)), pt(lit(0.0), lit(10.0)))
     val part2 = array(pt(lit(0.0), lit(10.0)), pt(lit(8.0), lit(10.0)),
       pt(lit(8.0), lit(20.0)), pt(lit(0.0), lit(20.0)))
-    val general = abs(PolyClip.generalIntersectionAreaMicro(subject, lRing))
+    val general = abs(GeomSpec.generalIntersectionAreaMicro(subject, lRing))
       .cast("double") / 1000000.0
     val parts = PolyClip.clipAreaConvexParts(subject, array(part1, part2))
     val bad = pents.select(general.as("g"), parts.as("p"))
@@ -139,7 +137,7 @@ class GeomSpec extends AnyFunSuite with SharedSpark {
   }
 
   test("native GeneralClipAreaMicro matches the HOF twin bit-for-bit") {
-    import graft.geom.{GeneralClipAreaMicro, PolyClip}
+    import graft.geom.GeneralClipAreaMicro
     // notched pentagons x L-rings over shifted frames — negative fan
     // triangles on both sides, evaluated through whole-stage codegen
     val frames = spark.range(80).selectExpr(
@@ -162,7 +160,7 @@ class GeomSpec extends AnyFunSuite with SharedSpark {
       pt(lit(0.0), lit(20.0)), pt(lit(0.0), lit(0.0)))
     val diff = frames.select(
         GeneralClipAreaMicro(subject, lRing).as("native"),
-        PolyClip.generalIntersectionAreaMicro(subject, lRing).as("hof"))
+        GeomSpec.generalIntersectionAreaMicro(subject, lRing).as("hof"))
       .filter(col("native") =!= col("hof"))
     assert(diff.count() === 0)
   }
@@ -282,10 +280,112 @@ class GeomSpec extends AnyFunSuite with SharedSpark {
 }
 
 /** Higher-order-function reference forms of the native geometry
-  * kernels (HausdorffExpression, PointInRingExpression): the specs'
-  * independent formulations of the same semantics. */
+  * kernels (Hausdorff, RayCast, SutherlandHodgman, GeneralClip): the
+  * specs' independent formulations of the same semantics, asserted
+  * bit-equal to the kernels. */
 object GeomSpec {
   import org.apache.spark.sql.Column
+  import graft.geom.PolygonClipArea
+
+  // ------------------------------------------ Sutherland–Hodgman (1974)
+  // Fold the subject polygon's vertex list over the clip polygon's
+  // edges; each step keeps the part of the subject on the inner side of
+  // one clip edge. The clip ring must be CONVEX and wound CCW; the
+  // subject may be ANY simple polygon. Everything is transform/zip_with/
+  // flatten/aggregate over array<struct<x:double,y:double>>, with the
+  // kernel's arithmetic (cross-product side tests, determinant-form line
+  // intersection) term for term.
+
+  /** Cyclic edge pairing: (v_1->v_2), ..., (v_n-1 -> v_n), (v_n -> v_1). */
+  private def cyclicEdges(ring: Column): Column =
+    zip_with(ring,
+      concat(slice(ring, lit(2), greatest(size(ring) - 1, lit(0))),
+        slice(ring, lit(1), lit(1))),
+      (s, p) => struct(s.as("s"), p.as("p")))
+
+  /** Cross of clip edge (e1->e2) with point q; >= 0 means inside for a
+    * CCW clip ring. */
+  private def side(e1: Column, e2: Column, q: Column): Column =
+    (e2("x") - e1("x")) * (q("y") - e1("y")) -
+      (e2("y") - e1("y")) * (q("x") - e1("x"))
+
+  /** Intersection of the line through s->p with the line through e1->e2
+    * (determinant form); only evaluated when s and p are on strictly
+    * different sides of e1->e2, so the denominator is nonzero. */
+  private def lineIx(s: Column, p: Column, e1: Column, e2: Column): Column = {
+    val n1 = e1("x") * e2("y") - e1("y") * e2("x")
+    val n2 = s("x") * p("y") - s("y") * p("x")
+    val den = (e1("x") - e2("x")) * (s("y") - p("y")) -
+      (e1("y") - e2("y")) * (s("x") - p("x"))
+    struct(
+      ((n1 * (s("x") - p("x")) - n2 * (e1("x") - e2("x"))) / den).as("x"),
+      ((n1 * (s("y") - p("y")) - n2 * (e1("y") - e2("y"))) / den).as("y"))
+  }
+
+  /** One S-H step: the part of `poly` on the inner side of e1->e2. */
+  private def clipStep(poly: Column, e1: Column, e2: Column): Column = {
+    val empty = slice(poly, lit(1), lit(0))
+    when(size(poly) < 3, empty).otherwise(
+      flatten(transform(cyclicEdges(poly), pr => {
+        val s = pr("s")
+        val p = pr("p")
+        val insS = side(e1, e2, s) >= 0
+        val insP = side(e1, e2, p) >= 0
+        when(insP && insS, array(p))
+          .when(insP && !insS, array(lineIx(s, p, e1, e2), p))
+          .when(!insP && insS, array(lineIx(s, p, e1, e2)))
+          .otherwise(empty)
+      })))
+  }
+
+  /** Clip `subject` (any simple polygon) by `clipRing` (CONVEX, CCW):
+    * a left fold of clipStep over the clip ring's cyclic edges. */
+  def clip(subject: Column, clipRing: Column): Column =
+    aggregate(cyclicEdges(clipRing), subject,
+      (acc, e) => clipStep(acc, e("s"), e("p")))
+
+  /** Area of a clipped ring (0.0 when degenerate), floor-rounded to 4
+    * decimals. */
+  def clippedArea(clipped: Column): Column =
+    when(size(clipped) < 3, lit(0.0))
+      .otherwise(floor(Geom.ringArea(clipped) * 10000.0 + 0.5) / 10000.0)
+
+  /** Signed fan triangles of a simple ring (either orientation):
+    * triangle i = (v1, v_i, v_{i+1}) for i in 2..n-1, with s the sign of
+    * its doubled signed area. Winding numbers telescope over a fan, so
+    * as signed indicator functions `w_ring = sum_i s_i * 1_{T_i}`.
+    * Degenerate (collinear) triangles carry s = 0. */
+  def fanTriangles(ring: Column): Column =
+    transform(sequence(lit(2), size(ring) - 1), i => {
+      val a = element_at(ring, 1)
+      val b = element_at(ring, i)
+      val c = element_at(ring, i + 1)
+      val cross = (b("x") - a("x")) * (c("y") - a("y")) -
+        (b("y") - a("y")) * (c("x") - a("x"))
+      struct(a.as("a"), b.as("b"), c.as("c"),
+        when(cross > 0, 1.0).when(cross < 0, -1.0).otherwise(0.0).as("s"))
+    })
+
+  /** General-general intersection area in integer MICRO-units:
+    * `area(P ∩ Q) = |sum_ij s_i * s_j * area(T_i ∩ T_j)|` over both
+    * rings' signed fan triangles, each term rounded to a long before
+    * summation (the HOF twin of GeneralClipAreaMicro). */
+  def generalIntersectionAreaMicro(subject: Column, clip: Column): Column = {
+    val ta = fanTriangles(subject)
+    val tb = fanTriangles(clip)
+    aggregate(ta, lit(0L), (acc, p) =>
+      acc + aggregate(tb, lit(0L), (acc2, q) => {
+        // subject triangle in fan order (S-H accepts either orientation);
+        // clip triangle re-wound CCW, its sign carried separately
+        val subjTri = array(p("a"), p("b"), p("c"))
+        val clipTri = when(q("s") < 0, array(q("a"), q("c"), q("b")))
+          .otherwise(array(q("a"), q("b"), q("c")))
+        val term = p("s") * q("s") * PolygonClipArea(subjTri, clipTri) *
+          lit(1000000.0)
+        acc2 + when(p("s") === 0.0 || q("s") === 0.0, lit(0L))
+          .otherwise(round(term, 0).cast("long"))
+      }))
+  }
 
   /** Symmetric "cheap hausdorff": the max of both directed distances,
     * each the max over one line's vertices of the min distance to the

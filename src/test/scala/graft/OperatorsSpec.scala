@@ -103,7 +103,6 @@ class OperatorsSpec extends AnyFunSuite with SharedSpark {
   }
 
   test("sutherland-hodgman clip: known intersection areas") {
-    import graft.geom.PolyClip
     def ring(pts: (Double, Double)*) = array(pts.map { case (x, y) =>
       struct(lit(x).as("x"), lit(y).as("y"))
     }: _*)
@@ -113,7 +112,7 @@ class OperatorsSpec extends AnyFunSuite with SharedSpark {
     val far = ring((100, 100), (104, 100), (104, 104), (100, 104))
     def intersectionArea(subject: org.apache.spark.sql.Column,
                          clipRing: org.apache.spark.sql.Column) =
-      PolyClip.clippedArea(PolyClip.clip(subject, clipRing))
+      GeomSpec.clippedArea(GeomSpec.clip(subject, clipRing))
     val r = spark.range(1).select(
       intersectionArea(sq1, sq2).as("a"),   // 2*2 = 4
       intersectionArea(tri, sq1).as("b"),   // 4x4 square minus corner tri(2) -> 14
@@ -127,7 +126,7 @@ class OperatorsSpec extends AnyFunSuite with SharedSpark {
   }
 
   test("native PolygonClipArea matches the lambda clip fold bit-for-bit") {
-    import graft.geom.{PolyClip, PolygonClipArea}
+    import graft.geom.PolygonClipArea
     // real pair data: customer octagons x nation squares at test SF
     val a = graft.GeoData.rectCustomer(spark, SfDir)
     val b = graft.GeoData.polyNation(spark, SfDir)
@@ -146,7 +145,7 @@ class OperatorsSpec extends AnyFunSuite with SharedSpark {
       pt(col("bx1"), col("by1")), pt(col("bx0"), col("by1")))
     val scored = pairs
       .select(PolygonClipArea(subject, clipRing).as("native"),
-        PolyClip.clip(subject, clipRing).as("clipped"))
+        GeomSpec.clip(subject, clipRing).as("clipped"))
       .withColumn("lambda",
         when(size(col("clipped")) < 3, lit(0.0))
           .otherwise(graft.geom.Geom.ringArea(col("clipped"))))
@@ -155,7 +154,7 @@ class OperatorsSpec extends AnyFunSuite with SharedSpark {
   }
 
   test("native PolygonClipRing matches the lambda clip fold bit-for-bit") {
-    import graft.geom.{PolyClip, PolygonClipRing}
+    import graft.geom.PolygonClipRing
     val a = graft.GeoData.rectCustomer(spark, SfDir)
     val b = graft.GeoData.polyNation(spark, SfDir)
       .select(col("pid").as("rid"), col("x0"), col("y0"), col("x1"), col("y1"))
@@ -174,13 +173,13 @@ class OperatorsSpec extends AnyFunSuite with SharedSpark {
     // identical vertex SEQUENCES (order + exact doubles), not just areas
     val scored = pairs.select(
       PolygonClipRing(subject, clipRing).as("native"),
-      PolyClip.clip(subject, clipRing).as("lambda"))
+      GeomSpec.clip(subject, clipRing).as("lambda"))
     assert(scored.filter(col("native") =!= col("lambda")).count() === 0)
     assert(scored.filter(size(col("native")) >= 3).count() > 0)
   }
 
   test("native clip handles CONCAVE subjects (buffer growth) = lambda fold") {
-    import graft.geom.{PolyClip, PolygonClipArea}
+    import graft.geom.PolygonClipArea
     def ring(pts: (Double, Double)*) = array(pts.map { case (x, y) =>
       struct(lit(x).as("x"), lit(y).as("y"))
     }: _*)
@@ -195,7 +194,7 @@ class OperatorsSpec extends AnyFunSuite with SharedSpark {
     val tips = ring((0, 2), (12, 2), (12, 3), (0, 3))
     def lambdaArea(subj: org.apache.spark.sql.Column,
                    clip: org.apache.spark.sql.Column) =
-      PolyClip.clippedArea(PolyClip.clip(subj, clip))
+      GeomSpec.clippedArea(GeomSpec.clip(subj, clip))
     val r = spark.range(1).select(
       PolygonClipArea(comb, all).as("na"),
       lambdaArea(comb, all).as("la"),
@@ -1730,6 +1729,36 @@ class OperatorsSpec extends AnyFunSuite with SharedSpark {
     intercept[IllegalArgumentException] {
       Graft.matchLines(polys, polys, method = "nope")
     }
+  }
+
+  test("Graft.matchLines cluster: hand-computed descriptor best matches") {
+    import spark.implicits._
+    // two-vertex lines in integer tenths; score = centroid L1 + length
+    // difference + bearing difference (mod 360), argmin per probe,
+    // ties to the smaller target id
+    val segs = Seq(
+      1L -> ((0, 0), (40, 0)),       // probe: east, centroid (2, 0)
+      2L -> ((10, 0), (10, 40)),     // probe: north, centroid (1, 2)
+      3L -> ((0, 20), (40, 20)),     // probe: east, centroid (2, 2)
+      4L -> ((1000, 1000), (1040, 1000)), // probe: no target cell near
+      10L -> ((0, 10), (40, 10)),    // east, centroid (2, 1)
+      11L -> ((0, 0), (0, 40)),      // north, centroid (0, 2)
+      12L -> ((40, 0), (0, 0)),      // west: bearing 180 off line 1
+      13L -> ((0, 5), (45, 5)),      // east, length 4.5
+      14L -> ((0, 30), (40, 30)))    // east, centroid (2, 3)
+    val verts = segs.flatMap { case (lid, ((x0, y0), (x1, y1))) =>
+      Seq((lid, 0, x0.toLong, y0.toLong), (lid, 1, x1.toLong, y1.toLong))
+    }.toDF("lid", "seq", "xi", "yi")
+    val lines = MatchLines.linesWithCells(verts, 100)
+    val got = Graft.matchLines(lines.filter(col("lid") < 10),
+        lines.filter(col("lid") >= 10), method = "cluster")
+      .collect().map(r => r.getLong(0) -> ((r.getLong(1), r.getDouble(2))))
+      .toMap
+    // line 1: 10 scores 0 + 1 + 0 + 0 = 1, 13 scores 1.25, 11 scores 94
+    // line 2: 11 scores 1 + 0 + 0 + 0 = 1, 10 scores 1 + 1 + 0 + 90 = 92
+    // line 3: 10 and 14 both score 1; the tie goes to 10
+    assert(got === Map(1L -> ((10L, 1.0)), 2L -> ((11L, 1.0)),
+      3L -> ((10L, 1.0))))
   }
 
   test("GeoJSON kinds: every kind roundtrips, corrupt paths null out " +
