@@ -13,12 +13,12 @@ import org.apache.spark.unsafe.types.UTF8String
   * interpreted and the codegen path of [[MinHashSig]] (one code path, no
   * divergence; same pattern as geom.GeneralClip).
   *
-  * Arithmetic is IDENTICAL to operators.Dedup's shuffle-based pipeline
-  * (asserted bit-equal by spec): `lower(text)` via UTF8String.toLowerCase
+  * Arithmetic is IDENTICAL to the shuffle-based signature pipeline
+  * (`graft.StreamingSpec.minhashSignatures`, asserted bit-equal): `lower(text)` via UTF8String.toLowerCase
   * (the exact implementation behind Spark's `lower`), shingle hash =
   * fold `(acc * 31 + codeUnit) % P` over k UTF-16 code units (matching
   * `split(text, "")` + `ascii` on BMP text), universal hashes
-  * `(a_i * h + b_i) % P` with Dedup.coef's constants — all products stay
+  * `(a_i * h + b_i) % P` with `StreamingSpec.coef`'s constants — all products stay
   * under 2^62 because P = 2^31 - 1. Min over ALL positions equals min
   * over the distinct shingle set.
   *
@@ -30,7 +30,8 @@ import org.apache.spark.unsafe.types.UTF8String
 object MinHashKernel {
   private val P = 2147483647L
 
-  /** Dedup.coef, replicated (kept in sync by the bit-equality spec). */
+  /** graft.StreamingSpec.coef, replicated (kept in sync by the
+    * bit-equality spec). */
   private def coefA(i: Int): Long = ((i * 2654435761L + 1) % P) | 1L
   private def coefB(i: Int): Long = (i * 40503L * 104729L + 12345L) % P
 

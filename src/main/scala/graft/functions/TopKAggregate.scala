@@ -74,44 +74,14 @@ final class TopKHeap(val cap: Int) {
   }
 }
 
-/** Per-group bounded TOP-K as a partial-aggregatable custom aggregate:
-  * `array<struct<key, tie, payload>>` of the k smallest (key, tie)
-  * pairs, sorted ascending — exactly the rows
-  * `row_number() OVER (PARTITION BY grp ORDER BY key, tie) <= k`
-  * keeps, in the same order.
-  *
-  * Why not the window: a row_number window SORTS EVERY candidate row
-  * through one exchange — top-k of n rows costs n log n compares and
-  * n rows of shuffle. This aggregate keeps a k-element heap per group
-  * per map partition, so the shuffle moves at most k rows per
-  * (partition x group) and the candidate set collapses BEFORE the
-  * exchange — the distributed-top-k shape that survives a 100x corpus.
-  * (The encoded-long min in MatchLines.matchByDescriptorTables is the
-  * k=1 special case of the same idea; this generalizes it to the ANN
-  * top-k family and the hausdorff beam.)
-  *
-  * Determinism contract: NULL keys are skipped (the callers' windows
-  * ordered NULLS LAST and post-filtered them); ties resolve on `tie`
-  * (an id column at every call site); -0.0 == 0.0 like SQL ORDER BY.
-  */
-case class TopKAgg(k1: Expression, k2: Expression, p: Expression, k: Int,
-                   mutableAggBufferOffset: Int = 0,
-                   inputAggBufferOffset: Int = 0)
-    extends TypedImperativeAggregate[TopKHeap] {
+/** The part of a bounded top-k aggregate that does not depend on its
+  * input: the [[TopKHeap]] buffer of capacity `k`, its merge, the
+  * sorted `array<struct<key, tie, payload>>` result and the buffer's
+  * byte form. [[TopKAgg]] and [[TopKArrAgg]] differ only in what one
+  * input row inserts. */
+abstract class TopKHeapAgg extends TypedImperativeAggregate[TopKHeap] {
 
-  require(k > 0, "TopKAgg: k must be positive")
-
-  override def children: Seq[Expression] = Seq(k1, k2, p)
-
-  override protected def withNewChildrenInternal(
-      newChildren: IndexedSeq[Expression]): TopKAgg =
-    copy(k1 = newChildren(0), k2 = newChildren(1), p = newChildren(2))
-
-  override def withNewMutableAggBufferOffset(newOffset: Int): TopKAgg =
-    copy(mutableAggBufferOffset = newOffset)
-
-  override def withNewInputAggBufferOffset(newOffset: Int): TopKAgg =
-    copy(inputAggBufferOffset = newOffset)
+  def k: Int
 
   override def dataType: DataType = ArrayType(StructType(Seq(
     StructField("key", DoubleType, nullable = false),
@@ -122,27 +92,6 @@ case class TopKAgg(k1: Expression, k2: Expression, p: Expression, k: Int,
   override def nullable: Boolean = false
 
   override def createAggregationBuffer(): TopKHeap = new TopKHeap(k)
-
-  // COMPILED per-row input evaluation. CollapseProject inlines the
-  // caller's scoring projection (a 64-term dot, the hausdorff kernel
-  // call, the beam proxy arithmetic) INTO these children, and
-  // TypedImperativeAggregate offers no codegen path — naive
-  // `child.eval(input)` would interpret that whole tree once per
-  // candidate row (measured 5-10x regressions). One generated
-  // projection, built lazily after binding, keeps the hot loop
-  // compiled on both the update and merge-side reads.
-  @transient private lazy val inputProj =
-    org.apache.spark.sql.catalyst.expressions.UnsafeProjection
-      .create(Seq(k1, k2, p))
-
-  override def update(buf: TopKHeap, input: InternalRow): TopKHeap = {
-    val r = inputProj(input)
-    if (!r.isNullAt(0) && !r.isNullAt(1)) {
-      buf.insert(r.getDouble(0), r.getLong(1),
-        if (r.isNullAt(2)) 0L else r.getLong(2))
-    }
-    buf
-  }
 
   override def merge(buf: TopKHeap, other: TopKHeap): TopKHeap = {
     var i = 0
@@ -182,6 +131,67 @@ case class TopKAgg(k1: Expression, k2: Expression, p: Expression, k: Int,
   }
 }
 
+/** Per-group bounded TOP-K as a partial-aggregatable custom aggregate:
+  * `array<struct<key, tie, payload>>` of the k smallest (key, tie)
+  * pairs, sorted ascending — exactly the rows
+  * `row_number() OVER (PARTITION BY grp ORDER BY key, tie) <= k`
+  * keeps, in the same order.
+  *
+  * Why not the window: a row_number window SORTS EVERY candidate row
+  * through one exchange — top-k of n rows costs n log n compares and
+  * n rows of shuffle. This aggregate keeps a k-element heap per group
+  * per map partition, so the shuffle moves at most k rows per
+  * (partition x group) and the candidate set collapses BEFORE the
+  * exchange — the distributed-top-k shape that survives a 100x corpus.
+  * (The encoded-long min in MatchLines.matchByDescriptorTables is the
+  * k=1 special case of the same idea; this generalizes it to the ANN
+  * top-k family and the hausdorff beam.)
+  *
+  * Determinism contract: NULL keys are skipped (the callers' windows
+  * ordered NULLS LAST and post-filtered them); ties resolve on `tie`
+  * (an id column at every call site); -0.0 == 0.0 like SQL ORDER BY.
+  */
+case class TopKAgg(k1: Expression, k2: Expression, p: Expression, k: Int,
+                   mutableAggBufferOffset: Int = 0,
+                   inputAggBufferOffset: Int = 0)
+    extends TopKHeapAgg {
+
+  require(k > 0, "TopKAgg: k must be positive")
+
+  override def children: Seq[Expression] = Seq(k1, k2, p)
+
+  override protected def withNewChildrenInternal(
+      newChildren: IndexedSeq[Expression]): TopKAgg =
+    copy(k1 = newChildren(0), k2 = newChildren(1), p = newChildren(2))
+
+  override def withNewMutableAggBufferOffset(newOffset: Int): TopKAgg =
+    copy(mutableAggBufferOffset = newOffset)
+
+  override def withNewInputAggBufferOffset(newOffset: Int): TopKAgg =
+    copy(inputAggBufferOffset = newOffset)
+
+  // COMPILED per-row input evaluation. CollapseProject inlines the
+  // caller's scoring projection (a 64-term dot, the hausdorff kernel
+  // call, the beam proxy arithmetic) INTO these children, and
+  // TypedImperativeAggregate offers no codegen path — naive
+  // `child.eval(input)` would interpret that whole tree once per
+  // candidate row (measured 5-10x regressions). One generated
+  // projection, built lazily after binding, keeps the hot loop
+  // compiled on both the update and merge-side reads.
+  @transient private lazy val inputProj =
+    org.apache.spark.sql.catalyst.expressions.UnsafeProjection
+      .create(Seq(k1, k2, p))
+
+  override def update(buf: TopKHeap, input: InternalRow): TopKHeap = {
+    val r = inputProj(input)
+    if (!r.isNullAt(0) && !r.isNullAt(1)) {
+      buf.insert(r.getDouble(0), r.getLong(1),
+        if (r.isNullAt(2)) 0L else r.getLong(2))
+    }
+    buf
+  }
+}
+
 object TopKAgg {
   /** Column API: top-k rows by (key ASC, tie ASC), payload carried
     * along. Result: array<struct<key, tie, payload>> sorted ascending —
@@ -203,7 +213,7 @@ object TopKAgg {
 case class TopKArrAgg(arr: Expression, k: Int,
                       mutableAggBufferOffset: Int = 0,
                       inputAggBufferOffset: Int = 0)
-    extends TypedImperativeAggregate[TopKHeap] {
+    extends TopKHeapAgg {
 
   require(k > 0, "TopKArrAgg: k must be positive")
 
@@ -218,16 +228,6 @@ case class TopKArrAgg(arr: Expression, k: Int,
 
   override def withNewInputAggBufferOffset(newOffset: Int): TopKArrAgg =
     copy(inputAggBufferOffset = newOffset)
-
-  override def dataType: DataType = ArrayType(StructType(Seq(
-    StructField("key", DoubleType, nullable = false),
-    StructField("tie", LongType, nullable = false),
-    StructField("payload", LongType, nullable = false))),
-    containsNull = false)
-
-  override def nullable: Boolean = false
-
-  override def createAggregationBuffer(): TopKHeap = new TopKHeap(k)
 
   // see TopKAgg.inputProj: keep the (possibly inlined) child compiled
   @transient private lazy val inputProj =
@@ -246,41 +246,6 @@ case class TopKArrAgg(arr: Expression, k: Int,
       }
     }
     buf
-  }
-
-  override def merge(buf: TopKHeap, other: TopKHeap): TopKHeap = {
-    var i = 0
-    while (i < other.size) {
-      buf.insert(other.key(i), other.tie(i), other.pay(i))
-      i += 1
-    }
-    buf
-  }
-
-  override def eval(buf: TopKHeap): Any =
-    new GenericArrayData(buf.sortedRows())
-
-  override def serialize(buf: TopKHeap): Array[Byte] = {
-    val bb = ByteBuffer.allocate(8 + buf.size * 24)
-    bb.putInt(buf.cap).putInt(buf.size)
-    var i = 0
-    while (i < buf.size) {
-      bb.putDouble(buf.key(i)).putLong(buf.tie(i)).putLong(buf.pay(i))
-      i += 1
-    }
-    bb.array()
-  }
-
-  override def deserialize(bytes: Array[Byte]): TopKHeap = {
-    val bb = ByteBuffer.wrap(bytes)
-    val h = new TopKHeap(bb.getInt())
-    val n = bb.getInt()
-    var i = 0
-    while (i < n) {
-      h.insert(bb.getDouble(), bb.getLong(), bb.getLong())
-      i += 1
-    }
-    h
   }
 }
 

@@ -140,23 +140,19 @@ object Ann {
   /** IVF (inverted-file) index: a coarse k-means quantizer partitions the
     * corpus into nlist cells; a query probes only its nprobe nearest
     * cells and brute-forces within them. Seeds are the nlist smallest
-    * vec_ids (deterministic); `iters` Lloyd rounds refine them.
+    * vec_ids (deterministic); `iters` rounds of the shared [[Lloyd]]
+    * trainer refine them.
     *
-    * The centroid table is O(nlist x dim) — driver-sized BY CONSTRUCTION
-    * (FAISS trains its coarse quantizer centrally for the same reason), so
-    * each Lloyd round collects it and ships the matrix inside a native
-    * [[graft.functions.IvfDistances]] expression: the assignment argmin
-    * becomes element 0 of the kernel's sorted (d2, cluster) table — a
-    * pure map-only projection in whole-stage codegen. No crossJoin, no
-    * shuffle of an nlist-expanded corpus, no window: the only shuffle per
-    * round is the partial-aggregated recenter (nlist x dim rows out of
-    * each map partition). This replaces the round-4 plan (crossJoin x
-    * nlist -> row_number window over the expanded table, with an
-    * interpreted HOF distance) that cost 23.9 s at sf0.1 and would
-    * full-shuffle a 16x-expanded corpus at 100 TB. (A literal-inlined
-    * flat-scalar argmin was tried in between: correct plan shape, but
-    * nlist x dim ~ 4k expression nodes spend seconds per round in Janino
-    * — the kernel call keeps the generated method tiny.)
+    * Assignment and probe selection read the sorted (d2, cluster) table
+    * of the native [[graft.functions.IvfDistances]] kernel — a map-only
+    * projection with the centroid model inside the expression. This
+    * replaces the round-4 plan (crossJoin x nlist -> row_number window
+    * over the expanded table, with an interpreted HOF distance) that cost
+    * 23.9 s at sf0.1 and would full-shuffle a 16x-expanded corpus at
+    * 100 TB. (A literal-inlined flat-scalar argmin was tried in between:
+    * correct plan shape, but nlist x dim ~ 4k expression nodes spend
+    * seconds per round in Janino — the kernel call keeps the generated
+    * method tiny.)
     *
     * Selection is the lexicographic min of (round(d2,6), cluster) —
     * identical to the window form, so the DuckDB oracle is untouched. */
@@ -168,42 +164,23 @@ object Ann {
 
   /** IVF index build: Lloyd-train the coarse quantizer and assign every
     * corpus vector to its cell. Returns (centroid model, indexed corpus
-    * DataFrame with columns nid/ne/nn/cluster). */
+    * DataFrame with columns nid/ne/nn/cluster). The normed corpus is
+    * cached for the seed collect and the Lloyd rounds only; the returned
+    * plan re-derives the map-only norm projection once. */
   def ivfTrainAssign(corpus: DataFrame, nlist: Int, iters: Int,
-                     dim: Int): (Seq[(Long, Array[Double])], DataFrame) = {
-    val c = withNorm(corpus, "vec_id", dim)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // argmin cluster = element 0 of the kernel's sorted (d2, cluster)
-    // table — the same key a row_number window would order by
-    def assignExpr(cents: Seq[(Long, Array[Double])]): Column =
-      graft.functions.IvfDistances(col("e"), cents)
-        .getItem(0).getField("cluster")
-    // seeds: the nlist smallest vec_ids (tiny, deterministic)
-    var cents: Seq[(Long, Array[Double])] =
-      c.orderBy("vec_id").limit(nlist).select("vec_id", "e").collect()
-        .map(r => (r.getLong(0), r.getSeq[Double](1).toArray)).toSeq
-    for (_ <- 1 to iters) {
-      // recenter: one partial-aggregated shuffle of (cluster, idx) means,
-      // then the nlist x dim result comes back to the driver
-      val means = c.withColumn("cluster", assignExpr(cents))
-        .select(col("cluster"), posexplode(col("e")).as(Seq("idx", "v")))
-        .groupBy("cluster", "idx").agg(avg("v").as("m"))
-        .collect()
-      cents = means.groupBy(_.getLong(0)).map { case (cl, rows) =>
-        val ce = new Array[Double](dim)
-        rows.foreach(r => ce(r.getInt(1)) = r.getDouble(2))
-        (cl, ce)
-      }.toSeq.sortBy(_._1)
+                     dim: Int): (Seq[(Long, Array[Double])], DataFrame) =
+    Lloyd.cached(withNorm(corpus, "vec_id", dim)) { c =>
+      val seeds = Lloyd.smallestIds(c, "vec_id", col("e"), nlist)
+      val cents = Lloyd.train(c, col("e"), IndexedSeq(seeds), dim, iters)
+        .head
+      (cents, assignCells(c, cents))
     }
-    val indexed = c.withColumn("cluster", assignExpr(cents))
-      .select(col("vec_id").as("nid"), col("e").as("ne"),
-        col("nrm").as("nn"), col("cluster"))
-    // the cache amortized the Lloyd rounds' collect()s, which are done;
-    // release it so long-lived sessions don't accumulate cached stages
-    // (the returned plan re-derives the map-only norm projection once)
-    c.unpersist(blocking = false)
-    (cents, indexed)
-  }
+
+  /** A [[withNorm]] table as an indexed corpus (nid, ne, nn, cluster):
+    * every vector in its nearest cell of `cents`. */
+  private def assignCells(normed: DataFrame, cents: Lloyd.Book): DataFrame =
+    normed.select(col("vec_id").as("nid"), col("e").as("ne"),
+      col("nrm").as("nn"), Lloyd.nearest(col("e"), cents).as("cluster"))
 
   /** INCREMENTAL index maintenance — the freshness story beside the
     * build/serve split (rows 68/74): a delta batch joins the standing
@@ -222,12 +199,7 @@ object Ann {
                    k: Int, nlist: Int, nprobe: Int, iters: Int,
                    dim: Int): DataFrame = {
     val (cents, baseIdx) = ivfTrainAssign(base, nlist, iters, dim)
-    val dIdx = withNorm(delta, "vec_id", dim)
-      .withColumn("cluster",
-        graft.functions.IvfDistances(col("e"), cents)
-          .getItem(0).getField("cluster"))
-      .select(col("vec_id").as("nid"), col("e").as("ne"),
-        col("nrm").as("nn"), col("cluster"))
+    val dIdx = assignCells(withNorm(delta, "vec_id", dim), cents)
     ivfProbeScore(baseIdx.unionByName(dIdx), queries, cents, k, nprobe,
       dim)
   }
@@ -237,15 +209,10 @@ object Ann {
   def ivfProbeScore(indexed: DataFrame, queries: DataFrame,
                     cents: Seq[(Long, Array[Double])], k: Int,
                     nprobe: Int, dim: Int): DataFrame = {
-    // probe selection: per query, the nprobe smallest (d2, cluster) keys —
-    // the head of the same sorted kernel table (queries are tiny)
-    val q = withNorm(queries, "vec_id", dim)
-      .select(col("vec_id").as("qid"), col("e").as("qe"), col("nrm").as("qn"))
-    val probes = q
-      .withColumn("pr", explode(slice(
-        graft.functions.IvfDistances(col("qe"), cents), 1, nprobe)))
-      .select(col("qid"), col("qe"), col("qn"),
-        col("pr").getField("cluster").as("cluster"))
+    // one row per (query, probed cell); queries are tiny
+    val probes = withNorm(queries, "vec_id", dim)
+      .select(col("vec_id").as("qid"), col("e").as("qe"), col("nrm").as("qn"),
+        explode(Lloyd.nearestN(col("e"), cents, nprobe)).as("cluster"))
     val scored = indexed.join(broadcast(probes), Seq("cluster"))
       .filter(col("qid") =!= col("nid"))
       .withColumn("cos4",
@@ -312,18 +279,10 @@ object Ann {
                 nlist: Int, nprobe: Int, coarseIters: Int,
                 m: Int, ksub: Int, pqIters: Int,
                 dim: Int = DefaultDim): DataFrame = {
-    require(dim % m == 0, s"dim=$dim not divisible by m=$m subspaces")
-    val dsub = dim / m
     val (cents, indexed) = ivfTrainAssign(corpus, nlist, coarseIters, dim)
-    val res = pqResiduals(indexed, centroidsDf(corpus.sparkSession, cents),
-        dim)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val books = pqTrainBooks(res, m, ksub, dsub, pqIters)
-    val enc = pqEncode(res, books, m, dsub)
-    val out = ivfPqScore(enc, queries, cents, books, k, nprobe,
-      m, ksub, dim)
-    res.unpersist(blocking = false)
-    out
+    withPq(indexed, cents, m, ksub, pqIters, dim) { (books, enc) =>
+      ivfPqScore(enc, queries, cents, books, k, nprobe, m, ksub, dim)
+    }
   }
 
   /** Incremental IVF-PQ — [[ivfDeltaTopK]]'s compressed-index twin,
@@ -337,25 +296,35 @@ object Ann {
                      queries: DataFrame, k: Int, nlist: Int, nprobe: Int,
                      coarseIters: Int, m: Int, ksub: Int, pqIters: Int,
                      dim: Int = DefaultDim): DataFrame = {
+    val (cents, baseIdx) = ivfTrainAssign(base, nlist, coarseIters, dim)
+    withPq(baseIdx, cents, m, ksub, pqIters, dim) { (books, encBase) =>
+      val dIdx = assignCells(withNorm(delta, "vec_id", dim), cents)
+      val encDelta = pqEncode(pqResiduals(dIdx, cents, dim), books, dim / m)
+      ivfPqScore(encBase.unionByName(encDelta), queries, cents, books, k,
+        nprobe, m, ksub, dim)
+    }
+  }
+
+  /** PQ build over an IVF-assigned corpus: residuals against the cell
+    * centroids, cached while the m codebooks train (one [[Lloyd]] pass
+    * per round for all subspaces; seeds are the residuals of the ksub
+    * smallest ids sliced per subspace, codes = seed rank 0..ksub-1),
+    * then `use` gets the books and the encoded index. The residual cache
+    * is released when `use` returns. */
+  private def withPq[T](indexed: DataFrame, cents: Lloyd.Book, m: Int,
+                        ksub: Int, pqIters: Int, dim: Int)(
+      use: (IndexedSeq[Lloyd.Book], DataFrame) => T): T = {
     require(dim % m == 0, s"dim=$dim not divisible by m=$m subspaces")
     val dsub = dim / m
-    val (cents, baseIdx) = ivfTrainAssign(base, nlist, coarseIters, dim)
-    val centDf = centroidsDf(base.sparkSession, cents)
-    val resBase = pqResiduals(baseIdx, centDf, dim)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val books = pqTrainBooks(resBase, m, ksub, dsub, pqIters)
-    val encBase = pqEncode(resBase, books, m, dsub)
-    val dIdx = withNorm(delta, "vec_id", dim)
-      .withColumn("cluster",
-        graft.functions.IvfDistances(col("e"), cents)
-          .getItem(0).getField("cluster"))
-      .select(col("vec_id").as("nid"), col("e").as("ne"),
-        col("nrm").as("nn"), col("cluster"))
-    val encDelta = pqEncode(pqResiduals(dIdx, centDf, dim), books, m, dsub)
-    val out = ivfPqScore(encBase.unionByName(encDelta), queries, cents,
-      books, k, nprobe, m, ksub, dim)
-    resBase.unpersist(blocking = false)
-    out
+    Lloyd.cached(pqResiduals(indexed, cents, dim)) { res =>
+      val seeds = Lloyd.smallestIds(res, "nid", col("r"), ksub)
+        .map(_._2).zipWithIndex
+      val books = Lloyd.train(res, col("r"), (0 until m).map(s =>
+        seeds.map { case (r0, j) =>
+          (j.toLong, r0.slice(s * dsub, (s + 1) * dsub))
+        }), dsub, pqIters)
+      use(books, pqEncode(res, books, dsub))
+    }
   }
 
   /** Driver-sized centroid model as a (cluster, ce) DataFrame — the
@@ -368,68 +337,21 @@ object Ann {
 
   /** Residual table (nid, cluster, r = x - centroid(cell)) of an
     * IVF-assigned corpus — the PQ training/encoding input. */
-  private def pqResiduals(indexed: DataFrame, centDf: DataFrame,
+  private def pqResiduals(indexed: DataFrame, cents: Lloyd.Book,
                           dim: Int): DataFrame =
-    indexed.join(broadcast(centDf), "cluster")
+    indexed.join(broadcast(centroidsDf(indexed.sparkSession, cents)),
+        "cluster")
       .select(col("nid"), col("cluster"),
         array((0 until dim).map(i =>
           col("ne").getItem(i) - col("ce").getItem(i)): _*).as("r"))
 
-  /** Sub-code of subspace `s`: lexicographic (round(d2,6), code) argmin
-    * against the subspace's codebook — element 0 of the sorted kernel
-    * table, same selection the coarse quantizer uses. */
-  private def pqCodeExpr(books: IndexedSeq[Seq[(Long, Array[Double])]],
-                         s: Int, dsub: Int): Column =
-    graft.functions.IvfDistances(
-      slice(col("r"), s * dsub + 1, dsub), books(s))
-      .getItem(0).getField("cluster")
-
-  /** Lloyd-train the m per-subspace codebooks over a residual table.
-    * Seeds are the residuals of the ksub smallest ids sliced per
-    * subspace (codes = seed rank 0..ksub-1, deterministic). */
-  private def pqTrainBooks(res: DataFrame, m: Int, ksub: Int, dsub: Int,
-      pqIters: Int): IndexedSeq[Seq[(Long, Array[Double])]] = {
-    var books: IndexedSeq[Seq[(Long, Array[Double])]] = {
-      val seedRows = res.orderBy("nid").limit(ksub).select("r").collect()
-        .map(_.getSeq[Double](0).toArray)
-      (0 until m).map(s => seedRows.zipWithIndex.map { case (r0, j) =>
-        (j.toLong, r0.slice(s * dsub, (s + 1) * dsub))
-      }.toSeq)
-    }
-    for (_ <- 1 to pqIters) {
-      // ONE pass trains all m subspaces: explode (s, code, sub-vector)
-      // rows, recenter with a partial-aggregated shuffle, collect the
-      // m x ksub x dsub means (driver-sized). A code emptied by a round
-      // simply drops out of its book (same policy as the coarse Lloyd).
-      val rows = res.select(explode(array((0 until m).map(s =>
-          struct(lit(s.toLong).as("s"),
-            pqCodeExpr(books, s, dsub).as("code"),
-            slice(col("r"), s * dsub + 1, dsub).as("sub"))): _*)).as("x"))
-        .select(col("x.s").as("s"), col("x.code").as("code"),
-          posexplode(col("x.sub")).as(Seq("idx", "v")))
-        .groupBy("s", "code", "idx").agg(avg("v").as("mv"))
-        .collect()
-      books = (0 until m).map { s =>
-        rows.filter(_.getLong(0) == s).groupBy(_.getLong(1)).map {
-          case (code, rs) =>
-            val ce = new Array[Double](dsub)
-            rs.foreach(r => ce(r.getInt(2)) = r.getDouble(3))
-            (code, ce)
-        }.toSeq.sortBy(_._1)
-      }
-    }
-    books
-  }
-
   /** The encoded index: cell id + m sub-codes per vector — the compact
     * artifact that persists at scale (codes are small ints; the float
     * vector is no longer needed for scoring). */
-  private def pqEncode(res: DataFrame,
-                       books: IndexedSeq[Seq[(Long, Array[Double])]],
-                       m: Int, dsub: Int): DataFrame =
+  private def pqEncode(res: DataFrame, books: IndexedSeq[Lloyd.Book],
+                       dsub: Int): DataFrame =
     res.select(col("nid"), col("cluster"),
-      array((0 until m).map(s => pqCodeExpr(books, s, dsub)): _*)
-        .as("codes"))
+      Lloyd.encode(col("r"), books, dsub).as("codes"))
 
   /** ADC serving over an encoded index (from [[pqEncode]] or a persisted
     * index table): probe selection as in ivfProbeScore, the query's
@@ -444,11 +366,8 @@ object Ann {
     val dsub = dim / m
     val centDf = centroidsDf(enc.sparkSession, cents)
     val probes = withNorm(queries, "vec_id", dim)
-      .select(col("vec_id").as("qid"), col("e").as("qe"))
-      .withColumn("pr", explode(slice(
-        graft.functions.IvfDistances(col("qe"), cents), 1, nprobe)))
-      .select(col("qid"), col("qe"),
-        col("pr").getField("cluster").as("cluster"))
+      .select(col("vec_id").as("qid"), col("e").as("qe"),
+        explode(Lloyd.nearestN(col("e"), cents, nprobe)).as("cluster"))
       .join(centDf, "cluster")
       .select(col("qid"), col("cluster"),
         array((0 until dim).map(i =>
@@ -493,22 +412,17 @@ object Ann {
                        m: Int, ksub: Int, pqIters: Int,
                        table: String, path: String,
                        dim: Int = DefaultDim): DataFrame = {
-    require(dim % m == 0, s"dim=$dim not divisible by m=$m subspaces")
     import graft.sources.{Artifacts, Bucketed}
     val spark = corpus.sparkSession
-    val dsub = dim / m
     val s = Artifacts.Slot(path, table)
       .sub("pq", nlist, coarseIters, m, ksub, pqIters, dim)
     val (cents, books, enc) = Artifacts.once(spark, s) {
       val (cents, indexed) = coarseIndex(corpus, nlist, coarseIters, dim,
         table, path)
-      val res = pqResiduals(indexed, centroidsDf(spark, cents), dim)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      val books = pqTrainBooks(res, m, ksub, dsub, pqIters)
-      Bucketed.writeBucketed(pqEncode(res, books, m, dsub), s.table,
-        s.path, "cluster", 8)
-      res.unpersist(blocking = false)
-      (cents, books, Bucketed.readBucketed(spark, s.table))
+      withPq(indexed, cents, m, ksub, pqIters, dim) { (books, enc) =>
+        Bucketed.writeBucketed(enc, s.table, s.path, "cluster", 8)
+        (cents, books, Bucketed.readBucketed(spark, s.table))
+      }
     }
     ivfPqScore(enc, queries, cents, books, k, nprobe, m, ksub, dim)
   }
@@ -906,15 +820,12 @@ object Ann {
     // collection and no broadcast of the probe side: the kernel ships
     // the tiny model, the join is a plain cluster equi-join
     def probesOf(side: DataFrame, cents: Seq[(Long, Array[Double])]) =
-      if (degenerate)
-        withNorm(side, "vec_id", dim)
-          .select(col("vec_id").as("qid"), col("e").as("qe"),
-            col("nrm").as("qn"), lit(0L).as("cluster"))
-      else withNorm(side, "vec_id", dim)
-        .withColumn("pr", explode(slice(
-          graft.functions.IvfDistances(col("e"), cents), 1, nprobe)))
+      withNorm(side, "vec_id", dim)
         .select(col("vec_id").as("qid"), col("e").as("qe"),
-          col("nrm").as("qn"), col("pr").getField("cluster").as("cluster"))
+          col("nrm").as("qn"),
+          (if (degenerate) lit(0L)
+           else explode(Lloyd.nearestN(col("e"), cents, nprobe)))
+            .as("cluster"))
     // nlist=1 (the exact baseline): the cluster key is a CONSTANT, so
     // hash-partitioning by it lands EVERY pair expansion on one task and
     // the checkpointed index's unknown size estimate blocks the auto-

@@ -20,13 +20,6 @@ object Dedup {
     * a*h+b stays well inside a 64-bit long under ANSI arithmetic. */
   private val P = 2147483647L
 
-  /** Deterministic universal-hash coefficients (odd a, spread b). */
-  private def coef(i: Int): (Long, Long) = {
-    val a = ((i * 2654435761L + 1) % P) | 1L
-    val b = (i * 40503L * 104729L + 12345L) % P
-    (a, b)
-  }
-
   /** Rolling polynomial hash of every k-shingle, one row per occurrence
     * (doc_id, s: long). Hash values are identical to folding
     * `(acc*mult + ascii(c)) % mod` over the shingle's characters — the
@@ -123,23 +116,6 @@ object Dedup {
       .select("ida", "idb", "shared", "na", "nb", "cont_a", "cont_b",
         "inner_id")
 
-  /** MinHash signatures: one row per doc with array<long> of numHashes
-    * minimums. Single shuffle (groupBy doc_id) with map-side partial
-    * aggregation — the 64 mins fold before the exchange. The shingle
-    * hash is a polynomial rolling hash mod 2^31-1 (not xxhash64) so the
-    * whole pipeline is engine-portable and oracle-checkable. */
-  def minhashSignatures(docs: DataFrame, k: Int, numHashes: Int): DataFrame = {
-    val sh = shingleHashes(docs, k, 31L, P).withColumnRenamed("s", "hp")
-    val mins = (0 until numHashes).map { i =>
-      val (a, b) = coef(i)
-      min((lit(a) * col("hp") + lit(b)) % lit(P)).as(s"m$i")
-    }
-    sh.groupBy("doc_id")
-      .agg(mins.head, mins.tail: _*)
-      .select(col("doc_id"),
-        array((0 until numHashes).map(i => col(s"m$i")): _*).as("sig"))
-  }
-
   /** Band hashes of the `sig` array (bands x rowsPerBand fold). */
   private def bandHashExprs(numHashes: Int, bands: Int): Column = {
     val rows = numHashes / bands
@@ -151,8 +127,8 @@ object Dedup {
 
   /** Row-local LSH band keys (doc_id, band, bh) — the streaming-legal
     * signature path (no per-doc aggregation). Signatures come from the
-    * NATIVE MinHashSig kernel, whose spec (StreamingSpec) pins it
-    * bit-equal to the shuffle pipeline's [[minhashSignatures]]; an
+    * NATIVE MinHashSig kernel, whose spec pins it bit-equal to the
+    * shuffle pipeline (`StreamingSpec.minhashSignatures`); an
     * interpreted HOF fold was ~60x slower per doc. */
   def minhashBandKeysRowLocal(docs: DataFrame, k: Int, numHashes: Int,
                               bands: Int): DataFrame =

@@ -220,62 +220,31 @@ object MatchLines {
   /** K-means clustering of lines in descriptor space — the reference's
     * actual cluster-matching mechanism (core.py:70: sklearn KMeans over
     * per-line shape descriptors from utils.py:60-74). Descriptor vector:
-    * (centroid x, centroid y, length, bearing). Seeds are the k
-    * smallest lids' descriptors (cluster label = seed lid); `iters`
-    * Lloyd rounds with BROADCAST centroids — the corpus is touched once
-    * per round with a map-side argmin, the same layout as Ann.ivfTopK,
-    * so the plan is linear in lines at any scale. Engine-stability
-    * discipline (same as Ann.ivfTopK): descriptors round to 4 BEFORE
-    * clustering (absorbs last-ulp atan2/unordered-sum differences),
-    * assignment ranks on round(d2, 6) with a cluster tie-break, and the
-    * output carries only (lid, cluster) — never centroid-derived
-    * floats, whose unordered averages are not bit-portable. */
+    * (centroid x, centroid y, length, bearing), each rounded to 4 BEFORE
+    * clustering (absorbs last-ulp atan2/unordered-sum differences).
+    * Seeds are the k smallest lids' descriptors (cluster label = seed
+    * lid); `iters` rounds of the shared [[Lloyd]] trainer, whose
+    * assignment is the native IvfDistances kernel at dim = 4 — a
+    * map-only projection with the k x 4 centroid matrix inside the
+    * expression, so the plan is linear in lines at any scale. The output
+    * carries only (lid, cluster) — never centroid-derived floats, whose
+    * unordered averages are not bit-portable. */
   def kmeansDescriptors(lines: DataFrame, k: Int, iters: Int): DataFrame = {
     import graft.geom.Geom
-    // Scalar feature columns, not an array: the squared distance then
-    // compiles to flat double arithmetic inside whole-stage codegen
-    // instead of a per-row zip_with/aggregate CodegenFallback — the d2
-    // kernel runs n x k times per Lloyd round. The add order matches the
-    // lambda fold bit-for-bit ((0 + t1) + t2 ... with t >= 0), and the
-    // round-6 rank key absorbs anything below the quantum anyway.
-    // Eager checkpoint: every round cross-joins desc, and without a plan
-    // barrier each round would re-run the whole vertex-array build +
-    // descriptor folds (iters+1 times).
-    val desc = lines.select(col("lid"),
-      round(Geom.vertexMean(col("pts"))("x"), 4).as("f1"),
-      round(Geom.vertexMean(col("pts"))("y"), 4).as("f2"),
-      round(Geom.lineLength(col("pts")), 4).as("f3"),
-      round(Geom.bearing(col("pts")), 4).as("f4"))
+    // eager checkpoint: the seed collect, every Lloyd round and the
+    // returned assignment read the descriptors, so the vertex-array build
+    // and the interpreted descriptor folds run once and the returned plan
+    // is a map-only projection (a released cache would make it re-run
+    // both)
+    val desc = lines.select(col("lid"), array(
+      round(Geom.vertexMean(col("pts"))("x"), 4),
+      round(Geom.vertexMean(col("pts"))("y"), 4),
+      round(Geom.lineLength(col("pts")), 4),
+      round(Geom.bearing(col("pts")), 4)).as("e"))
       .localCheckpoint()
-    val fs = (1 to 4).map(i => s"f$i")
-    // Assignment is the SAME native kernel the IVF coarse quantizer
-    // uses (functions.IvfDistances at dim=4): the k x 4 centroid matrix
-    // ships inside the expression and the argmin is element 0 of the
-    // kernel's (round6(d2), cluster)-sorted table — identical selection
-    // to the old crossJoin x k + per-lid argmin aggregate (same
-    // subtraction order, same 0.0-seeded ascending fold — exact since
-    // every squared term is >= +0.0 — same round-6 HALF_UP, same
-    // cluster tie-break), but the per-round plan is a MAP-ONLY
-    // projection: no crossJoin row expansion, no re-aggregation. The
-    // only shuffle per Lloyd round is the recenter groupBy.
-    val feat = array(fs.map(col): _*)
-    def assignExpr(cents: Seq[(Long, Array[Double])]) =
-      graft.functions.IvfDistances(feat, cents)
-        .getItem(0).getField("cluster")
-    var cents: Seq[(Long, Array[Double])] =
-      desc.orderBy("lid").limit(k).collect().map(r =>
-        (r.getLong(0), Array.tabulate(4)(i => r.getDouble(i + 1)))).toSeq
-    for (_ <- 1 to iters) {
-      val means = fs.map(f => avg(col(f)).as(s"c$f"))
-      cents = desc.withColumn("cluster", assignExpr(cents))
-        .groupBy("cluster")
-        .agg(means.head, means.tail: _*)
-        .collect()
-        .map(r => (r.getLong(0),
-          Array.tabulate(4)(i => r.getDouble(i + 1))))
-        .toSeq.sortBy(_._1)
-    }
-    desc.select(col("lid"), assignExpr(cents).as("cluster"))
+    val seeds = Lloyd.smallestIds(desc, "lid", col("e"), k)
+    val cents = Lloyd.train(desc, col("e"), IndexedSeq(seeds), 4, iters).head
+    desc.select(col("lid"), Lloyd.nearest(col("e"), cents).as("cluster"))
   }
 
   /** Descriptor-space matcher (reference mparams/cluster path): centroid,

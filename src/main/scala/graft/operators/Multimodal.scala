@@ -1317,25 +1317,4 @@ object Multimodal {
         Mp3Features(d, n, sr, bytes, kbps, n * 1152L * 1000L / sr)
       }).toDF()
   }
-
-  /** Frame sampling over binary payloads: every `everyN`-th fixed-size
-    * frame, with offset and content hash — pure expressions (binary
-    * substring + xxhash64), no UDF. For real video this is where a codec
-    * would split on keyframes; the fixed-stride split is the stub, the
-    * explode/slice/hash plumbing is the real distributed shape. */
-  def sampleFrames(media: DataFrame, frameBytes: Int,
-                   everyN: Int): DataFrame = {
-    val nFrames = ceil(length(col("payload")).cast("double") / frameBytes)
-      .cast("long")
-    media
-      .select(col("doc_id"), col("kind"), col("payload"),
-        explode(sequence(lit(0L), greatest(nFrames - 1, lit(0L))))
-          .as("frame_idx"))
-      .filter(col("frame_idx") % everyN === 0)
-      .withColumn("frame",
-        expr(s"substring(payload, cast(frame_idx * $frameBytes + 1 as int), $frameBytes)"))
-      .select(col("doc_id"), col("kind"), col("frame_idx"),
-        length(col("frame")).cast("long").as("frame_bytes"),
-        xxhash64(col("frame")).as("frame_hash"))
-  }
 }

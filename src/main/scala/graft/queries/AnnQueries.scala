@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Tables
-import graft.operators.Ann
+import graft.operators.{Ann, Lloyd}
 import graft.sources.Artifacts
 
 /** ANN queries over the embeddings table (SURVEY.md §2 rows 32-33).
@@ -116,10 +116,7 @@ object AnnQueries {
     def side(name: String, df: DataFrame): DataFrame =
       df.select(lit(name).as("side"),
           transform(col("embedding"), x => x.cast("double")).as("e"))
-        .withColumn("cluster",
-          graft.functions.IvfDistances(col("e"), cents)
-            .getItem(0).getField("cluster"))
-        .select(col("side"), col("cluster"))
+        .select(col("side"), Lloyd.nearest(col("e"), cents).as("cluster"))
     val prev = side("prev", e.filter(col("vec_id") % 7 =!= 3)
       .select(col("vec_id"),
         when(col("vec_id") % 5 === 0, reverse(col("embedding")))
@@ -808,81 +805,26 @@ object AnnQueries {
        |FROM scored
        |QUALIFY rank <= $K""".stripMargin
 
-  private def ivfD2(e1: String, e2: String) =
-    s"""ROUND(list_sum(list_transform(range(1, 65),
-       |        i -> ($e1[i] - $e2[i]) * ($e1[i] - $e2[i]))), 6)""".stripMargin
-
   /** Shared coarse-quantizer CTE chain (through `idx`, `c2`, `probes`):
     * same seeds (16 smallest vec_ids), two Lloyd rounds with
-    * round(d2,6)-ranked assignment, probe-2 selection. Assignment and
-    * centroid math is element-ordered list arithmetic, so the only FP
-    * divergence (unordered AVG) is absorbed by the rounded ranking —
-    * mirroring the engine exactly. Used by both the IVF and the IVF-PQ
-    * oracles. */
+    * round(d2,6)-ranked assignment ([[LloydSql]]), probe-2 selection.
+    * Used by the IVF, IVF-PQ, SemDeDup and embedding-monitor oracles. */
   private val ivfCoarseCtes: String = ivfCoarseCtesOn("")
 
   /** Same coarse chain with the TRAINING corpus filtered — the
     * incremental-index oracle trains on the base slice only. */
-  private def ivfCoarseCtesOn(where: String): String = {
-    def assign(cents: String, out: String) =
-      s"""$out AS (
-         |  SELECT vec_id, e, nrm, cluster FROM (
-         |    SELECT n.vec_id, n.e, n.nrm, c.cluster,
-         |      ROW_NUMBER() OVER (PARTITION BY n.vec_id
-         |        ORDER BY ${ivfD2("n.e", "c.ce")}, c.cluster) AS rn
-         |    FROM n, $cents c) WHERE rn = 1)""".stripMargin
-    def recenter(assigned: String, out: String) =
-      s"""$out AS (
-         |  SELECT cluster, list(m ORDER BY i) AS ce FROM (
-         |    SELECT a.cluster, u.i, AVG(a.e[u.i]) AS m
-         |    FROM $assigned a,
-         |         (SELECT unnest(generate_series(1, 64)) AS i) u
-         |    GROUP BY 1, 2)
-         |  GROUP BY cluster)""".stripMargin
-    s"""v AS (
-       |  SELECT CAST(vec_id AS BIGINT) AS vec_id,
-       |         list_transform(embedding, x -> CAST(x AS DOUBLE)) AS e
-       |  FROM embeddings $where),
-       |n AS (SELECT vec_id, e,
-       |        sqrt(list_sum(list_transform(e, x -> x * x))) AS nrm
-       |      FROM v),
-       |c0 AS (SELECT vec_id AS cluster, e AS ce FROM n
-       |       ORDER BY vec_id LIMIT 16),
-       |${assign("c0", "a1")},
-       |${recenter("a1", "c1")},
-       |${assign("c1", "a2")},
-       |${recenter("a2", "c2")},
-       |${assign("c2", "idx")},
-       |q0 AS (SELECT vec_id AS qid, e AS qe, nrm AS qn FROM n
+  private def ivfCoarseCtesOn(where: String): String =
+    s"""${coarseChain("", where)},
+       |q0 AS (SELECT vec_id AS qid, e, nrm FROM n
        |       WHERE vec_id % $QueryMod = 0 AND vec_id < $PanelCap),
-       |probes AS (
-       |  SELECT qid, qe, qn, cluster FROM (
-       |    SELECT q0.qid, q0.qe, q0.qn, c.cluster,
-       |      ROW_NUMBER() OVER (PARTITION BY q0.qid
-       |        ORDER BY ${ivfD2("q0.qe", "c.ce")}, c.cluster) AS prn
-       |    FROM q0, c2 c) WHERE prn <= 2)""".stripMargin
-  }
+       |${LloydSql.nearest("probes", "q0", "qid", "c2", 64, keep = 2)}"""
+      .stripMargin
 
-  /** One side's coarse chain for the bitext oracle: CTE names prefixed
-    * so the src and tgt replays coexist in one query. Same seeds (16
-    * smallest vec_ids of the slice), two Lloyd rounds, round(d2,6)
-    * assignment — the ivfCoarseCtesOn arithmetic verbatim. */
-  private def bitextCoarse(p: String, where: String): String = {
-    def assign(cents: String, out: String) =
-      s"""$out AS (
-         |  SELECT vec_id, e, nrm, cluster FROM (
-         |    SELECT n.vec_id, n.e, n.nrm, c.cluster,
-         |      ROW_NUMBER() OVER (PARTITION BY n.vec_id
-         |        ORDER BY ${ivfD2("n.e", "c.ce")}, c.cluster) AS rn
-         |    FROM ${p}n n, $cents c) WHERE rn = 1)""".stripMargin
-    def recenter(assigned: String, out: String) =
-      s"""$out AS (
-         |  SELECT cluster, list(m ORDER BY i) AS ce FROM (
-         |    SELECT a.cluster, u.i, AVG(a.e[u.i]) AS m
-         |    FROM $assigned a,
-         |         (SELECT unnest(generate_series(1, 64)) AS i) u
-         |    GROUP BY 1, 2)
-         |  GROUP BY cluster)""".stripMargin
+  /** The coarse quantizer over the `where` slice of the embeddings, CTE
+    * names prefixed by `p` so several replays coexist in one query:
+    * `${p}n` (vec_id, e, nrm), models `${p}c0`..`${p}c2`, and `${p}idx`
+    * (`${p}n` plus its cluster). */
+  private def coarseChain(p: String, where: String): String =
     s"""${p}v AS (
        |  SELECT CAST(vec_id AS BIGINT) AS vec_id,
        |         list_transform(embedding, x -> CAST(x AS DOUBLE)) AS e
@@ -890,14 +832,8 @@ object AnnQueries {
        |${p}n AS (SELECT vec_id, e,
        |        sqrt(list_sum(list_transform(e, x -> x * x))) AS nrm
        |      FROM ${p}v),
-       |${p}c0 AS (SELECT vec_id AS cluster, e AS ce FROM ${p}n
-       |       ORDER BY vec_id LIMIT 16),
-       |${assign(s"${p}c0", s"${p}a1")},
-       |${recenter(s"${p}a1", s"${p}c1")},
-       |${assign(s"${p}c1", s"${p}a2")},
-       |${recenter(s"${p}a2", s"${p}c2")},
-       |${assign(s"${p}c2", s"${p}idx")}""".stripMargin
-  }
+       |${LloydSql.idSeeds(p, s"${p}n", "vec_id", 16)},
+       |${LloydSql.chain(p, s"${p}n", "vec_id", 64, 2)}""".stripMargin
 
   /** Bitext-mining oracle: both coarse chains, whole-side probe-2
     * assignment, cluster-join scoring, exact-integer top-4 sums,
@@ -905,19 +841,14 @@ object AnnQueries {
     * The CTE body through bf/bb is shared with the recall oracle. */
   private val bitextCtes: String = {
     def probes(p: String, sideN: String, cents: String) =
-      s"""$p AS (
-         |  SELECT qid, qe, qn, cluster FROM (
-         |    SELECT n.vec_id AS qid, n.e AS qe, n.nrm AS qn, c.cluster,
-         |      ROW_NUMBER() OVER (PARTITION BY n.vec_id
-         |        ORDER BY ${ivfD2("n.e", "c.ce")}, c.cluster) AS prn
-         |    FROM $sideN n, $cents c) WHERE prn <= 2)""".stripMargin
+      LloydSql.nearest(p, sideN, "vec_id", cents, 64, keep = 2)
     def scored(out: String, idx: String, pr: String, qAs: String,
                nAs: String) =
       s"""$out AS (
-         |  SELECT p.qid AS $qAs, x.vec_id AS $nAs,
+         |  SELECT p.vec_id AS $qAs, x.vec_id AS $nAs,
          |    ROUND(list_sum(list_transform(range(1, 65),
-         |            i -> p.qe[i] * x.e[i]))
-         |        / greatest(p.qn * x.nrm, 1e-12), 4) AS cos4
+         |            i -> p.e[i] * x.e[i]))
+         |        / greatest(p.nrm * x.nrm, 1e-12), 4) AS cos4
          |  FROM $idx x JOIN $pr p ON x.cluster = p.cluster)""".stripMargin
     def knn(out: String, d: String, idc: String, otherc: String,
             sumAs: String, kAs: String) =
@@ -958,8 +889,8 @@ object AnnQueries {
          |    SELECT *, ROW_NUMBER() OVER (PARTITION BY yid
          |      ORDER BY mrg DESC, xid) AS rn FROM m1e) z WHERE rn = 1)"""
         .stripMargin
-    s"""${bitextCoarse("s", "WHERE vec_id % 2 = 0")},
-       |${bitextCoarse("t", "WHERE vec_id % 2 = 1")},
+    s"""${coarseChain("s", "WHERE vec_id % 2 = 0")},
+       |${coarseChain("t", "WHERE vec_id % 2 = 1")},
        |${probes("sp", "sn", "tc2")},
        |${probes("tp", "tn", "sc2")},
        |${scored("d1", "tidx", "sp", "xid", "yid")},
@@ -1005,8 +936,8 @@ object AnnQueries {
        |scored AS (
        |  SELECT p.qid, x.vec_id AS nid, x.cluster,
        |    ROUND(list_sum(list_transform(range(1, 65),
-       |            i -> p.qe[i] * x.e[i]))
-       |        / greatest(p.qn * x.nrm, 1e-12), 4) AS cos4
+       |            i -> p.e[i] * x.e[i]))
+       |        / greatest(p.nrm * x.nrm, 1e-12), 4) AS cos4
        |  FROM idx x JOIN probes p ON x.cluster = p.cluster
        |  WHERE p.qid <> x.vec_id)
        |SELECT qid, nid,
@@ -1028,18 +959,13 @@ object AnnQueries {
        |ndl AS (SELECT vec_id, e,
        |          sqrt(list_sum(list_transform(e, x -> x * x))) AS nrm
        |        FROM vd),
-       |adl AS (
-       |  SELECT vec_id, e, nrm, cluster FROM (
-       |    SELECT n.vec_id, n.e, n.nrm, c.cluster,
-       |      ROW_NUMBER() OVER (PARTITION BY n.vec_id
-       |        ORDER BY ${ivfD2("n.e", "c.ce")}, c.cluster) AS rn
-       |    FROM ndl n, c2 c) WHERE rn = 1),
+       |${LloydSql.nearest("adl", "ndl", "vec_id", "c2", 64)},
        |idx2 AS (SELECT * FROM idx UNION ALL SELECT * FROM adl),
        |scored AS (
        |  SELECT p.qid, x.vec_id AS nid, x.cluster,
        |    ROUND(list_sum(list_transform(range(1, 65),
-       |            i -> p.qe[i] * x.e[i]))
-       |        / greatest(p.qn * x.nrm, 1e-12), 4) AS cos4
+       |            i -> p.e[i] * x.e[i]))
+       |        / greatest(p.nrm * x.nrm, 1e-12), 4) AS cos4
        |  FROM idx2 x JOIN probes p ON x.cluster = p.cluster
        |  WHERE p.qid <> x.vec_id)
        |SELECT qid, nid,
@@ -1049,40 +975,27 @@ object AnnQueries {
        |QUALIFY rank <= $K""".stripMargin
 
   /** DuckDB twin of the IVF-PQ pipeline: residuals against the final
-    * coarse centroids, per-subspace codebooks seeded from the 8 smallest
-    * ids' residuals and Lloyd-refined twice (round(d2,6)-then-code
-    * argmin, unordered-AVG recenter absorbed by the rounded ranking, a
-    * code emptied by a round drops out — all mirroring the engine), ADC
-    * scoring of the m sub-codes against each probed cell's query
-    * residual, rank by (round(adist,6), nid). */
+    * coarse centroids, cut into 8 subspace rows each (`rs`), per-subspace
+    * codebooks seeded from the 8 smallest ids' residuals (code = seed
+    * rank) and Lloyd-refined twice by the shared chain with the subspace
+    * as book key (`pc2`, codes in `pidx`), ADC scoring of the m sub-codes
+    * against each probed cell's query residual, rank by
+    * (round(adist,6), nid). */
   private val pqOracle: String = pqOracleFrom(delta = false)
 
   /** Incremental-PQ twin: train on the base slice, assign+encode the
-    * delta against the FROZEN c2 / pb2 artifacts, serve the union. */
+    * delta against the FROZEN c2 / pc2 models, serve the union. */
   private val pqDeltaOracle: String = pqOracleFrom(delta = true)
 
   private def pqOracleFrom(delta: Boolean): String = {
-    def pd2(rcol: String, ce: String) =
-      s"""ROUND(list_sum(list_transform(range(1, 9),
-         |        i -> ($rcol[p.s * 8 + i] - $ce[i])
-         |           * ($rcol[p.s * 8 + i] - $ce[i]))), 6)""".stripMargin
-    def passign(books: String, out: String, src: String = "res") =
+    // one row per (vector, subspace): the 8-wide slice s of residual r
+    def subs(out: String, res: String) =
       s"""$out AS (
-         |  SELECT vec_id, s, code, sub_r FROM (
-         |    SELECT res.vec_id, p.s, p.code,
-         |      list_transform(range(1, 9),
-         |        i -> res.r[p.s * 8 + i]) AS sub_r,
-         |      ROW_NUMBER() OVER (PARTITION BY res.vec_id, p.s
-         |        ORDER BY ${pd2("res.r", "p.ce")}, p.code) AS rn
-         |    FROM $src res, $books p) WHERE rn = 1)""".stripMargin
-    def precenter(assigned: String, out: String) =
-      s"""$out AS (
-         |  SELECT s, code, list(mv ORDER BY i) AS ce FROM (
-         |    SELECT a.s, a.code, u.i, AVG(a.sub_r[u.i]) AS mv
-         |    FROM $assigned a,
-         |         (SELECT unnest(generate_series(1, 8)) AS i) u
-         |    GROUP BY 1, 2, 3)
-         |  GROUP BY s, code)""".stripMargin
+         |  SELECT x.vec_id, u.s,
+         |    list_transform(range(1, 9), i -> x.r[u.s * 8 + i]) AS e
+         |  FROM $res x,
+         |       (SELECT CAST(unnest(generate_series(0, 7)) AS BIGINT) AS s) u)"""
+        .stripMargin
     val coarse =
       if (delta) ivfCoarseCtesOn("WHERE vec_id % 10 <> 6")
       else ivfCoarseCtes
@@ -1092,47 +1005,37 @@ object AnnQueries {
          |  SELECT CAST(vec_id AS BIGINT) AS vec_id,
          |         list_transform(embedding, x -> CAST(x AS DOUBLE)) AS e
          |  FROM embeddings WHERE vec_id % 10 = 6),
-         |adl AS (
-         |  SELECT vec_id, e, cluster FROM (
-         |    SELECT n.vec_id, n.e, c.cluster,
-         |      ROW_NUMBER() OVER (PARTITION BY n.vec_id
-         |        ORDER BY ${ivfD2("n.e", "c.ce")}, c.cluster) AS rn
-         |    FROM vd n, c2 c) z WHERE rn = 1),
+         |${LloydSql.nearest("adl", "vd", "vec_id", "c2", 64)},
          |rdl AS (
          |  SELECT a.vec_id, a.cluster,
          |    list_transform(range(1, 65), i -> a.e[i] - c.ce[i]) AS r
          |  FROM adl a JOIN c2 c ON c.cluster = a.cluster),
-         |${passign("pb2", "encd", "rdl")},
-         |encu AS (SELECT vec_id, s, code FROM enc
-         |         UNION ALL SELECT vec_id, s, code FROM encd),
+         |${subs("rsd", "rdl")},
+         |${LloydSql.nearest("encd", "rsd", "vec_id", "pc2", 8,
+              by = Seq("s"))},
+         |encu AS (SELECT vec_id, s, cluster FROM pidx
+         |         UNION ALL SELECT vec_id, s, cluster FROM encd),
          |resu AS (SELECT vec_id, cluster FROM res
          |         UNION ALL SELECT vec_id, cluster FROM rdl),
          |""".stripMargin
-    val encT = if (delta) "encu" else "enc"
+    val encT = if (delta) "encu" else "pidx"
     val resT = if (delta) "resu" else "res"
     s"""WITH $coarse,
        |res AS (
        |  SELECT x.vec_id, x.cluster,
        |    list_transform(range(1, 65), i -> x.e[i] - c.ce[i]) AS r
        |  FROM idx x JOIN c2 c ON c.cluster = x.cluster),
-       |pseed AS (
-       |  SELECT r, CAST(ROW_NUMBER() OVER (ORDER BY vec_id) - 1
-       |    AS BIGINT) AS code
-       |  FROM (SELECT * FROM res ORDER BY vec_id LIMIT 8)),
-       |pb0 AS (
-       |  SELECT u.s, p.code,
-       |    list_transform(range(1, 9), i -> p.r[u.s * 8 + i]) AS ce
-       |  FROM pseed p,
-       |       (SELECT CAST(unnest(generate_series(0, 7)) AS BIGINT) AS s) u),
-       |${passign("pb0", "pa1")},
-       |${precenter("pa1", "pb1")},
-       |${passign("pb1", "pa2")},
-       |${precenter("pa2", "pb2")},
-       |${passign("pb2", "enc")},
+       |${subs("rs", "res")},
+       |pc0 AS (
+       |  SELECT s, CAST(ROW_NUMBER() OVER (PARTITION BY s ORDER BY vec_id)
+       |      - 1 AS BIGINT) AS cluster, e AS ce
+       |  FROM rs
+       |  WHERE vec_id IN (SELECT vec_id FROM res ORDER BY vec_id LIMIT 8)),
+       |${LloydSql.chain("p", "rs", "vec_id", 8, 2, by = Seq("s"))},
        |$deltaCtes
        |qres AS (
        |  SELECT p.qid, p.cluster,
-       |    list_transform(range(1, 65), i -> p.qe[i] - c.ce[i]) AS qr
+       |    list_transform(range(1, 65), i -> p.e[i] - c.ce[i]) AS qr
        |  FROM probes p JOIN c2 c ON c.cluster = p.cluster),
        |scored AS (
        |  -- element-ordered ADC fold: the engine sums all m x 8 terms in
@@ -1150,7 +1053,7 @@ object AnnQueries {
        |    FROM $encT e
        |    JOIN $resT r ON r.vec_id = e.vec_id
        |    JOIN qres q ON q.cluster = r.cluster AND q.qid <> e.vec_id
-       |    JOIN pb2 cb ON cb.s = e.s AND cb.code = e.code)
+       |    JOIN pc2 cb ON cb.s = e.s AND cb.cluster = e.cluster)
        |  GROUP BY qid, nid, cluster)
        |SELECT qid, nid,
        |  CAST(ROW_NUMBER() OVER (PARTITION BY qid ORDER BY adist6, nid)
@@ -1659,14 +1562,11 @@ object AnnQueries {
          |           THEN list_transform(e, x -> x * 3.0)
          |           ELSE e END AS e
          |       FROM v),
-         |a AS (SELECT vec_id, is_planted, cluster,
-         |        CAST(ROUND(d2 * 1e9, 0) AS BIGINT) AS d2_nano
-         |      FROM (SELECT p.vec_id, p.is_planted, c.cluster,
-         |              ${ivfD2("p.e", "c.ce")} AS d2,
-         |              ROW_NUMBER() OVER (PARTITION BY p.vec_id
-         |                ORDER BY ${ivfD2("p.e", "c.ce")}, c.cluster)
-         |                AS rn
-         |            FROM pl p, c2 c) WHERE rn = 1),
+         |${LloydSql.nearest("pla", "pl", "vec_id", "c2", 64)},
+         |a AS (SELECT p.vec_id, p.is_planted, p.cluster,
+         |        CAST(ROUND(${LloydSql.d2("p.e", "c.ce", 64)} * 1e9, 0)
+         |          AS BIGINT) AS d2_nano
+         |      FROM pla p JOIN c2 c ON c.cluster = p.cluster),
          |stats AS (SELECT cluster, COUNT(*) AS n_members,
          |            SUM(d2_nano) AS sum_nano
          |          FROM a GROUP BY 1)
@@ -1687,20 +1587,13 @@ object AnnQueries {
          |              ELSE e END AS e
          |       FROM v WHERE vec_id % 7 <> 3),
          |cv AS (SELECT vec_id, e FROM v WHERE vec_id % 13 <> 5),
-         |pa AS (SELECT 'prev' AS side, cluster FROM (
-         |         SELECT p.vec_id, c.cluster,
-         |           ROW_NUMBER() OVER (PARTITION BY p.vec_id
-         |             ORDER BY ${ivfD2("p.e", "c.ce")}, c.cluster) AS rn
-         |         FROM pv p, c2 c) WHERE rn = 1),
-         |ca AS (SELECT 'cur' AS side, cluster FROM (
-         |         SELECT p.vec_id, c.cluster,
-         |           ROW_NUMBER() OVER (PARTITION BY p.vec_id
-         |             ORDER BY ${ivfD2("p.e", "c.ce")}, c.cluster) AS rn
-         |         FROM cv p, c2 c) WHERE rn = 1),
+         |${LloydSql.nearest("pa", "pv", "vec_id", "c2", 64)},
+         |${LloydSql.nearest("ca", "cv", "vec_id", "c2", 64)},
          |g AS (SELECT cluster,
          |        SUM(CASE WHEN side = 'prev' THEN 1 ELSE 0 END) AS n_prev,
          |        SUM(CASE WHEN side = 'cur' THEN 1 ELSE 0 END) AS n_cur
-         |      FROM (SELECT * FROM pa UNION ALL SELECT * FROM ca)
+         |      FROM (SELECT 'prev' AS side, cluster FROM pa
+         |            UNION ALL SELECT 'cur' AS side, cluster FROM ca)
          |      GROUP BY 1),
          |t AS (SELECT SUM(n_prev) AS tp, SUM(n_cur) AS tc FROM g),
          |wc AS (SELECT g.cluster, g.n_prev, g.n_cur, t.tp, t.tc,

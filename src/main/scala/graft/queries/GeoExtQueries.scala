@@ -213,38 +213,14 @@ object GeoExtQueries {
          |SELECT la, lb, score FROM scored
          |QUALIFY ROW_NUMBER() OVER (PARTITION BY la ORDER BY score, lb) = 1""".stripMargin,
 
-    "q_match_lines_kmeans" -> {
-      def d2(e1: String, e2: String) =
-        s"""ROUND(list_sum(list_transform(range(1, 5),
-           |        i -> ($e1[i] - $e2[i]) * ($e1[i] - $e2[i]))), 6)""".stripMargin
-      def assign(cents: String, out: String) =
-        s"""$out AS (
-           |  SELECT lid, e, cluster FROM (
-           |    SELECT e0.lid, e0.e, c.cluster,
-           |      ROW_NUMBER() OVER (PARTITION BY e0.lid
-           |        ORDER BY ${d2("e0.e", "c.ce")}, c.cluster) AS rn
-           |    FROM e0, $cents c) WHERE rn = 1)""".stripMargin
-      def recenter(assigned: String, out: String) =
-        s"""$out AS (
-           |  SELECT cluster, list(m ORDER BY i) AS ce FROM (
-           |    SELECT a.cluster, u.i, AVG(a.e[u.i]) AS m
-           |    FROM $assigned a,
-           |         (SELECT unnest(generate_series(1, 4)) AS i) u
-           |    GROUP BY 1, 2)
-           |  GROUP BY cluster)""".stripMargin
+    "q_match_lines_kmeans" ->
       s"""WITH v AS ($lineVerticesSql),
          |$descriptorCtes,
          |e0 AS (SELECT lid, [ROUND(ctrx, 4), ROUND(ctry, 4),
          |         ROUND(len, 4), ROUND(brg, 4)] AS e FROM dl),
-         |c0 AS (SELECT lid AS cluster, e AS ce FROM e0
-         |       ORDER BY lid LIMIT 16),
-         |${assign("c0", "a1")},
-         |${recenter("a1", "c1")},
-         |${assign("c1", "a2")},
-         |${recenter("a2", "c2")},
-         |${assign("c2", "fin")}
-         |SELECT lid, cluster FROM fin""".stripMargin
-    },
+         |${LloydSql.idSeeds("", "e0", "lid", 16)},
+         |${LloydSql.chain("", "e0", "lid", 4, 2)}
+         |SELECT lid, cluster FROM idx""".stripMargin,
 
     "q_random_pts" ->
       s"""WITH poly AS (${GeoData.polyNationSql}),

@@ -23,19 +23,11 @@ object Wkt {
 
   /** 'LINESTRING (x y, x y, ...)' -> array<struct<x:double, y:double>>. */
   def parseLineString(wkt: Column): Column =
-    transform(
-      split(regexp_extract(wkt, "LINESTRING \\((.+)\\)", 1), ",\\s*"),
-      p => struct(
-        split(trim(p), " ")(0).cast("double").as("x"),
-        split(trim(p), " ")(1).cast("double").as("y")))
+    coords(regexp_extract(wkt, "LINESTRING \\((.+)\\)", 1))
 
   /** Single-ring 'POLYGON ((x y, ...))' -> array<struct<x,y>>. */
   def parsePolygon(wkt: Column): Column =
-    transform(
-      split(regexp_extract(wkt, "POLYGON \\(\\((.+)\\)\\)", 1), ",\\s*"),
-      p => struct(
-        split(trim(p), " ")(0).cast("double").as("x"),
-        split(trim(p), " ")(1).cast("double").as("y")))
+    coords(regexp_extract(wkt, "POLYGON \\(\\((.+)\\)\\)", 1))
 
   /** Every ring of a 'POLYGON ((outer), (hole), ...)' or a
     * 'MULTIPOLYGON (((outer), (hole)), ((outer)), ...)' ->
@@ -47,10 +39,14 @@ object Wkt {
   def parseRings(wkt: Column): Column =
     transform(
       regexp_extract_all(wkt, lit("\\(([^()]+)\\)"), lit(1)),
-      ring => transform(split(ring, ",\\s*"), p =>
-        struct(
-          split(trim(p), " ")(0).cast("double").as("x"),
-          split(trim(p), " ")(1).cast("double").as("y"))))
+      ring => coords(ring))
+
+  /** 'x y, x y, ...' -> array<struct<x:double, y:double>> — the one
+    * coordinate-list parser behind every ring and line above. */
+  private def coords(list: Column): Column =
+    transform(split(list, ",\\s*"), p => struct(
+      split(trim(p), " ")(0).cast("double").as("x"),
+      split(trim(p), " ")(1).cast("double").as("y")))
 
   /** array<struct<x,y>> -> '(x y, x y, ...)' — one WKT ring body. */
   def toWktRing(ring: Column): Column =

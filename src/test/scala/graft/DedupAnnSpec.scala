@@ -739,28 +739,6 @@ class DedupAnnSpec extends AnyFunSuite with SharedSpark {
     assert(out.head.getAs[Double]("cos4") === 1.0)
   }
 
-  test("typed Dataset views bind to the stable output shapes") {
-    implicit val s: org.apache.spark.sql.SparkSession = spark
-    val d = docsOf(1L -> "same text here", 2L -> "same text here")
-    val clusters = graft.Types.canonicalDocs(
-      Dedup.dedupClusters(d, Dedup.minhashPairs(d, 4, 64, 16, 0.5), 2))
-    // typed transformations: compile-time field access
-    val dups = clusters.filter(_.is_dup).collect()
-    assert(dups.length === 1 && dups.head.canonical_id === 1L)
-    val e = docsOf(1L -> "", 2L -> "").select(col("doc_id").as("vec_id"),
-      typedLit(Array.tabulate(64)(_.toFloat)).as("embedding"))
-    val ann = graft.Types.annMatches(Ann.cosineTopK(e, e.limit(1), 1))
-    assert(ann.collect().forall(m => m.rank === 1 && m.cos4 === 1.0))
-    // r4 views: contamination report + clipped-ring vertices
-    val contam = graft.Types.contaminations(
-      Dedup.decontaminate(docsOf(3L -> "abcdefgh unique"), d, 4, 0.5))
-      .collect()
-    assert(contam.forall(c => c.n_shingles > 0 && !c.ratio.isNaN))
-    val rings = graft.Types.ringVertices(
-      graft.queries.PolyQueries.qClipRings(spark, SfDir).limit(5))
-    assert(rings.collect().forall(v => v.vi >= 0))
-  }
-
   test("bloom decontamination is exact and the filter actually prunes") {
     val d = graft.Tables.load(spark, SfDir, "documents")
       .select(col("doc_id").cast("long").as("doc_id"), col("text"),
@@ -887,6 +865,109 @@ class DedupAnnSpec extends AnyFunSuite with SharedSpark {
     assert(Set(out(1L), out(2L), out(3L)).size === 1) // family 1 together
     assert(Set(out(4L), out(5L), out(6L)).size === 1) // family 2 together
     assert(out(1L) !== out(4L))                       // families apart
+  }
+
+  /** (id, e) rows of 1-wide vectors, for the hand-computed Lloyd rounds. */
+  private def points(rows: (Long, Seq[Double])*) = {
+    import spark.implicits._
+    rows.toDF("id", "e")
+  }
+
+  private def bookOf(b: graft.operators.Lloyd.Book) =
+    b.map { case (l, c) => (l, c.toSeq) }
+
+  test("Lloyd: an equidistant point goes to the smaller label") {
+    import graft.operators.Lloyd
+    // seeds 1 -> [0], 2 -> [2]; point 3 at [1] has d2 = 1 to both
+    val df = points(1L -> Seq(0.0), 2L -> Seq(2.0), 3L -> Seq(1.0))
+    val seeds = Lloyd.smallestIds(df, "id", col("e"), 2)
+    assert(bookOf(seeds) === Seq(1L -> Seq(0.0), 2L -> Seq(2.0)))
+    val labels = df.select(col("id"), Lloyd.nearest(col("e"), seeds))
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    assert(labels === Map(1L -> 1L, 2L -> 2L, 3L -> 1L))
+    // one round: cluster 1 = {0, 1} -> 0.5, cluster 2 = {2} -> 2.0
+    val books = Lloyd.train(df, col("e"), IndexedSeq(seeds), 1, 1)
+    assert(books.map(bookOf) === Seq(Seq(1L -> Seq(0.5), 2L -> Seq(2.0))))
+  }
+
+  test("Lloyd: a duplicate seed empties and drops out after round 1") {
+    import graft.operators.Lloyd
+    // seeds 1 and 2 are both [0]: ids 1, 2 tie between them and go to
+    // label 1, so label 2 has no member after round 1 and leaves the
+    // book; cluster 3 = {4, 6} -> 5. Round 2 keeps the same partition.
+    val df = points(1L -> Seq(0.0), 2L -> Seq(0.0), 3L -> Seq(4.0),
+      4L -> Seq(6.0))
+    val seeds = Lloyd.smallestIds(df, "id", col("e"), 3)
+    assert(seeds.map(_._1) === Seq(1L, 2L, 3L))
+    for (iters <- Seq(1, 2)) {
+      val books = Lloyd.train(df, col("e"), IndexedSeq(seeds), 1, iters)
+      assert(books.map(bookOf) === Seq(Seq(1L -> Seq(0.0), 3L -> Seq(5.0))),
+        s"iters=$iters")
+    }
+  }
+
+  test("Lloyd: iters = 0 returns the seeds unchanged") {
+    import graft.operators.Lloyd
+    val df = points(1L -> Seq(0.0), 2L -> Seq(2.0), 3L -> Seq(1.0))
+    val seeds = IndexedSeq(Lloyd.smallestIds(df, "id", col("e"), 2))
+    assert(Lloyd.train(df, col("e"), seeds, 1, 0) eq seeds)
+  }
+
+  test("Lloyd: with two books each book trains only on its own slice") {
+    import graft.operators.Lloyd
+    import spark.implicits._
+    // e = [a, b]; book 0 codes a, book 1 codes b. Seeds are the two
+    // smallest ids labelled by rank: book 0 = {0 -> [0], 1 -> [10]},
+    // book 1 = {0 -> [10], 1 -> [0]}.
+    val df = Seq(1L -> Seq(0.0, 10.0), 2L -> Seq(10.0, 0.0),
+      3L -> Seq(1.0, 9.0), 4L -> Seq(9.0, 1.0)).toDF("id", "e")
+    val rows = Lloyd.smallestIds(df, "id", col("e"), 2).map(_._2)
+      .zipWithIndex
+    val seeds = (0 until 2).map(s =>
+      rows.map { case (v, j) => (j.toLong, Array(v(s))) })
+    // a: {0, 1} -> code 0 = 0.5, {10, 9} -> code 1 = 9.5;
+    // b: {10, 9} -> code 0 = 9.5, {0, 1} -> code 1 = 0.5
+    val books = Lloyd.train(df, col("e"), seeds, 1, 1)
+    assert(books.map(bookOf) === Seq(
+      Seq(0L -> Seq(0.5), 1L -> Seq(9.5)),
+      Seq(0L -> Seq(9.5), 1L -> Seq(0.5))))
+    val codes = df.select(col("id"), Lloyd.encode(col("e"), books, 1))
+      .collect().map(r => r.getLong(0) -> r.getSeq[Long](1)).toMap
+    assert(codes === Map(1L -> Seq(0L, 0L), 2L -> Seq(1L, 1L),
+      3L -> Seq(0L, 0L), 4L -> Seq(1L, 1L)))
+  }
+
+  test("ivfTrainAssign, ivfPqTopK and kmeansDescriptors leave no cached " +
+    "blocks behind") {
+    import spark.implicits._
+    val dim = 8
+    val vecs = (0L until 40L).map { i =>
+      (i, (0 until dim).map(j => ((i * 31 + j * 17) % 97).toDouble / 97.0
+        - 0.5))
+    }.toDF("vec_id", "embedding")
+    val lines = graft.operators.MatchLines.linesWithCells(
+      Seq((1L, 1, 0L, 0L), (1L, 2, 100L, 0L), (2L, 1, 0L, 10L),
+        (2L, 2, 90L, 10L), (3L, 1, 5000L, 5000L), (3L, 2, 5100L, 5000L))
+        .toDF("lid", "seq", "xi", "yi"), 30)
+    // compare ids, not counts (see the ngramJaccard leak check)
+    def persisted = spark.sparkContext.getPersistentRDDs.keySet
+    val before = persisted
+    Ann.ivfTrainAssign(vecs, nlist = 4, iters = 2, dim = dim)._2.collect()
+    assert((persisted -- before).isEmpty, "ivfTrainAssign")
+    Ann.ivfPqTopK(vecs, vecs.filter(col("vec_id") % 10 === 0), k = 3,
+      nlist = 4, nprobe = 2, coarseIters = 1, m = 4, ksub = 4,
+      pqIters = 2, dim = dim).collect()
+    assert((persisted -- before).isEmpty, "ivfPqTopK")
+    // kmeansDescriptors' result reads its descriptor checkpoint, which
+    // lives as long as that DataFrame; nothing else may stay behind
+    val km = graft.operators.MatchLines.kmeansDescriptors(lines, k = 2,
+      iters = 2)
+    km.collect()
+    val read = km.queryExecution.logical.collect {
+      case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd.id
+    }.toSet
+    assert(read.size === 1)
+    assert((persisted -- before) === read, "kmeansDescriptors")
   }
 
   test("dedupClusters: transitive chain collapses to one canonical id") {

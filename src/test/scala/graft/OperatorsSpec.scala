@@ -1218,21 +1218,6 @@ class OperatorsSpec extends AnyFunSuite with SharedSpark {
     }
   }
 
-  test("GeoSink: partitioned layer prunes partitions on cell filter") {
-    import graft.sources.GeoSink
-    val out = "/tmp/graft_sink_test"
-    val layer = graft.operators.Grid.gridify(
-      GeoData.ptsEvents(spark, SfDir), 10.0, "weight")
-      .withColumn("cell_bucket", (col("cell_id") % 10).cast("int"))
-    GeoSink.writePartitioned(layer, out, "cell_bucket")
-    val back = GeoSink.readPartitioned(spark, out)
-      .filter(col("cell_bucket") === 3)
-    val plan = back.queryExecution.executedPlan.toString
-    assert(plan.contains("PartitionFilters") &&
-      plan.contains("cell_bucket"))
-    assert(back.count() > 0)
-  }
-
   test("q1 pricing: shipdate predicate and column pruning reach the scan") {
     val plan = graft.queries.Analytics.q1Pricing(spark, SfDir)
       .queryExecution.executedPlan.toString
@@ -1263,21 +1248,6 @@ class OperatorsSpec extends AnyFunSuite with SharedSpark {
         li.join(o, "k").count())
     } finally
       spark.conf.set("spark.sql.autoBroadcastJoinThreshold", saved)
-  }
-
-  test("sampleFrames: frame bytes reassemble to payload length") {
-    import graft.operators.Multimodal
-    val media = Multimodal.mediaTable(Tables.load(spark, SfDir, "documents"))
-    val frames = Multimodal.sampleFrames(media, frameBytes = 64, everyN = 1)
-    val sums = frames.groupBy("doc_id")
-      .agg(sum("frame_bytes").as("total"))
-    val lens = media.select(col("doc_id"),
-      length(col("payload")).cast("long").as("len"))
-    assert(sums.join(lens, "doc_id")
-      .filter(col("total") =!= col("len")).count() === 0)
-    // sampling every 2nd frame yields no more than half+1 per doc
-    val sampled = Multimodal.sampleFrames(media, 64, 2).count()
-    assert(sampled < frames.count())
   }
 
   test("CMS estimates never undercount (count-min guarantee)") {

@@ -116,13 +116,12 @@ class StreamingSpec extends AnyFunSuite with SharedSpark {
   }
 
   test("native MinHashSig equals the shuffle-based signature pipeline") {
-    import graft.operators.Dedup
     val docs = Tables.load(spark, SfDir, "documents")
       .select(col("doc_id").cast("long").as("doc_id"), col("text"))
     val native = docs.select(col("doc_id"),
       graft.functions.MinHashSig(col("text"), 5, 64).as("sig"))
       .filter(col("sig").isNotNull)
-    val shuffle = Dedup.minhashSignatures(docs, 5, 64)
+    val shuffle = StreamingSpec.minhashSignatures(docs, 5, 64)
     assert(native.count() > 0)
     assert(native.exceptAll(shuffle).count() === 0)
     assert(shuffle.exceptAll(native).count() === 0)
@@ -135,7 +134,7 @@ class StreamingSpec extends AnyFunSuite with SharedSpark {
     val rowLocal = Dedup.minhashBandKeysRowLocal(docs, k = 5,
       numHashes = 64, bands = 16)
     val viaShuffle = {
-      val sigs = Dedup.minhashSignatures(docs, 5, 64)
+      val sigs = StreamingSpec.minhashSignatures(docs, 5, 64)
       val bandHashes = array((0 until 16).map { bi =>
         aggregate(slice(col("sig"), bi * 4 + 1, 4), lit(0L),
           (acc, m) => (acc * lit(33L) + m) % lit(2147483647L))
@@ -376,5 +375,38 @@ class StreamingSpec extends AnyFunSuite with SharedSpark {
       // the limiter genuinely fires on this corpus
       assert(streamed.filter(!col("accepted")).count() > 0)
     } finally q.stop()
+  }
+}
+
+object StreamingSpec {
+  import org.apache.spark.sql.DataFrame
+
+  /** Mersenne prime 2^31 - 1 of the minhash universal hashes. */
+  private val P = 2147483647L
+
+  /** Deterministic universal-hash coefficients (odd a, spread b) —
+    * the constants functions.MinHashKernel replicates. */
+  def coef(i: Int): (Long, Long) = {
+    val a = ((i * 2654435761L + 1) % P) | 1L
+    val b = (i * 40503L * 104729L + 12345L) % P
+    (a, b)
+  }
+
+  /** MinHash signatures through a shuffle: one row per doc with
+    * array<long> of numHashes minimums over its rolling-hash shingles
+    * (one groupBy doc_id, the mins partial-aggregated). The oracle the
+    * native MinHashSig kernel must equal bit for bit. */
+  def minhashSignatures(docs: DataFrame, k: Int,
+                        numHashes: Int): DataFrame = {
+    val sh = graft.operators.Dedup.shingleHashes(docs, k, 31L, P)
+      .withColumnRenamed("s", "hp")
+    val mins = (0 until numHashes).map { i =>
+      val (a, b) = coef(i)
+      min((lit(a) * col("hp") + lit(b)) % lit(P)).as(s"m$i")
+    }
+    sh.groupBy("doc_id")
+      .agg(mins.head, mins.tail: _*)
+      .select(col("doc_id"),
+        array((0 until numHashes).map(i => col(s"m$i")): _*).as("sig"))
   }
 }
