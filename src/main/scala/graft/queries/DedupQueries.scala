@@ -811,9 +811,6 @@ object DedupQueries {
       .stripMargin
 
   private val fastCdcOracle: String = {
-    def pairsSql(codes: String, edges: String): String =
-      cdcPairsSql(codes, edges)
-    def boundsSql(codes: String): String = cdcBoundsSql(codes)
     def fwEdgesSql(codes: String): String =
       s"""list_concat(list_transform(
          |  generate_series(CAST(0 AS BIGINT), (len($codes) + ${FwWidth - 1})
@@ -847,16 +844,16 @@ object DedupQueries {
        |                 ch -> CAST(ascii(ch) AS BIGINT)) AS ct
        |  FROM t),
        |e AS (SELECT doc_id, co, ct,
-       |  list_concat(list_concat([CAST(0 AS BIGINT)], ${boundsSql("co")}),
+       |  list_concat(list_concat([CAST(0 AS BIGINT)], ${cdcBoundsSql("co")}),
        |    [CAST(len(co) AS BIGINT)]) AS eo,
-       |  list_concat(list_concat([CAST(0 AS BIGINT)], ${boundsSql("ct")}),
+       |  list_concat(list_concat([CAST(0 AS BIGINT)], ${cdcBoundsSql("ct")}),
        |    [CAST(len(ct) AS BIGINT)]) AS et,
        |  ${fwEdgesSql("co")} AS fo,
        |  ${fwEdgesSql("ct")} AS ft
        |  FROM c),
        |f AS (SELECT doc_id, len(ct) AS twin_bytes,
-       |  ${pairsSql("co", "eo")} AS po, ${pairsSql("ct", "et")} AS pt,
-       |  ${pairsSql("co", "fo")} AS qo, ${pairsSql("ct", "ft")} AS qt
+       |  ${cdcPairsSql("co", "eo")} AS po, ${cdcPairsSql("ct", "et")} AS pt,
+       |  ${cdcPairsSql("co", "fo")} AS qo, ${cdcPairsSql("ct", "ft")} AS qt
        |  FROM e)
        |SELECT doc_id, ${reportSql("cdc", "po", "pt")},
        |  ${reportSql("fw", "qo", "qt")},

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.functions.TextFunctions._
+import graft.operators.Bpe
 
 /** Retrieval / tokenization pipeline queries over the documents table:
   * RAG chunking, count-min-sketch heavy hitters, and BPE encoding with
@@ -346,24 +347,19 @@ object RetrievalQueries {
   // ------------------------------------------------------------ BPE encode
 
   /** BPE encoding with learned merges — the tokenize step that follows
-    * qBpeTrain: learn the top-2 merges (same two pair-count aggregates),
-    * then ONE map-only pass applies them corpus-wide as literal
-    * non-regex replaces (greedy left-to-right non-overlap — the
-    * semantics both engines share) and reports per-doc code-unit counts
-    * before/after. The trained model rides into the scan as two string
-    * literals — at 100 TB the encode is a pure scan with the tokenizer
-    * embedded, the same model-in-the-expression shape as LM scoring. */
+    * qBpeTrain: learn the top-2 merges ([[Bpe]]), then ONE map-only pass
+    * applies them corpus-wide as literal non-regex replaces (greedy
+    * left-to-right non-overlap — the semantics both engines share) and
+    * reports per-doc code-unit counts before/after.
+    * The trained model rides into the scan as string literals — at
+    * 100 TB the encode is a pure scan with the tokenizer embedded, the
+    * same model-in-the-expression shape as LM scoring. */
   def qBpeEncode(spark: SparkSession, dir: String): DataFrame = {
-    val d0 = docs(spark, dir)
-      .select(col("doc_id"), lower(col("text")).as("t"))
-    val m1 = TextQueries.bpeBestMergeLocal(d0.select("t"))
-    val m2 = TextQueries.bpeBestMergeLocal(
-      d0.select(replace(col("t"), lit(m1), lit("\u0001")).as("t")))
-    val enc = replace(replace(col("t"), lit(m1), lit("\u0001")),
-      lit(m2), lit("\u0002"))
-    d0.select(col("doc_id"),
+    val corpus = TextQueries.bpeCorpus(spark, dir)
+    val merges = Bpe.train(corpus, 2, 0).map(_.merge)
+    corpus.select(col("doc_id"),
         length(col("t")).cast("long").as("n_raw"),
-        length(enc).cast("long").as("n_enc"))
+        length(Bpe.encode(col("t"), merges)).cast("long").as("n_enc"))
       .withColumn("saved", (col("n_raw") - col("n_enc")).cast("long"))
       .withColumn("ratio", round(col("n_enc").cast("double")
         / col("n_raw").cast("double"), 4))
@@ -728,35 +724,16 @@ object RetrievalQueries {
          |ORDER BY w""".stripMargin
     },
 
-    "q_bpe_encode" -> {
-      def pairsSql(src: String): String =
-        s"""SELECT substr(t, CAST(i AS INT), 2) AS pr, COUNT(*) AS c
-           |FROM $src, LATERAL (SELECT unnest(generate_series(1,
-           |       greatest(len(t) - 1, 1))) AS i) u
-           |WHERE len(substr(t, CAST(i AS INT), 2)) = 2 GROUP BY 1"""
-          .stripMargin
+    "q_bpe_encode" ->
       s"""WITH d0 AS (SELECT CAST(doc_id AS BIGINT) AS doc_id,
+         |              CAST(len(lower(text)) AS BIGINT) AS n_raw,
          |              lower(text) AS t FROM documents),
-         |p1 AS (${pairsSql("d0")}),
-         |m1 AS (SELECT pr FROM p1 ORDER BY c DESC, pr ASC LIMIT 1),
-         |d1 AS (SELECT doc_id, t,
-         |         replace(t, (SELECT pr FROM m1), chr(1)) AS t1
-         |       FROM d0),
-         |p2 AS (SELECT substr(t1, CAST(i AS INT), 2) AS pr, COUNT(*) AS c
-         |       FROM d1, LATERAL (SELECT unnest(generate_series(1,
-         |              greatest(len(t1) - 1, 1))) AS i) u
-         |       WHERE len(substr(t1, CAST(i AS INT), 2)) = 2 GROUP BY 1),
-         |m2 AS (SELECT pr FROM p2 ORDER BY c DESC, pr ASC LIMIT 1),
-         |e AS (SELECT doc_id, len(t) AS n_raw,
-         |        len(replace(t1, (SELECT pr FROM m2), chr(2))) AS n_enc
-         |      FROM d1)
-         |SELECT doc_id, CAST(n_raw AS BIGINT) AS n_raw,
-         |  CAST(n_enc AS BIGINT) AS n_enc,
-         |  CAST(n_raw - n_enc AS BIGINT) AS saved,
-         |  ROUND(CAST(n_enc AS DOUBLE) / CAST(n_raw AS DOUBLE), 4)
+         |${BpeSql.rounds(2, 0, Seq("doc_id", "n_raw"))}
+         |SELECT doc_id, n_raw, CAST(len(t) AS BIGINT) AS n_enc,
+         |  CAST(n_raw - len(t) AS BIGINT) AS saved,
+         |  ROUND(CAST(len(t) AS DOUBLE) / CAST(n_raw AS DOUBLE), 4)
          |    AS ratio
-         |FROM e""".stripMargin
-    },
+         |FROM d2""".stripMargin,
 
     // Retrieval-eval replay: per-term BM25 with the q_bm25 constant
     // discipline (every inexact literal CAST AS DOUBLE, same op order),

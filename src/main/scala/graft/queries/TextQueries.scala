@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.Tables
+import graft.operators.Bpe
 import graft.functions.TextFunctions._
 
 /** Text-analysis queries over the documents table (SURVEY.md §2 rows 28,
@@ -22,16 +23,6 @@ object TextQueries {
     Tables.spread(Tables.load(spark, dir, "documents")
       .select(col("doc_id").cast("long").as("doc_id"), col("text"),
         col("lang"), col("source")))
-
-  /** Raw docs for the round-chained trainers (BPE). The chains spread
-    * ONCE (then checkpoint) before their merge rounds — see
-    * qBpeTrainDeep for the full rationale and the r18 session-5
-    * measurements; per-round repartitioning was the variant measured
-    * 1.6x slower. */
-  private def docsRaw(spark: SparkSession, dir: String): DataFrame =
-    Tables.load(spark, dir, "documents")
-      .select(col("doc_id").cast("long").as("doc_id"), col("text"),
-        col("lang"), col("source"))
 
   /** SQL fragment mirroring norm(). */
   private val normSql =
@@ -667,201 +658,89 @@ object TextQueries {
 
   // ------------------------------------------------------------ BPE train
 
-  /** Distributed BPE tokenizer training, two merge rounds: each round
-    * is ONE map-side-combined pair-count aggregate over the corpus
-    * (the standard distributed BPE/WordPiece counting job — the count
-    * table is bounded by |alphabet|², not corpus size), the argmax
-    * merge is collected to the driver (count desc, pair asc tiebreak —
-    * deterministic) and applied corpus-wide as a literal non-regex
-    * replace into a placeholder symbol, exactly the greedy
-    * left-to-right non-overlap semantics both engines share. Returns
-    * the top-10 adjacent-pair counts AFTER both merges (codepoints,
-    * not raw strings, so placeholders hash portably) — correct only if
-    * both rounds picked and applied the same merges as the oracle's
-    * independently-unrolled SQL. */
-  // pair counting rides the native ShingleHash kernel: with mult=2^16
-  // and mod=2^32 the k=2 rolling hash IS the invertible code-unit
-  // pair key (c1<<16 | c2) — no per-position string allocation, and
-  // the hash aggregate map-side combines down to the |alphabet|^2
-  // count table. Numeric key order equals the oracle's string order
-  // (UTF-8 byte order preserves code-point order), so the argmax
-  // tiebreak is identical.
-  private[queries] def bpePairs(df: DataFrame): DataFrame =
-    graft.operators.Dedup.shingleHashes(
-      df.select(lit(0L).as("doc_id"), col("t").as("text")),
-      2, 65536L, 4294967296L)
-      .groupBy("s").agg(count(lit(1)).as("c"))
-
-  /** Argmax merge from the single-stage local count table (r18 opt) —
-    * same (count desc, pair asc) tiebreak as the orderBy/limit form,
-    * one job and zero exchanges per round. */
-  private[queries] def bpeBestMergeLocal(d: DataFrame): String = {
-    val best = bpePairCountsLocal(d).minBy { case (s, c) => (-c, s) }._1
-    new String(Array(((best >> 16) & 0xffff).toChar, (best & 0xffff).toChar))
-  }
-
-  /** Merge rounds trained by q_bpe_train / priced by q_bpe_fertility:
+  /** Merge rounds trained by q_bpe_train / priced by the fertility rows:
     * 5 rounds (r12, up from 2) so the vocab trajectory is non-trivial
     * and later rounds can merge pairs CONTAINING earlier placeholder
-    * symbols (the real BPE recursion). Placeholders are chr(1)..chr(5):
-    * below every corpus char in both UTF-16 code-unit and UTF-8 byte
-    * order, so the argmax tiebreak stays engine-identical. */
+    * symbols (the real BPE recursion). Placeholders are chr(1)..chr(5)
+    * (base 0): below every corpus char in both UTF-16 code-unit and
+    * UTF-8 byte order, so the argmax tiebreak stays engine-identical. */
   private[queries] val BpeRounds = 5
 
-  def qBpeTrain(spark: SparkSession, dir: String): DataFrame = {
-    // spread once before the merge chain — full rationale on
-    // qBpeTrainDeep. CHECKPOINTED (r19, ADVICE r18): the rounds
-    // stack replaces lazily, so without the checkpoint every round's
-    // count job re-ran the scan AND the round-robin exchange — the
-    // 'one exchange' claim only held for the checkpointed variants.
-    val d0 = graft.Tables.spread(
-      docsRaw(spark, dir).select(lower(col("text")).as("t")))
-      .localCheckpoint()
-    // each round: ONE map-side-combined pair count (bounded by
-    // |alphabet|^2), driver argmax, corpus-wide literal replace - the
-    // replaces stack lazily, so round r's count job is still a single
-    // scan applying r row-local replaces
-    val dFinal = (1 to BpeRounds).foldLeft(d0) { (d, r) =>
-      val m = bpeBestMergeLocal(d)
-      d.select(replace(col("t"), lit(m), lit(r.toChar.toString)).as("t"))
-    }
-    bpePairs(dFinal)
-      .orderBy(col("c").desc, col("s").asc).limit(10)
-      .select(
-        shiftright(col("s"), 16).cast("long").as("a"),
-        col("s").bitwiseAND(lit(65535L)).cast("long").as("b"),
-        col("c").cast("long").as("cnt"))
-  }
-
-  /** DEEP BPE: q_bpe_train's 5-round chain parameterized to 64 merge
-    * rounds (r16, VERDICT r15 item 5) — deep enough that the vocab
-    * trajectory crosses into genuine BPE recursion (merges whose
-    * halves are THEMSELVES placeholder symbols appear from the ~30s
-    * on; the final curve reaches ~2.3 chars/token from 1.0). Per
-    * round exactly ONE distributed job: the map-side-combined pair
-    * count (native ShingleHash keys, bounded by |alphabet+vocab|² ≤
-    * 90² rows) is collected driver-side (the bounded-collect pattern
-    * of the unigram M-step), the argmax picks the merge, and the
-    * corpus-wide literal replace stages through a LAZY localCheckpoint
-    * that materializes inside the NEXT round's count job — never a
-    * re-applied O(R²) replace stack, never a second scan per round.
-    * n_tokens(k) falls out of the SAME count table (Σ pair counts +
-    * n_docs = Σ len), so the fertility curve costs nothing extra; the
-    * oracle computes it with the identical formula. Placeholders are
-    * chr(0x250+r) — IPA block, chosen CASELESS: the ShingleHash kernel
-    * lowercases internally, and Latin Extended-A placeholders
-    * alternate upper/lower case, so chr(0x102)='Ă' would be COUNTED as
-    * its lowercase twin chr(0x103) — a phantom pair the replace can
-    * never remove (probe-discovered: the chain froze at the first even
-    * placeholder). The corpus is 25 ASCII chars, so 64 IPA rounds stay
-    * collision-free, and UTF-16 code-unit order == UTF-8 byte order on
-    * the BMP keeps the argmax tiebreak engine-identical. Training is
-    * inherently sequential in the merge chain — 64 bounded-size
-    * barriers is the honest cost, and the per-round wall is what the
-    * SURVEY §4 decade row prices. */
+  /** The deep chain's merges (r16): deep enough that the vocab
+    * trajectory crosses into genuine BPE recursion (merges whose halves
+    * are THEMSELVES placeholder symbols appear from the ~30s on; the
+    * curve reaches ~2.3 chars/token from 1.0). Placeholders are
+    * chr(0x250 + r), the IPA block: caseless, and the corpus' 25 ASCII
+    * chars leave 64 rounds collision-free. */
   private[queries] val BpeDeepRounds = 64
 
-  /** The per-round pair-count table as ONE single-stage job (r18 opt):
-    * the groupBy form plans partial agg → exchange → final agg →
-    * collect — TWO stages + an AQE barrier per round, and the deep
-    * chain pays that barrier 65 times (it was the whole row's cost:
-    * per-round map work is milliseconds). Here each partition folds its
-    * rows through the SAME ShingleHash kernel into a bounded
-    * (≤ |alphabet+vocab|² ≤ 90²) count map and treeReduce merges —
-    * log-depth, bounded payload, identical exact integer counts in any
-    * merge order, so the argmax/curve (and the oracle hash) are
-    * untouched. */
-  private def bpePairCountsLocal(d: DataFrame): Array[(Long, Long)] = {
-    val mapped = d.select(col("t")).queryExecution.toRdd
-      .mapPartitions { it =>
-        val m = new java.util.HashMap[java.lang.Long, Long](1 << 13)
-        while (it.hasNext) {
-          val row = it.next()
-          if (!row.isNullAt(0)) {
-            val arr = graft.functions.ShingleHashKernel.hashes(
-              row.getUTF8String(0), 2, 65536L, 4294967296L)
-            if (arr != null) {
-              var i = 0
-              val n = arr.numElements()
-              while (i < n) {
-                m.merge(arr.getLong(i), 1L, (x, y) => x + y)
-                i += 1
-              }
-            }
-          }
-        }
-        Iterator.single(m)
-      }
-    def mergeMaps(a: java.util.HashMap[java.lang.Long, Long],
-                  b: java.util.HashMap[java.lang.Long, Long]) = {
-      val bi = b.entrySet().iterator()
-      while (bi.hasNext) {
-        val e = bi.next()
-        a.merge(e.getKey, e.getValue, (x, y) => x + y)
-      }
-      a
+  /** The BPE round-0 corpus: lowercased text, spread once before the
+    * merge chain. Without the spread every round's kernel scan ran at
+    * the scan's parallelism (1 at the bench sfs — one row group); the
+    * chain's narrow per-round replace keeps the spread layout, so this
+    * is one round-robin exchange in total (r18: the chain at sf0.1 went
+    * 6.5-8.0 s -> 3.3-3.7 s; a per-round repartition measured 1.6x
+    * slower). */
+  private[queries] def bpeCorpus(spark: SparkSession,
+                                 dir: String): DataFrame =
+    docs(spark, dir).select(col("doc_id"), col("lang"),
+      lower(col("text")).as("t"))
+
+  /** The fertility curve of the 5 merges trained on the BPE corpus: the
+    * token count after each prefix k = 0..5 of them (k = 0 is the char
+    * count) per `by` group, as ONE aggregate over the round-0 corpus. */
+  private def bpeCurve(spark: SparkSession, dir: String,
+                       by: Seq[String]): DataFrame = {
+    val corpus = bpeCorpus(spark, dir)
+    val merges = Bpe.train(corpus, BpeRounds, 0).map(_.merge)
+    val ks = 0 to BpeRounds
+    val sums = ks.map(k => sum(length(Bpe.encode(col("t"), merges.take(k)))
+      .cast("long")).as(s"n$k"))
+    val steps = ks.map { k =>
+      val (a, b) = if (k == 0) (0L, 0L)
+        else (merges(k - 1).a.toLong, merges(k - 1).b.toLong)
+      struct(lit(k.toLong).as("k"), lit(a).as("a"), lit(b).as("b"),
+        col(s"n$k").as("n_tokens"))
     }
-    // plain reduce below 64 partitions: each partition ships one
-    // bounded (≤ 90² entries) map, so the driver merge is trivial and
-    // the round stays ONE stage — treeReduce's intermediate level is
-    // a shuffle stage the deep chain would pay 65 times (r18 opt;
-    // interleaved A/B on the deep chain at sf0.1: treeReduce
-    // min 12.24 s vs reduce 11.12 s, 4/4 pairwise wins).
-    // Past 64 partitions the tree caps what the driver receives at
-    // once — same exact integer counts in any merge order.
-    val merged =
-      if (mapped.getNumPartitions <= 64)
-        mapped.reduce(mergeMaps)
-      else mapped.treeReduce(mergeMaps)
-    val out = new Array[(Long, Long)](merged.size())
-    val mi = merged.entrySet().iterator()
-    var i = 0
-    while (mi.hasNext) {
-      val e = mi.next()
-      out(i) = (e.getKey.longValue(), e.getValue)
-      i += 1
-    }
-    out
+    corpus.groupBy(by.map(col): _*).agg(sums.head, sums.tail: _*)
+      .select(by.map(col) :+ col("n0").as("n_chars") :+
+        explode(array(steps: _*)).as("x"): _*)
+      .select(Seq(col("x.k").as("k"), col("x.a").as("a"),
+        col("x.b").as("b")) ++ by.map(col) ++ Seq(
+        col("x.n_tokens").as("n_tokens"), col("n_chars"),
+        expr("n_chars * 10000 div n_tokens").as("chars_per_token_x1e4")): _*)
   }
 
+  /** Distributed BPE tokenizer training ([[Bpe]]): the
+    * top-10 adjacent-pair counts AFTER the 5 merges (codepoints, not raw
+    * strings, so placeholders hash portably) — correct only if every
+    * round picked and applied the same merge as the oracle's
+    * independently-unrolled SQL. Round 6's count table is that table;
+    * its merge is not applied. */
+  def qBpeTrain(spark: SparkSession, dir: String): DataFrame = {
+    import spark.implicits._
+    Bpe.train(bpeCorpus(spark, dir), BpeRounds + 1, 0)
+      .last.counts.sortBy { case (s, c) => (-c, s) }.take(10).toSeq
+      .map { case (s, c) => (s >> 16, s & 0xffffL, c) }
+      .toDF("a", "b", "cnt")
+  }
+
+  /** DEEP BPE (r16): q_bpe_train's chain run to 64 merges, emitting the
+    * whole fertility curve k = 0..64. n_tokens(k) falls out of round
+    * k + 1's count table (Σ pair counts + n_docs = Σ len), so the curve
+    * costs nothing beyond the 65 count jobs (round 65's merge is not
+    * applied); the oracle computes it with the identical formula. */
   def qBpeTrainDeep(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    // spread ONCE before the chain (r18 session 5): the per-round
-    // kernel scan + replace otherwise run at the SCAN's parallelism
-    // (1 at bench sfs — single row group) for all 65 rounds; the
-    // narrow per-round select/localCheckpoint PRESERVES the spread
-    // layout, so unlike the session-1 per-round repartition (one
-    // exchange per round — measured 1.6x slower, the "deliberately
-    // not applied" note) this pays one round-robin exchange total.
-    // Interleaved 3x at sf0.1: chain 6.5-8.0 s at the
-    // scan layout vs 3.3-3.7 s spread (parts 8 and 32 equal within
-    // noise) — counts phase 5.6-6.6 -> 2.4-2.8 s. Results identical:
-    // pair counts are exact integer sums merged commutatively and the
-    // argmax is a deterministic minBy on (-count, symbol).
-    var d = graft.Tables.spread(
-      docsRaw(spark, dir).select(lower(col("text")).as("t")))
-      .localCheckpoint()
-    val nDocs = d.count()
-    val curve = scala.collection.mutable.ArrayBuffer.empty[(Long, Long, Long, Long)]
-    var lastMerge = ""
-    for (k <- 0 to BpeDeepRounds) {
-      val counts = bpePairCountsLocal(d)
-      val nTokens = counts.map(_._2).sum + nDocs
-      val (a, b) =
-        if (k == 0) (0L, 0L)
-        else (lastMerge.charAt(0).toLong, lastMerge.charAt(1).toLong)
-      curve += ((k.toLong, a, b, nTokens))
-      if (k < BpeDeepRounds) {
-        val best = counts.minBy { case (s, c) => (-c, s) }._1
-        lastMerge = new String(Array(
-          ((best >> 16) & 0xffff).toChar, (best & 0xffff).toChar))
-        d = d.select(replace(col("t"), lit(lastMerge),
-          lit((0x250 + k + 1).toChar.toString)).as("t"))
-          .localCheckpoint(false)
-      }
+    val rounds = Bpe.train(bpeCorpus(spark, dir),
+      BpeDeepRounds + 1, 0x250)
+    val curve = rounds.zipWithIndex.map { case (r, k) =>
+      val (a, b) = if (k == 0) (0L, 0L)
+        else (rounds(k - 1).merge.a.toLong, rounds(k - 1).merge.b.toLong)
+      (k.toLong, a, b, r.counts.map(_._2).sum + r.rows)
     }
     val nChars = curve.head._4
-    curve.toSeq.toDF("k", "a", "b", "n_tokens")
+    curve.toDF("k", "a", "b", "n_tokens")
       .select(col("k"), col("a"), col("b"), col("n_tokens"),
         lit(nChars).as("n_chars"),
         expr("n_chars * 10000 div n_tokens").as("chars_per_token_x1e4"))
@@ -869,42 +748,14 @@ object TextQueries {
 
   /** Vocab-size fertility curve — the measurement a tokenizer's vocab
     * size is chosen from: corpus token count (and chars-per-token) at
-    * 0, 1 and 2 applied BPE merges. Every merge collapses its pair
+    * 0..5 applied BPE merges. Every merge collapses its pair
     * occurrences into one symbol, so fertility (chars per token) rises
     * monotonically with vocab — this query prices each step of row
     * 75's training with the number that matters downstream (sequence
-    * length ∝ 1/fertility). Same merge selection and replace semantics
-    * as q_bpe_train (the oracle unrolls identically); per stage ONE
-    * map-side-combined length sum. */
-  def qBpeFertility(spark: SparkSession, dir: String): DataFrame = {
-    // spread once before the merge chain — full rationale on
-    // qBpeTrainDeep
-    val d0 = graft.Tables.spread(
-      docsRaw(spark, dir).select(lower(col("text")).as("t")))
-      .localCheckpoint() // every stage + the char total read it
-    def stage(df: DataFrame, k: Long, merge: String): DataFrame =
-      df.agg(sum(length(col("t")).cast("long")).as("n_tokens"))
-        .select(lit(k).as("k"),
-          lit(if (merge.isEmpty) 0L else merge.charAt(0).toLong).as("a"),
-          lit(if (merge.isEmpty) 0L else merge.charAt(1).toLong).as("b"),
-          col("n_tokens"))
-    // fold the merge rounds, checkpointing each stage (read by the
-    // next round's count AND its own length sum)
-    val (stages, _) = (1 to BpeRounds)
-      .foldLeft((Seq(stage(d0, 0L, "")), d0)) { case ((acc, d), r) =>
-        val m = bpeBestMergeLocal(d)
-        val dn = d.select(replace(col("t"), lit(m),
-          lit(r.toChar.toString)).as("t")).localCheckpoint()
-        (acc :+ stage(dn, r.toLong, m), dn)
-      }
-    val chars0 = d0.agg(sum(length(col("t")).cast("long"))
-      .as("n_chars")) // the k=0 token count IS the char count
-    stages.reduce(_ unionAll _)
-      .crossJoin(broadcast(chars0))
-      .select(col("k"), col("a"), col("b"), col("n_tokens"),
-        col("n_chars"),
-        expr("n_chars * 10000 div n_tokens").as("chars_per_token_x1e4"))
-  }
+    * length ∝ 1/fertility). Same merges as q_bpe_train; all six token
+    * sums are one aggregate over the round-0 corpus. */
+  def qBpeFertility(spark: SparkSession, dir: String): DataFrame =
+    bpeCurve(spark, dir, Nil)
 
   /** Per-language BPE fertility (r13, VERDICT r12 item 6) — the number
     * multilingual vocab allocation actually decides on: the corpus-wide
@@ -912,45 +763,16 @@ object TextQueries {
     * tokenizer budget answers, WHICH language's sequences shrink as the
     * shared vocab grows. Same GLOBAL merge chain as q_bpe_train (the
     * merges are corpus-argmax — one vocab for all languages, which is
-    * what creates the allocation pressure being measured), with lang
-    * carried through every replace and each stage's token sum grouped
-    * per language: 6 vocab steps × 5 languages, each row pricing that
-    * language's chars-per-token at that vocab size. Per stage ONE
-    * map-side-combined (lang) sum over ≤5 groups; the oracle unrolls
-    * the identical chain with a GROUP BY lang. On this corpus the
-    * merges land in shared template vocabulary, so the per-language
-    * curves move together with small spreads — the honest readout for
-    * a corpus whose languages share a generator; the planted-marker
-    * languages differ in char mass, which the n_chars column keeps
-    * visible. */
-  def qBpeFertilityLang(spark: SparkSession, dir: String): DataFrame = {
-    // spread once before the merge chain — full rationale on
-    // qBpeTrainDeep
-    val d0 = graft.Tables.spread(docsRaw(spark, dir)
-      .select(col("lang"), lower(col("text")).as("t")))
-      .localCheckpoint() // every stage + the per-lang char totals read it
-    def stage(df: DataFrame, k: Long, merge: String): DataFrame =
-      df.groupBy("lang")
-        .agg(sum(length(col("t")).cast("long")).as("n_tokens"))
-        .select(lit(k).as("k"),
-          lit(if (merge.isEmpty) 0L else merge.charAt(0).toLong).as("a"),
-          lit(if (merge.isEmpty) 0L else merge.charAt(1).toLong).as("b"),
-          col("lang"), col("n_tokens"))
-    val (stages, _) = (1 to BpeRounds)
-      .foldLeft((Seq(stage(d0, 0L, "")), d0)) { case ((acc, d), r) =>
-        val m = bpeBestMergeLocal(d)
-        val dn = d.select(col("lang"), replace(col("t"), lit(m),
-          lit(r.toChar.toString)).as("t")).localCheckpoint()
-        (acc :+ stage(dn, r.toLong, m), dn)
-      }
-    val chars0 = d0.groupBy("lang")
-      .agg(sum(length(col("t")).cast("long")).as("n_chars"))
-    stages.reduce(_ unionAll _)
-      .join(broadcast(chars0), Seq("lang"))
-      .select(col("k"), col("a"), col("b"), col("lang"),
-        col("n_tokens"), col("n_chars"),
-        expr("n_chars * 10000 div n_tokens").as("chars_per_token_x1e4"))
-  }
+    * what creates the allocation pressure being measured), each step's
+    * token sum grouped per language in the same one aggregate: 6 vocab
+    * steps × 5 languages, each row pricing that language's
+    * chars-per-token at that vocab size. On this corpus the merges land
+    * in shared template vocabulary, so the per-language curves move
+    * together with small spreads — the honest readout for a corpus
+    * whose languages share a generator; the planted-marker languages
+    * differ in char mass, which the n_chars column keeps visible. */
+  def qBpeFertilityLang(spark: SparkSession, dir: String): DataFrame =
+    bpeCurve(spark, dir, Seq("lang"))
 
   // --------------------------------------------- Unigram-LM train (r14)
 
@@ -1108,13 +930,6 @@ object TextQueries {
         Window.orderBy(col("cnt").desc, col("piece").asc)).cast("long"))
   }
 
-  /** Fertility: unigram vs the BPE chain at matched corpus (VERDICT
-    * r13 item 3's comparison row) — tokens and chars-per-token for (a)
-    * raw chars, (b) the 5-round BPE chain of q_bpe_train, (c) the
-    * trained unigram model's final segmentation. BPE counts spaces
-    * (it tokenizes running text); unigram pre-tokenizes on whitespace
-    * (spaces are not pieces), so each row carries ITS OWN char mass —
-    * the honest per-tokenizer accounting. */
   /** Per-word piece counts under the trained model — the serve-side
     * artifact (same DP as uniSegmentCounts, emitting one row per
     * distinct word instead of per piece). */
@@ -1189,34 +1004,28 @@ object TextQueries {
         expr("n_chars * 10000 div n_tokens").as("chars_per_token_x1e4"))
   }
 
+  /** Fertility: unigram vs the BPE chain at matched corpus (VERDICT
+    * r13 item 3's comparison row) — tokens and chars-per-token for (a)
+    * raw chars, (b) the 5-round BPE chain of q_bpe_train, (c) the
+    * trained unigram model's final segmentation. BPE counts spaces
+    * (it tokenizes running text); unigram pre-tokenizes on whitespace
+    * (spaces are not pieces), so each row carries ITS OWN char mass —
+    * the honest per-tokenizer accounting. */
   def qUnigramFertility(spark: SparkSession, dir: String): DataFrame = {
     val (words, scores) = uniTrain(spark, dir)
     val uniTok = uniSegmentCounts(words, scores)
       .agg(sum("c").cast("long").as("n_tokens"))
     val uniChars = words.toDF()
       .agg(sum(length(col("w")).cast("long") * col("f")).as("n_chars"))
-    // BPE twin: replay the exact q_bpe_train merge chain, count tokens
-    // (spread once + checkpoint, the qBpeTrain shape — see
-    // qBpeTrainDeep for the rationale; without the checkpoint each
-    // round's count job re-paid the spread exchange)
-    val d0 = graft.Tables.spread(
-      docsRaw(spark, dir).select(lower(col("text")).as("t")))
-      .localCheckpoint()
-    val dFinal = (1 to BpeRounds).foldLeft(d0) { (d, r) =>
-      val m = bpeBestMergeLocal(d)
-      d.select(replace(col("t"), lit(m), lit(r.toChar.toString)).as("t"))
-    }
-    val bpeTok = dFinal.agg(sum(length(col("t")).cast("long"))
-      .as("n_tokens"))
-    val bpeChars = d0.agg(sum(length(col("t")).cast("long")).as("n_chars"))
-    def row(tok: String, nt: DataFrame, nc: DataFrame): DataFrame =
-      nt.crossJoin(broadcast(nc))
-        .select(lit(tok).as("tok"), col("n_tokens"), col("n_chars"),
-          expr("n_chars * 10000 div n_tokens").as("chars_per_token_x1e4"))
-    row("bpe5", bpeTok, bpeChars)
-      .unionAll(row("chars", bpeChars
-        .select(col("n_chars").as("n_tokens")), bpeChars))
-      .unionAll(row("unigram", uniTok, uniChars))
+    // BPE twin: q_bpe_train's merges; its k = 0 step is the char count
+    bpeCurve(spark, dir, Nil)
+      .filter(col("k").isin(0L, BpeRounds.toLong))
+      .select(when(col("k") === 0L, lit("chars")).otherwise(lit("bpe5"))
+        .as("tok"), col("n_tokens"), col("n_chars"))
+      .unionAll(uniTok.crossJoin(broadcast(uniChars))
+        .select(lit("unigram").as("tok"), col("n_tokens"), col("n_chars")))
+      .withColumn("chars_per_token_x1e4",
+        expr("n_chars * 10000 div n_tokens"))
   }
 
   /** Per-language distinctive keywords — the corpus-report staple
@@ -1819,6 +1628,28 @@ object TextQueries {
        |            CAST(mkey // 2097152 AS BIGINT) AS fp
        |          FROM wn WHERE cnt = LEAST($WinW, npos))""".stripMargin
 
+  /** The fertility oracles: the token sum of every round's corpus d0..d5
+    * of the unrolled chain, per `by` group, over that group's char sum. */
+  private def bpeCurveSql(by: Seq[String]): String = {
+    val keys = by.map(_ + ", ").mkString
+    val groupBy = if (by.isEmpty) "" else by.mkString("GROUP BY ", ", ", "")
+    val steps = (0 to BpeRounds).map { k =>
+      s"""SELECT CAST($k AS BIGINT) AS k, ${BpeSql.merge(k)}, $keys
+         |  CAST(SUM(len(t)) AS BIGINT) AS n_tokens FROM d$k $groupBy"""
+        .stripMargin
+    }.mkString("\nUNION ALL\n")
+    s"""WITH d0 AS (SELECT $keys lower(text) AS t FROM documents),
+       |${BpeSql.rounds(BpeRounds, 0, by)},
+       |u AS ($steps),
+       |c0 AS (SELECT $keys n_tokens AS n_chars FROM u WHERE k = 0)
+       |SELECT u.k, u.a, u.b, ${by.map("u." + _ + ", ").mkString}u.n_tokens,
+       |  c0.n_chars,
+       |  CAST(c0.n_chars * 10000 // u.n_tokens AS BIGINT)
+       |    AS chars_per_token_x1e4
+       |FROM u JOIN c0 ON ${(by.map(b => s"c0.$b = u.$b") :+ "TRUE")
+         .mkString(" AND ")}""".stripMargin
+  }
+
   // Unigram-LM oracle chain (r14): the SAME training the engine runs,
   // unrolled as recursive-CTE SQL — weighted substring seed, then per
   // EM round a forward Viterbi DP (recursive CTE carrying the last
@@ -2281,19 +2112,7 @@ object TextQueries {
          |FROM dw JOIN wpc ON wpc.w = dw.w
          |GROUP BY dw.doc_id""".stripMargin,
 
-    "q_unigram_fertility" -> {
-      def pairsSql(src: String): String =
-        s"""SELECT substr(t, CAST(i AS INT), 2) AS pr, COUNT(*) AS c
-           |FROM $src, LATERAL (SELECT unnest(generate_series(1,
-           |       greatest(len(t) - 1, 1))) AS i) u
-           |WHERE len(substr(t, CAST(i AS INT), 2)) = 2 GROUP BY 1"""
-          .stripMargin
-      val bpeRounds = (1 to BpeRounds).map { r =>
-        s"""p$r AS (${pairsSql(s"d${r - 1}")}),
-           |m$r AS (SELECT pr FROM p$r ORDER BY c DESC, pr ASC LIMIT 1),
-           |d$r AS (SELECT replace(t, (SELECT pr FROM m$r), chr($r)) AS t
-           |       FROM d${r - 1})""".stripMargin
-      }.mkString(",\n")
+    "q_unigram_fertility" ->
       s"""WITH RECURSIVE
          |$uniChainSql,
          |uni_t AS (SELECT CAST(SUM(c) AS BIGINT) AS n_tokens
@@ -2301,7 +2120,7 @@ object TextQueries {
          |uni_c AS (SELECT CAST(SUM(f * len(w)) AS BIGINT) AS n_chars
          |          FROM words),
          |d0 AS (SELECT lower(text) AS t FROM documents),
-         |$bpeRounds,
+         |${BpeSql.rounds(BpeRounds, 0)},
          |bpe_t AS (SELECT CAST(SUM(len(t)) AS BIGINT) AS n_tokens
          |          FROM d$BpeRounds),
          |bpe_c AS (SELECT CAST(SUM(len(t)) AS BIGINT) AS n_chars
@@ -2316,8 +2135,7 @@ object TextQueries {
          |UNION ALL
          |SELECT 'unigram', uni_t.n_tokens, uni_c.n_chars,
          |  CAST(uni_c.n_chars * 10000 // uni_t.n_tokens AS BIGINT)
-         |FROM uni_t, uni_c""".stripMargin
-    },
+         |FROM uni_t, uni_c""".stripMargin,
 
     // per-term occurrence counts by the replace-arithmetic closed form
     // (terms are border-free, so non-overlapping == every-occurrence),
@@ -2390,156 +2208,38 @@ object TextQueries {
         |    c -> CAST(unicode(c) AS BIGINT))) AS BIGINT) AS cp_sum
         |FROM n""".stripMargin,
 
-    "q_bpe_train" -> {
-      def pairsSql(src: String): String =
-        s"""SELECT substr(t, CAST(i AS INT), 2) AS pr, COUNT(*) AS c
-           |FROM $src, LATERAL (SELECT unnest(generate_series(1,
-           |       greatest(len(t) - 1, 1))) AS i) u
-           |WHERE len(substr(t, CAST(i AS INT), 2)) = 2 GROUP BY 1"""
-          .stripMargin
-      // CTE-unrolled round chain, generated from the SAME BpeRounds
-      // constant the engine folds over
-      val rounds = (1 to BpeRounds).map { r =>
-        s"""p$r AS (${pairsSql(s"d${r - 1}")}),
-           |m$r AS (SELECT pr FROM p$r ORDER BY c DESC, pr ASC LIMIT 1),
-           |d$r AS (SELECT replace(t, (SELECT pr FROM m$r), chr($r)) AS t
-           |       FROM d${r - 1})""".stripMargin
-      }.mkString(",\n")
+    "q_bpe_train" ->
       s"""WITH d0 AS (SELECT lower(text) AS t FROM documents),
-         |$rounds,
-         |pf AS (${pairsSql(s"d$BpeRounds")})
+         |${BpeSql.rounds(BpeRounds, 0)},
+         |pf AS (${BpeSql.pairs(s"d$BpeRounds")})
          |SELECT CAST(unicode(substr(pr, 1, 1)) AS BIGINT) AS a,
          |  CAST(unicode(substr(pr, 2, 1)) AS BIGINT) AS b,
          |  CAST(c AS BIGINT) AS cnt
-         |FROM pf ORDER BY c DESC, pr ASC LIMIT 10""".stripMargin
-    },
+         |FROM pf ORDER BY c DESC, pr ASC LIMIT 10""".stripMargin,
 
-    // deep chain: 64 CTE-unrolled rounds generated from the SAME
-    // BpeDeepRounds constant; every round CTE is MATERIALIZED (three
-    // consumers each — the r14 lesson: DuckDB re-inlines plain CTEs,
-    // and a 64-level chain would re-inline exponentially); n_tokens(k)
-    // uses the identical sum-of-pair-counts + n_docs identity the
-    // engine computes from its count table
+    // n_tokens(k) uses the identical sum-of-pair-counts + n_docs
+    // identity the engine computes from its count table
     "q_bpe_train_deep" -> {
-      def pairsSql(src: String): String =
-        s"""SELECT substr(t, CAST(i AS INT), 2) AS pr, COUNT(*) AS c
-           |FROM $src, LATERAL (SELECT unnest(generate_series(1,
-           |       greatest(len(t) - 1, 1))) AS i) u
-           |WHERE len(substr(t, CAST(i AS INT), 2)) = 2 GROUP BY 1"""
-          .stripMargin
-      val rounds = (1 to BpeDeepRounds).map { r =>
-        s"""p$r AS MATERIALIZED (${pairsSql(s"d${r - 1}")}),
-           |m$r AS MATERIALIZED (SELECT pr FROM p$r
-           |  ORDER BY c DESC, pr ASC LIMIT 1),
-           |d$r AS MATERIALIZED (SELECT replace(t, (SELECT pr FROM m$r),
-           |  chr(${0x250 + r})) AS t FROM d${r - 1})""".stripMargin
-      }.mkString(",\n") +
-        s",\np${BpeDeepRounds + 1} AS MATERIALIZED (${pairsSql(s"d$BpeDeepRounds")})"
-      val stages = (0 to BpeDeepRounds).map { k =>
-        val ab =
-          if (k == 0) "CAST(0 AS BIGINT) AS a, CAST(0 AS BIGINT) AS b"
-          else s"CAST(unicode(substr((SELECT pr FROM m$k), 1, 1)) AS BIGINT) AS a, " +
-            s"CAST(unicode(substr((SELECT pr FROM m$k), 2, 1)) AS BIGINT) AS b"
-        s"""t$k AS (SELECT CAST($k AS BIGINT) AS k, $ab,
+      val steps = (0 to BpeDeepRounds).map { k =>
+        s"""SELECT CAST($k AS BIGINT) AS k, ${BpeSql.merge(k)},
            |  CAST((SELECT SUM(c) FROM p${k + 1}) + (SELECT n FROM nd)
-           |    AS BIGINT) AS n_tokens)""".stripMargin
-      }.mkString(",\n")
-      val unions = (0 to BpeDeepRounds).map(k => s"SELECT * FROM t$k")
-        .mkString(" UNION ALL ")
+           |    AS BIGINT) AS n_tokens""".stripMargin
+      }.mkString("\nUNION ALL\n")
       s"""WITH d0 AS MATERIALIZED (SELECT lower(text) AS t FROM documents),
          |nd AS (SELECT COUNT(*) AS n FROM d0),
-         |$rounds,
-         |$stages,
-         |u AS ($unions)
+         |${BpeSql.rounds(BpeDeepRounds, 0x250)},
+         |p${BpeDeepRounds + 1} AS MATERIALIZED (
+         |  ${BpeSql.pairs(s"d$BpeDeepRounds")}),
+         |u AS MATERIALIZED ($steps)
          |SELECT u.k, u.a, u.b, u.n_tokens,
-         |  (SELECT n_tokens FROM t0) AS n_chars,
-         |  CAST((SELECT n_tokens FROM t0) * 10000 // u.n_tokens AS BIGINT)
-         |    AS chars_per_token_x1e4
+         |  (SELECT n_tokens FROM u WHERE k = 0) AS n_chars,
+         |  CAST((SELECT n_tokens FROM u WHERE k = 0) * 10000 // u.n_tokens
+         |    AS BIGINT) AS chars_per_token_x1e4
          |FROM u""".stripMargin
     },
 
-    "q_bpe_fertility" -> {
-      def pairsSql(src: String): String =
-        s"""SELECT substr(t, CAST(i AS INT), 2) AS pr, COUNT(*) AS c
-           |FROM $src, LATERAL (SELECT unnest(generate_series(1,
-           |       greatest(len(t) - 1, 1))) AS i) u
-           |WHERE len(substr(t, CAST(i AS INT), 2)) = 2 GROUP BY 1"""
-          .stripMargin
-      val rounds = (1 to BpeRounds).map { r =>
-        s"""p$r AS (${pairsSql(s"d${r - 1}")}),
-           |m$r AS (SELECT pr FROM p$r ORDER BY c DESC, pr ASC LIMIT 1),
-           |d$r AS (SELECT replace(t, (SELECT pr FROM m$r), chr($r)) AS t
-           |       FROM d${r - 1})""".stripMargin
-      }.mkString(",\n")
-      val stages = (0 to BpeRounds).map { k =>
-        if (k == 0)
-          s"""t0 AS (SELECT CAST(0 AS BIGINT) AS k,
-             |         CAST(0 AS BIGINT) AS a, CAST(0 AS BIGINT) AS b,
-             |         CAST(SUM(len(t)) AS BIGINT) AS n_tokens FROM d0)"""
-            .stripMargin
-        else
-          s"""t$k AS (SELECT CAST($k AS BIGINT),
-             |         CAST(unicode(substr((SELECT pr FROM m$k), 1, 1))
-             |           AS BIGINT),
-             |         CAST(unicode(substr((SELECT pr FROM m$k), 2, 1))
-             |           AS BIGINT),
-             |         CAST(SUM(len(t)) AS BIGINT) FROM d$k)""".stripMargin
-      }.mkString(",\n")
-      val unions = (0 to BpeRounds).map(k => s"SELECT * FROM t$k")
-        .mkString(" UNION ALL ")
-      s"""WITH d0 AS (SELECT lower(text) AS t FROM documents),
-         |$rounds,
-         |$stages,
-         |u AS ($unions),
-         |c0 AS (SELECT CAST(SUM(len(t)) AS BIGINT) AS n_chars FROM d0)
-         |SELECT u.k, u.a, u.b, u.n_tokens, c0.n_chars,
-         |  CAST(c0.n_chars * 10000 // u.n_tokens AS BIGINT)
-         |    AS chars_per_token_x1e4
-         |FROM u, c0""".stripMargin
-    },
-
-    "q_bpe_fertility_lang" -> {
-      def pairsSql(src: String): String =
-        s"""SELECT substr(t, CAST(i AS INT), 2) AS pr, COUNT(*) AS c
-           |FROM $src, LATERAL (SELECT unnest(generate_series(1,
-           |       greatest(len(t) - 1, 1))) AS i) u
-           |WHERE len(substr(t, CAST(i AS INT), 2)) = 2 GROUP BY 1"""
-          .stripMargin
-      val rounds = (1 to BpeRounds).map { r =>
-        s"""p$r AS (${pairsSql(s"d${r - 1}")}),
-           |m$r AS (SELECT pr FROM p$r ORDER BY c DESC, pr ASC LIMIT 1),
-           |d$r AS (SELECT lang,
-           |         replace(t, (SELECT pr FROM m$r), chr($r)) AS t
-           |       FROM d${r - 1})""".stripMargin
-      }.mkString(",\n")
-      val stages = (0 to BpeRounds).map { k =>
-        if (k == 0)
-          s"""t0 AS (SELECT CAST(0 AS BIGINT) AS k,
-             |         CAST(0 AS BIGINT) AS a, CAST(0 AS BIGINT) AS b,
-             |         lang, CAST(SUM(len(t)) AS BIGINT) AS n_tokens
-             |       FROM d0 GROUP BY lang)""".stripMargin
-        else
-          s"""t$k AS (SELECT CAST($k AS BIGINT),
-             |         CAST(unicode(substr((SELECT pr FROM m$k), 1, 1))
-             |           AS BIGINT),
-             |         CAST(unicode(substr((SELECT pr FROM m$k), 2, 1))
-             |           AS BIGINT),
-             |         lang, CAST(SUM(len(t)) AS BIGINT)
-             |       FROM d$k GROUP BY lang)""".stripMargin
-      }.mkString(",\n")
-      val unions = (0 to BpeRounds).map(k => s"SELECT * FROM t$k")
-        .mkString(" UNION ALL ")
-      s"""WITH d0 AS (SELECT lang, lower(text) AS t FROM documents),
-         |$rounds,
-         |$stages,
-         |u AS ($unions),
-         |c0 AS (SELECT lang, CAST(SUM(len(t)) AS BIGINT) AS n_chars
-         |       FROM d0 GROUP BY lang)
-         |SELECT u.k, u.a, u.b, u.lang, u.n_tokens, c0.n_chars,
-         |  CAST(c0.n_chars * 10000 // u.n_tokens AS BIGINT)
-         |    AS chars_per_token_x1e4
-         |FROM u JOIN c0 ON c0.lang = u.lang""".stripMargin
-    },
+    "q_bpe_fertility" -> bpeCurveSql(Nil),
+    "q_bpe_fertility_lang" -> bpeCurveSql(Seq("lang")),
 
     "q_lang_keywords" -> {
       val profRows = langidProfiles.flatMap { case (l, ws) =>
