@@ -68,9 +68,11 @@ object Bpe {
     } finally held.foreach(release)
   }
 
-  private def release(d: DataFrame): Unit = d.queryExecution.logical match {
-    case r: LogicalRDD => r.rdd.unpersist(blocking = false)
-  }
+  /** Drop the blocks of a localCheckpoint()ed frame `d`. */
+  private[graft] def release(d: DataFrame): Unit =
+    d.queryExecution.logical match {
+      case r: LogicalRDD => r.rdd.unpersist(blocking = false)
+    }
 
   private type Counts = java.util.HashMap[java.lang.Long, Long]
 

@@ -50,7 +50,7 @@ import org.apache.spark.sql.functions._
   */
 object Mp3 {
 
-  import Multimodal.{Mp3Kbps, Mp3Rates}
+  import Multimodal.{Mp3Kbps, Mp3Rates, mp3FrameHeader}
 
   /** Spec Huffman table 1 (ISO 11172-3 Table B.7): (x, y) -> code.
     * Stored as (x, y, bit length, code value); the decoder builds a
@@ -248,7 +248,8 @@ object Mp3 {
   final case class Granule(frame: Int, granule: Int,
                            xa: Array[Double])
 
-  /** Full spectral decode of a coded stream: frame walk, side-info
+  /** Full spectral decode of a coded stream: frame walk (each header
+    * through the walker's [[Multimodal.mp3FrameHeader]]), side-info
     * parse, scalefactors, Huffman, requantize, alias-reduce. Returns
     * one [[Granule]] per granule in stream order. Malformed input
     * fails loudly (same policy as the container walkers). */
@@ -257,14 +258,7 @@ object Mp3 {
     var p = 0
     var fIdx = 0
     while (p + 4 <= payload.length) {
-      require(payload(p) == 0xff.toByte
-        && (payload(p + 1) & 0xe0) == 0xe0, "mp3: lost frame sync")
-      val brIdx = (payload(p + 2) >> 4) & 15
-      val srIdx = (payload(p + 2) >> 2) & 3
-      val pad = (payload(p + 2) >> 1) & 1
-      val sr = Mp3Rates(srIdx)
-      val frameLen = 144 * Mp3Kbps(brIdx) * 1000 / sr + pad
-      require(p + frameLen <= payload.length, "mp3: truncated frame")
+      val (_, sr, frameLen) = mp3FrameHeader(payload, p)
       val si = new BitReader(payload, (p + 4) * 8)
       val mainDataBegin = si.get(9)
       require(mainDataBegin == 0, "mp3: bit reservoir unsupported")

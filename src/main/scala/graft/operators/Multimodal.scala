@@ -135,13 +135,13 @@ object Multimodal {
     bb.array()
   }
 
-  /** REAL WAV decode: walk the RIFF chunk list (unknown chunks are
-    * skipped by their declared length), validate the fmt chunk
-    * (PCM / mono / 16-bit), stream the data chunk's little-endian
-    * samples, and fold sample statistics. Malformed input fails loudly
-    * with the offending reason. Returns
-    * (n_samples, sample_rate, sum of squared samples, peak |sample|). */
-  def decodeWav(payload: Array[Byte]): (Long, Long, Long, Long) = {
+  /** REAL WAV decode: walk the RIFF chunk list (every chunk is stepped
+    * over by its declared length plus the pad byte RIFF adds after an
+    * odd length; unknown chunks are skipped), validate the fmt chunk
+    * (PCM / mono / 16-bit), and read the one data chunk's
+    * little-endian samples. Malformed input fails loudly with the
+    * offending reason. Returns (sample_rate, samples). */
+  def decodeWavSamples(payload: Array[Byte]): (Long, Array[Short]) = {
     val bb = java.nio.ByteBuffer.wrap(payload)
       .order(java.nio.ByteOrder.LITTLE_ENDIAN)
     def str4(): String = {
@@ -152,15 +152,13 @@ object Multimodal {
     bb.getInt // declared riff payload length (unchecked: stream-style)
     require(str4() == "WAVE", "wav: not a WAVE form")
     var sampleRate = 0L
+    var samples: Array[Short] = null
     var seenFmt = false
-    var seenData = false
-    var nSamples = 0L
-    var sumSq = 0L
-    var peak = 0L
     while (bb.remaining() >= 8) {
       val id = str4()
       val len = bb.getInt
       require(len >= 0 && len <= bb.remaining(), s"wav: bad $id chunk length")
+      val next = math.min(bb.position() + len + (len & 1), bb.limit())
       id match {
         case "fmt " =>
           require(len >= 16, "wav: short fmt chunk")
@@ -173,26 +171,33 @@ object Multimodal {
           require(fmt == 1, s"wav: not PCM (fmt=$fmt)")
           require(channels == 1, s"wav: not mono (channels=$channels)")
           require(bits == 16, s"wav: not 16-bit (bits=$bits)")
-          if (len > 16) bb.position(bb.position() + len - 16)
           seenFmt = true
         case "data" =>
           require(seenFmt, "wav: data chunk before fmt")
+          require(samples == null, "wav: second data chunk")
+          samples = new Array[Short](len / 2)
           var i = 0
-          while (i + 1 < len) {
-            val s = bb.getShort().toLong
-            sumSq += s * s
-            val a = math.abs(s)
-            if (a > peak) peak = a
-            nSamples += 1
-            i += 2
-          }
-          seenData = true
-        case _ =>
-          bb.position(bb.position() + len) // skip unknown chunk
+          while (i < samples.length) { samples(i) = bb.getShort(); i += 1 }
+        case _ => // unknown chunk: skipped
       }
+      bb.position(next)
     }
-    require(seenData, "wav: no data chunk")
-    (nSamples, sampleRate, sumSq, peak)
+    require(samples != null, "wav: no data chunk")
+    (sampleRate, samples)
+  }
+
+  /** [[decodeWavSamples]] folded to sample statistics: (n_samples,
+    * sample_rate, sum of squared samples, peak |sample|). */
+  def decodeWav(payload: Array[Byte]): (Long, Long, Long, Long) = {
+    val (sampleRate, samples) = decodeWavSamples(payload)
+    var sumSq = 0L
+    var peak = 0L
+    for (v <- samples) {
+      val s = v.toLong
+      sumSq += s * s
+      peak = math.max(peak, math.abs(s))
+    }
+    (samples.length.toLong, sampleRate, sumSq, peak)
   }
 
   /** documents -> real WAV media table (one genuine WAV payload per
@@ -256,47 +261,6 @@ object Multimodal {
 
   case class WavFrame(doc_id: Long, frame_idx: Long, energy: Long,
                       zcr: Long, peak: Long)
-
-  /** REAL WAV decode returning the raw samples (same chunk walk and
-    * validation as [[decodeWav]], but the data chunk is kept). */
-  def decodeWavSamples(payload: Array[Byte]): (Long, Array[Short]) = {
-    val bb = java.nio.ByteBuffer.wrap(payload)
-      .order(java.nio.ByteOrder.LITTLE_ENDIAN)
-    def str4(): String = {
-      val a = new Array[Byte](4); bb.get(a); new String(a, "US-ASCII")
-    }
-    require(bb.remaining() >= 12, "wav: truncated header")
-    require(str4() == "RIFF", "wav: missing RIFF magic")
-    bb.getInt
-    require(str4() == "WAVE", "wav: not a WAVE form")
-    var sampleRate = 0L
-    var samples: Array[Short] = null
-    var seenFmt = false
-    while (bb.remaining() >= 8) {
-      val id = str4()
-      val len = bb.getInt
-      require(len >= 0 && len <= bb.remaining(), s"wav: bad $id chunk length")
-      id match {
-        case "fmt " =>
-          require(len >= 16, "wav: short fmt chunk")
-          require(bb.getShort() == 1, "wav: not PCM")
-          require(bb.getShort() == 1, "wav: not mono")
-          sampleRate = bb.getInt().toLong
-          bb.getInt(); bb.getShort()
-          require(bb.getShort() == 16, "wav: not 16-bit")
-          if (len > 16) bb.position(bb.position() + len - 16)
-          seenFmt = true
-        case "data" =>
-          require(seenFmt, "wav: data chunk before fmt")
-          samples = new Array[Short](len / 2)
-          var i = 0
-          while (i < samples.length) { samples(i) = bb.getShort(); i += 1 }
-        case _ => bb.position(bb.position() + len)
-      }
-    }
-    require(samples != null, "wav: no data chunk")
-    (sampleRate, samples)
-  }
 
   /** Frame-level audio features over REAL decoded WAV samples — the
     * VAD/speech-pipeline shape: the clip splits into fixed 64-sample
@@ -1262,13 +1226,37 @@ object Multimodal {
     id3 ++ frames.flatten
   }
 
+  /** One MPEG-1 Layer III frame header at `p` (4 bytes must remain):
+    * sync bits, MPEG-1 / Layer III version bits, bitrate index (0
+    * "free" and 15 rejected), sample-rate index (3 reserved). Returns
+    * (bitrate kbps, sample rate, spec frame length 144*bitrate/
+    * samplerate + padding); the frame must fit the payload. Malformed
+    * headers fail loudly. */
+  private[operators] def mp3FrameHeader(payload: Array[Byte],
+                                        p: Int): (Int, Int, Int) = {
+    require(payload(p) == 0xff.toByte
+      && (payload(p + 1) & 0xe0) == 0xe0, "mp3: lost frame sync")
+    val version = (payload(p + 1) >> 3) & 3
+    val layer = (payload(p + 1) >> 1) & 3
+    require(version == 3, s"mp3: not MPEG-1 (version bits $version)")
+    require(layer == 1, s"mp3: not Layer III (layer bits $layer)")
+    val brIdx = (payload(p + 2) >> 4) & 15
+    val srIdx = (payload(p + 2) >> 2) & 3
+    val pad = (payload(p + 2) >> 1) & 1
+    require(brIdx >= 1 && brIdx <= 14, s"mp3: bad bitrate index $brIdx")
+    require(srIdx != 3, "mp3: reserved sample-rate index")
+    val sr = Mp3Rates(srIdx)
+    val len = 144 * Mp3Kbps(brIdx) * 1000 / sr + pad
+    require(p + len <= payload.length, "mp3: truncated frame")
+    (Mp3Kbps(brIdx), sr, len)
+  }
+
   /** REAL MP3 frame walk: skip a leading ID3v2 tag by its syncsafe
-    * size, then step frame to frame — validating sync bits, MPEG-1 /
-    * Layer III version bits, bitrate index (0 "free" and 15 rejected),
-    * sample-rate index — advancing by the spec frame length
-    * 144*bitrate/samplerate + padding. Returns (frame count, sample
-    * rate, total kbps, bytes walked); duration follows from 1152
-    * samples per frame. Malformed input fails loudly. */
+    * size, then step frame to frame through [[mp3FrameHeader]], which
+    * validates each header and gives the spec frame length to advance
+    * by. Returns (frame count, sample rate, total kbps, bytes walked);
+    * duration follows from 1152 samples per frame. Malformed input
+    * fails loudly. */
   def walkMp3(payload: Array[Byte]): (Long, Long, Long, Long) = {
     var p = 0
     if (payload.length >= 10 && payload(0) == 'I' && payload(1) == 'D'
@@ -1282,22 +1270,10 @@ object Multimodal {
     var sumKbps = 0L
     var sr = -1
     while (p + 4 <= payload.length) {
-      require(payload(p) == 0xff.toByte
-        && (payload(p + 1) & 0xe0) == 0xe0, "mp3: lost frame sync")
-      val version = (payload(p + 1) >> 3) & 3
-      val layer = (payload(p + 1) >> 1) & 3
-      require(version == 3, s"mp3: not MPEG-1 (version bits $version)")
-      require(layer == 1, s"mp3: not Layer III (layer bits $layer)")
-      val brIdx = (payload(p + 2) >> 4) & 15
-      val srIdx = (payload(p + 2) >> 2) & 3
-      val pad = (payload(p + 2) >> 1) & 1
-      require(brIdx >= 1 && brIdx <= 14, s"mp3: bad bitrate index $brIdx")
-      require(srIdx != 3, "mp3: reserved sample-rate index")
-      require(sr < 0 || sr == Mp3Rates(srIdx), "mp3: sample rate changed")
-      sr = Mp3Rates(srIdx)
-      val len = 144 * Mp3Kbps(brIdx) * 1000 / sr + pad
-      require(p + len <= payload.length, "mp3: truncated frame")
-      sumKbps += Mp3Kbps(brIdx)
+      val (kbps, rate, len) = mp3FrameHeader(payload, p)
+      require(sr < 0 || sr == rate, "mp3: sample rate changed")
+      sr = rate
+      sumKbps += kbps
       nFrames += 1
       p += len
     }

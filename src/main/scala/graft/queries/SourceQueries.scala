@@ -849,34 +849,10 @@ object SourceQueries {
     * the generator's (doc_id, mb index) arithmetic, the spec DC
     * reconstruction (Hadamard, LevelScale requantization, (dc+32)>>6
     * inverse core, Clip1) replayed per 4x4 block, and the left-only
-    * DC-prediction chain UNROLLED over mbx 0..9 (the Lloyd/GD CTE
-    * unroll move; widthMbs <= 10). DuckDB's `>>` is arithmetic on
-    * negatives, matching the engine's Scala `>>`. */
-  private lazy val h264MbOracle: String = {
-    def clip(e: String) = s"LEAST(GREATEST($e, 0), 255)"
-    def step(k: Int): String = {
-      val pred = if (k == 0) "128"
-        else s"(4 * p.rc_sum + 8) >> 4"
-      val join = if (k == 0) ""
-        else s" JOIN s${k - 1} p ON p.d = b.d AND p.mby = b.mby"
-      s"""s$k AS (SELECT b.d, b.mby, $pred AS pred,
-         |  SUM(${clip(s"($pred) + b.res")}) AS recon_sum,
-         |  SUM(CASE WHEN b.bj = 3
-         |      THEN ${clip(s"($pred) + b.res")} ELSE 0 END) AS rc_sum
-         |  FROM blk b$join WHERE b.mbx = $k
-         |  GROUP BY 1, 2, 3)""".stripMargin
-    }
-    val steps = (0 to 9).map(step).mkString(",\n")
-    val union = (0 to 9).map(k =>
-      s"SELECT CAST($k AS BIGINT) AS mbx, * FROM s$k")
-      .mkString("\nUNION ALL ")
-    s"""WITH d AS (SELECT CAST(doc_id AS BIGINT) AS d FROM documents),
-       |pp AS (SELECT d, 2 + d % 9 AS w, 2 + d % 5 AS h,
-       |         20 + d % 16 AS qp FROM d),
-       |mb AS (SELECT d, qp, mby, mbx, mby * w + mbx AS idx
-       |       FROM pp,
-       |       LATERAL (SELECT unnest(generate_series(0, h - 1)) AS mby) uy,
-       |       LATERAL (SELECT unnest(generate_series(0, w - 1)) AS mbx) ux),
+    * DC-prediction chain unrolled ([[H264Sql]]). */
+  private lazy val h264MbOracle: String =
+    s"""WITH ${H264Sql.grid},
+       |${H264Sql.tables},
        |at AS (SELECT d, mby, mbx, qp,
        |        CASE WHEN (d + idx) % 5 = 0 THEN 0 ELSE 1 END AS tc,
        |        CASE WHEN (d + idx) % 5 = 0 THEN 0
@@ -892,27 +868,8 @@ object SourceQueries {
        |nc AS (SELECT a.*, CASE WHEN a.mbx = 0 THEN 0 ELSE l.tc END AS n_c
        |       FROM lv a LEFT JOIN lv l ON l.d = a.d AND l.mby = a.mby
        |         AND l.mbx = a.mbx - 1),
-       |zz AS (SELECT * FROM (VALUES (0,0,0),(1,0,1),(2,1,0),(3,2,0),
-       |        (4,1,1),(5,0,2),(6,0,3),(7,1,2),(8,2,1),(9,3,0),(10,3,1),
-       |        (11,2,2),(12,1,3),(13,2,3),(14,3,2),(15,3,3))
-       |        v(p, pr, pc)),
-       |hm AS (SELECT * FROM (VALUES (0,0,1),(0,1,1),(0,2,1),(0,3,1),
-       |        (1,0,1),(1,1,1),(1,2,-1),(1,3,-1),
-       |        (2,0,1),(2,1,-1),(2,2,-1),(2,3,1),
-       |        (3,0,1),(3,1,-1),(3,2,1),(3,3,-1)) v(i, k, v)),
-       |ls AS (SELECT * FROM (VALUES (0,10),(1,11),(2,13),(3,14),(4,16),
-       |        (5,18)) v(m, a)),
-       |blk AS (SELECT n.d, n.mby, n.mbx, h1.i AS bi, h2.i AS bj,
-       |         ((((n.lvl * h1.v * h2.v) * ls.a
-       |             + (CAST(1 AS BIGINT) << (5 - n.qp // 6)))
-       |           >> (6 - n.qp // 6)) + 32) >> 6 AS res
-       |       FROM nc n
-       |       JOIN zz ON zz.p = n.pos
-       |       JOIN hm h1 ON h1.k = zz.pr
-       |       JOIN hm h2 ON h2.k = zz.pc
-       |       JOIN ls ON ls.m = n.qp % 6),
-       |$steps,
-       |u AS ($union)
+       |co AS (SELECT d, mby, mbx, pos, lvl FROM lv WHERE tc = 1),
+       |${H264Sql.dcOnlyRecon}
        |SELECT u.d AS doc_id, u.mbx, u.mby,
        |  CAST(n.tc AS BIGINT) AS tc, CAST(n.lvl AS BIGINT) AS lvl,
        |  CAST(n.pos AS BIGINT) AS pos, CAST(n.n_c AS BIGINT) AS n_c,
@@ -921,53 +878,19 @@ object SourceQueries {
        |  CAST(u.rc_sum AS BIGINT) AS rc_sum
        |FROM u JOIN nc n ON n.d = u.d AND n.mby = u.mby
        |  AND n.mbx = u.mbx""".stripMargin
-  }
 
   /** Multi-coefficient H.264 oracle: the coefficient SET (positions,
     * levels, TrailingOnes, total_zeros) re-derived from the generator's
     * (doc_id, mb, k) arithmetic, the multi-coefficient Hadamard
     * reconstruction replayed cell by cell (f_ij = Σ_k lvl_k·H[i][pr_k]
     * ·H[j][pc_k], then requant + (dc+32)>>6 + Clip1), and the left-only
-    * prediction chain unrolled over mbx 0..9 like the single-coefficient
-    * oracle. The engine must recover exactly these values THROUGH the
-    * real CAVLC bitstream. */
-  private lazy val h264AcOracle: String = {
-    def clip(e: String) = s"LEAST(GREATEST($e, 0), 255)"
-    def step(k: Int): String = {
-      val pred = if (k == 0) "128"
-        else s"(4 * p.rc_sum + 8) >> 4"
-      val join = if (k == 0) ""
-        else s" JOIN s${k - 1} p ON p.d = b.d AND p.mby = b.mby"
-      s"""s$k AS (SELECT b.d, b.mby, $pred AS pred,
-         |  SUM(${clip(s"($pred) + b.res")}) AS recon_sum,
-         |  SUM(CASE WHEN b.bj = 3
-         |      THEN ${clip(s"($pred) + b.res")} ELSE 0 END) AS rc_sum
-         |  FROM blk b$join WHERE b.mbx = $k
-         |  GROUP BY 1, 2, 3)""".stripMargin
-    }
-    val steps = (0 to 9).map(step).mkString(",\n")
-    val union = (0 to 9).map(k =>
-      s"SELECT CAST($k AS BIGINT) AS mbx, * FROM s$k")
-      .mkString("\nUNION ALL ")
-    s"""WITH d AS (SELECT CAST(doc_id AS BIGINT) AS d FROM documents),
-       |pp AS (SELECT d, 2 + d % 9 AS w, 2 + d % 5 AS h,
-       |         20 + d % 16 AS qp FROM d),
-       |mb AS (SELECT d, qp, mby, mbx, mby * w + mbx AS idx
-       |       FROM pp,
-       |       LATERAL (SELECT unnest(generate_series(0, h - 1)) AS mby) uy,
-       |       LATERAL (SELECT unnest(generate_series(0, w - 1)) AS mbx) ux),
-       |co AS (SELECT m.d, m.mby, m.mbx, m.qp,
-       |         ((m.d + m.idx * 7) % 6)
-       |           + kk.k * (1 + (m.d + m.idx) % 5) AS pos,
-       |         (CASE WHEN (m.d + m.idx + kk.k) % 2 = 0
-       |               THEN 1 ELSE -1 END)
-       |         * (CASE WHEN kk.k >= (m.d + m.idx) % 4
-       |                   - (m.d + m.idx * 5) % ((m.d + m.idx) % 4 + 1)
-       |                 THEN 1
-       |                 ELSE 2 + (m.d + m.idx * 3 + kk.k * 11) % 24 END)
-       |           AS lvl
-       |       FROM mb m, (SELECT unnest([0, 1, 2]) AS k) kk
-       |       WHERE kk.k < (m.d + m.idx) % 4),
+    * prediction chain unrolled like the single-coefficient oracle. The
+    * engine must recover exactly these values THROUGH the real CAVLC
+    * bitstream. */
+  private lazy val h264AcOracle: String =
+    s"""WITH ${H264Sql.grid},
+       |${H264Sql.tables},
+       |${H264Sql.acDcCoefs},
        |ag AS (SELECT d, mby, mbx, COUNT(*) AS tc, SUM(lvl) AS lvl_sum,
        |         SUM(pos) AS pos_sum,
        |         MAX(pos) + 1 - COUNT(*) AS tzeros,
@@ -994,36 +917,7 @@ object SourceQueries {
        |nc AS (SELECT a.*, CASE WHEN a.mbx = 0 THEN 0 ELSE l.tc END AS n_c
        |       FROM am a LEFT JOIN am l ON l.d = a.d AND l.mby = a.mby
        |         AND l.mbx = a.mbx - 1),
-       |zz AS (SELECT * FROM (VALUES (0,0,0),(1,0,1),(2,1,0),(3,2,0),
-       |        (4,1,1),(5,0,2),(6,0,3),(7,1,2),(8,2,1),(9,3,0),(10,3,1),
-       |        (11,2,2),(12,1,3),(13,2,3),(14,3,2),(15,3,3))
-       |        v(p, pr, pc)),
-       |hm AS (SELECT * FROM (VALUES (0,0,1),(0,1,1),(0,2,1),(0,3,1),
-       |        (1,0,1),(1,1,1),(1,2,-1),(1,3,-1),
-       |        (2,0,1),(2,1,-1),(2,2,-1),(2,3,1),
-       |        (3,0,1),(3,1,-1),(3,2,1),(3,3,-1)) v(i, k, v)),
-       |ls AS (SELECT * FROM (VALUES (0,10),(1,11),(2,13),(3,14),(4,16),
-       |        (5,18)) v(m, a)),
-       |fc AS (SELECT c.d, c.mby, c.mbx, h1.i AS bi, h2.i AS bj,
-       |         SUM(c.lvl * h1.v * h2.v) AS f
-       |       FROM co c
-       |       JOIN zz ON zz.p = c.pos
-       |       JOIN hm h1 ON h1.k = zz.pr
-       |       JOIN hm h2 ON h2.k = zz.pc
-       |       GROUP BY 1, 2, 3, 4, 5),
-       |cg AS (SELECT m.d, m.mby, m.mbx, m.qp, ii.i AS bi, jj.i AS bj
-       |       FROM mb m, (SELECT unnest([0, 1, 2, 3]) AS i) ii,
-       |            (SELECT unnest([0, 1, 2, 3]) AS i) jj),
-       |blk AS (SELECT g.d, g.mby, g.mbx, g.bi, g.bj,
-       |         ((((COALESCE(f.f, 0) * ls.a
-       |             + (CAST(1 AS BIGINT) << (5 - g.qp // 6)))
-       |           >> (6 - g.qp // 6)) + 32) >> 6) AS res
-       |       FROM cg g
-       |       LEFT JOIN fc f ON f.d = g.d AND f.mby = g.mby
-       |         AND f.mbx = g.mbx AND f.bi = g.bi AND f.bj = g.bj
-       |       JOIN ls ON ls.m = g.qp % 6),
-       |$steps,
-       |u AS ($union)
+       |${H264Sql.dcOnlyRecon}
        |SELECT u.d AS doc_id, u.mbx, u.mby,
        |  CAST(n.tc AS BIGINT) AS tc, CAST(n.t1s AS BIGINT) AS t1s,
        |  CAST(n.tzeros AS BIGINT) AS tzeros,
@@ -1035,7 +929,6 @@ object SourceQueries {
        |  CAST(u.rc_sum AS BIGINT) AS rc_sum
        |FROM u JOIN nc n ON n.d = u.d AND n.mby = u.mby
        |  AND n.mbx = u.mbx""".stripMargin
-  }
 
   /** CBP luma-15 oracle: the full I_16x16 residual assembly replayed —
     * analytic DC + AC coefficient sets, the 8.5.10 DC Hadamard/scale,
@@ -1043,11 +936,10 @@ object SourceQueries {
     * table, the 8.5.12.2 integer butterfly UNROLLED as wide-column
     * expressions (rows then columns, >>1 on intermediates — NOT a
     * matrix multiply, so the two passes are generated inline), and the
-    * left-only DC prediction chain stepped over mbx 0..9. dc_nc
-    * simplifies analytically: the left MB's blk(3,0) AC TotalCoeff is
-    * (d + idx + 9) % 3 for mbx > 0. */
+    * left-only DC prediction chain stepped over mbx 0..9 ([[H264Sql]]).
+    * dc_nc simplifies analytically: the left MB's blk(3,0) AC
+    * TotalCoeff is (d + idx + 9) % 3 for mbx > 0. */
   private lazy val h264CbpOracle: String = {
-    def clip(e: String) = s"LEAST(GREATEST($e, 0), 255)"
     // row butterfly: f_{i j} from d_{i 0..3}; col butterfly + (g+32)>>6
     def fCols: String = (0 to 3).map { i =>
       val (d0, d1, d2, d3) = (s"d${i}0", s"d${i}1", s"d${i}2", s"d${i}3")
@@ -1073,76 +965,16 @@ object SourceQueries {
       .mkString(",\n  ")
     val resCase = (for (i <- 0 to 3; j <- 0 to 3) yield
       s"WHEN ${4 * i + j} THEN r$i$j").mkString(" ")
-    def step(k: Int): String = {
-      val pred = if (k == 0) "128" else "(p.rc_sum + 8) >> 4"
-      val join = if (k == 0) ""
-        else s" JOIN s${k - 1} p ON p.d = b.d AND p.mby = b.mby"
-      s"""s$k AS (SELECT b.d, b.mby, $pred AS pred,
-         |  SUM(${clip(s"($pred) + b.res")}) AS recon_sum,
-         |  SUM(CASE WHEN b.x = 15
-         |      THEN ${clip(s"($pred) + b.res")} ELSE 0 END) AS rc_sum,
-         |  SUM((b.y * 16 + b.x + 1) * ${clip(s"($pred) + b.res")})
-         |    AS wsum
-         |  FROM pix b$join WHERE b.mbx = $k
-         |  GROUP BY 1, 2, 3)""".stripMargin
-    }
-    val steps = (0 to 9).map(step).mkString(",\n")
-    val union = (0 to 9).map(k =>
-      s"SELECT CAST($k AS BIGINT) AS mbx, * FROM s$k")
-      .mkString("\nUNION ALL ")
-    s"""WITH d AS (SELECT CAST(doc_id AS BIGINT) AS d FROM documents),
-       |pp AS (SELECT d, 2 + d % 9 AS w, 2 + d % 5 AS h,
-       |         20 + d % 16 AS qp FROM d),
-       |mb AS (SELECT d, qp, mby, mbx, mby * w + mbx AS idx
-       |       FROM pp,
-       |       LATERAL (SELECT unnest(generate_series(0, h - 1)) AS mby) uy,
-       |       LATERAL (SELECT unnest(generate_series(0, w - 1)) AS mbx) ux),
-       |zz AS (SELECT * FROM (VALUES (0,0,0),(1,0,1),(2,1,0),(3,2,0),
-       |        (4,1,1),(5,0,2),(6,0,3),(7,1,2),(8,2,1),(9,3,0),(10,3,1),
-       |        (11,2,2),(12,1,3),(13,2,3),(14,3,2),(15,3,3))
-       |        v(p, pr, pc)),
-       |hm AS (SELECT * FROM (VALUES (0,0,1),(0,1,1),(0,2,1),(0,3,1),
-       |        (1,0,1),(1,1,1),(1,2,-1),(1,3,-1),
-       |        (2,0,1),(2,1,-1),(2,2,-1),(2,3,1),
-       |        (3,0,1),(3,1,-1),(3,2,1),(3,3,-1)) v(i, k, v)),
-       |na AS (SELECT * FROM (VALUES (0,0,10),(0,1,16),(0,2,13),
-       |        (1,0,11),(1,1,18),(1,2,14),(2,0,13),(2,1,20),(2,2,16),
-       |        (3,0,14),(3,1,23),(3,2,18),(4,0,16),(4,1,25),(4,2,20),
-       |        (5,0,18),(5,1,29),(5,2,23)) v(m, cls, a)),
+    val chain = H264Sql.chain("pix", "(p.rc_sum + 8) >> 4", "b.x = 15",
+      Seq(("(b.y * 16 + b.x + 1)", "wsum")))
+    s"""WITH ${H264Sql.grid},
+       |${H264Sql.tables},
        |bm AS (SELECT * FROM (VALUES (0,0,0),(1,1,0),(2,0,1),(3,1,1),
        |        (4,2,0),(5,3,0),(6,2,1),(7,3,1),(8,0,2),(9,1,2),
        |        (10,0,3),(11,1,3),(12,2,2),(13,3,2),(14,2,3),(15,3,3))
        |        v(blk, bx, by)),
-       |dcc AS (SELECT m.d, m.mby, m.mbx, m.qp,
-       |         ((m.d + m.idx * 7) % 6)
-       |           + kk.k * (1 + (m.d + m.idx) % 5) AS pos,
-       |         (CASE WHEN (m.d + m.idx + kk.k) % 2 = 0
-       |               THEN 1 ELSE -1 END)
-       |         * (CASE WHEN kk.k >= (m.d + m.idx) % 4
-       |                   - (m.d + m.idx * 5) % ((m.d + m.idx) % 4 + 1)
-       |                 THEN 1
-       |                 ELSE 2 + (m.d + m.idx * 3 + kk.k * 11) % 24 END)
-       |           AS lvl
-       |       FROM mb m, (SELECT unnest([0, 1, 2]) AS k) kk
-       |       WHERE kk.k < (m.d + m.idx) % 4),
-       |dcf AS (SELECT c.d, c.mby, c.mbx, h1.i AS bi, h2.i AS bj,
-       |         SUM(c.lvl * h1.v * h2.v) AS f
-       |       FROM dcc c
-       |       JOIN zz ON zz.p = c.pos
-       |       JOIN hm h1 ON h1.k = zz.pr
-       |       JOIN hm h2 ON h2.k = zz.pc
-       |       GROUP BY 1, 2, 3, 4, 5),
-       |dcy AS (SELECT m.d, m.mby, m.mbx, g.bi, g.bj,
-       |         ((COALESCE(f.f, 0) * n0.a
-       |             + (CAST(1 AS BIGINT) << (5 - m.qp // 6)))
-       |           >> (6 - m.qp // 6)) AS dcy
-       |       FROM mb m
-       |       JOIN na n0 ON n0.m = m.qp % 6 AND n0.cls = 0
-       |       CROSS JOIN (SELECT h1.i AS bi, h2.i AS bj FROM
-       |         (SELECT DISTINCT i FROM hm) h1,
-       |         (SELECT DISTINCT i FROM hm) h2) g
-       |       LEFT JOIN dcf f ON f.d = m.d AND f.mby = m.mby
-       |         AND f.mbx = m.mbx AND f.bi = g.bi AND f.bj = g.bj),
+       |${H264Sql.acDcCoefs},
+       |${H264Sql.dcScale},
        |acc AS (SELECT m.d, m.mby, m.mbx, m.qp, b.blk, b.bx, b.by,
        |         zz.pr AS zr, zz.pc AS zc,
        |         (CASE WHEN (m.d + m.idx + b.blk + kk.k) % 2 = 0
@@ -1190,8 +1022,7 @@ object SourceQueries {
        |       FROM rmat r,
        |       (SELECT unnest([0, 1, 2, 3]) AS i) pi,
        |       (SELECT unnest([0, 1, 2, 3]) AS j) pj),
-       |$steps,
-       |u AS ($union),
+       |$chain,
        |agg AS (SELECT m.d, m.mby, m.mbx,
        |         (m.d + m.idx) % 4 AS dc_tc,
        |         CASE WHEN m.mbx = 0 THEN 0

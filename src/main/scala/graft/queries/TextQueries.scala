@@ -900,12 +900,14 @@ object TextQueries {
             least(lit(UniMaxLen), length(col("w")) - i + 1)), l =>
             col("w").substr(i, l))))).as("s"))
       .groupBy("s").agg(sum("f").as("c"))
-      .localCheckpoint() // chars + top-multi read it
-    val chars = subs.filter(length(col("s")) === 1)
-      .collect().map(r => (r.getString(0), r.getLong(1)))
-    val multi = subs.filter(length(col("s")) >= 2)
-      .orderBy(col("c").desc, col("s").asc).limit(UniSeedMulti)
-      .collect().map(r => (r.getString(0), r.getLong(1)))
+      .localCheckpoint() // chars + top-multi read it, nothing after
+    val (chars, multi) =
+      try (subs.filter(length(col("s")) === 1)
+          .collect().map(r => (r.getString(0), r.getLong(1))),
+        subs.filter(length(col("s")) >= 2)
+          .orderBy(col("c").desc, col("s").asc).limit(UniSeedMulti)
+          .collect().map(r => (r.getString(0), r.getLong(1))))
+      finally Bpe.release(subs)
     val vocab = (chars ++ multi).map(_._1).toSeq
     var scores = uniMStep(vocab, (chars ++ multi).toMap)
     for (_ <- 1 until UniRounds) {

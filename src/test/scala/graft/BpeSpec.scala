@@ -110,4 +110,20 @@ class BpeSpec extends AnyFunSuite with SharedSpark {
       assert((persisted -- before).isEmpty, q)
     }
   }
+
+  test("Unigram: training leaves only the word table its result reads") {
+    // the seed-substring checkpoint is read by two collects and then
+    // dropped; the checkpointed word table lives as long as the frame
+    def persisted = spark.sparkContext.getPersistentRDDs.keySet
+    for (q <- Seq("q_unigram_train", "q_unigram_fertility")) {
+      val before = persisted
+      val df = SparkEntry.queries(q)(spark, SfDir)
+      df.collect()
+      val read = df.queryExecution.logical.collect {
+        case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd.id
+      }.toSet
+      assert(read.size === 1, q)
+      assert((persisted -- before) === read, q)
+    }
+  }
 }
