@@ -33,14 +33,21 @@ object TextFunctions {
   /** BPE-ish tokenizer: letter runs, digit runs, single punctuation. */
   val tokenPattern: String = "[A-Za-z]+|[0-9]+|[^A-Za-z0-9\\s]"
 
-  /** Polynomial rolling hash over characters, mod 1e9+7. Sequential fold —
-    * order-sensitive by design (a fingerprint, not a bag hash); exact in
-    * integer space so both engines agree bit-for-bit. */
-  def rollingFingerprint(text: Column): Column =
-    aggregate(
-      filter(split(text, ""), c => length(c) > lit(0)),
-      lit(0L),
-      (acc, c) => (acc * lit(31L) + ascii(c).cast("long")) % lit(1000000007L))
+  /** The char codes of `text`, as longs. */
+  def codes(text: Column): Column =
+    transform(filter(split(text, ""), c => length(c) > lit(0)),
+      c => ascii(c).cast("long"))
+
+  /** The engine's one polynomial fold: ((0·base + x1)·base + x2)·… mod
+    * `mod` over the long array `xs`. Sequential — order-sensitive by
+    * design (a fingerprint, not a bag hash); exact in integer space so
+    * both engines agree bit-for-bit (queries.TextSql.fold is its twin). */
+  def fold(xs: Column, base: Long, mod: Long): Column =
+    aggregate(xs, lit(0L), (acc, x) => (acc * lit(base) + x) % lit(mod))
+
+  /** Polynomial rolling hash over characters, mod 1e9+7. */
+  def rollingFingerprint(text: Column, base: Long = 31L): Column =
+    fold(codes(text), base, 1000000007L)
 
   /** Per-language stopword lists (quality scoring, Gopher rules, the
     * blocklist inventory). Reference analogue: gpd_lite_toolbox has no

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.functions.TextFunctions.{codes, fold}
 
 /** Near-duplicate detection for document corpora (SURVEY.md §2 rows 29-31).
   *
@@ -120,8 +121,7 @@ object Dedup {
   private def bandHashExprs(numHashes: Int, bands: Int): Column = {
     val rows = numHashes / bands
     array((0 until bands).map { bi =>
-      aggregate(slice(col("sig"), bi * rows + 1, rows), lit(0L),
-        (acc, m) => (acc * lit(33L) + m) % lit(P))
+      fold(slice(col("sig"), bi * rows + 1, rows), 33L, P)
     }: _*)
   }
 
@@ -326,10 +326,7 @@ object Dedup {
     * Filter build is ONE aggregate over benchmark shingles (probe
     * positions → bit_or per 32-bit word, map-side combined to ≤32768
     * rows) collected as a driver-sized model — the centroid/codebook
-    * pattern. 32-bit words because DuckDB BIGINT `<<` range-checks bit
-    * 63 (the simhash/dHash portability rule); the bit test is exact
-    * dyadic arithmetic (w·2^-bit is exact for w < 2^32), no
-    * column-amount shift needed on either engine.
+    * pattern. The layout, hashes and bit test are [[Bloom]]'s.
     *
     * Returns (doc_id, n_shingles, n_bloom_pass, n_hits, n_false_pos,
     * ratio, flagged) — the diagnostic columns pin the FILTER itself, not
@@ -339,38 +336,14 @@ object Dedup {
     * define the same predicate). doc_id must be a row key of `corpus`. */
   def decontaminateBloom(corpus: DataFrame, benchmark: DataFrame, k: Int,
                          flagAt: Double): DataFrame = {
-    val P = 1000000007L
     val MBits = 1048576L // 1 Mbit = 32768 x 32-bit words (256 KiB model)
-    val coef = Seq((31L, 1L), (131L, 9177L), (1009L, 18353L),
-      (65537L, 27529L))
-    def posOf(s: Column, i: Int): Column =
-      pmod(pmod(s * lit(coef(i)._1) + lit(coef(i)._2), lit(P)), lit(MBits))
-
-    val benchSh = shingleHashes(benchmark, k, 131L, P)
+    val benchSh = shingleHashes(benchmark, k, 131L, 1000000007L)
       .select(col("s")).distinct()
-    // build: probe positions -> (word, mask) -> bit_or per word
-    val wordRows = benchSh
-      .select(explode(array(coef.indices.map(i =>
-        posOf(col("s"), i)): _*)).as("p"))
-      .select(floor(col("p") / lit(32L)).cast("int").as("word"),
-        pmod(col("p"), lit(32L)).cast("int").as("bit"))
-      .groupBy("word")
-      // 2^bit via exact dyadic double arithmetic, not a column shift
-      .agg(bit_or(pow(lit(2.0), col("bit")).cast("long")).as("bits"))
-      .collect()
     val words = new Array[Long](32768)
-    wordRows.foreach(r => words(r.getInt(0)) = r.getLong(1))
-    val bloom = typedLit(words.toSeq)
-
-    def bitSet(p: Column): Column = {
-      val w = element_at(bloom, (floor(p / lit(32L)) + lit(1L)).cast("int"))
-      // w * 2^-bit, floored, parity — exact for 32-bit words
-      pmod(floor(w.cast("double") *
-        pow(lit(0.5), pmod(p, lit(32L)).cast("double"))).cast("long"),
-        lit(2L)) === lit(1L)
-    }
-    val mightContain = coef.indices.map(i => bitSet(posOf(col("s"), i)))
-      .reduce(_ && _)
+    Bloom.words(benchSh, "s", MBits, Nil).collect()
+      .foreach(r => words(r.getInt(0)) = r.getLong(1))
+    val mightContain =
+      Bloom.mightContain(typedLit(words.toSeq), col("s"), MBits)
 
     // one distinct-shingle scan feeds both the per-doc counts and the
     // confirm join — materialize it once (the multi-consumer lineage cut)
@@ -450,17 +423,14 @@ object Dedup {
     // Final 2654435761x mixing multiply spreads short tokens' small hash
     // values across all 30 bits (a bare rolling hash of a 3-char word
     // never touches the high bits, which would blow up band collisions).
-    def fold(mult: Long) =
-      (aggregate(filter(split(col("w"), ""), c => length(c) > lit(0)),
-        lit(0L),
-        (acc, c) => (acc * lit(mult) + ascii(c).cast("long")) % lit(P))
-        * lit(2654435761L)) % lit(P)
+    def hash(mult: Long) =
+      (fold(codes(col("w")), mult, P) * lit(2654435761L)) % lit(P)
     val toks = docs
       .select(col("doc_id"),
         explode(split(lower(trim(col("text"))), "\\s+")).as("w"))
       .filter(length(col("w")) > 0)
-      .withColumn("h1", fold(31L))
-      .withColumn("h2", fold(37L))
+      .withColumn("h1", hash(31L))
+      .withColumn("h2", hash(37L))
     val bitSums = (0 until 60).map { i =>
       val src = if (i < 30) col("h1") else col("h2")
       sum(when(shiftright(src, i % 30).bitwiseAND(lit(1L)) === 1L, 1)

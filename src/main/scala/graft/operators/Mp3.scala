@@ -338,6 +338,7 @@ object Mp3 {
       p += frameLen
       fIdx += 1
     }
+    require(p == payload.length, "mp3: trailing garbage")
     require(out.nonEmpty, "mp3: no frames")
     out.toSeq
   }

@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.Tables
+import graft.operators.Bloom
 
 /** TPC-H-style analytics queries (engine credibility + bench headliners).
   *
@@ -861,47 +862,30 @@ object Analytics {
     * present keys with PLANTED-ABSENT twins (+1e9 offset), so hits,
     * clean skips AND false positives all occur — the FP rate is the
     * skip-index trade being measured (~4 bits/key at k=4 hashes).
-    * 32-bit words + dyadic bit tests: the simhash/decontaminateBloom
-    * portability rule. Exact membership comes from an independent
-    * distinct-pair join, never from the filter itself. */
+    * The layout, hashes and bit test are operators.Bloom's. Exact
+    * membership comes from an independent distinct-pair join, never
+    * from the filter itself. */
   def qBloomSkipIndex(spark: SparkSession, dir: String): DataFrame = {
-    val P = 1000000007L
     val MBits = 4096L
-    val coef = Seq((31L, 1L), (131L, 9177L), (1009L, 18353L),
-      (65537L, 27529L))
-    def posOf(k: org.apache.spark.sql.Column, i: Int) =
-      pmod(pmod(k * lit(coef(i)._1) + lit(coef(i)._2), lit(P)),
-        lit(MBits))
     val oDist = Tables.load(spark, dir, "orders")
       .select(expr("CAST(o_orderkey AS BIGINT) DIV 1024").as("file_id"),
         col("o_custkey").cast("long").as("key"))
       .distinct()
       .localCheckpoint() // bloom build + exact-membership join
-    val bloomRows = oDist
-      .select(col("file_id"), explode(array(coef.indices.map(i =>
-        posOf(col("key"), i)): _*)).as("p"))
-      .select(col("file_id"), expr("p DIV 32").as("word"),
-        pmod(col("p"), lit(32L)).cast("int").as("bit"))
-      .groupBy("file_id", "word")
-      .agg(bit_or(expr("shiftleft(CAST(1 AS BIGINT), bit)")).as("bits"))
+    val bloomRows = Bloom.words(oDist, "key", MBits, Seq("file_id"))
     val files = oDist.select("file_id").distinct()
     val ck = Tables.load(spark, dir, "customer")
       .select(col("c_custkey").cast("long").as("key"))
       .filter(col("key") % 499 === 3)
     val probes = ck.unionByName(
       ck.select((col("key") + 1000000000L).as("key")))
-    val probeHash = probes
-      .select(col("key"), explode(array(coef.indices.map(i =>
-        posOf(col("key"), i)): _*)).as("p"))
-      .select(col("key"), expr("p DIV 32").as("word"),
-        pmod(col("p"), lit(32L)).cast("int").as("bit"))
+    val probeHash = Bloom.probes(probes, "key", MBits, Seq("key"))
     // every (file, probe) tests all 4 positions; a missing word row is
     // an all-zero word (coalesce), so the count per group is exactly 4
     val tests = files.crossJoin(broadcast(probeHash))
       .join(bloomRows, Seq("file_id", "word"), "left")
-      .withColumn("bits0", coalesce(col("bits"), lit(0L)))
       .withColumn("set",
-        expr("(shiftright(bits0, bit) % 2) = 1"))
+        Bloom.isSet(coalesce(col("bits"), lit(0L)), col("bit")))
       .groupBy("file_id", "key")
       .agg((sum(when(col("set"), 1L).otherwise(0L)) === 4L)
         .as("bloom_hit"))
@@ -1550,12 +1534,7 @@ object Analytics {
         s"""15 - (list_max(list_transform(generate_series(0, ${n - 1}),
            |  s -> (${mix("s")}) * 16 + (15 - s))) % 16)""".stripMargin
       s"""WITH d AS (SELECT CAST(doc_id AS BIGINT) AS doc_id,
-         |    list_reduce(list_prepend(CAST(0 AS BIGINT),
-         |      list_transform(list_filter(string_split(
-         |          lower(trim(regexp_replace(text, '\\s+', ' ', 'g'))),
-         |          ''), c -> len(c) > 0),
-         |        c -> CAST(ascii(c) AS BIGINT))),
-         |      (a, b) -> (a * 31 + b) % 1000000007) AS h
+         |    ${TextSql.fp(TextSql.norm("text"))} AS h
          |  FROM documents),
          |a AS (SELECT doc_id, h, h % 8 AS mod8, h % 9 AS mod9,
          |        ${hrw(8)} AS hrw8, ${hrw(9)} AS hrw9
@@ -1835,27 +1814,23 @@ object Analytics {
     // membership tested via arithmetic shift (positive 32-bit words),
     // exact presence from an independent distinct-pair join
     "q_bloom_skip_index" ->
-      """WITH o AS (SELECT DISTINCT
+      s"""WITH o AS (SELECT DISTINCT
         |             CAST(o_orderkey AS BIGINT) // 1024 AS file_id,
         |             CAST(o_custkey AS BIGINT) AS key
         |           FROM orders),
-        |hs AS (SELECT * FROM (VALUES (0, 31, 1), (1, 131, 9177),
-        |        (2, 1009, 18353), (3, 65537, 27529)) v(i, m, b)),
         |br AS (SELECT file_id, p // 32 AS word,
         |         bit_or(CAST(1 AS BIGINT) << CAST(p % 32 AS INT))
         |           AS bits
-        |       FROM (SELECT o.file_id,
-        |               ((o.key * hs.m + hs.b) % 1000000007) % 4096 AS p
-        |             FROM o, hs)
+        |       FROM (SELECT o.file_id, ${TextSql.bloomPos("o.key", 4096)} AS p
+        |             FROM o, ${TextSql.bloomHashes})
         |       GROUP BY 1, 2),
         |fl AS (SELECT DISTINCT file_id FROM o),
         |ck AS (SELECT CAST(c_custkey AS BIGINT) AS key FROM customer
         |       WHERE c_custkey % 499 = 3),
         |pr AS (SELECT key FROM ck
         |       UNION ALL SELECT key + 1000000000 FROM ck),
-        |ph AS (SELECT pr.key,
-        |         ((pr.key * hs.m + hs.b) % 1000000007) % 4096 AS p
-        |       FROM pr, hs),
+        |ph AS (SELECT pr.key, ${TextSql.bloomPos("pr.key", 4096)} AS p
+        |       FROM pr, ${TextSql.bloomHashes}),
         |t AS (SELECT fl.file_id, ph.key,
         |        CASE WHEN (COALESCE(br.bits, 0)
         |               >> CAST(ph.p % 32 AS INT)) % 2 = 1

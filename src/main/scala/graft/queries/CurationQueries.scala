@@ -741,10 +741,7 @@ object CurationQueries {
     val d = docs(spark, dir)
     val wordsCol = filter(split(lower(col("text")), "[^a-z]+"),
       w => length(w) > lit(0))
-    val hw = transform(wordsCol, w =>
-      aggregate(filter(split(w, ""), c => length(c) > lit(0)), lit(0L),
-        (acc, c) => (acc * lit(131L) + ascii(c).cast("long"))
-          % lit(1000000007L)))
+    val hw = transform(wordsCol, w => rollingFingerprint(w, 131L))
     val base = d.select(col("doc_id"), col("lang"), hw.as("hw"),
       rollingFingerprint(norm(col("text"))).as("h")).localCheckpoint()
     val uni = transform(col("hw"), x => pmod(x, lit(DsirB)))
@@ -1182,16 +1179,6 @@ object CurationQueries {
   private val docsSql =
     "SELECT CAST(doc_id AS BIGINT) AS doc_id, text, lang FROM documents"
 
-  private val normSql =
-    "lower(trim(regexp_replace(text, '\\s+', ' ', 'g')))"
-
-  /** SQL twin of TextFunctions.rollingFingerprint. */
-  private def fpSql(src: String): String =
-    s"""list_reduce(list_prepend(CAST(0 AS BIGINT),
-       |  list_transform(list_filter(string_split($src, ''), c -> len(c) > 0),
-       |                 c -> CAST(ascii(c) AS BIGINT))),
-       |  (a, b) -> (a * 31 + b) % 1000000007)""".stripMargin
-
   /** SQL twin of TextFunctions.wordCount (0 for blank text). */
   private val wcSql =
     """CASE WHEN len(trim(text)) = 0 THEN 0
@@ -1200,7 +1187,7 @@ object CurationQueries {
 
   /** SQL twin of TextFunctions.stopwordCount over normalized text. */
   private val stopSql =
-    s"""len(regexp_extract_all($normSql,
+    s"""len(regexp_extract_all(${TextSql.norm("text")},
        |  '\\b(${graft.functions.TextFunctions.langStopwords.head._2
                   .mkString("|")})\\b'))"""
       .stripMargin.replace("\n", " ").replaceAll(" +", " ")
@@ -1406,7 +1393,7 @@ object CurationQueries {
     "q_sample_priority" ->
       s"""WITH d AS ($docsSql),
          |b AS (SELECT doc_id, GREATEST(1, len(text) // 4) AS w,
-         |        ${fpSql(normSql)} AS h
+         |        ${TextSql.fp(TextSql.norm("text"))} AS h
          |      FROM d),
          |p AS (SELECT doc_id, w, (h % 1048576) * 1000000 // w AS priority
          |      FROM b),
@@ -1428,14 +1415,14 @@ object CurationQueries {
          |SELECT doc_id, idx AS chunk_idx, cstart AS start,
          |  cstart + chunk_len AS "end",
          |  CAST(chunk_len AS BIGINT) AS n_chars, snap_kind,
-         |  ${fpSql("substr(text, CAST(cstart + 1 AS INT), CAST(chunk_len AS INT))")}
+         |  ${TextSql.fp("substr(text, CAST(cstart + 1 AS INT), CAST(chunk_len AS INT))")}
          |    AS chunk_fp
          |FROM c6""".stripMargin,
 
     "q_chunk_dedup" ->
       s"""WITH $chunkCtes,
          |cf AS (SELECT doc_id, idx,
-         |         ${fpSql("substr(text, CAST(cstart + 1 AS INT), CAST(chunk_len AS INT))")}
+         |         ${TextSql.fp("substr(text, CAST(cstart + 1 AS INT), CAST(chunk_len AS INT))")}
          |           AS chunk_fp
          |       FROM c6),
          |g AS (SELECT chunk_fp, COUNT(*) AS n_copies,
@@ -1458,13 +1445,13 @@ object CurationQueries {
     "q_merkle_diff" ->
       s"""WITH d AS ($docsSql),
          |prev AS (SELECT doc_id,
-         |    (doc_id * 131 + ${fpSql(s"""lower(trim(regexp_replace(
-         |      CASE WHEN doc_id % 97 = 0 THEN substr(text, 1, 40)
-         |           ELSE text END, '\\s+', ' ', 'g')))""")})
+         |    (doc_id * 131 + ${TextSql.fp(TextSql.norm(
+           "CASE WHEN doc_id % 97 = 0 THEN substr(text, 1, 40) ELSE text END"))})
          |      % 1073741824 AS rd
          |  FROM d WHERE doc_id % 211 <> 0),
          |cur AS (SELECT doc_id,
-         |    (doc_id * 131 + ${fpSql(normSql)}) % 1073741824 AS rd
+         |    (doc_id * 131 + ${TextSql.fp(TextSql.norm("text"))})
+         |      % 1073741824 AS rd
          |  FROM d),
          |pl AS (SELECT doc_id % $MerkleLeaves AS leaf, COUNT(*) AS prev_n,
          |         SUM(rd) % 1000000007 AS prev_digest FROM prev GROUP BY 1),
@@ -1505,12 +1492,8 @@ object CurationQueries {
          |         list_transform(
          |           list_filter(string_split_regex(lower(text), '[^a-z]+'),
          |                       w -> len(w) > 0),
-         |           w -> list_reduce(list_prepend(CAST(0 AS BIGINT),
-         |                  list_transform(list_filter(string_split(w, ''),
-         |                                             c -> len(c) > 0),
-         |                                 c -> CAST(ascii(c) AS BIGINT))),
-         |                (a, b) -> (a * 131 + b) % 1000000007)) AS hw,
-         |         ${fpSql(normSql)} AS h
+         |           w -> ${TextSql.fp("w", 131)}) AS hw,
+         |         ${TextSql.fp(TextSql.norm("text"))} AS h
          |       FROM d),
          |feats AS (SELECT doc_id, lang, f
          |          FROM dw, LATERAL (SELECT unnest(list_concat(
@@ -1551,11 +1534,11 @@ object CurationQueries {
     "q_snapshot_diff" ->
       s"""WITH d AS ($docsSql),
          |prev AS (SELECT doc_id,
-         |    ${fpSql(s"""lower(trim(regexp_replace(
-         |      CASE WHEN doc_id % 11 = 0 THEN substr(text, 1, 40)
-         |           ELSE text END, '\\s+', ' ', 'g')))""")} AS prev_h
+         |    ${TextSql.fp(TextSql.norm(
+           "CASE WHEN doc_id % 11 = 0 THEN substr(text, 1, 40) ELSE text END"))}
+         |      AS prev_h
          |  FROM d WHERE doc_id % 7 <> 3),
-         |cur AS (SELECT doc_id, ${fpSql(normSql)} AS cur_h
+         |cur AS (SELECT doc_id, ${TextSql.fp(TextSql.norm("text"))} AS cur_h
          |  FROM d WHERE doc_id % 13 <> 5)
          |SELECT COALESCE(prev.doc_id, cur.doc_id) AS doc_id,
          |  prev_h, cur_h,
@@ -1618,7 +1601,7 @@ object CurationQueries {
          |             WHEN s.score >= t.t33 THEN 'middle'
          |             ELSE 'tail' END AS bucket
          |      FROM s JOIN t ON s.lang = t.lang),
-         |fh AS (SELECT doc_id, ${fpSql(normSql)} AS h FROM d)
+         |fh AS (SELECT doc_id, ${TextSql.fp(TextSql.norm("text"))} AS h FROM d)
          |SELECT b.doc_id, b.lang, b.score, b.bucket, fh.h,
          |  CAST(CASE WHEN b.bucket = 'head' THEN 1000000
          |       WHEN b.bucket = 'middle' THEN 500000
@@ -1653,7 +1636,8 @@ object CurationQueries {
 
     "q_split_stratified" ->
       s"""WITH d AS ($docsSql),
-         |h AS (SELECT doc_id, lang, ${fpSql(normSql)} AS h FROM d),
+         |h AS (SELECT doc_id, lang,
+         |        ${TextSql.fp(TextSql.norm("text"))} AS h FROM d),
          |b AS (SELECT doc_id, lang, h, h % 10 AS bucket,
          |        CASE WHEN h % 10 < 8 THEN 'train'
          |             WHEN h % 10 = 8 THEN 'val'
@@ -1719,7 +1703,7 @@ object CurationQueries {
     // (hash, id) order per language
     "q_sample_token_budget" ->
       s"""WITH d AS ($docsSql),
-         |h AS (SELECT doc_id, lang, ${fpSql(normSql)} AS h,
+         |h AS (SELECT doc_id, lang, ${TextSql.fp(TextSql.norm("text"))} AS h,
          |        CAST(CEIL(CAST(len(text) AS DOUBLE) / 4.0) AS BIGINT)
          |          AS tokens
          |      FROM d),
@@ -1773,7 +1757,8 @@ object CurationQueries {
 
     "q_sample_quota" ->
       s"""WITH d AS ($docsSql),
-         |h AS (SELECT doc_id, lang, ${fpSql(normSql)} AS h FROM d),
+         |h AS (SELECT doc_id, lang,
+         |        ${TextSql.fp(TextSql.norm("text"))} AS h FROM d),
          |r AS (SELECT doc_id, lang, h,
          |        CAST(ROW_NUMBER() OVER (PARTITION BY lang
          |          ORDER BY h, doc_id) AS INT) AS rk
@@ -1783,7 +1768,8 @@ object CurationQueries {
     "q_epoch_shuffle" ->
       s"""WITH d AS ($docsSql),
          |h AS (SELECT doc_id, lang,
-         |        (${fpSql(normSql)} * 2654435761 + 1) % 1000000007 AS h
+         |        (${TextSql.fp(TextSql.norm("text"))} * 2654435761 + 1)
+         |          % 1000000007 AS h
          |      FROM d)
          |SELECT doc_id, lang, h, h % 64 AS shard,
          |  CAST(ROW_NUMBER() OVER (PARTITION BY h % 64
@@ -1794,7 +1780,8 @@ object CurationQueries {
     // single-level ranking — indexing topology must not change answers
     "q_sample_quota_sharded" ->
       s"""WITH d AS ($docsSql),
-         |h AS (SELECT doc_id, lang, ${fpSql(normSql)} AS h FROM d),
+         |h AS (SELECT doc_id, lang,
+         |        ${TextSql.fp(TextSql.norm("text"))} AS h FROM d),
          |r AS (SELECT doc_id, lang, h,
          |        CAST(ROW_NUMBER() OVER (PARTITION BY lang
          |          ORDER BY h, doc_id) AS INT) AS rk
@@ -1802,19 +1789,9 @@ object CurationQueries {
          |SELECT doc_id, lang, h, rk FROM r WHERE rk <= $Quota""".stripMargin,
 
     "q_snapshot_drift" -> {
-      def normOf(src: String) =
-        s"lower(trim(regexp_replace($src, '\\s+', ' ', 'g')))"
       def shingles(tcol: String, out: String) =
-        s"""$out AS (SELECT DISTINCT doc_id,
-           |  list_reduce(list_prepend(CAST(0 AS BIGINT),
-           |    list_transform(list_filter(
-           |        string_split(substr($tcol, CAST(i AS INT), 8), ''),
-           |        c -> len(c) > 0),
-           |      c -> CAST(ascii(c) AS BIGINT))),
-           |    (a, b) -> (a * 131 + b) % 1000000007) AS s
-           |  FROM vs, LATERAL (SELECT unnest(generate_series(1,
-           |    greatest(len($tcol) - 7, 1))) AS i) u
-           |  WHERE len(substr($tcol, CAST(i AS INT), 8)) = 8)""".stripMargin
+        s"""$out AS (SELECT DISTINCT doc_id, s FROM (${TextSql.shingles(
+             s"(SELECT doc_id, $tcol AS t FROM vs)", 8, 131)}))"""
       s"""WITH d AS (SELECT CAST(doc_id AS BIGINT) AS doc_id, text
          |           FROM documents
          |           WHERE doc_id % 7 <> 3 AND doc_id % 13 <> 5),
@@ -1822,8 +1799,8 @@ object CurationQueries {
          |        CASE WHEN doc_id % 11 = 0 THEN substr(text, 1, 40)
          |             ELSE text END AS ptext FROM d),
          |vs AS (SELECT doc_id, lower(ptext) AS pt, lower(text) AS ct,
-         |         ${fpSql(normOf("ptext"))} AS ph,
-         |         ${fpSql(normOf("text"))} AS ch FROM v),
+         |         ${TextSql.fp(TextSql.norm("ptext"))} AS ph,
+         |         ${TextSql.fp(TextSql.norm("text"))} AS ch FROM v),
          |${shingles("pt", "psh")},
          |${shingles("ct", "csh")},
          |na AS (SELECT doc_id, COUNT(*) AS n FROM psh GROUP BY 1),
@@ -1851,7 +1828,8 @@ object CurationQueries {
 
     "q_mix_resample" ->
       s"""WITH d AS ($docsSql),
-         |h AS (SELECT doc_id, lang, ${fpSql(normSql)} AS h FROM d),
+         |h AS (SELECT doc_id, lang,
+         |        ${TextSql.fp(TextSql.norm("text"))} AS h FROM d),
          |c AS (SELECT lang, COUNT(*) AS n_lang FROM h GROUP BY 1),
          |t AS (SELECT CAST(SUM(n_lang) AS BIGINT) AS total,
          |        COUNT(*) AS n_langs FROM c),
@@ -1926,7 +1904,8 @@ object CurationQueries {
     // needs no rounding guard
     "q_mix_temperature" ->
       s"""WITH d AS ($docsSql),
-         |h AS (SELECT doc_id, lang, ${fpSql(normSql)} AS h FROM d),
+         |h AS (SELECT doc_id, lang,
+         |        ${TextSql.fp(TextSql.norm("text"))} AS h FROM d),
          |c AS (SELECT lang, COUNT(*) AS n_lang FROM h GROUP BY 1),
          |t AS (SELECT MIN(n_lang) AS n_min FROM c),
          |w AS (SELECT lang, n_lang,

@@ -5,7 +5,8 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.Tables
-import graft.operators.{Dedup, Triangles}
+import graft.functions.TextFunctions.{codes, fold}
+import graft.operators.{Bpe, Dedup, Triangles}
 
 /** Near-dup queries over documents (SURVEY.md §2 rows 29-31).
   * ALL four are fully hash-checked against DuckDB: the shingle/token
@@ -375,15 +376,9 @@ object DedupQueries {
     * prices. Everything is exact integer arithmetic over per-char
     * code arrays plus round-4 fractions, replayed verbatim by the
     * DuckDB oracle. */
-  private def codesOf(t: Column): Column = transform(
-    filter(split(t, ""), ch => length(ch) > lit(0)),
-    ch => ascii(ch).cast("long"))
-  private def winHash(codes: Column, i: Column): Column =
-    aggregate(slice(codes, i - (CdcW - 1), lit(CdcW)), lit(0L),
-      (a, x) => (a * 31L + x) % CdcP)
+  // the window hash and the chunk fingerprint: one fold over a slice
   private def chunkFp(codes: Column, start: Column, len: Column): Column =
-    aggregate(slice(codes, start, len), lit(0L),
-      (a, x) => (a * 31L + x) % CdcP)
+    fold(slice(codes, start, len), 31L, CdcP)
   // cdc edge list 0 ++ content-defined bounds ++ n over a codes array
   private def cdcEdges(codes: Column): Column = {
     val n = size(codes).cast("long")
@@ -391,7 +386,7 @@ object DedupQueries {
     // generate_series is empty) — short blobs are one whole chunk
     val bounds = when(n - 1 >= CdcW,
       filter(sequence(lit(CdcW.toLong), n - 1),
-        i => winHash(codes, i) % CdcD === 0))
+        i => chunkFp(codes, i - (CdcW - 1), lit(CdcW)) % CdcD === 0))
       .otherwise(array().cast("array<bigint>"))
     concat(array(lit(0L)), bounds, array(n))
   }
@@ -433,7 +428,7 @@ object DedupQueries {
     * proves the generator boundary held: an inlined codes build costs
     * ~50 s here, not ~2 s). */
   private def cdcChunkRows(d: DataFrame): DataFrame = d
-    .select(col("doc_id"), codesOf(col("text")).as("c0"))
+    .select(col("doc_id"), codes(col("text")).as("c0"))
     .select(col("doc_id"), explode(array(col("c0"))).as("c"))
     .select(col("doc_id"), col("c"),
       explode(array(cdcEdges(col("c")))).as("e"))
@@ -478,22 +473,27 @@ object DedupQueries {
     // at sf0.1 vs ~2 s staged. Each projection below only references
     // ATTRIBUTES of the previous one, and the checkpoint materializes
     // the pair arrays once (1/3-stratum rows x ~10 structs — tiny).
-    val paired = d
-      .select(col("doc_id"), codesOf(col("orig")).as("co"),
-        codesOf(col("twin")).as("ct"))
+    val coded = d
+      .select(col("doc_id"), codes(col("orig")).as("co"),
+        codes(col("twin")).as("ct"))
       // second barrier: without it CollapseProject inlines the codes
       // build into the boundary lambda = codes re-split PER POSITION
       .localCheckpoint()
+    val edged = coded
       .select(col("doc_id"), col("co"), col("ct"),
         cdcEdges(col("co")).as("eo"), cdcEdges(col("ct")).as("et"))
       // third barrier: the per-chunk lambda reads the edge list twice
       // per element — it must be an attribute, not the boundary scan
       .localCheckpoint()
+    val paired = edged
       .select(col("doc_id"), size(col("ct")).cast("long").as("twin_bytes"),
         pairsOf(col("co"), col("eo")).as("po"),
         pairsOf(col("ct"), col("et")).as("pt"),
         fwPairs(col("co")).as("qo"), fwPairs(col("ct")).as("qt"))
       .localCheckpoint()
+    // the eager pair checkpoint holds all the result reads: the two
+    // barriers before it are done
+    Seq(coded, edged).foreach(Bpe.release)
     paired
       .select(col("doc_id"), col("twin_bytes"),
         col("po"), col("pt"), col("qo"), col("qt"),
@@ -659,17 +659,8 @@ object DedupQueries {
     * cross-modal query feeds item captions instead of `documents`. */
   private def minhashBandCtesSrc(src: String): String = {
     val P = 2147483647L
-    s"""sh AS (SELECT DISTINCT doc_id, substr(t, CAST(i AS INT), $K) AS s
-       |       FROM $src, LATERAL (SELECT unnest(generate_series(1,
-       |              greatest(len(t) - ${K - 1}, 1))) AS i) u
-       |       WHERE len(substr(t, CAST(i AS INT), $K)) = $K),
-       |shh AS (SELECT doc_id,
-       |          list_reduce(list_prepend(CAST(0 AS BIGINT),
-       |            list_transform(list_filter(string_split(s, ''),
-       |                                       c -> len(c) > 0),
-       |                           c -> CAST(ascii(c) AS BIGINT))),
-       |            (a, b) -> (a * 31 + b) % $P) AS hp
-       |        FROM sh),
+    s"""shh AS (SELECT DISTINCT doc_id, s AS hp
+       |        FROM (${TextSql.shingles(src, K, 31, P)})),
        |coefs AS (SELECT CAST(i AS BIGINT) AS i,
        |            ((i * 2654435761 + 1) % $P) | 1 AS a,
        |            (i * 40503 * 104729 + 12345) % $P AS b
@@ -677,8 +668,7 @@ object DedupQueries {
        |mins AS (SELECT doc_id, i, MIN((a * hp + b) % $P) AS m
        |         FROM shh, coefs GROUP BY 1, 2),
        |bands AS (SELECT doc_id, i // 4 AS band,
-       |            list_reduce(list_prepend(CAST(0 AS BIGINT),
-       |              list(m ORDER BY i)), (x, y) -> (x * 33 + y) % $P) AS bh
+       |            ${TextSql.fold("list(m ORDER BY i)", 33, P)} AS bh
        |          FROM mins GROUP BY doc_id, i // 4)""".stripMargin
   }
 
@@ -738,14 +728,8 @@ object DedupQueries {
        |             lower(trim(text)) AS t FROM documents),
        |toks AS (
        |  SELECT doc_id, w,
-       |    list_reduce(list_prepend(CAST(0 AS BIGINT),
-       |      list_transform(list_filter(string_split(w, ''), c -> len(c) > 0),
-       |                     c -> CAST(ascii(c) AS BIGINT))),
-       |      (a, b) -> (a * 31 + b) % $P) * 2654435761 % $P AS h1,
-       |    list_reduce(list_prepend(CAST(0 AS BIGINT),
-       |      list_transform(list_filter(string_split(w, ''), c -> len(c) > 0),
-       |                     c -> CAST(ascii(c) AS BIGINT))),
-       |      (a, b) -> (a * 37 + b) % $P) * 2654435761 % $P AS h2
+       |    ${TextSql.fp("w", 31, P)} * 2654435761 % $P AS h1,
+       |    ${TextSql.fp("w", 37, P)} * 2654435761 % $P AS h2
        |  FROM d, LATERAL (SELECT unnest(regexp_split_to_array(t, '\\s+'))
        |                   AS w) u
        |  WHERE len(w) > 0),
@@ -780,27 +764,24 @@ object DedupQueries {
     * same per-chunk polynomial fingerprints, same distinct-fp set
     * arithmetic — nothing about the engine is trusted. */
   // chunk (fp, ln) structs from an edge list over a codes array (SQL)
-  private def cdcPairsSql(codes: String, edges: String): String =
+  private def cdcPairsSql(codes: String, edges: String): String = {
+    def e(j: String) = s"$edges[CAST($j AS INT)]"
     s"""list_transform(generate_series(CAST(2 AS BIGINT), len($edges)),
        |  j -> struct_pack(
-       |    fp := list_reduce(list_prepend(CAST(0 AS BIGINT),
-       |            $codes[CAST($edges[CAST(j AS INT)-1]+1 AS INT):
-       |                   CAST($edges[CAST(j AS INT)] AS INT)]),
-       |          (a, x) -> (a * 31 + x) % $CdcP),
-       |    ln := $edges[CAST(j AS INT)] - $edges[CAST(j AS INT)-1]))"""
-      .stripMargin
+       |    fp := ${TextSql.fold(
+         s"$codes[CAST(${e("j-1")}+1 AS INT):CAST(${e("j")} AS INT)]",
+         31, CdcP)},
+       |    ln := ${e("j")} - ${e("j-1")}))""".stripMargin
+  }
   private def cdcBoundsSql(codes: String): String =
     s"""list_filter(generate_series(CAST($CdcW AS BIGINT), len($codes) - 1),
-       |  i -> list_reduce(list_prepend(CAST(0 AS BIGINT),
-       |         $codes[CAST(i AS INT)-${CdcW - 1}:CAST(i AS INT)]),
-       |       (a, x) -> (a * 31 + x) % $CdcP) % $CdcD = 0)""".stripMargin
-  private def cdcCodesSql(t: String): String =
-    s"""list_transform(list_filter(string_split($t, ''), ch -> len(ch) > 0),
-       |               ch -> CAST(ascii(ch) AS BIGINT))""".stripMargin
+       |  i -> ${TextSql.fold(
+         s"$codes[CAST(i AS INT)-${CdcW - 1}:CAST(i AS INT)]", 31, CdcP)}
+       |    % $CdcD = 0)""".stripMargin
   /** SQL CTE chain `<pfx>c/<pfx>e/<pfx>p` producing exploded chunk rows
     * (doc_id, fp, ln) for a blob CTE `src(doc_id, text)`. */
   private def cdcChunkRowsSql(pfx: String, src: String): String =
-    s"""${pfx}c AS (SELECT doc_id, ${cdcCodesSql("text")} AS c FROM $src),
+    s"""${pfx}c AS (SELECT doc_id, ${TextSql.codes("text")} AS c FROM $src),
        |${pfx}e AS (SELECT doc_id, c,
        |  list_concat(list_concat([CAST(0 AS BIGINT)], ${cdcBoundsSql("c")}),
        |    [CAST(len(c) AS BIGINT)]) AS e
@@ -837,12 +818,8 @@ object DedupQueries {
        |t AS (SELECT doc_id, text AS orig,
        |        repeat('x', CAST(1 + doc_id % 7 AS INT)) || text AS twin
        |      FROM d),
-       |c AS (SELECT doc_id,
-       |  list_transform(list_filter(string_split(orig, ''), ch -> len(ch) > 0),
-       |                 ch -> CAST(ascii(ch) AS BIGINT)) AS co,
-       |  list_transform(list_filter(string_split(twin, ''), ch -> len(ch) > 0),
-       |                 ch -> CAST(ascii(ch) AS BIGINT)) AS ct
-       |  FROM t),
+       |c AS (SELECT doc_id, ${TextSql.codes("orig")} AS co,
+       |  ${TextSql.codes("twin")} AS ct FROM t),
        |e AS (SELECT doc_id, co, ct,
        |  list_concat(list_concat([CAST(0 AS BIGINT)], ${cdcBoundsSql("co")}),
        |    [CAST(len(co) AS BIGINT)]) AS eo,
@@ -990,16 +967,8 @@ object DedupQueries {
       s"""WITH $minhashBandCtes,
          |$minhashPairCtes,
          |pairs AS (SELECT ida, idb FROM est WHERE est >= 0.2),
-         |ps AS (SELECT doc_id, CAST(i - 1 AS BIGINT) AS p,
-         |         list_reduce(list_prepend(CAST(0 AS BIGINT),
-         |           list_transform(list_filter(
-         |               string_split(substr(t, CAST(i AS INT), $K), ''),
-         |               c -> len(c) > 0),
-         |             c -> CAST(ascii(c) AS BIGINT))),
-         |           (a, b) -> (a * 131 + b) % 1000000007) AS s
-         |       FROM d, LATERAL (SELECT unnest(generate_series(1,
-         |              greatest(len(t) - ${K - 1}, 1))) AS i) u
-         |       WHERE len(substr(t, CAST(i AS INT), $K)) = $K),
+         |ps AS (SELECT doc_id, pos AS p, s
+         |       FROM (${TextSql.shingles("d", K, 131)})),
          |m AS (SELECT pr.ida, pr.idb, a.p AS pa, b.p AS pb
          |      FROM pairs pr
          |      JOIN ps a ON a.doc_id = pr.ida
@@ -1053,16 +1022,8 @@ object DedupQueries {
     "q_dedup_spans" ->
       s"""WITH d AS (SELECT CAST(doc_id AS BIGINT) AS doc_id,
          |             lower(text) AS t FROM documents),
-         |sh AS (SELECT doc_id, CAST(i - 1 AS BIGINT) AS pos,
-         |         list_reduce(list_prepend(CAST(0 AS BIGINT),
-         |           list_transform(list_filter(
-         |               string_split(substr(t, CAST(i AS INT), $K), ''),
-         |               c -> len(c) > 0),
-         |             c -> CAST(ascii(c) AS BIGINT))),
-         |           (a, b) -> (a * 131 + b) % 1000000007) AS s
-         |       FROM d, LATERAL (SELECT unnest(generate_series(1,
-         |              greatest(len(t) - ${K - 1}, 1))) AS i) u
-         |       WHERE len(substr(t, CAST(i AS INT), $K)) = $K),
+         |sh AS (SELECT doc_id, pos, s
+         |       FROM (${TextSql.shingles("d", K, 131)})),
          |dup AS (SELECT s FROM sh GROUP BY s
          |        HAVING MIN(doc_id) <> MAX(doc_id)
          |           AND COUNT(*) <= $SpanMaxDf),
@@ -1129,14 +1090,10 @@ object DedupQueries {
     // split + BOTH leak audits (cluster-keyed = 0, doc-keyed
     // counterfactual > 0)
     "q_split_dedup_aware" -> {
-      val fp = "list_reduce(list_prepend(CAST(0 AS BIGINT), " +
-        "list_transform(list_filter(string_split(" +
-        "lower(trim(regexp_replace(text, '\\s+', ' ', 'g'))), ''), " +
-        "c -> len(c) > 0), c -> CAST(ascii(c) AS BIGINT))), " +
-        "(a, b) -> (a * 31 + b) % 1000000007)"
       s"""WITH cl AS ($clustersOracle),
          |prs AS ($minhashOracle),
-         |ch AS (SELECT CAST(doc_id AS BIGINT) AS did, $fp AS chv
+         |ch AS (SELECT CAST(doc_id AS BIGINT) AS did,
+         |         ${TextSql.fp(TextSql.norm("text"))} AS chv
          |       FROM documents),
          |asg AS (SELECT cl.doc_id, cl.canonical_id AS cluster_id,
          |          CASE WHEN ch.chv % 10 < 8 THEN 'train'
@@ -1168,8 +1125,7 @@ object DedupQueries {
          |         CASE WHEN len(trim(text)) = 0 THEN 0
          |              ELSE len(regexp_split_to_array(trim(text),
          |                '\\s+')) END AS nw,
-         |         len(regexp_extract_all(lower(trim(regexp_replace(
-         |             text, '\\s+', ' ', 'g'))),
+         |         len(regexp_extract_all(${TextSql.norm("text")},
          |           '\\b(the|and|of|is|a)\\b')) AS ns
          |       FROM documents),
          |q AS (SELECT doc_id, CASE WHEN nw = 0 THEN -1
@@ -1188,16 +1144,8 @@ object DedupQueries {
     "q_dedup_ngram_jaccard" ->
       s"""WITH d AS (SELECT CAST(doc_id AS BIGINT) AS doc_id, lower(text) AS t
          |           FROM documents),
-         |sh AS (SELECT DISTINCT doc_id,
-         |         list_reduce(list_prepend(CAST(0 AS BIGINT),
-         |           list_transform(list_filter(
-         |               string_split(substr(t, CAST(i AS INT), $K), ''),
-         |               c -> len(c) > 0),
-         |             c -> CAST(ascii(c) AS BIGINT))),
-         |           (a, b) -> (a * 131 + b) % 1000000007) AS s
-         |       FROM d, LATERAL (SELECT unnest(generate_series(1,
-         |              greatest(len(t) - ${K - 1}, 1))) AS i) u
-         |       WHERE len(substr(t, CAST(i AS INT), $K)) = $K),
+         |sh AS (SELECT DISTINCT doc_id, s
+         |       FROM (${TextSql.shingles("d", K, 131)})),
          |rare AS (SELECT s FROM sh GROUP BY s HAVING COUNT(*) <= $MaxDf),
          |shr AS (SELECT sh.doc_id, sh.s FROM sh JOIN rare USING (s)),
          |sizes AS (SELECT doc_id, COUNT(*) AS n FROM shr GROUP BY doc_id),
@@ -1225,16 +1173,8 @@ object DedupQueries {
          |             lower(substr(text, len(text) // 4 + 1,
          |               len(text) // 2))
          |           FROM documents WHERE doc_id % 4 = 0),
-         |sh AS (SELECT DISTINCT doc_id,
-         |         list_reduce(list_prepend(CAST(0 AS BIGINT),
-         |           list_transform(list_filter(
-         |               string_split(substr(t, CAST(i AS INT), $K), ''),
-         |               c -> len(c) > 0),
-         |             c -> CAST(ascii(c) AS BIGINT))),
-         |           (a, b) -> (a * 131 + b) % 1000000007) AS s
-         |       FROM d, LATERAL (SELECT unnest(generate_series(1,
-         |              greatest(len(t) - ${K - 1}, 1))) AS i) u
-         |       WHERE len(substr(t, CAST(i AS INT), $K)) = $K),
+         |sh AS (SELECT DISTINCT doc_id, s
+         |       FROM (${TextSql.shingles("d", K, 131)})),
          |rare AS (SELECT s FROM sh GROUP BY s HAVING COUNT(*) <= $MaxDf),
          |shr AS (SELECT sh.doc_id, sh.s FROM sh JOIN rare USING (s)),
          |sizes AS (SELECT doc_id, COUNT(*) AS n FROM shr GROUP BY doc_id),
@@ -1257,16 +1197,8 @@ object DedupQueries {
     "q_decontaminate" ->
       s"""WITH d AS (SELECT CAST(doc_id AS BIGINT) AS doc_id,
          |             lower(text) AS t, source FROM documents),
-         |sh AS (SELECT DISTINCT doc_id, source,
-         |         list_reduce(list_prepend(CAST(0 AS BIGINT),
-         |           list_transform(list_filter(
-         |               string_split(substr(t, CAST(i AS INT), $K), ''),
-         |               c -> len(c) > 0),
-         |             c -> CAST(ascii(c) AS BIGINT))),
-         |           (a, b) -> (a * 131 + b) % 1000000007) AS s
-         |       FROM d, LATERAL (SELECT unnest(generate_series(1,
-         |              greatest(len(t) - ${K - 1}, 1))) AS i) u
-         |       WHERE len(substr(t, CAST(i AS INT), $K)) = $K),
+         |sh AS (SELECT DISTINCT doc_id, source, s
+         |       FROM (${TextSql.shingles("d", K, 131)})),
          |cor AS (SELECT doc_id, s FROM sh WHERE source <> 'src0'),
          |ben AS (SELECT DISTINCT s FROM sh WHERE source = 'src0'),
          |tot AS (SELECT doc_id, COUNT(*) AS n_shingles FROM cor GROUP BY 1),
@@ -1289,25 +1221,14 @@ object DedupQueries {
     "q_decontaminate_bloom" ->
       s"""WITH d AS (SELECT CAST(doc_id AS BIGINT) AS doc_id,
          |             lower(text) AS t, source FROM documents),
-         |sh AS (SELECT DISTINCT doc_id, source,
-         |         list_reduce(list_prepend(CAST(0 AS BIGINT),
-         |           list_transform(list_filter(
-         |               string_split(substr(t, CAST(i AS INT), $K), ''),
-         |               c -> len(c) > 0),
-         |             c -> CAST(ascii(c) AS BIGINT))),
-         |           (a, b) -> (a * 131 + b) % 1000000007) AS s
-         |       FROM d, LATERAL (SELECT unnest(generate_series(1,
-         |              greatest(len(t) - ${K - 1}, 1))) AS i) u
-         |       WHERE len(substr(t, CAST(i AS INT), $K)) = $K),
+         |sh AS (SELECT DISTINCT doc_id, source, s
+         |       FROM (${TextSql.shingles("d", K, 131)})),
          |cor AS (SELECT doc_id, s FROM sh WHERE source <> 'src0'),
          |ben AS (SELECT DISTINCT s FROM sh WHERE source = 'src0'),
-         |co AS (SELECT * FROM (VALUES (31, 1), (131, 9177),
-         |        (1009, 18353), (65537, 27529)) t(a, b)),
-         |pos AS (SELECT DISTINCT ((s * a + b) % 1000000007) % 1048576
-         |          AS p FROM ben, co),
-         |cp AS (SELECT doc_id, s,
-         |         ((s * a + b) % 1000000007) % 1048576 AS p
-         |       FROM cor, co),
+         |pos AS (SELECT DISTINCT ${TextSql.bloomPos("s", 1048576)} AS p
+         |        FROM ben, ${TextSql.bloomHashes}),
+         |cp AS (SELECT doc_id, s, ${TextSql.bloomPos("s", 1048576)} AS p
+         |       FROM cor, ${TextSql.bloomHashes}),
          |pass AS (SELECT doc_id, s FROM cp JOIN pos USING (p)
          |         GROUP BY doc_id, s HAVING COUNT(*) = 4),
          |tot AS (SELECT doc_id, COUNT(*) AS n_shingles FROM cor

@@ -355,7 +355,7 @@ object RetrievalQueries {
     * 100 TB the encode is a pure scan with the tokenizer embedded, the
     * same model-in-the-expression shape as LM scoring. */
   def qBpeEncode(spark: SparkSession, dir: String): DataFrame = {
-    val corpus = TextQueries.bpeCorpus(spark, dir)
+    val corpus = TextQueries.bpeCorpus(docs(spark, dir))
     val merges = Bpe.train(corpus, 2, 0).map(_.merge)
     corpus.select(col("doc_id"),
         length(col("t")).cast("long").as("n_raw"),
@@ -694,22 +694,16 @@ object RetrievalQueries {
       val rowsVals = CmsRows.zipWithIndex
         .map { case ((a, b), i) => s"($i, $a, $b)" }.mkString(", ")
       val probeVals = CmsProbes.map(w => s"('$w')").mkString(", ")
-      val fpW =
-        """list_reduce(list_prepend(CAST(0 AS BIGINT),
-          |  list_transform(list_filter(string_split(w, ''),
-          |                             c -> len(c) > 0),
-          |                 c -> CAST(ascii(c) AS BIGINT))),
-          |  (a, b) -> (a * 31 + b) % 1000000007)""".stripMargin
       s"""WITH d AS (SELECT CAST(doc_id AS BIGINT) AS doc_id,
          |             lower(text) AS t FROM documents),
          |tk AS ($tokSql),
          |r(i, a, b) AS (VALUES $rowsVals),
-         |th AS (SELECT w, $fpW AS h FROM tk),
+         |th AS (SELECT w, ${TextSql.fp("w")} AS h FROM tk),
          |sk AS (SELECT i, ((a * h + b) % $CmsP) % $CmsWidth AS bk,
          |         COUNT(*) AS c
          |       FROM th, r GROUP BY 1, 2),
          |pr(w) AS (VALUES $probeVals),
-         |ph AS (SELECT w, $fpW AS h FROM pr),
+         |ph AS (SELECT w, ${TextSql.fp("w")} AS h FROM pr),
          |pb AS (SELECT w, i, ((a * h + b) % $CmsP) % $CmsWidth AS bk
          |       FROM ph, r),
          |est AS (SELECT w, MIN(COALESCE(c, 0)) AS est
@@ -812,9 +806,8 @@ object RetrievalQueries {
     // byte is ever built here, so the kernel's encoder is checked
     // against a derivation; roundtrip must come back TRUE everywhere
     "q_postings_compress" ->
-      """WITH d AS (SELECT CAST(doc_id AS BIGINT) AS doc_id,
-        |             lower(trim(regexp_replace(text, '\s+', ' ', 'g')))
-        |               AS t
+      s"""WITH d AS (SELECT CAST(doc_id AS BIGINT) AS doc_id,
+        |             ${TextSql.norm("text")} AS t
         |           FROM documents),
         |tk AS (SELECT DISTINCT doc_id, w FROM d,
         |       LATERAL (SELECT unnest(string_split(t, ' ')) AS w) u
@@ -838,19 +831,13 @@ object RetrievalQueries {
         |FROM sz""".stripMargin,
 
     "q_hll_distinct" -> {
-      val fpW =
-        """list_reduce(list_prepend(CAST(0 AS BIGINT),
-          |  list_transform(list_filter(string_split(w, ''),
-          |                             c -> len(c) > 0),
-          |                 c -> CAST(ascii(c) AS BIGINT))),
-          |  (a, b) -> (a * 31 + b) % 1000000007)""".stripMargin
       s"""WITH d AS (SELECT lower(text) AS t, lang FROM documents),
          |tk AS (SELECT lang, w FROM d,
          |       LATERAL (SELECT unnest(regexp_split_to_array(t, '\\W+'))
          |                AS w) u
          |       WHERE len(w) > 0),
          |hs AS (SELECT DISTINCT lang,
-         |         $fpW * 2654435761 % $HllP AS h
+         |         ${TextSql.fp("w")} * 2654435761 % $HllP AS h
          |       FROM tk),
          |rg AS (SELECT lang, h % $HllM AS j,
          |         MAX(CASE WHEN h // $HllM = 0 THEN 23
@@ -884,12 +871,6 @@ object RetrievalQueries {
     // formula (incl. the linear-counting branch) appears twice — once
     // per-lang, once per merged pair — exactly as the engine computes it
     "q_hll_union" -> {
-      val fpW =
-        """list_reduce(list_prepend(CAST(0 AS BIGINT),
-          |  list_transform(list_filter(string_split(w, ''),
-          |                             c -> len(c) > 0),
-          |                 c -> CAST(ascii(c) AS BIGINT))),
-          |  (a, b) -> (a * 31 + b) % 1000000007)""".stripMargin
       val est = (src: String, keys: String) =>
         s"""SELECT $keys, $HllM - COUNT(*) AS zeros,
            |  ROUND(CASE WHEN $HllM - COUNT(*) > 0
@@ -912,7 +893,7 @@ object RetrievalQueries {
          |                AS w) u
          |       WHERE len(w) > 0),
          |hs AS (SELECT DISTINCT lang,
-         |         $fpW * 2654435761 % $HllP AS h
+         |         ${TextSql.fp("w")} * 2654435761 % $HllP AS h
          |       FROM tk),
          |rg AS (SELECT lang, h % $HllM AS j,
          |         MAX(CASE WHEN h // $HllM = 0 THEN 23
@@ -951,8 +932,7 @@ object RetrievalQueries {
   def qPostingsCompress(spark: SparkSession, dir: String): DataFrame = {
     val toks = docs(spark, dir)
       .select(col("doc_id"),
-        explode(split(lower(trim(regexp_replace(col("text"), "\\s+",
-          " "))), " ")).as("w"))
+        explode(split(norm(col("text")), " ")).as("w"))
       .where(length(col("w")) > 0)
       .distinct()
     val postings = toks.groupBy("w")

@@ -1152,7 +1152,7 @@ object SourceQueries {
         |FROM f""".stripMargin,
 
     "q_multimodal_pdf" ->
-      """WITH d AS (SELECT CAST(doc_id AS BIGINT) AS d FROM documents),
+      s"""WITH d AS (SELECT CAST(doc_id AS BIGINT) AS d FROM documents),
         |pg AS (SELECT d, 1 + d % 3 AS np FROM d),
         |pp AS (SELECT pg.d, pg.np, pz.p,
         |         3 + (pg.d + pz.p) % 6 AS nl,
@@ -1185,18 +1185,14 @@ object SourceQueries {
         |    '(', ''), ')', ''), chr(92), ''))  AS BIGINT) AS esc_chars,
         |  CAST(pp.x0 AS BIGINT) AS x0, CAST(pp.y0 AS BIGINT) AS y0,
         |  CAST(pp.y0 - (pp.nl - 1) * (pp.fs + 2) AS BIGINT) AS y_last,
-        |  list_reduce(list_prepend(CAST(0 AS BIGINT),
-        |    list_transform(list_filter(string_split(tx.text, ''),
-        |                               c -> len(c) > 0),
-        |                   c -> CAST(ascii(c) AS BIGINT))),
-        |    (a, b) -> (a * 131 + b) % 1000000007) AS text_hash
+        |  ${TextSql.fp("tx.text", 131)} AS text_hash
         |FROM pp JOIN tx ON tx.d = pp.d AND tx.p = pp.p""".stripMargin,
     // PDF 1.5 features replayed from line arithmetic: logical text per
     // line (escape stratum = tab + paren + backslash + control char
     // every 3rd (d+p+i)), pages/lines/position formulas, object counts
     // from the 1.5 layout (5+2np numbered objects, np+3 ObjStm-packed)
     "q_multimodal_pdf_xrefstream" ->
-      """WITH d AS (SELECT CAST(doc_id AS BIGINT) AS d FROM documents),
+      s"""WITH d AS (SELECT CAST(doc_id AS BIGINT) AS d FROM documents),
         |pg AS (SELECT d, 1 + (d + 1) % 3 AS np FROM d),
         |pp AS (SELECT pg.d, pg.np, pz.p,
         |         3 + (pg.d + 2 * pz.p) % 6 AS nl,
@@ -1233,17 +1229,13 @@ object SourceQueries {
         |  CAST(tx.esc AS BIGINT) AS esc_chars,
         |  CAST(pp.x0 AS BIGINT) AS x0, CAST(pp.y0 AS BIGINT) AS y0,
         |  CAST(pp.y0 - (pp.nl - 1) * (pp.fs + 2) AS BIGINT) AS y_last,
-        |  list_reduce(list_prepend(CAST(0 AS BIGINT),
-        |    list_transform(list_filter(string_split(tx.text, ''),
-        |                               c -> len(c) > 0),
-        |                   c -> CAST(ascii(c) AS BIGINT))),
-        |    (a, b) -> (a * 131 + b) % 1000000007) AS text_hash
+        |  ${TextSql.fp("tx.text", 131)} AS text_hash
         |FROM pp JOIN tx ON tx.d = pp.d AND tx.p = pp.p""".stripMargin,
     // incremental update replayed: page 0 carries one extra revision
     // line (escape-free), n_objs grows by the new xref stream object;
     // other pages identical to the xrefstream oracle
     "q_multimodal_pdf_incremental" ->
-      """WITH d AS (SELECT CAST(doc_id AS BIGINT) AS d FROM documents),
+      s"""WITH d AS (SELECT CAST(doc_id AS BIGINT) AS d FROM documents),
         |pg AS (SELECT d, 1 + (d + 1) % 3 AS np FROM d),
         |pp AS (SELECT pg.d, pg.np, pz.p,
         |         3 + (pg.d + 2 * pz.p) % 6
@@ -1288,11 +1280,7 @@ object SourceQueries {
         |  CAST(tx.esc AS BIGINT) AS esc_chars,
         |  CAST(pp.x0 AS BIGINT) AS x0, CAST(pp.y0 AS BIGINT) AS y0,
         |  CAST(pp.y0 - (pp.nl - 1) * (pp.fs + 2) AS BIGINT) AS y_last,
-        |  list_reduce(list_prepend(CAST(0 AS BIGINT),
-        |    list_transform(list_filter(string_split(tx.text, ''),
-        |                               c -> len(c) > 0),
-        |                   c -> CAST(ascii(c) AS BIGINT))),
-        |    (a, b) -> (a * 131 + b) % 1000000007) AS text_hash
+        |  ${TextSql.fp("tx.text", 131)} AS text_hash
         |FROM pp JOIN tx ON tx.d = pp.d AND tx.p = pp.p""".stripMargin,
     // VAD segments replayed analytically: frame f of doc d is silence
     // iff (d + f) % 5 < 2 (the planted gate), speech energies from the
@@ -2032,17 +2020,13 @@ object SourceQueries {
     // char stream, so DuckDB can replay the exact fold — making even the
     // stubbed pipeline hash-checked end to end.
     "q_multimodal" ->
-      """WITH d AS (SELECT CAST(doc_id AS BIGINT) AS doc_id, text
+      s"""WITH d AS (SELECT CAST(doc_id AS BIGINT) AS doc_id, text
         |           FROM documents),
         |f AS (SELECT doc_id,
         |        ['image', 'audio', 'video'][CAST(doc_id % 3 + 1 AS INT)]
         |          AS kind,
         |        CAST(len(text) AS BIGINT) AS n_bytes,
-        |        list_reduce(list_prepend(CAST(0 AS BIGINT),
-        |          list_transform(list_filter(string_split(text, ''),
-        |                                     c -> len(c) > 0),
-        |                         c -> CAST(ascii(c) AS BIGINT))),
-        |          (a, b) -> (a * 131 + b) % 1000000007) AS checksum
+        |        ${TextSql.fp("text", 131)} AS checksum
         |      FROM d)
         |SELECT doc_id, kind, n_bytes, checksum,
         |  16 + checksum % 16 AS width,

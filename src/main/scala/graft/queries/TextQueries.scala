@@ -24,10 +24,6 @@ object TextQueries {
       .select(col("doc_id").cast("long").as("doc_id"), col("text"),
         col("lang"), col("source")))
 
-  /** SQL fragment mirroring norm(). */
-  private val normSql =
-    "lower(trim(regexp_replace(text, '\\s+', ' ', 'g')))"
-
   // ------------------------------------------------------------ exact dedup
 
   /** Exact dedup: md5 over normalized text; canonical = min doc_id per
@@ -681,17 +677,14 @@ object TextQueries {
     * is one round-robin exchange in total (r18: the chain at sf0.1 went
     * 6.5-8.0 s -> 3.3-3.7 s; a per-round repartition measured 1.6x
     * slower). */
-  private[queries] def bpeCorpus(spark: SparkSession,
-                                 dir: String): DataFrame =
-    docs(spark, dir).select(col("doc_id"), col("lang"),
-      lower(col("text")).as("t"))
+  private[queries] def bpeCorpus(d: DataFrame): DataFrame =
+    d.select(col("doc_id"), col("lang"), lower(col("text")).as("t"))
 
   /** The fertility curve of the 5 merges trained on the BPE corpus: the
     * token count after each prefix k = 0..5 of them (k = 0 is the char
     * count) per `by` group, as ONE aggregate over the round-0 corpus. */
-  private def bpeCurve(spark: SparkSession, dir: String,
-                       by: Seq[String]): DataFrame = {
-    val corpus = bpeCorpus(spark, dir)
+  private def bpeCurve(d: DataFrame, by: Seq[String]): DataFrame = {
+    val corpus = bpeCorpus(d)
     val merges = Bpe.train(corpus, BpeRounds, 0).map(_.merge)
     val ks = 0 to BpeRounds
     val sums = ks.map(k => sum(length(Bpe.encode(col("t"), merges.take(k)))
@@ -719,7 +712,7 @@ object TextQueries {
     * its merge is not applied. */
   def qBpeTrain(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    Bpe.train(bpeCorpus(spark, dir), BpeRounds + 1, 0)
+    Bpe.train(bpeCorpus(docs(spark, dir)), BpeRounds + 1, 0)
       .last.counts.sortBy { case (s, c) => (-c, s) }.take(10).toSeq
       .map { case (s, c) => (s >> 16, s & 0xffffL, c) }
       .toDF("a", "b", "cnt")
@@ -732,7 +725,7 @@ object TextQueries {
     * applied); the oracle computes it with the identical formula. */
   def qBpeTrainDeep(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val rounds = Bpe.train(bpeCorpus(spark, dir),
+    val rounds = Bpe.train(bpeCorpus(docs(spark, dir)),
       BpeDeepRounds + 1, 0x250)
     val curve = rounds.zipWithIndex.map { case (r, k) =>
       val (a, b) = if (k == 0) (0L, 0L)
@@ -755,7 +748,7 @@ object TextQueries {
     * length ∝ 1/fertility). Same merges as q_bpe_train; all six token
     * sums are one aggregate over the round-0 corpus. */
   def qBpeFertility(spark: SparkSession, dir: String): DataFrame =
-    bpeCurve(spark, dir, Nil)
+    bpeCurve(docs(spark, dir), Nil)
 
   /** Per-language BPE fertility (r13, VERDICT r12 item 6) — the number
     * multilingual vocab allocation actually decides on: the corpus-wide
@@ -772,7 +765,7 @@ object TextQueries {
     * whose languages share a generator; the planted-marker languages
     * differ in char mass, which the n_chars column keeps visible. */
   def qBpeFertilityLang(spark: SparkSession, dir: String): DataFrame =
-    bpeCurve(spark, dir, Seq("lang"))
+    bpeCurve(docs(spark, dir), Seq("lang"))
 
   // --------------------------------------------- Unigram-LM train (r14)
 
@@ -798,9 +791,8 @@ object TextQueries {
     * every EM pass runs over that (weighted) table. At 100 TB the
     * distinct-word table is the long tail (≪ corpus); the heavy
     * hitters cost one segmentation each regardless of corpus mass. */
-  private def uniWords(spark: SparkSession, dir: String): DataFrame =
-    docs(spark, dir)
-      .select(explode(split(lower(col("text")), " ")).as("w"))
+  private def uniWords(d: DataFrame): DataFrame =
+    d.select(explode(split(lower(col("text")), " ")).as("w"))
       .filter(length(col("w")) > 0)
       .groupBy("w").agg(count(lit(1)).cast("long").as("f"))
 
@@ -889,10 +881,10 @@ object TextQueries {
     * rounds each collecting only the vocab-sized usage counts. Returns
     * the checkpointed word table + the final scores (the last round's
     * usage table stays distributed at the call sites). */
-  private def uniTrain(spark: SparkSession, dir: String)
+  private def uniTrain(d: DataFrame)
       : (org.apache.spark.sql.Dataset[UniWord], Map[String, Long]) = {
-    import spark.implicits._
-    val words = uniWords(spark, dir).localCheckpoint().as[UniWord]
+    import d.sparkSession.implicits._
+    val words = uniWords(d).localCheckpoint().as[UniWord]
     val subs = words.toDF()
       .select(col("f"), explode(flatten(
         transform(sequence(lit(1), length(col("w"))), i =>
@@ -919,7 +911,7 @@ object TextQueries {
   }
 
   def qUnigramTrain(spark: SparkSession, dir: String): DataFrame = {
-    val (words, scores) = uniTrain(spark, dir)
+    val (words, scores) = uniTrain(docs(spark, dir))
     val cFinal = uniSegmentCounts(words, scores)
     val t = cFinal.agg(sum("c").as("t"))
     cFinal.crossJoin(broadcast(t))
@@ -990,11 +982,11 @@ object TextQueries {
     * Oracle replays the chain and derives per-word piece counts from
     * the backtrack join. */
   def qUnigramEncode(spark: SparkSession, dir: String): DataFrame = {
-    val (words, scores) = uniTrain(spark, dir)
+    val d = docs(spark, dir)
+    val (words, scores) = uniTrain(d)
     val wpc = uniWordPieceCounts(words, scores)
-    docs(spark, dir)
-      .select(col("doc_id").cast("long").as("doc_id"),
-        explode(split(lower(col("text")), " ")).as("w"))
+    d.select(col("doc_id").cast("long").as("doc_id"),
+      explode(split(lower(col("text")), " ")).as("w"))
       .filter(length(col("w")) > 0)
       .join(wpc, Seq("w"))
       .groupBy("doc_id")
@@ -1014,13 +1006,14 @@ object TextQueries {
     * (spaces are not pieces), so each row carries ITS OWN char mass —
     * the honest per-tokenizer accounting. */
   def qUnigramFertility(spark: SparkSession, dir: String): DataFrame = {
-    val (words, scores) = uniTrain(spark, dir)
+    val d = docs(spark, dir)
+    val (words, scores) = uniTrain(d)
     val uniTok = uniSegmentCounts(words, scores)
       .agg(sum("c").cast("long").as("n_tokens"))
     val uniChars = words.toDF()
       .agg(sum(length(col("w")).cast("long") * col("f")).as("n_chars"))
     // BPE twin: q_bpe_train's merges; its k = 0 step is the char count
-    bpeCurve(spark, dir, Nil)
+    bpeCurve(d, Nil)
       .filter(col("k").isin(0L, BpeRounds.toLong))
       .select(when(col("k") === 0L, lit("chars")).otherwise(lit("bpe5"))
         .as("tok"), col("n_tokens"), col("n_chars"))
@@ -1526,12 +1519,6 @@ object TextQueries {
   private def perWordSql(num: String): String =
     s"CASE WHEN $wcSql = 0 THEN NULL ELSE ROUND(CAST($num AS DOUBLE) / CAST($wcSql AS DOUBLE), 4) END"
 
-  private val fpSql = (src: String) =>
-    s"""list_reduce(list_prepend(CAST(0 AS BIGINT),
-       |  list_transform(list_filter(string_split($src, ''), c -> len(c) > 0),
-       |                 c -> CAST(ascii(c) AS BIGINT))),
-       |  (a, b) -> (a * 31 + b) % 1000000007)""".stripMargin
-
   /** Analytic langid score CTEs (ending in `p`): every score derived
     * from the SAME (doc_id, lang) arithmetic the engine's marker
     * planting uses — the oracle never runs the regex, so the planted
@@ -1606,16 +1593,8 @@ object TextQueries {
   private lazy val winnowCtes: String =
     s"""d AS (SELECT CAST(doc_id AS BIGINT) AS doc_id, lower(text) AS t
        |       FROM documents),
-       |ph AS (SELECT doc_id, CAST(i - 1 AS BIGINT) AS pos,
-       |         list_reduce(list_prepend(CAST(0 AS BIGINT),
-       |           list_transform(list_filter(
-       |               string_split(substr(t, CAST(i AS INT), $WinK), ''),
-       |               c -> len(c) > 0),
-       |             c -> CAST(ascii(c) AS BIGINT))),
-       |           (a, b) -> (a * 131 + b) % $WinMod) AS h
-       |       FROM d, LATERAL (SELECT unnest(generate_series(1,
-       |              greatest(len(t) - ${WinK - 1}, 1))) AS i) u
-       |       WHERE len(substr(t, CAST(i AS INT), $WinK)) = $WinK),
+       |ph AS (SELECT doc_id, pos, s AS h
+       |       FROM (${TextSql.shingles("d", WinK, 131, WinMod)})),
        |ks AS (SELECT doc_id, pos, h,
        |         h * 2097152 + (1048576 - pos) AS wkey FROM ph),
        |wn AS (SELECT doc_id,
@@ -2171,8 +2150,7 @@ object TextQueries {
     // exact integer margins, min-count prune before the joins, and the
     // PMI argument built with the SAME pinned multiply order
     "q_collocations_pmi" ->
-      """WITH d AS (SELECT lower(trim(regexp_replace(text, '\s+', ' ',
-        |             'g'))) AS t FROM documents),
+      s"""WITH d AS (SELECT ${TextSql.norm("text")} AS t FROM documents),
         |tk AS (SELECT list_filter(string_split(t, ' '),
         |         x -> len(x) > 0) AS ts FROM d),
         |uni AS (SELECT w, COUNT(*) AS c FROM tk,
@@ -2431,18 +2409,10 @@ object TextQueries {
          |        JOIN nf nb ON pr.idb = nb.doc_id""".stripMargin,
 
     "q_ngram_novelty" ->
-      """WITH d AS (SELECT CAST(doc_id AS BIGINT) AS doc_id, lower(text) AS t
+      s"""WITH d AS (SELECT CAST(doc_id AS BIGINT) AS doc_id, lower(text) AS t
         |           FROM documents),
-        |sh AS (SELECT DISTINCT doc_id,
-        |         list_reduce(list_prepend(CAST(0 AS BIGINT),
-        |           list_transform(list_filter(
-        |               string_split(substr(t, CAST(i AS INT), 8), ''),
-        |               c -> len(c) > 0),
-        |             c -> CAST(ascii(c) AS BIGINT))),
-        |           (a, b) -> (a * 131 + b) % 1000000007) AS s
-        |       FROM d, LATERAL (SELECT unnest(generate_series(1,
-        |              greatest(len(t) - 7, 1))) AS i) u
-        |       WHERE len(substr(t, CAST(i AS INT), 8)) = 8),
+        |sh AS (SELECT DISTINCT doc_id, s
+        |       FROM (${TextSql.shingles("d", 8, 131)})),
         |df AS (SELECT s, COUNT(*) AS df FROM sh GROUP BY 1),
         |per AS (SELECT doc_id, COUNT(*) AS n_distinct,
         |          SUM(CASE WHEN df = 1 THEN 1 ELSE 0 END) AS n_unique
@@ -2458,18 +2428,9 @@ object TextQueries {
         |FROM pr, m""".stripMargin,
 
     "q_repetition" ->
-      """WITH d AS (SELECT CAST(doc_id AS BIGINT) AS doc_id, lower(text) AS t
+      s"""WITH d AS (SELECT CAST(doc_id AS BIGINT) AS doc_id, lower(text) AS t
         |           FROM documents),
-        |sh AS (SELECT doc_id,
-        |         list_reduce(list_prepend(CAST(0 AS BIGINT),
-        |           list_transform(list_filter(
-        |               string_split(substr(t, CAST(i AS INT), 8), ''),
-        |               c -> len(c) > 0),
-        |             c -> CAST(ascii(c) AS BIGINT))),
-        |           (a, b) -> (a * 131 + b) % 1000000007) AS s
-        |       FROM d, LATERAL (SELECT unnest(generate_series(1,
-        |              greatest(len(t) - 7, 1))) AS i) u
-        |       WHERE len(substr(t, CAST(i AS INT), 8)) = 8),
+        |sh AS (SELECT doc_id, s FROM (${TextSql.shingles("d", 8, 131)})),
         |g AS (SELECT doc_id, s, COUNT(*) AS c FROM sh GROUP BY 1, 2)
         |SELECT doc_id, CAST(SUM(c) AS BIGINT) AS n_grams,
         |  CAST(COUNT(*) AS BIGINT) AS n_distinct,
@@ -2626,7 +2587,7 @@ object TextQueries {
 
     "q_dedup_exact" ->
       s"""WITH d AS ($docsSql),
-         |h AS (SELECT doc_id, md5($normSql) AS h FROM d)
+         |h AS (SELECT doc_id, md5(${TextSql.norm("text")}) AS h FROM d)
          |SELECT doc_id, h,
          |  MIN(doc_id) OVER (PARTITION BY h) AS canonical_id,
          |  COUNT(*) OVER (PARTITION BY h) AS n_copies,
@@ -2651,7 +2612,7 @@ object TextQueries {
          |  CAST(len(regexp_extract_all(text, '#')) AS BIGINT) AS nh,
          |  CAST(len(regexp_extract_all(text, '\\.\\.\\.')) AS BIGINT)
          |    AS ne,
-         |  CAST(${stopSql(normSql, langStopwords.head._2)} AS BIGINT)
+         |  CAST(${stopSql(TextSql.norm("text"), langStopwords.head._2)} AS BIGINT)
          |    AS nstop,
          |  CAST(len(regexp_extract_all(text, '\\b[A-Za-z]+\\b'))
          |    AS BIGINT) AS naw
@@ -2712,14 +2673,14 @@ object TextQueries {
          |  CAST(len(regexp_extract_all(text, '[.,;:!?]')) AS BIGINT) AS n_punct,
          |  CAST(len(regexp_extract_all(text, '[A-Z]')) AS BIGINT) AS n_upper,
          |  CAST(len(regexp_extract_all(text, '[0-9]')) AS BIGINT) AS n_digit,
-         |  CAST(${stopSql(normSql, langStopwords.head._2)} AS BIGINT) AS n_stop,
+         |  CAST(${stopSql(TextSql.norm("text"), langStopwords.head._2)} AS BIGINT) AS n_stop,
          |  ${perWordSql("len(regexp_replace(text, '\\s', '', 'g'))")} AS avg_word_len,
-         |  ${perWordSql(stopSql(normSql, langStopwords.head._2))} AS stop_ratio,
+         |  ${perWordSql(stopSql(TextSql.norm("text"), langStopwords.head._2))} AS stop_ratio,
          |  CASE WHEN len(text) = 0 THEN NULL
          |       ELSE ROUND(CAST(len(regexp_extract_all(text, '[A-Z]')) AS DOUBLE)
          |            / CAST(len(text) AS DOUBLE), 4) END AS upper_ratio,
          |  $wcSql >= 10
-         |    AND ${perWordSql(stopSql(normSql, langStopwords.head._2))} >= 0.02 AS passes
+         |    AND ${perWordSql(stopSql(TextSql.norm("text"), langStopwords.head._2))} >= 0.02 AS passes
          |FROM d""".stripMargin,
 
     "q_quality_classifier" -> qualityClassifierOracle,
@@ -2764,8 +2725,8 @@ object TextQueries {
     "q_fingerprint" ->
       s"""WITH d AS ($docsSql)
          |SELECT doc_id,
-         |  ${fpSql("text")} AS fp,
-         |  ${fpSql(normSql)} AS fp_norm,
+         |  ${TextSql.fp("text")} AS fp,
+         |  ${TextSql.fp(TextSql.norm("text"))} AS fp_norm,
          |  CAST(len(text) AS BIGINT) AS n_chars
          |FROM d""".stripMargin)
 

@@ -111,19 +111,30 @@ class BpeSpec extends AnyFunSuite with SharedSpark {
     }
   }
 
+  /** Runs query `q` and asserts the RDDs it left persisted are exactly
+    * the `reads` checkpoints its result plan reads. */
+  private def leavesOnlyWhatItReads(q: String, reads: Int): Unit = {
+    def persisted = spark.sparkContext.getPersistentRDDs.keySet
+    val before = persisted
+    val df = SparkEntry.queries(q)(spark, SfDir)
+    df.collect()
+    val read = df.queryExecution.logical.collect {
+      case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd.id
+    }.toSet
+    assert(read.size === reads, q)
+    assert((persisted -- before) === read, q)
+  }
+
   test("Unigram: training leaves only the word table its result reads") {
     // the seed-substring checkpoint is read by two collects and then
     // dropped; the checkpointed word table lives as long as the frame
-    def persisted = spark.sparkContext.getPersistentRDDs.keySet
-    for (q <- Seq("q_unigram_train", "q_unigram_fertility")) {
-      val before = persisted
-      val df = SparkEntry.queries(q)(spark, SfDir)
-      df.collect()
-      val read = df.queryExecution.logical.collect {
-        case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd.id
-      }.toSet
-      assert(read.size === 1, q)
-      assert((persisted -- before) === read, q)
-    }
+    for (q <- Seq("q_unigram_train", "q_unigram_fertility"))
+      leavesOnlyWhatItReads(q, 1)
+  }
+
+  test("FastCDC: the pair report leaves only the checkpoint it reads") {
+    // the codes and edges barriers are dropped once the pair arrays
+    // are materialized
+    leavesOnlyWhatItReads("q_dedup_fastcdc", 1)
   }
 }

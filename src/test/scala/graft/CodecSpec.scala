@@ -57,6 +57,12 @@ class CodecSpec extends AnyFunSuite {
     }
   }
 
+  test("MP3 spectral decode: bytes after the last frame fail loudly") {
+    intercept[IllegalArgumentException] {
+      Mp3.decodeMp3Spectral(Mp3.synthMp3Coded(0L) ++ Array[Byte](1, 2, 3))
+    }
+  }
+
   test("WAV: a chunk of odd length is stepped over with its RIFF pad " +
     "byte") {
     // a 3-byte LIST chunk plus its pad byte before the data chunk

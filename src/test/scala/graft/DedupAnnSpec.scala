@@ -550,6 +550,34 @@ class DedupAnnSpec extends AnyFunSuite with SharedSpark {
     assert(sh.filter(col("doc_id") === 2L).count() === 4)
   }
 
+  test("rollingFingerprint: the one polynomial fold, by hand") {
+    import graft.functions.TextFunctions.rollingFingerprint
+    val fp = docsOf(1L -> "", 2L -> "a", 3L -> "ab")
+      .select(col("doc_id"), rollingFingerprint(col("text")),
+        rollingFingerprint(col("text"), 131L))
+      .collect().map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2)))
+      .toMap
+    // "" folds nothing; "ab" = 97·31 + 98 and 97·131 + 98
+    assert(fp === Map(1L -> (0L, 0L), 2L -> (97L, 97L),
+      3L -> (3105L, 12805L)))
+  }
+
+  test("Bloom: bit 31 and the next word's bit 0, words and membership") {
+    import spark.implicits._
+    import graft.operators.Bloom
+    // m = 64: key 1 lands on 32, 28, 34, 10 and key 2 on 63, 31, 19, 11,
+    // so word 0 holds bits 10, 11, 19, 28, 31 and word 1 bits 0, 2, 31
+    val words = Bloom.words(Seq(1L, 2L).toDF("k"), "k", 64L, Nil)
+      .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
+    assert(words === Map(0 -> 2416446464L, 1 -> 2147483653L))
+    // key 3 lands on 30, 34, 4, 12: bit 34 is set, bit 30 is not
+    val filter = typedLit(Seq(words(0), words(1)))
+    val member = Seq(1L, 2L, 3L).toDF("k")
+      .select(col("k"), Bloom.mightContain(filter, col("k"), 64L))
+      .collect().map(r => r.getLong(0) -> r.getBoolean(1)).toMap
+    assert(member === Map(1L -> true, 2L -> true, 3L -> false))
+  }
+
   test("native ShingleHash equals the HOF slice-fold form bit-for-bit") {
     val docs = Tables.load(spark, SfDir, "documents")
       .select(col("doc_id").cast("long").as("doc_id"), col("text"))
