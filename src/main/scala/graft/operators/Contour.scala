@@ -185,6 +185,7 @@ object Contour {
     var rounds = 0
     var done = false
     while (!done && rounds < maxRounds) {
+      val prev = state
       val fr0 = state.filter(col("fr") === 1)
         .select(col("cx"), col("cy"), col("tt_min"))
       val relaxes = Iterator.iterate(fr0)(f =>
@@ -211,6 +212,9 @@ object Contour {
         .localCheckpoint(eager = false)
       if (state.filter(col("fr") === 1).count() == 0L) done = true
       else rounds += 1
+      // the count materialized this round's state: the last one is
+      // superseded (the result reads only the final state)
+      Bpe.release(prev)
     }
     state.select("cx", "cy", "tt_min")
   }

@@ -41,60 +41,44 @@ object H264 {
                           n_slices: Long, n_idr: Long, sum_frame_num: Long,
                           n_epb: Long)
 
-  // ------------------------------------------------------------ bit I/O
+  // ------------------------------------------------- exp-Golomb bits
 
-  private final class BitWriter {
-    private val bytes = ArrayBuffer.empty[Int]
-    private var cur = 0
-    private var nbits = 0
-    def putBit(b: Int): Unit = {
-      cur = (cur << 1) | (b & 1); nbits += 1
-      if (nbits == 8) { bytes += cur; cur = 0; nbits = 0 }
-    }
-    def putBits(v: Long, n: Int): Unit =
-      (n - 1 to 0 by -1).foreach(i => putBit(((v >> i) & 1L).toInt))
+  /** ue(v)/se(v) and rbsp_trailing_bits on the [[Bits]] writer. */
+  private implicit final class RbspWriter(w: Bits.Writer) {
     /** ue(v): leadingZeroBits zeros, 1, then v+1-2^lzb in lzb bits —
       * equivalently the binary form of v+1 preceded by len-1 zeros. */
     def putUe(v: Long): Unit = {
       require(v >= 0)
       val x = v + 1
       val len = 63 - java.lang.Long.numberOfLeadingZeros(x)
-      putBits(0L, len) // len leading zeros
-      putBits(x, len + 1)
+      w.put(0L, len) // len leading zeros
+      w.put(x, len + 1)
     }
     /** se(v): mapped to ue via the spec's zig-zag (§9.1.1):
       * v>0 -> 2v-1, v<=0 -> -2v. */
     def putSe(v: Long): Unit = putUe(if (v > 0) 2 * v - 1 else -2 * v)
     /** rbsp_trailing_bits: stop bit then zero-pad to byte. */
-    def trailing(): Unit = { putBit(1); while (nbits != 0) putBit(0) }
-    def result(): Array[Byte] = {
-      require(nbits == 0, "h264: unaligned rbsp")
-      bytes.map(_.toByte).toArray
-    }
+    def trailing(): Unit = { w.put(1, 1); w.align(0) }
   }
 
-  private final class BitReader(rbsp: Array[Byte]) {
-    private var pos = 0
-    def bit(): Int = {
-      require(pos < rbsp.length * 8, "h264: rbsp overrun")
-      val b = (rbsp(pos >> 3) >> (7 - (pos & 7))) & 1
-      pos += 1; b
-    }
-    def bits(n: Int): Long =
-      (1 to n).foldLeft(0L)((acc, _) => (acc << 1) | bit())
+  /** ue(v)/se(v) and the rbsp_trailing_bits check on the [[Bits]]
+    * reader. */
+  private implicit final class RbspReader(r: Bits.Reader) {
     def ue(): Long = {
       var lzb = 0
-      while (bit() == 0) { lzb += 1; require(lzb < 32, "h264: bad ue") }
-      (1L << lzb) - 1 + bits(lzb)
+      while (r.bit() == 0) { lzb += 1; require(lzb < 32, "h264: bad ue") }
+      (1L << lzb) - 1 + r.bits(lzb)
     }
     def se(): Long = {
       val k = ue()
       if (k % 2 == 1) (k + 1) / 2 else -(k / 2)
     }
-    /** Consume the zero pad after a stop bit, requiring every
-      * remaining bit to be zero — full-stream accounting. */
-    def drainZeroPad(): Unit =
-      while (pos < rbsp.length * 8) require(bit() == 0, "h264: pad bit")
+    /** The stop bit, then every remaining bit zero — full-stream
+      * accounting. */
+    def trailing(): Unit = {
+      require(r.bit() == 1, "h264: missing stop bit")
+      while (r.left > 0) require(r.bit() == 0, "h264: pad bit")
+    }
   }
 
   // ------------------------------------------- emulation prevention
@@ -164,53 +148,53 @@ object H264 {
     * parameter sets. Returns the emulation-prevention bytes inserted. */
   private def writeParamSets(docId: Long, out: ArrayBuffer[Byte]): Int = {
     // ---- SPS (nal_unit_type 7)
-    val sps = new BitWriter
-    sps.putBits(66, 8) // profile_idc: Baseline
-    sps.putBits(0, 8) // constraint flags + reserved
-    sps.putBits(levelIdc(docId), 8)
+    val sps = new Bits.Writer
+    sps.put(66, 8) // profile_idc: Baseline
+    sps.put(0, 8) // constraint flags + reserved
+    sps.put(levelIdc(docId), 8)
     sps.putUe(0) // seq_parameter_set_id
     sps.putUe(log2Mfn4(docId)) // log2_max_frame_num_minus4
     sps.putUe(2) // pic_order_cnt_type (2: no further POC fields)
     sps.putUe(1) // max_num_ref_frames
-    sps.putBit(0) // gaps_in_frame_num_value_allowed
+    sps.put(0, 1) // gaps_in_frame_num_value_allowed
     sps.putUe(widthMbs(docId) - 1) // pic_width_in_mbs_minus1
     sps.putUe(heightMbs(docId) - 1) // pic_height_in_map_units_minus1
-    sps.putBit(1) // frame_mbs_only_flag
-    sps.putBit(0) // direct_8x8_inference_flag
-    sps.putBit(0) // frame_cropping_flag
-    sps.putBit(0) // vui_parameters_present_flag
+    sps.put(1, 1) // frame_mbs_only_flag
+    sps.put(0, 1) // direct_8x8_inference_flag
+    sps.put(0, 1) // frame_cropping_flag
+    sps.put(0, 1) // vui_parameters_present_flag
     sps.trailing()
     // ---- PPS (nal_unit_type 8)
-    val pps = new BitWriter
+    val pps = new Bits.Writer
     pps.putUe(0) // pic_parameter_set_id
     pps.putUe(0) // seq_parameter_set_id
-    pps.putBit(0) // entropy_coding_mode_flag (CAVLC)
-    pps.putBit(0) // bottom_field_pic_order_in_frame_present
+    pps.put(0, 1) // entropy_coding_mode_flag (CAVLC)
+    pps.put(0, 1) // bottom_field_pic_order_in_frame_present
     pps.putUe(0) // num_slice_groups_minus1
     pps.putUe(0) // num_ref_idx_l0_default_active_minus1
     pps.putUe(0) // num_ref_idx_l1_default_active_minus1
-    pps.putBit(0) // weighted_pred_flag
-    pps.putBits(0, 2) // weighted_bipred_idc
+    pps.put(0, 1) // weighted_pred_flag
+    pps.put(0, 2) // weighted_bipred_idc
     pps.putSe(initQp(docId) - 26) // pic_init_qp_minus26 (negative se!)
     pps.putSe(0) // pic_init_qs_minus26
     pps.putSe(0) // chroma_qp_index_offset
-    pps.putBit(0) // deblocking_filter_control_present
-    pps.putBit(0) // constrained_intra_pred
-    pps.putBit(0) // redundant_pic_cnt_present
+    pps.put(0, 1) // deblocking_filter_control_present
+    pps.put(0, 1) // constrained_intra_pred
+    pps.put(0, 1) // redundant_pic_cnt_present
     pps.trailing()
-    nal(3, 7, sps.result(), out) + nal(3, 8, pps.result(), out)
+    nal(3, 7, sps.bytes, out) + nal(3, 8, pps.bytes, out)
   }
 
   /** Slice header of this syntax subset: first_mb_in_slice, slice_type,
     * pic_parameter_set_id 0, frame_num (SPS width), idr_pic_id 0 (IDR
     * only), slice_qp_delta 0. */
-  private def writeSliceHeader(sl: BitWriter, docId: Long, firstMb: Long,
+  private def writeSliceHeader(sl: Bits.Writer, docId: Long, firstMb: Long,
                                sliceType: Long, frameNum: Long,
                                idr: Boolean): Unit = {
     sl.putUe(firstMb)
     sl.putUe(sliceType)
     sl.putUe(0)
-    sl.putBits(frameNum, (log2Mfn4(docId) + 4).toInt)
+    sl.put(frameNum, (log2Mfn4(docId) + 4).toInt)
     if (idr) sl.putUe(0)
     sl.putSe(0)
   }
@@ -226,11 +210,11 @@ object H264 {
     var epb = writeParamSets(docId, out)
     // ---- slices (first IDR type 5, rest non-IDR type 1)
     for (i <- 0 until nSlices(docId).toInt) {
-      val sl = new BitWriter
+      val sl = new Bits.Writer
       writeSliceHeader(sl, docId, 0, sliceTypeOf(docId, i), i, i == 0)
       sl.trailing()
       val payload = ArrayBuffer.empty[Byte]
-      payload ++= sl.result()
+      payload ++= sl.bytes
       // opaque payload with forced emulation runs: 0xFF fences isolate
       // each 00 00 00 triple -> exactly one escape per run
       for (_ <- 0 until zeroRuns(docId).toInt) {
@@ -282,7 +266,7 @@ object H264 {
 
     /** Parse NAL type 7 (SPS) or 8 (PPS) into this state; false for any
       * other type. */
-    def parse(typ: Int, r: BitReader): Boolean = typ match {
+    def parse(typ: Int, r: Bits.Reader): Boolean = typ match {
       case 7 =>
         require(r.bits(8) == 66, "h264: unexpected profile")
         r.bits(8) // constraint flags
@@ -307,7 +291,7 @@ object H264 {
 
   /** Parse a slice header ([[writeSliceHeader]]); returns
     * (first_mb_in_slice, slice_type, frame_num). */
-  private def readSliceHeader(r: BitReader, ps: ParamSets,
+  private def readSliceHeader(r: Bits.Reader, ps: ParamSets,
                               idr: Boolean): (Long, Long, Long) = {
     require(ps.log2Mfn > 0, "h264: slice before SPS")
     val firstMb = r.ue()
@@ -329,7 +313,7 @@ object H264 {
       val typ = hdr & 0x1F
       val (rbsp, stripped) = unescapeRbsp(esc)
       nEpb += stripped
-      val r = new BitReader(rbsp)
+      val r = new Bits.Reader(rbsp)
       if (!ps.parse(typ, r)) { // slice (IDR 5 / non-IDR 1)
         require(typ == 5 || typ == 1, s"h264: nal $typ")
         val (firstMb, _, frameNum) = readSliceHeader(r, ps, typ == 5)
@@ -433,9 +417,6 @@ object H264 {
     }
   }
 
-  private def putBitString(w: BitWriter, s: String): Unit =
-    s.foreach(c => w.putBit(c - '0'))
-
   /** Encode a macroblock stream: SPS, PPS, then one IDR I-slice per MB
     * row, each holding widthMbs macroblocks of type `mbType` (DC intra
     * chroma prediction, mb_qp_delta 0). `mb(w, idx, left)` writes the
@@ -443,12 +424,12 @@ object H264 {
     * neighbour returned (None at the row start: the top neighbour is
     * in another slice) and returns its own. */
   private def synthRows[S](docId: Long, mbType: Int)(
-      mb: (BitWriter, Long, Option[S]) => S): Array[Byte] = {
+      mb: (Bits.Writer, Long, Option[S]) => S): Array[Byte] = {
     val w = widthMbs(docId).toInt
     val out = ArrayBuffer.empty[Byte]
     writeParamSets(docId, out)
     for (mby <- 0 until heightMbs(docId).toInt) {
-      val sl = new BitWriter
+      val sl = new Bits.Writer
       // slice_type 7: I (all slices of the picture are I); IDR: frame 0
       writeSliceHeader(sl, docId, mby.toLong * w, 7, 0, idr = true)
       var left = Option.empty[S]
@@ -459,7 +440,7 @@ object H264 {
         left = Some(mb(sl, mby.toLong * w + mbx, left))
       }
       sl.trailing()
-      nal(3, 5, sl.result(), out)
+      nal(3, 5, sl.bytes, out)
     }
     out.toArray
   }
@@ -471,12 +452,12 @@ object H264 {
     * checked: the stop bit and zero pad follow the last macroblock, so
     * a tampered stream fails loudly. */
   private def decodeRows[R](bytes: Array[Byte], mbType: Int)(
-      mb: (BitReader, Long, Long, Int, Option[R]) => R): Seq[R] = {
+      mb: (Bits.Reader, Long, Long, Int, Option[R]) => R): Seq[R] = {
     val ps = new ParamSets
     val rows = ArrayBuffer.empty[R]
     for ((hdr, esc) <- splitNals(bytes)) {
       val typ = hdr & 0x1F
-      val r = new BitReader(unescapeRbsp(esc)._1)
+      val r = new Bits.Reader(unescapeRbsp(esc)._1)
       if (!ps.parse(typ, r)) {
         require(typ == 5, s"h264: nal $typ")
         require(ps.wMbs > 0 && ps.qp > 0, "h264: slice before SPS/PPS")
@@ -494,8 +475,7 @@ object H264 {
           rows += row
           left = Some(row)
         }
-        require(r.bit() == 1, "h264: missing stop bit")
-        r.drainZeroPad()
+        r.trailing()
       }
     }
     rows.toSeq
@@ -528,15 +508,23 @@ object H264 {
                        pos_sum: Long, pred: Long, recon_sum: Long,
                        rc_sum: Long)
 
+  /** A VLC table transcribed as bit strings, symbol -> code. */
+  private def vlc(codes: Iterable[(Int, String)]): Bits.PrefixCode =
+    new Bits.PrefixCode(codes.map { case (sym, c) =>
+      (Integer.parseInt(c, 2), c.length, sym) }.toSeq)
+
   /** coeff_token (TrailingOnes, TotalCoeff) VLCs, TotalCoeff <= 3
-    * (Table 9-5): the 0<=nC<2 and 2<=nC<4 columns. */
-  private val CoeffTok0: Map[(Int, Int), String] = Map(
+    * (Table 9-5), symbol (TrailingOnes << 2) | TotalCoeff. */
+  private def coeffTok(codes: ((Int, Int), String)*): Bits.PrefixCode =
+    vlc(codes.map { case ((t1, tc), c) => ((t1 << 2) | tc, c) })
+  /** The 0<=nC<2 and 2<=nC<4 columns. */
+  private val CoeffTok0 = coeffTok(
     (0, 0) -> "1",
     (0, 1) -> "000101", (1, 1) -> "01",
     (0, 2) -> "00000111", (1, 2) -> "000100", (2, 2) -> "001",
     (0, 3) -> "000000111", (1, 3) -> "00000110", (2, 3) -> "0000101",
     (3, 3) -> "00011")
-  private val CoeffTok2: Map[(Int, Int), String] = Map(
+  private val CoeffTok2 = coeffTok(
     (0, 0) -> "11",
     (0, 1) -> "001011", (1, 1) -> "10",
     (0, 2) -> "000111", (1, 2) -> "00111", (2, 2) -> "011",
@@ -544,7 +532,7 @@ object H264 {
     (3, 3) -> "0101")
 
   /** total_zeros VLC columns TotalCoeff = 1, 2 and 3 (Table 9-7). */
-  private val TotalZeros: Array[Array[String]] = Array(
+  private val TotalZeros: Array[Bits.PrefixCode] = Array(
     Array("1", "011", "010", "0011", "0010", "00011", "00010", "000011",
       "000010", "0000011", "0000010", "00000011", "00000010",
       "000000011", "000000010", "000000001"),
@@ -552,10 +540,11 @@ object H264 {
       "0010", "00011", "00010", "000011", "000010", "000001", "000000"),
     Array("0101", "111", "110", "101", "0100", "0011", "100", "011",
       "0010", "00011", "00010", "000001", "00001", "000000"))
+    .map(c => vlc(c.indices.zip(c)))
 
   /** run_before VLC (Table 9-10): rows = zerosLeft column (1..6, >6),
     * entries indexed by run_before. */
-  private val RunBefore: Array[Array[String]] = Array(
+  private val RunBefore: Array[Bits.PrefixCode] = Array(
     Array("1", "0"),
     Array("1", "01", "00"),
     Array("11", "10", "01", "00"),
@@ -565,6 +554,7 @@ object H264 {
     Array("111", "110", "101", "100", "011", "010", "001", "0001",
       "00001", "000001", "0000001", "00000001", "000000001",
       "0000000001", "00000000001"))
+    .map(c => vlc(c.indices.zip(c)))
   private def runBeforeCol(zerosLeft: Int): Int = math.min(zerosLeft, 7) - 1
 
   // analytic coefficient set per (doc, mb raster idx): TotalCoeff 0-3.
@@ -597,38 +587,9 @@ object H264 {
   private def acCoefs(d: Long, idx: Long): Seq[(Int, Long)] =
     (0 until acTc(d, idx)).map(k => (acPos(d, idx, k), acLvl(d, idx, k)))
 
-  // static inverse VLC lookups keyed by (length, bits) — the decoders
-  // run per BLOCK (17 per macroblock in the CBP stream), so per-call
-  // map construction / linear indexOf would dominate the decode
-  private def invVlc[V](codes: Iterable[(String, V)]): Map[(Int, Long), V] =
-    codes.map { case (c, v) =>
-      (c.length, java.lang.Long.parseLong(c, 2)) -> v
-    }.toMap
-  private val CoeffTok0Inv = invVlc(CoeffTok0.map(_.swap))
-  private val CoeffTok2Inv = invVlc(CoeffTok2.map(_.swap))
-  private val TotalZerosInv = TotalZeros.map(c => invVlc(c.zipWithIndex))
-  private val RunBeforeInv = RunBefore.map(c => invVlc(c.zipWithIndex))
-
-  /** Read one prefix-free VLC of at most 12 bits through its inverse
-    * table. */
-  private def vlcRead[V](r: BitReader, m: Map[(Int, Long), V],
-                         what: String): V = {
-    var len = 0
-    var bits = 0L
-    while (len < 12) {
-      bits = (bits << 1) | r.bit()
-      len += 1
-      m.get((len, bits)) match {
-        case Some(v) => return v
-        case None =>
-      }
-    }
-    throw new IllegalArgumentException(s"h264: bad $what")
-  }
-
   /** CAVLC-encode one 4x4 block with 0-3 coefficients (§9.2) — the one
     * block coder of every macroblock stream. */
-  private def writeAcBlock(w: BitWriter, coefs: Seq[(Int, Long)],
+  private def writeAcBlock(w: Bits.Writer, coefs: Seq[(Int, Long)],
                            nC: Long): Unit = {
     val tc = coefs.size
     val sorted = coefs.sortBy(_._1) // scan-ascending; highest freq last
@@ -636,10 +597,10 @@ object H264 {
     while (t1 < math.min(3, tc) &&
       math.abs(sorted(tc - 1 - t1)._2) == 1) t1 += 1
     val tbl = if (nC < 2) CoeffTok0 else CoeffTok2
-    putBitString(w, tbl((t1, tc)))
+    tbl.put(w, (t1 << 2) | tc)
     if (tc == 0) return
     for (i <- 0 until t1) // trailing-one signs, highest freq first
-      w.putBit(if (sorted(tc - 1 - i)._2 < 0) 1 else 0)
+      w.put(if (sorted(tc - 1 - i)._2 < 0) 1 else 0, 1)
     var suffixLength = 0
     var first = true
     for (i <- (tc - 1 - t1) to 0 by -1) { // coded levels, high freq first
@@ -649,22 +610,22 @@ object H264 {
       if (first && t1 < 3) levelCode -= 2 // §9.2.2.1 first-level adj
       first = false
       if (suffixLength == 0) {
-        if (levelCode < 14) { w.putBits(0L, levelCode.toInt); w.putBit(1) }
+        if (levelCode < 14) { w.put(0L, levelCode.toInt); w.put(1, 1) }
         else if (levelCode < 30) {
-          w.putBits(0L, 14); w.putBit(1); w.putBits(levelCode - 14, 4)
+          w.put(0L, 14); w.put(1, 1); w.put(levelCode - 14, 4)
         } else {
           require(levelCode - 30 < 4096, "h264: level out of range")
-          w.putBits(0L, 15); w.putBit(1); w.putBits(levelCode - 30, 12)
+          w.put(0L, 15); w.put(1, 1); w.put(levelCode - 30, 12)
         }
       } else {
         val prefix = levelCode >> suffixLength
         if (prefix < 15) {
-          w.putBits(0L, prefix.toInt); w.putBit(1)
-          w.putBits(levelCode & ((1L << suffixLength) - 1), suffixLength)
+          w.put(0L, prefix.toInt); w.put(1, 1)
+          w.put(levelCode & ((1L << suffixLength) - 1), suffixLength)
         } else {
           val esc = levelCode - (15L << suffixLength)
           require(esc < 4096, "h264: level out of range")
-          w.putBits(0L, 15); w.putBit(1); w.putBits(esc, 12)
+          w.put(0L, 15); w.put(1, 1); w.put(esc, 12)
         }
       }
       if (suffixLength == 0) suffixLength = 1
@@ -672,12 +633,12 @@ object H264 {
         suffixLength += 1
     }
     val tz = sorted.last._1 + 1 - tc
-    putBitString(w, TotalZeros(tc - 1)(tz))
+    TotalZeros(tc - 1).put(w, tz)
     var zerosLeft = tz
     var i = tc - 1
     while (i >= 1 && zerosLeft > 0) { // run_before, high freq down
       val run = sorted(i)._1 - sorted(i - 1)._1 - 1
-      putBitString(w, RunBefore(runBeforeCol(zerosLeft))(run))
+      RunBefore(runBeforeCol(zerosLeft)).put(w, run)
       zerosLeft -= run
       i -= 1
     }
@@ -685,10 +646,11 @@ object H264 {
 
   /** Decode one 0-3-coefficient block; returns scan-ascending
     * (pos, lvl) pairs plus (t1s, tzeros). */
-  private def readAcBlock(r: BitReader, nC: Long)
+  private def readAcBlock(r: Bits.Reader, nC: Long)
       : (Seq[(Int, Long)], Int, Int) = {
-    val tbl = if (nC < 2) CoeffTok0Inv else CoeffTok2Inv
-    val (t1, tc) = vlcRead(r, tbl, "coeff_token")
+    val tok = (if (nC < 2) CoeffTok0 else CoeffTok2).decode(r)
+    val t1 = tok >> 2
+    val tc = tok & 3
     if (tc == 0) return (Nil, 0, 0)
     // levels, highest freq first
     val levels = new Array[Long](tc)
@@ -717,7 +679,7 @@ object H264 {
       if (math.abs(levels(i)) > (3L << (suffixLength - 1)) &&
         suffixLength < 6) suffixLength += 1
     }
-    val tz = vlcRead(r, TotalZerosInv(tc - 1), "total_zeros")
+    val tz = TotalZeros(tc - 1).decode(r)
     // positions from highest freq down: runs of zeros between coeffs
     val pos = new Array[Int](tc)
     pos(0) = tz + tc - 1
@@ -725,7 +687,7 @@ object H264 {
     for (i <- 1 until tc) {
       val run =
         if (zerosLeft == 0) 0
-        else vlcRead(r, RunBeforeInv(runBeforeCol(zerosLeft)), "run_before")
+        else RunBefore(runBeforeCol(zerosLeft)).decode(r)
       pos(i) = pos(i - 1) - 1 - run
       zerosLeft -= run
     }

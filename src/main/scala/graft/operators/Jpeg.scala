@@ -9,8 +9,8 @@ package graft.operators
   * canonical Huffman, 0xFF byte stuffing, restart markers — and the
   * decoder is a general baseline decoder: full marker walk, DQT/DHT
   * parsing (Huffman tables are RECONSTRUCTED from the 16 length counts
-  * exactly as T.81 Annex C specifies — nothing is shared with the
-  * encoder's lookup structures), SOF0/SOS validation, entropy decode
+  * by the T.81 Annex C canonical assignment, the one that also builds
+  * the encoder's tables), SOF0/SOS validation, entropy decode
   * with sign extension and DC prediction, RST alignment + predictor
   * reset, dequantize, de-zigzag, float IDCT, level shift + clamp, and
   * MCU-padding crop.
@@ -98,22 +98,24 @@ object Jpeg {
     Array(0x00, 0xF0) ++
       (for (run <- 0 until 16; size <- 1 to 10) yield (run << 4) | size)
 
-  /** Canonical code assignment (T.81 Annex C): symbol -> (code, len). */
+  /** The Huffman table of DHT `counts` (codes per length 1..16) and
+    * `symbols`, codes assigned canonically (T.81 Annex C) — the one
+    * assignment of the encoder's tables and every decoded DHT. */
   private def canonicalCodes(counts: Array[Int],
-                             symbols: Array[Int]): Map[Int, (Int, Int)] = {
+                             symbols: Array[Int]): Bits.PrefixCode = {
     var code = 0; var si = 0
-    val out = Map.newBuilder[Int, (Int, Int)]
+    val out = Seq.newBuilder[(Int, Int, Int)]
     var len = 1
     while (len <= 16) {
       var n = counts(len - 1)
       while (n > 0) {
-        out += symbols(si) -> (code, len)
+        out += ((code, len, symbols(si)))
         code += 1; si += 1; n -= 1
       }
       code <<= 1
       len += 1
     }
-    out.result()
+    new Bits.PrefixCode(out.result())
   }
 
   private lazy val dcEnc = canonicalCodes(DcCounts, DcSymbols)
@@ -150,27 +152,6 @@ object Jpeg {
       c += 1
     }
     JpegImage(w, h, planes(0), planes(1), planes(2))
-  }
-
-  // ---- bit-level writer with 0xFF stuffing ----
-
-  private final class BitWriter(out: java.io.ByteArrayOutputStream) {
-    private var acc = 0; private var nbits = 0
-    def put(code: Int, len: Int): Unit = {
-      var i = len - 1
-      while (i >= 0) {
-        acc = (acc << 1) | ((code >>> i) & 1); nbits += 1
-        if (nbits == 8) {
-          out.write(acc)
-          if (acc == 0xFF) out.write(0x00) // byte stuffing
-          acc = 0; nbits = 0
-        }
-        i -= 1
-      }
-    }
-    /** Pad the current byte with 1-bits (T.81 F.1.2.3) and flush. */
-    def align(): Unit =
-      if (nbits > 0) { put((1 << (8 - nbits)) - 1, 8 - nbits) }
   }
 
   private def bitSize(v: Int): Int = {
@@ -280,6 +261,41 @@ object Jpeg {
     out.write(body, 0, body.length)
   }
 
+  /** Write `w`'s bits as one entropy-coded segment: the last byte
+    * padded with 1-bits (T.81 F.1.2.3), a 0x00 stuffed after every
+    * 0xFF byte. */
+  private def writeEcs(out: java.io.ByteArrayOutputStream,
+                       w: Bits.Writer): Unit = {
+    w.align(1)
+    w.bytes.foreach { b => out.write(b); if (b == 0xFF.toByte) out.write(0) }
+  }
+
+  /** The entropy-coded segments of the scan starting at `from`, FF00
+    * unstuffed: one (bytes, marker ending it) per restart interval, the
+    * last ending at the first non-RST marker (-1 at the end of data). */
+  private def readEcs(b: Array[Byte], from: Int): Seq[(Array[Byte], Int)] = {
+    val segs = scala.collection.mutable.ArrayBuffer.empty[(Array[Byte], Int)]
+    var seg = new java.io.ByteArrayOutputStream
+    var p = from
+    var last = false
+    while (!last) {
+      if (p == b.length) { segs += ((seg.toByteArray, -1)); last = true }
+      else if (b(p) != 0xFF.toByte) { seg.write(b(p)); p += 1 }
+      else {
+        require(p + 1 < b.length, "jpeg: truncated after 0xFF")
+        val m = b(p + 1) & 0xFF
+        p += 2
+        if (m == 0) seg.write(0xFF)
+        else {
+          segs += ((seg.toByteArray, m))
+          seg = new java.io.ByteArrayOutputStream
+          last = m < 0xD0 || m > 0xD7
+        }
+      }
+    }
+    segs.toSeq
+  }
+
   /** Restart interval in MCUs (small so sf test images hit several
     * RST markers; at scale restarts are what make a single scan
     * splittable across decode tasks). */
@@ -379,7 +395,7 @@ object Jpeg {
       0, 63, 0)) // baseline spectral selection
     // entropy-coded scan: MCU = (8·hMax) x (8·vMax) pixels, hi x vi
     // blocks per component, interleaved in component order
-    val bw = new BitWriter(out)
+    var bw = new Bits.Writer
     val mcuX = (w + 8 * hMax - 1) / (8 * hMax)
     val mcuY = (h + 8 * vMax - 1) / (8 * vMax)
     val quant = Array(QLuma, QChroma, QChroma)
@@ -414,8 +430,7 @@ object Jpeg {
       pred(c) = zz(0)
       val s = bitSize(diff)
       require(s <= 11, s"jpeg encode: DC category $s out of range")
-      val (dcode, dlen) = dcEnc(s)
-      bw.put(dcode, dlen)
+      dcEnc.put(bw, s)
       if (s > 0) {
         val bits = if (diff < 0) diff + (1 << s) - 1 else diff
         bw.put(bits, s)
@@ -427,18 +442,17 @@ object Jpeg {
         val v = zz(k)
         if (v == 0) run += 1
         else {
-          while (run >= 16) { val (zc, zl) = acEnc(0xF0); bw.put(zc, zl); run -= 16 }
+          while (run >= 16) { acEnc.put(bw, 0xF0); run -= 16 } // ZRL
           val sz = bitSize(v)
           require(sz <= 10, s"jpeg encode: AC size $sz out of range")
-          val (acode, alen) = acEnc((run << 4) | sz)
-          bw.put(acode, alen)
+          acEnc.put(bw, (run << 4) | sz)
           val bits = if (v < 0) v + (1 << sz) - 1 else v
           bw.put(bits, sz)
           run = 0
         }
         k += 1
       }
-      if (run > 0) { val (ec, el) = acEnc(0x00); bw.put(ec, el) } // EOB
+      if (run > 0) acEnc.put(bw, 0x00) // EOB
     }
 
     var my = 0
@@ -447,7 +461,8 @@ object Jpeg {
       while (mx < mcuX) {
         if (RestartInterval > 0 && mcu > 0 &&
             mcu % RestartInterval == 0) {
-          bw.align()
+          writeEcs(out, bw)
+          bw = new Bits.Writer
           marker(out, 0xD0 + rst % 8); rst += 1
           pred(0) = 0; pred(1) = 0; pred(2) = 0
         }
@@ -470,7 +485,7 @@ object Jpeg {
       }
       my += 1
     }
-    bw.align()
+    writeEcs(out, bw)
     marker(out, 0xD9) // EOI
     out.toByteArray
   }
@@ -508,73 +523,6 @@ object Jpeg {
 
   // ---- decoder ----
 
-  /** Huffman table reconstructed from DHT counts+symbols: decode by
-    * walking code lengths with the canonical (firstCode, firstIndex)
-    * per length — T.81 Annex F's DECODE procedure. */
-  private final class HuffTable(counts: Array[Int], symbols: Array[Int]) {
-    private val minCode = new Array[Int](17)
-    private val maxCode = new Array[Int](17) // -1 = no codes at this len
-    private val valPtr = new Array[Int](17)
-    locally {
-      var code = 0; var si = 0
-      var len = 1
-      while (len <= 16) {
-        if (counts(len - 1) == 0) { minCode(len) = 0; maxCode(len) = -1 }
-        else {
-          valPtr(len) = si
-          minCode(len) = code
-          code += counts(len - 1); si += counts(len - 1)
-          maxCode(len) = code - 1
-        }
-        code <<= 1
-        len += 1
-      }
-    }
-    def decode(br: BitReader): Int = {
-      var code = br.bit(); var len = 1
-      while (len <= 16 && (maxCode(len) < 0 || code > maxCode(len))) {
-        code = (code << 1) | br.bit(); len += 1
-      }
-      require(len <= 16, "jpeg: invalid Huffman code")
-      symbols(valPtr(len) + code - minCode(len))
-    }
-  }
-
-  /** Entropy-segment bit reader: un-stuffs FF00, stops at any other
-    * marker (restart handling reads the marker itself via nextMarker). */
-  private final class BitReader(data: Array[Byte], var pos: Int) {
-    private var acc = 0; private var nbits = 0
-    def bit(): Int = {
-      if (nbits == 0) {
-        require(pos < data.length, "jpeg: truncated entropy data")
-        val b = data(pos) & 0xFF
-        if (b == 0xFF) {
-          require(pos + 1 < data.length, "jpeg: truncated after 0xFF")
-          val b2 = data(pos + 1) & 0xFF
-          require(b2 == 0x00, f"jpeg: unexpected marker FF$b2%02X in scan")
-          pos += 2
-        } else pos += 1
-        acc = b; nbits = 8
-      }
-      nbits -= 1
-      (acc >>> nbits) & 1
-    }
-    def bits(n: Int): Int = {
-      var v = 0; var i = 0
-      while (i < n) { v = (v << 1) | bit(); i += 1 }
-      v
-    }
-    /** Byte-align and consume an expected RSTn marker. */
-    def restart(expected: Int): Unit = {
-      nbits = 0
-      require(pos + 1 < data.length, "jpeg: truncated at restart")
-      require((data(pos) & 0xFF) == 0xFF &&
-        (data(pos + 1) & 0xFF) == 0xD0 + expected,
-        f"jpeg: expected RST$expected at $pos")
-      pos += 2
-    }
-  }
-
   private def extend(bits: Int, size: Int): Int =
     if (size == 0) 0
     else if (bits < (1 << (size - 1))) bits - (1 << size) + 1
@@ -587,8 +535,8 @@ object Jpeg {
       (payload(1) & 0xFF) == 0xD8, "jpeg: missing SOI")
     var pos = 2
     val qtabs = new Array[Array[Int]](4)
-    val dcTabs = new Array[HuffTable](4)
-    val acTabs = new Array[HuffTable](4)
+    val dcTabs = new Array[Bits.PrefixCode](4)
+    val acTabs = new Array[Bits.PrefixCode](4)
     var w = 0; var h = 0
     var compQ: Array[Int] = null   // quant table id per component
     var compHv: Array[(Int, Int)] = null // sampling factors per component
@@ -611,6 +559,7 @@ object Jpeg {
             val pq = (payload(p) & 0xFF) >> 4
             val id = payload(p) & 0x0F
             require(pq == 0, "jpeg: only 8-bit quant tables supported")
+            require(id <= 3, s"jpeg: DQT table id $id > 3")
             val q = new Array[Int](64)
             var i = 0
             while (i < 64) { q(ZigZag(i)) = payload(p + 1 + i) & 0xFF; i += 1 }
@@ -622,10 +571,11 @@ object Jpeg {
           while (p < pos + 2 + len) {
             val clazz = (payload(p) & 0xFF) >> 4
             val id = payload(p) & 0x0F
+            require(clazz <= 1 && id <= 3, s"jpeg: DHT class $clazz id $id")
             val counts = Array.tabulate(16)(i => payload(p + 1 + i) & 0xFF)
             val n = counts.sum
             val symbols = Array.tabulate(n)(i => payload(p + 17 + i) & 0xFF)
-            val t = new HuffTable(counts, symbols)
+            val t = canonicalCodes(counts, symbols)
             if (clazz == 0) dcTabs(id) = t else acTabs(id) = t
             p += 17 + n
           }
@@ -641,6 +591,7 @@ object Jpeg {
             val sampling = payload(body + 7 + c * 3) & 0xFF
             compHv(c) = (sampling >> 4, sampling & 0x0F)
             compQ(c) = payload(body + 8 + c * 3) & 0xFF
+            require(compQ(c) <= 3, s"jpeg: quant table id ${compQ(c)} > 3")
             c += 1
           }
           require(compHv.forall { case (hi, vi) =>
@@ -659,6 +610,9 @@ object Jpeg {
           while (c < 3) {
             compDc(c) = (payload(body + 2 + c * 2) & 0xFF) >> 4
             compAc(c) = payload(body + 2 + c * 2) & 0x0F
+            require(compDc(c) <= 3 && dcTabs(compDc(c)) != null &&
+              compAc(c) <= 3 && acTabs(compAc(c)) != null,
+              "jpeg: scan references an undefined Huffman table")
             c += 1
           }
           scanStart = pos + 2 + len
@@ -672,7 +626,8 @@ object Jpeg {
     val compW = compHv.map { case (hi, _) => (w * hi + hMax - 1) / hMax }
     val compH = compHv.map { case (_, vi) => (h * vi + vMax - 1) / vMax }
     val planes = Array.tabulate(3)(c => new Array[Int](compW(c) * compH(c)))
-    val br = new BitReader(payload, scanStart)
+    val ecs = readEcs(payload, scanStart)
+    var br = new Bits.Reader(ecs(0)._1)
     val mcuX = (w + 8 * hMax - 1) / (8 * hMax)
     val mcuY = (h + 8 * vMax - 1) / (8 * vMax)
     val pred = new Array[Int](3)
@@ -728,7 +683,10 @@ object Jpeg {
       var mx = 0
       while (mx < mcuX) {
         if (restartInterval > 0 && mcu > 0 && mcu % restartInterval == 0) {
-          br.restart(rst % 8); rst += 1
+          require(ecs(rst)._2 == 0xD0 + rst % 8,
+            s"jpeg: expected RST${rst % 8}")
+          rst += 1
+          br = new Bits.Reader(ecs(rst)._1)
           pred(0) = 0; pred(1) = 0; pred(2) = 0
         }
         var c = 0

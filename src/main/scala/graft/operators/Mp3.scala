@@ -13,7 +13,7 @@ import org.apache.spark.sql.functions._
   *    Huffman-coded with spec table 1 (+ sign bits) — bit-exact frame
   *    lengths via 144*bitrate/samplerate + pad;
   *  - decode: side-info parse, scalefactor read (slen1/slen2 table),
-  *    generic trie Huffman decode, requantization
+  *    prefix-code Huffman decode ([[Bits]]), requantization
   *    sign(is)*|is|^(4/3) * 2^((global_gain-210)/4)
   *    * 2^(-(1+scalefac_scale)*scalefac[band]), alias-reduction
   *    butterflies (the 8 spec coefficients), and the 36-point IMDCT
@@ -50,16 +50,15 @@ import org.apache.spark.sql.functions._
   */
 object Mp3 {
 
-  import Multimodal.{Mp3Kbps, Mp3Rates, mp3FrameHeader}
+  import Multimodal.{Mp3Kbps, Mp3Rates, mp3Frames}
 
-  /** Spec Huffman table 1 (ISO 11172-3 Table B.7): (x, y) -> code.
-    * Stored as (x, y, bit length, code value); the decoder builds a
-    * generic trie, so denser tables can plug in alongside. */
-  private val Table1: Seq[(Int, Int, Int, Int)] = Seq(
-    (0, 0, 1, 1),   // "1"
-    (0, 1, 3, 1),   // "001"
-    (1, 0, 2, 1),   // "01"
-    (1, 1, 3, 0))   // "000"
+  /** Spec Huffman table 1 (ISO 11172-3 Table B.7) as (code value, bit
+    * length, x << 8 | y); denser tables plug in the same way. */
+  private val Table1 = new Bits.PrefixCode(Seq(
+    (1, 1, 0x000),   // "1"   (0, 0)
+    (1, 3, 0x001),   // "001" (0, 1)
+    (1, 2, 0x100),   // "01"  (1, 0)
+    (0, 3, 0x101)))  // "000" (1, 1)
 
   /** scalefac_compress -> (slen1, slen2) (ISO 11172-3, 2.4.2.7). */
   private val SlenTab: Array[(Int, Int)] = Array(
@@ -104,62 +103,21 @@ object Mp3 {
 
   def synthSfScale(docId: Long): Int = (docId % 2).toInt
 
-  // ------------------------------------------------------- bit writer
-
-  private final class BitWriter {
-    private val buf = scala.collection.mutable.ArrayBuffer[Byte]()
-    private var cur = 0
-    private var nbits = 0
-    def put(value: Int, bits: Int): Unit = {
-      var b = bits - 1
-      while (b >= 0) {
-        cur = (cur << 1) | ((value >> b) & 1)
-        nbits += 1
-        if (nbits == 8) { buf += cur.toByte; cur = 0; nbits = 0 }
-        b -= 1
-      }
-    }
-    def bitLength: Int = buf.length * 8 + nbits
-    def toBytes: Array[Byte] = {
-      val out = buf.clone()
-      if (nbits > 0) out += (cur << (8 - nbits)).toByte
-      out.toArray
-    }
-  }
-
-  private final class BitReader(bytes: Array[Byte], var pos: Int) {
-    def get(bits: Int): Int = {
-      var v = 0
-      var b = bits
-      while (b > 0) {
-        val byte = bytes(pos >> 3) & 0xff
-        val bit = (byte >> (7 - (pos & 7))) & 1
-        v = (v << 1) | bit
-        pos += 1
-        b -= 1
-      }
-      v
-    }
-  }
-
   // ---------------------------------------------------------- encode
 
   /** Huffman-code one granule's main data (scalefactors then big_values
-    * pairs with table 1 + sign bits); returns the bit writer so the
-    * caller can measure part2_3_length exactly. */
+    * pairs with table 1 + sign bits); returns the bits written, the
+    * granule's exact part2_3_length. */
   private def encodeGranule(docId: Long, frame: Int, granule: Int,
-                            w: BitWriter): Int = {
+                            w: Bits.Writer): Int = {
     val start = w.bitLength
     // scalefactors: bands 0..10 with slen1, 11..20 with slen2
     // (scalefac_compress = 5 -> slen1 = slen2 = 1)
     for (band <- 0 until 21) w.put(synthSf(docId, granule, band), 1)
-    val codes = Table1.map { case (x, y, len, code) =>
-      ((x, y), (len, code)) }.toMap
     for (p <- 0 until BigValuePairs) {
       val xv = synthIs(docId, frame, granule, 2 * p)
       val yv = synthIs(docId, frame, granule, 2 * p + 1)
-      val (len, code) = codes((math.abs(xv), math.abs(yv)))
-      w.put(code, len)
+      Table1.put(w, (math.abs(xv) << 8) | math.abs(yv))
       if (xv != 0) w.put(if (xv < 0) 1 else 0, 1)
       if (yv != 0) w.put(if (yv < 0) 1 else 0, 1)
     }
@@ -178,11 +136,12 @@ object Mp3 {
       val pad = ((docId + f) % 2).toInt
       val frameLen = 144 * Mp3Kbps(brIdx) * 1000 / sr + pad
       // main data first (to measure part2_3_length exactly)
-      val md = new BitWriter
+      val md = new Bits.Writer
       val p23 = (0 until 2).map(g => encodeGranule(docId, f, g, md))
-      val mdBytes = md.toBytes
+      md.align(0)
+      val mdBytes = md.bytes
       // side info: 17 bytes mono (136 bits)
-      val si = new BitWriter
+      val si = new Bits.Writer
       si.put(0, 9)          // main_data_begin = 0: no reservoir
       si.put(0, 5)          // private_bits (mono)
       si.put(0, 4)          // scfsi: scalefactors sent per granule
@@ -204,7 +163,7 @@ object Mp3 {
       frame(1) = 0xfb.toByte
       frame(2) = ((brIdx << 4) | (srIdx << 2) | (pad << 1)).toByte
       frame(3) = 0xc0.toByte // mono
-      val siBytes = si.toBytes
+      val siBytes = si.bytes
       require(siBytes.length == 17, s"side info ${siBytes.length}B")
       siBytes.copyToArray(frame, 4)
       require(21 + mdBytes.length <= frameLen,
@@ -222,68 +181,44 @@ object Mp3 {
     tableSelect: Array[Int], region0: Int, region1: Int, preflag: Int,
     scalefacScale: Int, count1Table: Int)
 
-  /** Generic Huffman trie: -1 = internal, else packed (x << 8 | y). */
-  private def buildTrie(table: Seq[(Int, Int, Int, Int)])
-      : Array[Array[Int]] = {
-    val nodes = scala.collection.mutable.ArrayBuffer(Array(-1, -1, -1))
-    for ((x, y, len, code) <- table) {
-      var n = 0
-      var b = len - 1
-      while (b >= 0) {
-        val bit = (code >> b) & 1
-        if (nodes(n)(bit) < 0) {
-          nodes += Array(-1, -1, -1)
-          nodes(n)(bit) = nodes.length - 1
-        }
-        n = nodes(n)(bit)
-        b -= 1
-      }
-      nodes(n)(2) = (x << 8) | y
-    }
-    nodes.toArray
-  }
-  private val Trie1 = buildTrie(Table1)
-
   /** Decoded granule: requantized + alias-reduced 576-line spectrum. */
   final case class Granule(frame: Int, granule: Int,
                            xa: Array[Double])
 
-  /** Full spectral decode of a coded stream: frame walk (each header
-    * through the walker's [[Multimodal.mp3FrameHeader]]), side-info
-    * parse, scalefactors, Huffman, requantize, alias-reduce. Returns
-    * one [[Granule]] per granule in stream order. Malformed input
-    * fails loudly (same policy as the container walkers). */
-  def decodeMp3Spectral(payload: Array[Byte]): Seq[Granule] = {
-    val out = scala.collection.mutable.ArrayBuffer[Granule]()
-    var p = 0
-    var fIdx = 0
-    while (p + 4 <= payload.length) {
-      val (_, sr, frameLen) = mp3FrameHeader(payload, p)
-      val si = new BitReader(payload, (p + 4) * 8)
-      val mainDataBegin = si.get(9)
+  /** Full spectral decode of a coded stream: the container walk
+    * ([[Multimodal.mp3Frames]]), side-info parse, scalefactors,
+    * Huffman, requantize, alias-reduce. Returns one [[Granule]] per
+    * granule in stream order. Each frame's main data is read within
+    * that frame. Malformed input fails loudly (same policy as the
+    * container walkers). */
+  def decodeMp3Spectral(payload: Array[Byte]): Seq[Granule] =
+    mp3Frames(payload).zipWithIndex.flatMap { case (fr, fIdx) =>
+      val si = new Bits.Reader(payload, fr.at + 4, fr.at + 21)
+      val mainDataBegin = si.bits(9)
       require(mainDataBegin == 0, "mp3: bit reservoir unsupported")
-      si.get(5) // private
-      si.get(4) // scfsi (0: per-granule scalefactors)
+      si.bits(5) // private
+      si.bits(4) // scfsi (0: per-granule scalefactors)
       val gsis = (0 until 2).map { _ =>
-        val part23 = si.get(12)
-        val bigValues = si.get(9)
-        val globalGain = si.get(8)
-        val scalefacCompress = si.get(4)
-        val windowSwitching = si.get(1)
+        val part23 = si.bits(12)
+        val bigValues = si.bits(9)
+        require(bigValues <= 288, s"mp3: big_values $bigValues > 288")
+        val globalGain = si.bits(8)
+        val scalefacCompress = si.bits(4)
+        val windowSwitching = si.bits(1)
         require(windowSwitching == 0, "mp3: short blocks unsupported")
         GranuleSideInfo(part23, bigValues, globalGain, scalefacCompress,
-          Array(si.get(5), si.get(5), si.get(5)), si.get(4),
-          si.get(3), si.get(1), si.get(1), si.get(1))
+          Array(si.bits(5), si.bits(5), si.bits(5)), si.bits(4),
+          si.bits(3), si.bits(1), si.bits(1), si.bits(1))
       }
-      val md = new BitReader(payload, (p + 21) * 8)
-      for (g <- 0 until 2) {
+      val md = new Bits.Reader(payload, fr.at + 21, fr.at + fr.len)
+      (0 until 2).map { g =>
         val gsi = gsis(g)
-        val start = md.pos
+        val left = md.left
         val (slen1, slen2) = SlenTab(gsi.scalefacCompress)
         val sf = new Array[Int](22)
-        for (band <- 0 until 11) sf(band) = md.get(slen1)
-        for (band <- 11 until 21) sf(band) = md.get(slen2)
-        val bounds = SfbLong(sr)
+        for (band <- 0 until 11) sf(band) = md.bits(slen1)
+        for (band <- 11 until 21) sf(band) = md.bits(slen2)
+        val bounds = SfbLong(fr.rate)
         def bandOf(i: Int): Int = {
           var b = 0
           while (b < 21 && i >= bounds(b + 1)) b += 1
@@ -293,18 +228,16 @@ object Mp3 {
         // region split is honored so denser tables can differ by region)
         val is = new Array[Int](576)
         for (pair <- 0 until gsi.bigValues) {
-          var n = 0
-          while (Trie1(n)(2) < 0) n = Trie1(n)(md.get(1))
-          val packed = Trie1(n)(2)
-          var xv = packed >> 8
-          var yv = packed & 0xff
-          if (xv != 0 && md.get(1) == 1) xv = -xv
-          if (yv != 0 && md.get(1) == 1) yv = -yv
+          val xy = Table1.decode(md)
+          var xv = xy >> 8
+          var yv = xy & 0xff
+          if (xv != 0 && md.bit() == 1) xv = -xv
+          if (yv != 0 && md.bit() == 1) yv = -yv
           is(2 * pair) = xv
           is(2 * pair + 1) = yv
         }
-        require(md.pos - start == gsi.part23,
-          s"mp3: part2_3_length mismatch (${md.pos - start} vs ${gsi.part23})")
+        require(left - md.left == gsi.part23, "mp3: part2_3_length " +
+          s"mismatch (${left - md.left} vs ${gsi.part23})")
         // requantize: long blocks, preflag 0
         val gainF = math.pow(2.0, (gsi.globalGain - 210) / 4.0)
         val xr = new Array[Double](576)
@@ -333,15 +266,9 @@ object Mp3 {
           }
           sb += 1
         }
-        out += Granule(fIdx, g, xa)
+        Granule(fIdx, g, xa)
       }
-      p += frameLen
-      fIdx += 1
     }
-    require(p == payload.length, "mp3: trailing garbage")
-    require(out.nonEmpty, "mp3: no frames")
-    out.toSeq
-  }
 
   /** The IMDCT basis and window are CONSTANT — tabulated once. The
     * per-call cos() of the first version cost ~620M libm calls per

@@ -1226,38 +1226,19 @@ object Multimodal {
     id3 ++ frames.flatten
   }
 
-  /** One MPEG-1 Layer III frame header at `p` (4 bytes must remain):
-    * sync bits, MPEG-1 / Layer III version bits, bitrate index (0
-    * "free" and 15 rejected), sample-rate index (3 reserved). Returns
-    * (bitrate kbps, sample rate, spec frame length 144*bitrate/
-    * samplerate + padding); the frame must fit the payload. Malformed
-    * headers fail loudly. */
-  private[operators] def mp3FrameHeader(payload: Array[Byte],
-                                        p: Int): (Int, Int, Int) = {
-    require(payload(p) == 0xff.toByte
-      && (payload(p + 1) & 0xe0) == 0xe0, "mp3: lost frame sync")
-    val version = (payload(p + 1) >> 3) & 3
-    val layer = (payload(p + 1) >> 1) & 3
-    require(version == 3, s"mp3: not MPEG-1 (version bits $version)")
-    require(layer == 1, s"mp3: not Layer III (layer bits $layer)")
-    val brIdx = (payload(p + 2) >> 4) & 15
-    val srIdx = (payload(p + 2) >> 2) & 3
-    val pad = (payload(p + 2) >> 1) & 1
-    require(brIdx >= 1 && brIdx <= 14, s"mp3: bad bitrate index $brIdx")
-    require(srIdx != 3, "mp3: reserved sample-rate index")
-    val sr = Mp3Rates(srIdx)
-    val len = 144 * Mp3Kbps(brIdx) * 1000 / sr + pad
-    require(p + len <= payload.length, "mp3: truncated frame")
-    (Mp3Kbps(brIdx), sr, len)
-  }
+  /** One MPEG-1 Layer III frame: byte offset, bitrate kbps, sample
+    * rate and spec length 144*bitrate/samplerate + padding. */
+  private[operators] final case class Mp3Frame(at: Int, kbps: Int, rate: Int,
+                                               len: Int)
 
-  /** REAL MP3 frame walk: skip a leading ID3v2 tag by its syncsafe
-    * size, then step frame to frame through [[mp3FrameHeader]], which
-    * validates each header and gives the spec frame length to advance
-    * by. Returns (frame count, sample rate, total kbps, bytes walked);
-    * duration follows from 1152 samples per frame. Malformed input
-    * fails loudly. */
-  def walkMp3(payload: Array[Byte]): (Long, Long, Long, Long) = {
+  /** REAL MP3 frame walk, the one of every MP3 reader: skip a leading
+    * ID3v2 tag by its syncsafe size, then step frame to frame, checking
+    * each header's sync bits, MPEG-1 / Layer III version bits, bitrate
+    * index (0 "free" and 15 rejected) and sample-rate index (3
+    * reserved), that the frame fits the payload, that the sample rate
+    * never changes and that no bytes trail the last frame. Malformed
+    * input fails loudly. */
+  private[operators] def mp3Frames(payload: Array[Byte]): Seq[Mp3Frame] = {
     var p = 0
     if (payload.length >= 10 && payload(0) == 'I' && payload(1) == 'D'
         && payload(2) == '3') {
@@ -1266,20 +1247,39 @@ object Multimodal {
       p = 10 + size
       require(p <= payload.length, "mp3: ID3 tag overruns stream")
     }
-    var nFrames = 0L
-    var sumKbps = 0L
-    var sr = -1
+    val frames = scala.collection.mutable.ArrayBuffer.empty[Mp3Frame]
     while (p + 4 <= payload.length) {
-      val (kbps, rate, len) = mp3FrameHeader(payload, p)
-      require(sr < 0 || sr == rate, "mp3: sample rate changed")
-      sr = rate
-      sumKbps += kbps
-      nFrames += 1
+      require(payload(p) == 0xff.toByte
+        && (payload(p + 1) & 0xe0) == 0xe0, "mp3: lost frame sync")
+      val version = (payload(p + 1) >> 3) & 3
+      val layer = (payload(p + 1) >> 1) & 3
+      require(version == 3, s"mp3: not MPEG-1 (version bits $version)")
+      require(layer == 1, s"mp3: not Layer III (layer bits $layer)")
+      val brIdx = (payload(p + 2) >> 4) & 15
+      val srIdx = (payload(p + 2) >> 2) & 3
+      val pad = (payload(p + 2) >> 1) & 1
+      require(brIdx >= 1 && brIdx <= 14, s"mp3: bad bitrate index $brIdx")
+      require(srIdx != 3, "mp3: reserved sample-rate index")
+      val sr = Mp3Rates(srIdx)
+      val len = 144 * Mp3Kbps(brIdx) * 1000 / sr + pad
+      require(p + len <= payload.length, "mp3: truncated frame")
+      require(frames.isEmpty || frames.head.rate == sr,
+        "mp3: sample rate changed")
+      frames += Mp3Frame(p, Mp3Kbps(brIdx), sr, len)
       p += len
     }
     require(p == payload.length, "mp3: trailing garbage")
-    require(nFrames > 0, "mp3: no frames")
-    (nFrames, sr.toLong, sumKbps, payload.length.toLong)
+    require(frames.nonEmpty, "mp3: no frames")
+    frames.toSeq
+  }
+
+  /** The [[mp3Frames]] walk summarized: (frame count, sample rate,
+    * total kbps, bytes walked); duration follows from 1152 samples per
+    * frame. */
+  def walkMp3(payload: Array[Byte]): (Long, Long, Long, Long) = {
+    val frames = mp3Frames(payload)
+    (frames.length.toLong, frames.head.rate.toLong,
+      frames.map(_.kbps.toLong).sum, payload.length.toLong)
   }
 
   /** documents -> real MP3 encode -> frame walk, distributed. 1152

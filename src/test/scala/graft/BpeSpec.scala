@@ -137,4 +137,10 @@ class BpeSpec extends AnyFunSuite with SharedSpark {
     // are materialized
     leavesOnlyWhatItReads("q_dedup_fastcdc", 1)
   }
+
+  test("Isochrone BFS: the rounds leave only the final state's checkpoint") {
+    // each round's checkpoint supersedes the last one's
+    for (q <- Seq("q_isochrone_bfs", "q_isochrone_bfs_multi"))
+      leavesOnlyWhatItReads(q, 1)
+  }
 }
